@@ -137,11 +137,9 @@ object Cli {
             allowShortScan = flag(args, "allow-short"))
         })
       case "cache" =>
-        HeadCache.build(spark, index, o.getOrElse("min-df", "1000").toLong, k)
-        o.get("pair-terms").foreach(n =>
-          HeadCache.buildPairs(spark, index, n.toInt, k, nBuckets))
-        o.get("triple-terms").foreach(n =>
-          HeadCache.buildTriples(spark, index, n.toInt, k, nBuckets))
+        HeadCache.build(spark, index, o.getOrElse("min-df", "1000").toLong, k,
+          pairTerms = o.getOrElse("pair-terms", "0").toInt,
+          tripleTerms = o.getOrElse("triple-terms", "0").toInt, nBuckets)
         None
       case "compact" =>
         graft.streaming.Compactor.compact(spark, index, conf)

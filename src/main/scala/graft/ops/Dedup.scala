@@ -111,9 +111,10 @@ object Dedup {
     * zip_with-chain column form: Spark's higher-order array expressions
     * (zip_with / transform / aggregate) are CodegenFallback, so every
     * token was boxed and every lambda interpreted on the spectrum and
-    * shingle hot paths. Output strings are identical. */
+    * shingle hot paths. Output strings are identical. A null token list
+    * (null text) yields no k-grams, as the column form did. */
   private def kgramIter(toks: Seq[String], k: Int): Iterator[String] = {
-    val n = toks.length - k + 1
+    val n = if (toks == null) 0 else toks.length - k + 1
     if (n <= 0) Iterator.empty
     else Iterator.tabulate(n) { i =>
       val sb = new java.lang.StringBuilder

@@ -40,24 +40,27 @@ object Pipeline {
                   shingleK: Int = 3,
                   minJaccard: Double = 0.5,
                   maxShingleDf: Long = 10000L): DataFrame = {
+    // null text is empty text: no tokens (a quality drop), no shingles,
+    // and a content hash, so the exact-dup join keeps the row
+    val corpus = docs.withColumn("text", coalesce(col("text"), lit("")))
     // quality + language in ONE corpus scan (pure column expressions;
     // lang_pred is the SAME expression TextOps.langId selects)
     val toks = Builder.tokensCol(col("text"))
-    val sig = docs.select(
+    val sig = corpus.select(
       col("doc_id"),
       size(toks).cast("long").as("n_tokens"),
       TextOps.langPredCol(toks).as("lang_pred"))
 
     // exact-duplicate representative: min doc_id per content hash
-    val sha = docs.select(col("doc_id"), sha2(col("text"), 256).as("h"))
+    val sha = corpus.select(col("doc_id"), sha2(col("text"), 256).as("h"))
     val exactRep = sha
       .join(sha.groupBy("h").agg(min("doc_id").as("exact_rep")), "h")
       .select(col("doc_id"), col("exact_rep"))
 
     // near-dup cluster representative (min doc_id in the component)
-    val pairs = Dedup.jaccardPairs(docs, k = shingleK, minJ = minJaccard,
+    val pairs = Dedup.jaccardPairs(corpus, k = shingleK, minJ = minJaccard,
       maxShingleDf = maxShingleDf)
-    val cc = Dedup.connectedComponents(docs.select(col("doc_id")), pairs)
+    val cc = Dedup.connectedComponents(corpus.select(col("doc_id")), pairs)
 
     val reason =
       when(col("n_tokens") < minTokens || col("n_tokens") > maxTokens,

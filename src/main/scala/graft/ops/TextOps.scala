@@ -87,17 +87,21 @@ object TextOps {
     // h60 through an md5-hex -> conv string round trip; the JVM h60
     // agrees bit-for-bit (CoreSpec parity) and every intermediate stays
     // exact: acc < M and h < M so acc*31 + h < 2^35 — no overflow, and
-    // all values are non-negative so % == pmod.
+    // all values are non-negative so % == pmod. Null text (a null token
+    // list) gives a NULL fingerprint, as the column fold did.
     docs.select(col("doc_id").cast("long"), Builder.tokensCol(col("text")))
       .as[(Long, Seq[String])]
       .mapPartitions(_.map { case (id, toks) =>
-        var acc = 0L
-        var i = 0
-        while (i < toks.length) {
-          acc = (acc * 31L + graft.util.CrossHash.h60(toks(i)) % M) % M
-          i += 1
+        if (toks == null) (id, None)
+        else {
+          var acc = 0L
+          var i = 0
+          while (i < toks.length) {
+            acc = (acc * 31L + graft.util.CrossHash.h60(toks(i)) % M) % M
+            i += 1
+          }
+          (id, Some(acc))
         }
-        (id, acc)
       })
       .toDF("doc_id", "fingerprint")
   }

@@ -2,62 +2,64 @@ package graft.query
 
 import org.apache.spark.sql.{SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.index.{Bm25, Builder}
+import graft.index.Builder
 import graft.util.Fs
 
-/** Head-term result cache — the depth-k cache analog
+/** Head result cache — the depth-k cache analog
   * (/root/reference/src/gin_gin.c:887-1304 precomputes the SA forks of
   * every string up to depth k so queries bootstrap past their suffix).
   *
-  * Depth 1: the top-K results of every HEAD term (df >= minDf) are
-  * precomputed at build time; a single-term query whose term is cached
-  * is answered without touching postings. Head terms are exactly the
-  * expensive ones (longest posting lists), so the cache converts the
-  * worst-case single-term latency into a map lookup.
+  * One table holds the exact top-K of every key, a key being the sorted
+  * tuple of a query's distinct terms:
+  *  - depth 1: every HEAD term (df >= minDf). Head terms are exactly the
+  *    expensive ones (longest posting lists), so the worst-case
+  *    single-term latency becomes a map lookup;
+  *  - depth 2: every pair of the `pairTerms` most frequent terms;
+  *  - depth 3: every triple of the `tripleTerms` most frequent terms —
+  *    the practical depth limit for a term vocabulary (entry count is
+  *    C(n, depth)). The reference caches every string up to depth ~12
+  *    over its small alphabet (README.md:250-251) for the same reason:
+  *    frequent multi-term prefixes are the expensive real-world queries.
+  * Depth-2/3 entries hold conjunctive (AND) rankings; a depth-1 entry
+  * answers both modes.
   *
-  * Depth 2: the top-K conjunctive (AND) results of every PAIR of the
-  * `maxPairTerms` most frequent head terms — the reference caches every
-  * string up to depth ~12 for the same reason: frequent multi-term
-  * prefixes are the expensive real-world queries.
+  * Entries are computed by the serving kernel itself — executor BMW
+  * (Searcher.searchTopKUncached) in `BuildBatch`-query batches, never
+  * answered from the cache being rebuilt — so a cached answer is the
+  * live answer by construction, and the driver never collects postings.
   *
-  * The build is fully distributed (r1 fix): blocks decode on executors,
-  * scores reduce through the bounded TopKAgg grouped by term — the
-  * driver never collects posting lists. Scoring runs in JVM code through
-  * the SAME Bm25 helpers the WAND loop uses, so cached results are
-  * bit-identical to a live search.
-  *
-  * Depth 3: the top-K conjunctive results of every TRIPLE of the
-  * `maxTripleTerms` most frequent terms (buildTriples) — the practical
-  * depth limit for a term vocabulary (entry count is C(n, depth)).
-  *
-  * Layout: `indexDir/head_cache/` (term, rank, doc_id, score),
-  * `indexDir/head_cache2/` (term_a, term_b, rank, doc_id, score),
-  * `indexDir/head_cache3/` (term_a, term_b, term_c, rank, doc_id,
-  * score), with `_COMMIT_head_cache{,2,3}` markers carrying (minDf, k,
-  * rows) / (n, k, rows) — `rows` is counted at build time so load's
-  * size guard never runs a count job.
+  * Layout: `indexDir/topk_cache/` (terms, rank, doc_id, score) with a
+  * `_COMMIT_topk_cache` marker carrying (minDf, pairTerms, tripleTerms,
+  * k, rows) — `rows` is counted at build time so load's size guard never
+  * runs a count job. Per-depth `head_cache*` tables written by older
+  * builds have another layout and are never opened.
   */
 object HeadCache {
 
   /** Sanity bound on cache entries a driver will pin: the build knobs
-    * (minDf, maxPairTerms, maxTripleTerms) already bound these tables,
-    * but nothing stopped a corrupted/mis-built cache from collecting an
-    * unbounded table into driver memory at load time. Oversized caches
-    * are SKIPPED (queries fall back to live search — correct, just not
-    * cached). */
+    * (minDf, pairTerms, tripleTerms) already bound the table, but nothing
+    * stopped a corrupted/mis-built cache from collecting an unbounded
+    * table into driver memory at load time. Oversized caches are SKIPPED
+    * (queries fall back to live search — correct, just not cached). */
   val MaxCacheRows = 5000000L
 
-  /** Row count for the marker stamp — one count job at BUILD time, so
-    * load can pre-filter without one (see sizeOk / boundedCollect). */
-  private def countRows(spark: SparkSession, path: String): Long =
-    spark.read.parquet(path).count()
+  /** Keys per kernel call while building: bounds each job's block
+    * fan-out and broadcast query table, so pairTerms/tripleTerms can
+    * rise without a single unbounded stage. */
+  val BuildBatch = 1024
+
+  /** Loaded cache: sorted term tuple -> ranked hits, and the K built. */
+  type Table = (Map[Seq[String], Seq[Scored]], Int)
+
+  private def tableDir(indexDir: String) = s"$indexDir/topk_cache"
+  private def marker(indexDir: String) = s"$indexDir/_COMMIT_topk_cache"
 
   /** Load-time size pre-filter: skip the read entirely when the count
     * the build stamped into the commit marker is already over budget.
     * This is an OPTIMIZATION only — the hard guard is boundedCollect,
     * which caps what actually reaches the driver even when the parquet
     * contents diverge from the stamp (partial restore, external copy,
-    * legacy marker without a stamp). */
+    * marker without a stamp). */
   private def sizeOk(meta: String): Boolean =
     """"rows":(\d+)""".r.findFirstMatchIn(meta).map(_.group(1).toLong)
       .forall(_ <= MaxCacheRows)
@@ -71,222 +73,77 @@ object HeadCache {
     if (rows.length > MaxCacheRows) None else Some(rows)
   }
 
-  /** Precompute depth-1 top-k for all terms with df >= minDf.
-    * Distributed: decode -> JVM-exact score -> TopKAgg by term. */
-  def build(spark: SparkSession, indexDir: String, minDf: Long, k: Int): Unit = {
+  /** (Re)build the cache: depth-1 keys for terms with df >= minDf,
+    * depth-2/3 keys for the pairs/triples of the `pairTerms`/`tripleTerms`
+    * highest-df terms (0 = none), each with its exact top-k. */
+  def build(spark: SparkSession, indexDir: String, minDf: Long, k: Int,
+            pairTerms: Int = 0, tripleTerms: Int = 0,
+            nBuckets: Int = 32): Unit = {
     import spark.implicits._
-    val handle = IndexHandle.open(spark, indexDir)
-    val stats = handle.stats
-    // marker FIRST (mirrors buildPairs): a crash mid-rebuild must leave
-    // NO valid-looking marker over a partially written head_cache, or
-    // cached single-term top-k would be silently truncated
-    Fs.delete(spark, s"$indexDir/_COMMIT_head_cache")
-    Fs.delete(spark, s"$indexDir/head_cache")
-    val headTerms: Seq[(String, Long)] =
-      Builder.dictionary(spark, indexDir)
-        .filter(col("df") >= minDf)
-        .select("term", "df").as[(String, Long)].collect().toSeq
-    if (headTerms.isEmpty) {
-      Seq.empty[(String, Int, Long, Double)]
-        .toDF("term", "rank", "doc_id", "score")
-        .write.mode(SaveMode.Overwrite).parquet(s"$indexDir/head_cache")
-    } else {
-      val idfB = spark.sparkContext.broadcast(
-        headTerms.map { case (t, df) => t -> Bm25.idf(stats.n_docs, df) }.toMap)
-      val avgdl = stats.avgdl
-      val postings = handle.blocksFor(headTerms.map(_._1))
-        .select(col("term"),
-          graft.functions.DecodePostings.rows(col("num_docs"),
-            col("doc_deltas"), col("tfs"), col("dls"))
-            .as(Seq("doc_id", "tf", "dl")))
-        .as[(String, Long, Int, Int)]
-      val topk = new TopKAgg(k)
-      postings
-        .map { case (t, d, tf, dl) =>
-          (t, d, Bm25.round6(idfB.value(t) * (Bm25.K1 + 1.0) *
-            Bm25.tfNorm(tf, dl, avgdl)))
-        }
-        .groupByKey(_._1)
-        .mapValues(r => Scored(r._2, r._3))
-        .agg(topk.toColumn.name("topk"))
-        .flatMap { case (t, hits) =>
-          hits.zipWithIndex.map { case (s, i) => (t, i + 1, s.doc_id, s.score) }
-        }
-        .toDF("term", "rank", "doc_id", "score")
-        .coalesce(4)
-        .write.mode(SaveMode.Overwrite).parquet(s"$indexDir/head_cache")
-    }
-    Fs.write(spark, s"$indexDir/_COMMIT_head_cache",
-      s"""{"minDf":$minDf,"k":$k,"rows":${countRows(spark, s"$indexDir/head_cache")}}""")
-    IndexHandle.invalidate(spark, indexDir)
-  }
-
-  /** Precompute depth-2 top-k for every unordered pair of the
-    * `maxPairTerms` highest-df terms, via the distributed relational
-    * search path (identical ranking semantics to WAND).
-    *
-    * The pair set grows as maxPairTerms²/2 and every head-term posting
-    * row fans out to each pair containing it, so ALL pairs in one
-    * relational call is a mega-join at large maxPairTerms. Pairs are
-    * staged in `pairBatch`-sized query batches instead — bounded fan-out
-    * and broadcast size per job, results appended per batch — so the knob
-    * can rise without a single unbounded stage. */
-  def buildPairs(spark: SparkSession, indexDir: String, maxPairTerms: Int,
-                 k: Int, nBuckets: Int = 32, pairBatch: Int = 1024): Unit = {
-    import spark.implicits._
-    val top: Seq[String] = Builder.dictionary(spark, indexDir)
-      .orderBy(col("df").desc, col("term"))
-      .select("term").as[String].take(maxPairTerms).toSeq
-    val pairs: Seq[(String, String)] = for {
-      i <- top.indices; j <- (i + 1) until top.length
-    } yield if (top(i) < top(j)) (top(i), top(j)) else (top(j), top(i))
     // marker FIRST: a crash mid-rebuild must leave NO valid-looking
-    // marker over a missing or partial cache (readers would throw or
-    // silently serve truncated top-k)
-    Fs.delete(spark, s"$indexDir/_COMMIT_head_cache2")
-    Fs.delete(spark, s"$indexDir/head_cache2")
-    if (pairs.isEmpty) {
-      Seq.empty[(String, String, Int, Long, Double)]
-        .toDF("term_a", "term_b", "rank", "doc_id", "score")
-        .write.mode(SaveMode.Overwrite).parquet(s"$indexDir/head_cache2")
-    } else pairs.zipWithIndex.grouped(pairBatch).foreach { batch =>
-      val queries = batch.map { case ((a, b), i) =>
-        Searcher.Query(i.toLong, s"$a $b")
-      }
-      val byId = batch.map { case (p, i) => i.toLong -> p }.toMap
-      val byIdB = spark.sparkContext.broadcast(byId)
-      Searcher.searchTopKRelational(spark, indexDir, queries, k,
-          Searcher.And, nBuckets)
-        .as[(Long, Int, Long, Double)]
-        .map { case (qid, rank, doc, score) =>
-          val (a, b) = byIdB.value(qid)
-          (a, b, rank, doc, score)
-        }
-        .toDF("term_a", "term_b", "rank", "doc_id", "score")
+    // marker over a missing or partial table (readers would silently
+    // serve truncated top-k)
+    invalidate(spark, indexDir)
+    val dict = Builder.dictionary(spark, indexDir)
+    val heads = dict.filter(col("df") >= minDf)
+      .select("term").as[String].collect().sorted.toSeq
+    val top = dict.orderBy(col("df").desc, col("term"))
+      .select("term").as[String].take(math.max(pairTerms, tripleTerms)).toSeq
+    val keys: Seq[Seq[String]] = heads.map(Seq(_)) ++
+      top.take(pairTerms).sorted.combinations(2) ++
+      top.take(tripleTerms).sorted.combinations(3)
+    val out = tableDir(indexDir)
+    keys.grouped(BuildBatch).foreach { batch =>
+      val ids = batch.zipWithIndex.map { case (ts, i) => (i.toLong, ts) }
+      Searcher.searchTopKUncached(spark, indexDir,
+          ids.map { case (i, ts) => Searcher.Query(i, ts.mkString(" ")) },
+          k, nBuckets)
+        .join(broadcast(ids.toDF("query_id", "terms")), "query_id")
+        .select("terms", "rank", "doc_id", "score")
         .coalesce(4)
-        .write.mode(SaveMode.Append).parquet(s"$indexDir/head_cache2")
-      byIdB.destroy() // one broadcast per batch: release, don't accumulate
+        .write.mode(SaveMode.Append).parquet(out)
     }
-    Fs.write(spark, s"$indexDir/_COMMIT_head_cache2",
-      s"""{"n":$maxPairTerms,"k":$k,"rows":${countRows(spark, s"$indexDir/head_cache2")}}""")
+    if (keys.isEmpty)
+      Seq.empty[(Seq[String], Int, Long, Double)]
+        .toDF("terms", "rank", "doc_id", "score").write.parquet(out)
+    Fs.write(spark, marker(indexDir),
+      s"""{"minDf":$minDf,"pairTerms":$pairTerms,"tripleTerms":$tripleTerms,""" +
+        s""""k":$k,"rows":${spark.read.parquet(out).count()}}""")
     IndexHandle.invalidate(spark, indexDir)
   }
 
-  /** Precompute depth-3 top-k for every unordered triple of the
-    * `maxTripleTerms` highest-df terms — the reference recommends cache
-    * depth 10-12 over its small alphabet (README.md:250-251); over a
-    * term vocabulary the expensive frequent "prefixes" are 2- and 3-term
-    * head combinations, so depth stops where entry count stays bounded
-    * (C(n,3) at n=24 is 2,024). Staged in bounded query batches like
-    * buildPairs. */
-  def buildTriples(spark: SparkSession, indexDir: String,
-                   maxTripleTerms: Int, k: Int, nBuckets: Int = 32,
-                   tripleBatch: Int = 1024): Unit = {
+  /** Cache entries loaded by an IndexHandle; empty with K 0 when absent,
+    * half-written or over MaxCacheRows. */
+  def load(spark: SparkSession, indexDir: String): Table = {
     import spark.implicits._
-    val top: Seq[String] = Builder.dictionary(spark, indexDir)
-      .orderBy(col("df").desc, col("term"))
-      .select("term").as[String].take(maxTripleTerms).toSeq.sorted
-    val triples: Seq[(String, String, String)] = for {
-      i <- top.indices; j <- (i + 1) until top.length
-      l <- (j + 1) until top.length
-    } yield (top(i), top(j), top(l))
-    Fs.delete(spark, s"$indexDir/_COMMIT_head_cache3") // marker first
-    Fs.delete(spark, s"$indexDir/head_cache3")
-    if (triples.isEmpty) {
-      Seq.empty[(String, String, String, Int, Long, Double)]
-        .toDF("term_a", "term_b", "term_c", "rank", "doc_id", "score")
-        .write.mode(SaveMode.Overwrite).parquet(s"$indexDir/head_cache3")
-    } else triples.zipWithIndex.grouped(tripleBatch).foreach { batch =>
-      val queries = batch.map { case ((a, b, c), i) =>
-        Searcher.Query(i.toLong, s"$a $b $c")
-      }
-      val byId = batch.map { case (t, i) => i.toLong -> t }.toMap
-      val byIdB = spark.sparkContext.broadcast(byId)
-      Searcher.searchTopKRelational(spark, indexDir, queries, k,
-          Searcher.And, nBuckets)
-        .as[(Long, Int, Long, Double)]
-        .map { case (qid, rank, doc, score) =>
-          val (a, b, c) = byIdB.value(qid)
-          (a, b, c, rank, doc, score)
-        }
-        .toDF("term_a", "term_b", "term_c", "rank", "doc_id", "score")
-        .coalesce(4)
-        .write.mode(SaveMode.Append).parquet(s"$indexDir/head_cache3")
-      byIdB.destroy()
-    }
-    Fs.write(spark, s"$indexDir/_COMMIT_head_cache3",
-      s"""{"n":$maxTripleTerms,"k":$k,"rows":${countRows(spark, s"$indexDir/head_cache3")}}""")
-    IndexHandle.invalidate(spark, indexDir)
-  }
-
-  /** Depth-1 entries loaded by an IndexHandle (term -> ranked hits). */
-  def load(spark: SparkSession, indexDir: String): (Map[String, Seq[Scored]], Int) = {
-    import spark.implicits._
-    val marker = s"$indexDir/_COMMIT_head_cache"
-    if (!Fs.exists(spark, marker) ||
-        !Fs.exists(spark, s"$indexDir/head_cache")) return (Map.empty, 0)
-    val meta = Fs.read(spark, marker)
+    if (!Fs.exists(spark, marker(indexDir)) ||
+        !Fs.exists(spark, tableDir(indexDir))) return (Map.empty, 0)
+    val meta = Fs.read(spark, marker(indexDir))
     if (!sizeOk(meta)) return (Map.empty, 0)
     val k = """"k":(\d+)""".r.findFirstMatchIn(meta).map(_.group(1).toInt).getOrElse(0)
-    boundedCollect(spark.read.parquet(s"$indexDir/head_cache")
-      .select("term", "rank", "doc_id", "score")
-      .as[(String, Int, Long, Double)]) match {
+    boundedCollect(spark.read.parquet(tableDir(indexDir))
+      .select("terms", "rank", "doc_id", "score")
+      .as[(Seq[String], Int, Long, Double)]) match {
       case None => (Map.empty, 0)
       case Some(rows) =>
-        (rows.groupBy(_._1).map { case (t, rs) =>
-          t -> rs.sortBy(_._2).map(r => Scored(r._3, r._4)).toSeq
+        (rows.groupBy(_._1).map { case (ts, rs) =>
+          ts -> rs.sortBy(_._2).map(r => Scored(r._3, r._4)).toSeq
         }, k)
     }
   }
 
-  /** Depth-2 entries ((term_a, term_b) sorted -> ranked hits). */
-  def loadPairs(spark: SparkSession, indexDir: String): (Map[(String, String), Seq[Scored]], Int) = {
-    import spark.implicits._
-    val marker = s"$indexDir/_COMMIT_head_cache2"
-    if (!Fs.exists(spark, marker) ||
-        !Fs.exists(spark, s"$indexDir/head_cache2")) return (Map.empty, 0)
-    val meta = Fs.read(spark, marker)
-    if (!sizeOk(meta)) return (Map.empty, 0)
-    val k = """"k":(\d+)""".r.findFirstMatchIn(meta).map(_.group(1).toInt).getOrElse(0)
-    boundedCollect(spark.read.parquet(s"$indexDir/head_cache2")
-      .select("term_a", "term_b", "rank", "doc_id", "score")
-      .as[(String, String, Int, Long, Double)]) match {
-      case None => (Map.empty, 0)
-      case Some(rows) =>
-        (rows.groupBy(r => (r._1, r._2)).map { case (p, rs) =>
-          p -> rs.sortBy(_._3).map(r => Scored(r._4, r._5)).toSeq
-        }, k)
-    }
-  }
+  /** The cached ranking for a live query's present terms — one map
+    * lookup. Multi-term entries are conjunctive, so an OR query is served
+    * only when a single term is present (OR and AND agree there). */
+  def lookup(cache: Table, terms: Seq[String], k: Int,
+             mode: Searcher.Mode): Option[Seq[Scored]] =
+    if (k > cache._2 || (mode == Searcher.Or && terms.size > 1)) None
+    else cache._1.get(terms.sorted)
 
-  /** Depth-3 entries ((a, b, c) sorted -> ranked hits). */
-  def loadTriples(spark: SparkSession, indexDir: String): (Map[(String, String, String), Seq[Scored]], Int) = {
-    import spark.implicits._
-    val marker = s"$indexDir/_COMMIT_head_cache3"
-    if (!Fs.exists(spark, marker) ||
-        !Fs.exists(spark, s"$indexDir/head_cache3")) return (Map.empty, 0)
-    val meta = Fs.read(spark, marker)
-    if (!sizeOk(meta)) return (Map.empty, 0)
-    val k = """"k":(\d+)""".r.findFirstMatchIn(meta).map(_.group(1).toInt).getOrElse(0)
-    boundedCollect(spark.read.parquet(s"$indexDir/head_cache3")
-      .select("term_a", "term_b", "term_c", "rank", "doc_id", "score")
-      .as[(String, String, String, Int, Long, Double)]) match {
-      case None => (Map.empty, 0)
-      case Some(rows) =>
-        (rows.groupBy(r => (r._1, r._2, r._3)).map { case (t, rs) =>
-          t -> rs.sortBy(_._4).map(r => Scored(r._5, r._6)).toSeq
-        }, k)
-    }
-  }
-
-  /** Drop all cache levels (incremental ingest invalidation: stale
-    * cached results must not shadow newly ingested documents). */
+  /** Drop the cache (incremental ingest invalidation: stale cached
+    * results must not shadow newly ingested documents). */
   def invalidate(spark: SparkSession, indexDir: String): Unit = {
-    Fs.delete(spark, s"$indexDir/_COMMIT_head_cache")
-    Fs.delete(spark, s"$indexDir/head_cache")
-    Fs.delete(spark, s"$indexDir/_COMMIT_head_cache2")
-    Fs.delete(spark, s"$indexDir/head_cache2")
-    Fs.delete(spark, s"$indexDir/_COMMIT_head_cache3")
-    Fs.delete(spark, s"$indexDir/head_cache3")
+    Fs.delete(spark, marker(indexDir))
+    Fs.delete(spark, tableDir(indexDir))
   }
 }

@@ -117,27 +117,16 @@ class IndexHandle private (
     if (docmetaLoaded) docmeta.unpersist()
   }
 
-  /** Head-term result cache (present only if HeadCache.build ran). */
-  lazy val headCache: (Map[String, Seq[Scored]], Int) =
-    HeadCache.load(spark, dir)
-
-  /** Head-pair (depth-2) result cache (present only if
-    * HeadCache.buildPairs ran). */
-  lazy val headCache2: (Map[(String, String), Seq[Scored]], Int) =
-    HeadCache.loadPairs(spark, dir)
-
-  /** Head-triple (depth-3) result cache (present only if
-    * HeadCache.buildTriples ran). */
-  lazy val headCache3: (Map[(String, String, String), Seq[Scored]], Int) =
-    HeadCache.loadTriples(spark, dir)
+  /** Head result cache (empty unless HeadCache.build ran). */
+  lazy val headCache: HeadCache.Table = HeadCache.load(spark, dir)
 
   /** Per-term merged block [doc_id_base, doc_id_max] intervals (coarsened
     * to <= Searcher.MaxIvPerTerm by IntervalAgg), cached on the handle:
     * block metadata is index-static until ingest invalidates the handle,
-    * so the relational prune pays its distributed interval aggregation
-    * ONCE per term instead of once per query batch (the r2 relational
-    * cold-start fix). Terms with no blocks cache an empty array so they
-    * are never recomputed either. */
+    * so the AND block prune of searchCandidates/countMatches
+    * (Searcher.pruneBlocks) pays its distributed interval aggregation
+    * ONCE per term instead of once per query batch. Terms with no blocks
+    * cache an empty array so they are never recomputed either. */
   private val intervalCache =
     new java.util.concurrent.ConcurrentHashMap[String, Array[(Long, Long)]]()
 
@@ -167,40 +156,6 @@ class IndexHandle private (
     terms.flatMap { t =>
       val iv = intervalCache.get(t)
       if (iv == null || iv.isEmpty) None else Some(t -> iv)
-    }.toMap
-  }
-
-  /** Per-term max tfNorm over block metadata (max over blocks of
-    * tfNorm(max_tf, min_dl, avgdl)) — the term-level score upper bound
-    * feeding the relational OR maxscore prune
-    * (Searcher.pruneBlocksOrMaxscore). Metadata-only aggregation, cached
-    * like the interval cache (index-static until ingest invalidates the
-    * handle). */
-  private val ubCache =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Double]()
-
-  /** Max tfNorm per term; absent/empty terms are omitted. */
-  def maxTfNormOf(terms: Seq[String]): Map[String, Double] = {
-    import spark.implicits._
-    if (ubCache.size > MaxCachedTerms) ubCache.clear()
-    val missing = terms.distinct.filterNot(ubCache.containsKey)
-    if (missing.nonEmpty) {
-      val a = stats.avgdl
-      val k1 = graft.index.Bm25.K1
-      val b = graft.index.Bm25.B
-      blocksFor(missing)
-        .groupBy("term")
-        .agg(max(col("max_tf") / (col("max_tf") +
-          lit(k1) * (lit(1 - b) + lit(b) * col("min_dl") / lit(a))))
-          .as("ub"))
-        .as[(String, Double)].collect()
-        .foreach { case (t, ub) => ubCache.put(t, ub) }
-      missing.filterNot(ubCache.containsKey)
-        .foreach(t => ubCache.put(t, -1.0))
-    }
-    terms.flatMap { t =>
-      val v = ubCache.get(t)
-      if (v == null || v < 0) None else Some(t -> v.doubleValue)
     }.toMap
   }
 

@@ -15,7 +15,7 @@ import org.apache.spark.sql.expressions.Aggregator
   *
   * This keeps per-term interval state bounded on the executors and the
   * driver: a head term with millions of blocks still reports <= maxIv
-  * rows, so the relational query path never collects unbounded block
+  * rows, so the AND counting path never collects unbounded block
   * metadata (the r1 MetaCap-cliff fix).
   */
 class IntervalAgg(maxIv: Int)

@@ -1,50 +1,51 @@
 package graft.query
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.index.{Builder, Bm25, Posting, PostingBlock, Tokenizer}
+import graft.index.{Bm25, PostingBlock, Tokenizer}
 
-/** Query engine — the Spark-native analog of `gin query find`
-  * (/root/reference/src/gin_gin.c:672-723).
+/** Query engine — the Spark-native analog of `gin query find` (the
+  * reference's gin_gin.c:672-723), which answers every query with one
+  * search routine over one index. Here every top-k answer comes from one
+  * exact kernel, the block-max WAND loop `Wand.topK`.
   *
-  * Pipeline per batch of queries:
-  *  1. tokenize query text with the SAME tokenizer as the build side
-  *     (the bootstrap, /root/reference/src/gin_gin.c:682-721);
-  *  2. dictionary probe (bucket + term partition-pruned read, collected —
-  *     query terms are few) -> df/idf per term; a missing term kills a
-  *     conjunctive query, the DEAD-fork analog
-  *     (/root/reference/src/gin_gin.c:696-708);
-  *  3. block-metadata interval intersection across the query's terms
-  *     (driver-side, metadata only — the IMT-style pre-merge,
-  *     /root/reference/src/gin_interval_merge_tree.c:178-209) prunes
-  *     posting blocks that cannot contain a conjunctive candidate;
-  *  4. surviving blocks are decoded distributedly, joined with the
-  *     broadcast query-term table, scored with BM25, filtered to
-  *     conjunctive matches, and reduced by the typed TopKAgg so only
-  *     O(k) rows per query cross the final shuffle.
+  * Per call:
+  *  1. one plan: tokenize the queries with the SAME tokenizer as the
+  *     build side (the bootstrap, gin_gin.c:682-721), probe the
+  *     dictionary once for every term's df, and drop dead queries — a
+  *     missing term kills a conjunctive query, the DEAD-fork analog
+  *     (gin_gin.c:696-708); head-cache hits are answered by a map lookup;
+  *  2. the remaining queries run `Wand.topK` over their still-compressed
+  *     posting blocks: on the driver for small batches (latency, no job
+  *     scheduling), on executors for large batches or posting volumes —
+  *     one group per (query, doc-range stripe), per-stripe top-ks merged
+  *     by the typed TopKAgg so only O(k) rows per stripe cross a shuffle.
   *
   * Scores are rounded to 6 decimals *before* ranking so that ranking is
   * reproducible across engines (oracle parity); tie-break doc_id ASC.
+  *
+  * Unranked AND matching (`searchCandidates`/`countMatches`) prunes
+  * posting blocks by interval intersection on block metadata (the
+  * IMT-style pre-merge, gin_interval_merge_tree.c:178-209) and decodes
+  * only the surviving blocks, distributedly.
   */
 object Searcher {
 
   case class Query(query_id: Long, text: String)
-  case class QueryTerm(query_id: Long, term: String, idf: Double, n_terms: Int)
 
   /** Max merged intervals the driver sees PER TERM from the distributed
     * interval aggregation (coarsened beyond this — still sound, see
     * IntervalAgg). Bounds driver memory regardless of index size. */
   val MaxIvPerTerm = 512
 
-  sealed trait Mode
-  case object And extends Mode // posting-list intersection (north rule)
-  case object Or extends Mode // disjunctive BM25
+  type Mode = Wand.Mode
+  val And = Wand.And // posting-list intersection (north rule)
+  val Or = Wand.Or // disjunctive BM25
 
   /** Σ df above which searchTopK stops using the DRIVER-local WAND loop
     * (whose collected block set must fit the driver heap) and evaluates
-    * on executors instead. Since r5 this is a driver-memory bound only —
-    * the executor path stripes big posting volumes into bounded groups,
-    * so no volume falls back to the slower relational plan. */
+    * on executors instead — a driver-memory bound only: the executor path
+    * stripes big posting volumes into bounded groups. */
   val WandDfCap = 5000000L
 
   /** Target postings per executor-WAND stripe group (~4 B/posting
@@ -68,14 +69,14 @@ object Searcher {
   val ExecBatchThreshold = 256
 
   /** Per-query work counters — the reference's per-query stats
-    * (gin.c:1118-1151), keyed by query_id. The searchTopK dispatcher
-    * CLEARS the map at every call, so it holds counters for the LAST
-    * dispatched batch only: empty after a relational or executor-path
-    * batch (their counters would live in executor JVMs), populated after
-    * a driver-loop batch. The clear also keeps a long-lived serve
-    * session (thousands of dispatched micro-batches, disjoint query ids)
-    * from growing the map without bound. Direct searchTopKWand calls do
-    * NOT clear — instrumentation that accumulates across sub-batches
+    * (gin.c:1118-1151), keyed by query_id, written by the driver loop.
+    * The searchTopK dispatcher CLEARS the map at every call, so it holds
+    * counters for the LAST dispatched batch only: populated after a
+    * driver-loop batch, empty after an executor-path batch (its counters
+    * would live in executor JVMs). The clear also keeps a long-lived
+    * serve session (thousands of dispatched micro-batches, disjoint query
+    * ids) from growing the map without bound. Direct searchTopKWand calls
+    * do NOT clear — instrumentation that accumulates across sub-batches
     * (Bench's grouped legs) relies on that. */
   val lastStats = new java.util.concurrent.ConcurrentHashMap[Long, Wand.QueryStats]()
 
@@ -85,131 +86,104 @@ object Searcher {
       new java.util.concurrent.ForkJoinPool(
         math.min(16, Runtime.getRuntime.availableProcessors())))
 
+  /** One call's front end, built once and handed to the path that runs
+    * it: the dictionary probe of every query term, the head-cache answers
+    * as ranked rows, and the remaining live queries with their present
+    * (distinct, dictionary-known) terms. */
+  private final case class Plan(handle: IndexHandle, dict: Map[String, Long],
+      cached: Seq[(Long, Int, Long, Double)], live: Map[Long, Seq[String]])
+
+  private def plan(spark: SparkSession, indexDir: String, queries: Seq[Query],
+      k: Int, mode: Mode, nBuckets: Int, probeCache: Boolean): Plan = {
+    val handle = IndexHandle.open(spark, indexDir, nBuckets)
+    val tokens =
+      queries.map(q => q.query_id -> Tokenizer.tokens(q.text).distinct.toSeq)
+    val dict = handle.dfOf(tokens.flatMap(_._2).distinct)
+    val probed = tokens.toMap.toSeq.flatMap { case (qid, ts) =>
+      val present = ts.filter(dict.contains)
+      if (present.isEmpty || (mode == And && present.size < ts.size)) None
+      else Some((qid, present,
+        if (probeCache) HeadCache.lookup(handle.headCache, present, k, mode)
+        else None))
+    }
+    Plan(handle, dict,
+      probed.flatMap { case (qid, _, hit) => hit.toSeq.flatMap(h => ranked(qid, h.take(k))) },
+      probed.collect { case (qid, ts, None) => qid -> ts }.toMap)
+  }
+
+  private def ranked(qid: Long, hits: Seq[Scored]): Seq[(Long, Int, Long, Double)] =
+    hits.zipWithIndex.map { case (s, i) => (qid, i + 1, s.doc_id, s.score) }
+
+  private val OutCols = Seq("query_id", "rank", "doc_id", "score")
+
   /** Top-k search over a built index — dispatcher.
     * Small batch + small posting volume (Σ df <= WandDfCap, which bounds
     * the driver-side block collect): the driver-local exact BMW loop —
     * the latency path (no job scheduling). Anything bigger — large
     * batches OR big posting volumes — runs the SAME exact BMW loop on
     * executors, striped so per-group memory stays bounded regardless of
-    * Σ df (r4 sent over-cap volumes to the 2-4x slower relational plan;
-    * r5 removes that fallback — the relational plan remains available
-    * directly for set-oriented callers). All paths produce identical
-    * rankings ((score6 DESC, doc_id ASC)).
+    * Σ df. Both produce identical rankings ((score6 DESC, doc_id ASC)).
     * Returns (query_id, rank, doc_id, score) with rank 1..k. */
   def searchTopK(spark: SparkSession, indexDir: String, queries: Seq[Query],
                  k: Int, mode: Mode = And, nBuckets: Int = 32): DataFrame = {
-    val handle = IndexHandle.open(spark, indexDir, nBuckets)
-    val allTerms = queries.flatMap(q => Tokenizer.tokens(q.text)).distinct
-    val dfSum = handle.dfOf(allTerms).values.sum
+    val p = plan(spark, indexDir, queries, k, mode, nBuckets, probeCache = true)
     lastStats.clear() // per-dispatched-batch counters only (see doc)
-    if (queries.size >= ExecBatchThreshold || dfSum > WandDfCap)
-      searchTopKWandExecutors(spark, indexDir, queries, k, mode, nBuckets)
-    else
-      searchTopKWand(spark, indexDir, queries, k, mode, nBuckets)
+    if (queries.size >= ExecBatchThreshold || p.dict.values.sum > WandDfCap)
+      executorTopK(spark, p, k, mode, ExecStripePostings)
+    else driverTopK(spark, p, k, mode)
   }
 
   /** Driver-local exact BMW path (see Wand). Blocks for the query's
     * terms are collected still-compressed (varint payloads); whole
     * blocks are skipped by block-max metadata without decoding. */
   def searchTopKWand(spark: SparkSession, indexDir: String, queries: Seq[Query],
-                     k: Int, mode: Mode = And, nBuckets: Int = 32): DataFrame = {
-    import spark.implicits._
-    val handle = IndexHandle.open(spark, indexDir, nBuckets)
-    val stats = handle.stats
-    val termsPerQuery: Map[Long, Seq[String]] =
-      queries.map(q => q.query_id -> Tokenizer.tokens(q.text).distinct.toSeq).toMap
-    val allTerms = termsPerQuery.values.flatten.toSeq.distinct
-    val dict = handle.dfOf(allTerms)
-    val live = termsPerQuery.filter { case (_, ts) =>
-      ts.nonEmpty && (mode match {
-        case And => ts.forall(dict.contains)
-        case Or  => ts.exists(dict.contains)
-      })
-    }
-    if (live.isEmpty)
-      return spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        org.apache.spark.sql.types.StructType.fromDDL(
-          "query_id BIGINT, rank INT, doc_id BIGINT, score DOUBLE"))
-    // head-cache fast path (Q9/Q10 analog): single-term queries on cached
-    // head terms, and 2-term AND queries on cached head PAIRS (the
-    // reference's depth-k cache bootstraps multi-char prefixes the same
-    // way, /root/reference/src/gin_gin.c:1021-1304), answered without
-    // touching postings
-    val cachedFor = headCacheProbe(handle, dict, k, mode)
-    val (cachedQs, liveQs) = live.partition { case (_, ts) =>
-      cachedFor(ts).isDefined
-    }
-    val cachedRows = cachedQs.toSeq.flatMap { case (qid, ts) =>
-      cachedFor(ts).get.take(k).zipWithIndex
-        .map { case (s, i) => (qid, i + 1, s.doc_id, s.score) }
-    }
+                     k: Int, mode: Mode = And, nBuckets: Int = 32): DataFrame =
+    driverTopK(spark,
+      plan(spark, indexDir, queries, k, mode, nBuckets, probeCache = true), k, mode)
 
-    val liveTerms = liveQs.values.flatten.toSeq.distinct.filter(dict.contains)
-    val byTerm: Map[String, Array[graft.index.PostingBlock]] =
-      if (liveTerms.isEmpty) Map.empty
-      else handle.blocksFor(liveTerms)
+  private def driverTopK(spark: SparkSession, p: Plan, k: Int,
+      mode: Mode): DataFrame = {
+    import spark.implicits._
+    val stats = p.handle.stats
+    val terms = p.live.values.flatten.toSeq.distinct
+    val byTerm: Map[String, Array[PostingBlock]] =
+      if (terms.isEmpty) Map.empty
+      else p.handle.blocksFor(terms)
         .select("term", "block_id", "doc_id_base", "doc_id_max", "num_docs",
           "max_tf", "min_dl", "doc_deltas", "tfs", "dls")
         .as[PostingBlock].collect()
         .groupBy(_.term).map { case (t, bs) => t -> bs.sortBy(_.doc_id_base) }
-    val wandMode = if (mode == And) Wand.And else Wand.Or
     // queries are independent: evaluate the batch on a driver-side pool
     // (the reference's -j thread parallelism for the serving loop,
     // /root/reference/benchmark/scripts/benchmark_parallelism_fast_hard.sh)
     import scala.collection.parallel.CollectionConverters._
-    val par = liveQs.toSeq.par
+    val par = p.live.toSeq.par
     par.tasksupport = wandPool
-    val rows = cachedRows ++ par.map { case (qid, ts) =>
-      val tbs = ts.filter(dict.contains).map { t =>
-        Wand.TermBlocks(t, Bm25.idf(stats.n_docs, dict(t)),
+    val rows = p.cached ++ par.map { case (qid, ts) =>
+      val tbs = ts.map { t =>
+        Wand.TermBlocks(t, Bm25.idf(stats.n_docs, p.dict(t)),
           byTerm.getOrElse(t, Array.empty))
       }
-      val (hits, qstats) = Wand.topK(tbs, k, stats.avgdl, wandMode)
+      val (hits, qstats) = Wand.topK(tbs, k, stats.avgdl, mode)
       lastStats.put(qid, qstats)
       qid -> hits
-    }.seq.flatMap { case (qid, hits) =>
-      hits.zipWithIndex.map { case (s, i) => (qid, i + 1, s.doc_id, s.score) }
-    }
-    rows.toDF("query_id", "rank", "doc_id", "score")
+    }.seq.flatMap { case (qid, hits) => ranked(qid, hits) }
+    rows.toDF(OutCols: _*)
   }
 
-  /** Head-cache probe (Q9/Q10 analog) shared by the driver and executor
-    * WAND paths: single-term queries on cached head terms, 2/3-term AND
-    * queries on cached head pairs/triples (the reference's depth-k cache
-    * bootstraps multi-char prefixes the same way,
-    * /root/reference/src/gin_gin.c:1021-1304) are answered without
-    * touching postings. The cache maps live on the driver (bounded by
-    * the build-time minDf/k knobs), so the probe costs a map lookup. */
-  private def headCacheProbe(handle: IndexHandle, dict: Map[String, Long],
-      k: Int, mode: Mode): Seq[String] => Option[Seq[Scored]] = {
-    val (cacheMap, cacheK) = handle.headCache
-    val (cache2Map, cacheK2) = handle.headCache2
-    val (cache3Map, cacheK3) = handle.headCache3
-    (ts: Seq[String]) => {
-      val present = ts.filter(dict.contains)
-      if (present.size == 1 && k <= cacheK) cacheMap.get(present.head)
-      else if (present.size == 2 && mode == And && k <= cacheK2) {
-        val (a, b) = (present(0), present(1))
-        cache2Map.get(if (a < b) (a, b) else (b, a))
-      } else if (present.size == 3 && mode == And && k <= cacheK3) {
-        val Seq(a, b, c) = present.sorted
-        cache3Map.get((a, b, c))
-      } else None
-    }
-  }
+  /** One block of one (query, stripe) group on the executor path. */
+  case class StripeBlock(query_id: Long, stripe: Long, n_stripes: Long,
+      stripe_w: Long, n_terms: Int, idf: Double, block: PostingBlock)
 
   /** Executor-side exact BMW serving — the batch form of the driver WAND
     * loop (the reference's thread-parallel query batches at cluster
     * scale): still-compressed blocks join the broadcast query-term table
     * on `term` (one shuffle, block payloads fan out only to the queries
     * that need them — bounded by batch size), then ONE flatMapGroups per
-    * (query, doc-range stripe) rebuilds the per-term cursors and runs
-    * the IDENTICAL `Wand.topK` loop on an executor; per-stripe exact
-    * top-ks merge through the typed TopKAgg into the global exact top-k
-    * (every doc is scored in exactly one stripe, with every term's
-    * covering block present — Wand.topK's [minDoc, maxDoc] contract).
-    * Rankings are bit-identical to `searchTopKWand`.
+    * (query, doc-range stripe) runs the IDENTICAL `Wand.topK` loop on an
+    * executor (stripeTopK); per-stripe exact top-ks merge through the
+    * typed TopKAgg into the global exact top-k. Rankings are
+    * bit-identical to `searchTopKWand`.
     *
     * Memory: a query whose Σ df exceeds `stripePostings` is split into
     * up to MaxStripesPerQuery uniform doc-range stripes, so per-group
@@ -222,226 +196,110 @@ object Searcher {
   def searchTopKWandExecutors(spark: SparkSession, indexDir: String,
       queries: Seq[Query], k: Int, mode: Mode = And,
       nBuckets: Int = 32,
-      stripePostings: Long = ExecStripePostings): DataFrame = {
+      stripePostings: Long = ExecStripePostings): DataFrame =
+    executorTopK(spark,
+      plan(spark, indexDir, queries, k, mode, nBuckets, probeCache = true),
+      k, mode, stripePostings)
+
+  /** Set-oriented entry point kept for existing callers: top-k has one
+    * kernel, so this is the executor BMW path. */
+  def searchTopKRelational(spark: SparkSession, indexDir: String, queries: Seq[Query],
+                 k: Int, mode: Mode = And, nBuckets: Int = 32): DataFrame =
+    searchTopKWandExecutors(spark, indexDir, queries, k, mode, nBuckets)
+
+  /** Conjunctive top-k on executors that never answers from the head
+    * cache — the kernel the cache itself is built with. */
+  private[query] def searchTopKUncached(spark: SparkSession, indexDir: String,
+      queries: Seq[Query], k: Int, nBuckets: Int): DataFrame =
+    executorTopK(spark,
+      plan(spark, indexDir, queries, k, And, nBuckets, probeCache = false),
+      k, And, ExecStripePostings)
+
+  private def executorTopK(spark: SparkSession, p: Plan, k: Int, mode: Mode,
+      stripePostings: Long): DataFrame = {
     import spark.implicits._
-    val handle = IndexHandle.open(spark, indexDir, nBuckets)
-    val stats = handle.stats
-    val termsPerQuery: Map[Long, Seq[String]] =
-      queries.map(q => q.query_id -> Tokenizer.tokens(q.text).distinct.toSeq).toMap
-    val allTerms = termsPerQuery.values.flatten.toSeq.distinct
-    val dict = handle.dfOf(allTerms)
-    val live = termsPerQuery.filter { case (_, ts) =>
-      ts.nonEmpty && (mode match {
-        case And => ts.forall(dict.contains)
-        case Or  => ts.exists(dict.contains)
-      })
+    val cachedDf = p.cached.toDF(OutCols: _*)
+    if (p.live.isEmpty) return cachedDf
+    val stats = p.handle.stats
+    // per-query stripe plan from the probed dictionary dfs: driver-side
+    // arithmetic only, no extra jobs
+    val qt = p.live.toSeq.flatMap { case (qid, ts) =>
+      val nS = math.max(1L, math.min(MaxStripesPerQuery.toLong,
+        (ts.map(p.dict).sum + stripePostings - 1) / math.max(1L, stripePostings)))
+      val w = math.max(1L, (stats.n_docs + nS - 1) / nS)
+      ts.map(t => (qid, t, Bm25.idf(stats.n_docs, p.dict(t)), nS, w, ts.size))
     }
-    val emptyOut = spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-      org.apache.spark.sql.types.StructType.fromDDL(
-        "query_id BIGINT, rank INT, doc_id BIGINT, score DOUBLE"))
-    if (live.isEmpty) return emptyOut
-    // head-cache hits are answered on the driver (map lookup) and never
-    // enter the block join — the same fast path the driver loop has
-    val cachedFor = headCacheProbe(handle, dict, k, mode)
-    val (cachedQs, liveQs) = live.partition { case (_, ts) =>
-      cachedFor(ts).isDefined
-    }
-    val cachedDf = cachedQs.toSeq.flatMap { case (qid, ts) =>
-      cachedFor(ts).get.take(k).zipWithIndex
-        .map { case (s, i) => (qid, i + 1, s.doc_id, s.score) }
-    }.toDF("query_id", "rank", "doc_id", "score")
-    if (liveQs.isEmpty) return cachedDf
-    val liveTerms = liveQs.values.flatten.toSeq.distinct.filter(dict.contains)
-    // per-query stripe plan from the (already-probed) dictionary dfs:
-    // driver-side arithmetic only, no extra jobs
-    val plan: Seq[(Long, Seq[String], Long, Long)] = liveQs.toSeq.map {
-      case (qid, ts) =>
-        val present = ts.filter(dict.contains)
-        val dfSumQ = present.map(dict).sum
-        val nS = math.max(1L, math.min(MaxStripesPerQuery.toLong,
-          (dfSumQ + stripePostings - 1) / math.max(1L, stripePostings)))
-        val w = math.max(1L, (stats.n_docs + nS - 1) / nS)
-        (qid, present, nS, w)
-    }
+    val blocks = p.handle.blocksFor(p.live.values.flatten.toSeq.distinct)
+      .join(broadcast(qt.toDF("query_id", "term", "idf", "n_stripes",
+        "stripe_w", "n_terms")), "term")
     val avgdl = stats.avgdl
-    val wandMode = if (mode == And) Wand.And else Wand.Or
+    def groups(stripe: Column) = blocks.withColumn("stripe", stripe)
+      .select(col("query_id"), col("stripe"), col("n_stripes"),
+        col("stripe_w"), col("n_terms"), col("idf"),
+        struct(col("term"), col("block_id"), col("doc_id_base"),
+          col("doc_id_max"), col("num_docs"), col("max_tf"), col("min_dl"),
+          col("doc_deltas"), col("tfs"), col("dls")).as("block"))
+      .as[StripeBlock]
+      .groupByKey(r => (r.query_id, r.stripe))
     // common case: nothing stripes (every Σ df fits one group) — one
-    // flatMapGroups per query emits final ranks directly, no merge
-    // shuffle (bench leg wand_exec measures this path)
-    if (plan.forall(_._3 == 1L)) {
-      val qt1 = plan.flatMap { case (qid, present, _, _) =>
-        present.map(t => (qid, t, Bm25.idf(stats.n_docs, dict(t))))
-      }.toDF("query_id", "term", "idf")
-      return handle.blocksFor(liveTerms)
-        .join(broadcast(qt1), "term")
-        .select(col("query_id"), col("term"), col("idf"), col("block_id"),
-          col("doc_id_base"), col("doc_id_max"), col("num_docs"),
-          col("max_tf"), col("min_dl"), col("doc_deltas"), col("tfs"),
-          col("dls"))
-        .as[(Long, String, Double, Int, Long, Long, Int, Int, Int,
-          Array[Byte], Array[Byte], Array[Byte])]
-        .groupByKey(_._1)
-        .flatMapGroups { (qid: Long, it: Iterator[(Long, String, Double,
-            Int, Long, Long, Int, Int, Int, Array[Byte], Array[Byte],
-            Array[Byte])]) =>
-          val byTerm = scala.collection.mutable.LinkedHashMap
-            .empty[String, (Double, scala.collection.mutable.ArrayBuffer[PostingBlock])]
-          it.foreach { r =>
-            val (_, term, idf, bid, base, max, nd, mtf, mdl, dd, tfs, dls) = r
-            byTerm.getOrElseUpdate(term,
-              (idf, scala.collection.mutable.ArrayBuffer.empty[PostingBlock]))
-              ._2 += PostingBlock(term, bid, base, max, nd, mtf, mdl, dd, tfs, dls)
-          }
-          val tbs = byTerm.iterator.map { case (t, (idf, bs)) =>
-            Wand.TermBlocks(t, idf, bs.sortBy(_.doc_id_base).toArray)
-          }.toSeq
-          val (hits, _) = Wand.topK(tbs, k, avgdl, wandMode)
-          hits.iterator.zipWithIndex.map { case (s, i) =>
-            (qid, i + 1, s.doc_id, s.score)
-          }
+    // group per query emits final ranks directly, no merge shuffle
+    // (bench leg wand_exec measures this path)
+    if (qt.forall(_._4 == 1L))
+      return groups(lit(0L))
+        .flatMapGroups { (key: (Long, Long), it: Iterator[StripeBlock]) =>
+          ranked(key._1, stripeTopK(it, k, avgdl, mode))
         }
-        .toDF("query_id", "rank", "doc_id", "score")
+        .toDF(OutCols: _*)
         .unionByName(cachedDf)
-    }
-    val qt = plan.flatMap { case (qid, present, nS, w) =>
-      present.map(t =>
-        (qid, t, Bm25.idf(stats.n_docs, dict(t)), nS, w, present.size))
-    }.toDF("query_id", "term", "idf", "n_stripes", "stripe_w", "n_terms")
-    val andMode = mode == And
-    val perStripe = handle.blocksFor(liveTerms)
-      .join(broadcast(qt), "term")
-      // a block [base, max] feeds every stripe it overlaps; ids past the
-      // last stripe boundary (e.g. post-ingest docs beyond stats.n_docs)
-      // clamp into the last stripe, so every doc lands in exactly one
-      .withColumn("stripe", explode(sequence(
+    // a block [base, max] feeds every stripe it overlaps; ids past the
+    // last stripe boundary (e.g. post-ingest docs beyond stats.n_docs)
+    // clamp into the last stripe, so every doc lands in exactly one
+    val perStripe = groups(explode(sequence(
         expr("least(doc_id_base div stripe_w, n_stripes - 1)"),
         expr("least(doc_id_max div stripe_w, n_stripes - 1)"))))
-      .select(col("query_id"), col("stripe"), col("n_stripes"),
-        col("stripe_w"), col("n_terms"), col("term"), col("idf"),
-        col("block_id"), col("doc_id_base"), col("doc_id_max"),
-        col("num_docs"), col("max_tf"), col("min_dl"), col("doc_deltas"),
-        col("tfs"), col("dls"))
-      .as[(Long, Long, Long, Long, Int, String, Double, Int, Long, Long,
-        Int, Int, Int, Array[Byte], Array[Byte], Array[Byte])]
-      .groupByKey(r => (r._1, r._2))
-      .flatMapGroups { (key: (Long, Long), it: Iterator[(Long, Long, Long,
-          Long, Int, String, Double, Int, Long, Long, Int, Int, Int,
-          Array[Byte], Array[Byte], Array[Byte])]) =>
-        val (qid, stripe) = key
-        val byTerm = scala.collection.mutable.LinkedHashMap
-          .empty[String, (Double, scala.collection.mutable.ArrayBuffer[PostingBlock])]
-        var nS = 1L; var w = Long.MaxValue; var nTerms = 0
-        it.foreach { r =>
-          val (_, _, rNS, rW, rNT, term, idf, bid, base, max, nd, mtf, mdl,
-            dd, tfs, dls) = r
-          nS = rNS; w = rW; nTerms = rNT
-          byTerm.getOrElseUpdate(term,
-            (idf, scala.collection.mutable.ArrayBuffer.empty[PostingBlock]))
-            ._2 += PostingBlock(term, bid, base, max, nd, mtf, mdl, dd, tfs, dls)
-        }
-        // a conjunctive stripe missing ANY query term has no match in its
-        // doc range (the absent term has no posting there) — running the
-        // AND loop over the present subset would fabricate matches
-        if (andMode && byTerm.size < nTerms) Iterator.empty
-        else {
-          val tbs = byTerm.iterator.map { case (t, (idf, bs)) =>
-            Wand.TermBlocks(t, idf, bs.sortBy(_.doc_id_base).toArray)
-          }.toSeq
-          val minDoc = stripe * w
-          val maxDoc = if (stripe >= nS - 1) Long.MaxValue
-            else stripe * w + w - 1
-          val (hits, _) = Wand.topK(tbs, k, avgdl, wandMode, minDoc, maxDoc)
-          hits.iterator.map(s => (qid, s.doc_id, s.score))
-        }
+      .flatMapGroups { (key: (Long, Long), it: Iterator[StripeBlock]) =>
+        stripeTopK(it, k, avgdl, mode).map(s => (key._1, s))
       }
     // merge per-stripe exact top-ks (<= k rows per stripe cross this
     // shuffle) into the global exact top-k per query
-    val topk = new TopKAgg(k)
     perStripe
       .groupByKey(_._1)
-      .mapValues(r => Scored(r._2, r._3))
-      .agg(topk.toColumn.name("topk"))
-      .flatMap { case (qid, hits) =>
-        hits.zipWithIndex.map { case (s, i) => (qid, i + 1, s.doc_id, s.score) }
-      }
-      .toDF("query_id", "rank", "doc_id", "score")
+      .mapValues(_._2)
+      .agg(new TopKAgg(k).toColumn.name("topk"))
+      .flatMap { case (qid, hits) => ranked(qid, hits) }
+      .toDF(OutCols: _*)
       .unionByName(cachedDf)
   }
 
-  /** Distributed relational plan (decode -> join -> aggregate -> typed
-    * top-k); the path for posting volumes beyond the driver cap. */
-  def searchTopKRelational(spark: SparkSession, indexDir: String, queries: Seq[Query],
-                 k: Int, mode: Mode = And, nBuckets: Int = 32): DataFrame = {
-    import spark.implicits._
-    val handle = IndexHandle.open(spark, indexDir, nBuckets)
-    val stats = handle.stats
-
-    val termsPerQuery: Map[Long, Seq[String]] =
-      queries.map(q => q.query_id -> Tokenizer.tokens(q.text).distinct.toSeq).toMap
-    val allTerms = termsPerQuery.values.flatten.toSeq.distinct
-
-    // dictionary probe (warm handle; the cache-lookup analog Q10)
-    val dict: Map[String, Long] = handle.dfOf(allTerms)
-
-    // live queries: AND requires every term present
-    val live = termsPerQuery.filter { case (_, ts) =>
-      ts.nonEmpty && (mode match {
-        case And => ts.forall(dict.contains)
-        case Or  => ts.exists(dict.contains)
-      })
+  /** The group body both executor shapes share: one (query, stripe)'s
+    * blocks regrouped per term, then `Wand.topK` over the stripe's doc
+    * range. Every doc is scored in exactly one stripe with every term's
+    * covering block present, so per-stripe exact top-ks merge into the
+    * exact global top-k (Wand.topK's [minDoc, maxDoc] contract). */
+  private def stripeTopK(rows: Iterator[StripeBlock], k: Int, avgdl: Double,
+      mode: Mode): Seq[Scored] = {
+    val byTerm = scala.collection.mutable.LinkedHashMap
+      .empty[String, (Double, scala.collection.mutable.ArrayBuffer[PostingBlock])]
+    var last: StripeBlock = null
+    rows.foreach { r =>
+      last = r
+      byTerm.getOrElseUpdate(r.block.term,
+        (r.idf, scala.collection.mutable.ArrayBuffer.empty[PostingBlock]))
+        ._2 += r.block
     }
-    val emptyOut = spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-      org.apache.spark.sql.types.StructType.fromDDL(
-        "query_id BIGINT, rank INT, doc_id BIGINT, score DOUBLE"))
-    if (live.isEmpty) return emptyOut
-
-    val liveTerms = live.values.flatten.toSeq.distinct.filter(dict.contains)
-    val qterms: Seq[QueryTerm] = live.toSeq.flatMap { case (qid, ts) =>
-      val present = ts.filter(dict.contains)
-      present.map(t => QueryTerm(qid, t, Bm25.idf(stats.n_docs, dict(t)), ts.size))
+    // a conjunctive stripe missing ANY query term has no match in its
+    // doc range (the absent term has no posting there) — running the
+    // AND loop over the present subset would fabricate matches
+    if (mode == And && byTerm.size < last.n_terms) Nil
+    else {
+      val tbs = byTerm.iterator.map { case (t, (idf, bs)) =>
+        Wand.TermBlocks(t, idf, bs.sortBy(_.doc_id_base).toArray)
+      }.toSeq
+      val minDoc = last.stripe * last.stripe_w
+      val maxDoc = if (last.stripe >= last.n_stripes - 1) Long.MaxValue
+        else minDoc + last.stripe_w - 1
+      Wand.topK(tbs, k, avgdl, mode, minDoc, maxDoc)._1
     }
-
-    val blocks0 = handle.blocksFor(liveTerms)
-
-    // block-max/interval pruning: AND intersects every term's covered doc
-    // ranges; OR runs the maxscore candidate prune (essential terms keep
-    // all blocks, non-essential blocks outside every essential interval
-    // are never decoded)
-    val blocks = if (mode == And) pruneBlocks(spark, handle, blocks0, live)
-      else pruneBlocksOrMaxscore(spark, handle, blocks0, live, dict, k)
-
-    // native generator decode: binary block columns -> posting rows,
-    // no case-class encoder round-trip
-    val postings = blocks.select(col("term"),
-        graft.functions.DecodePostings.rows(col("num_docs"),
-          col("doc_deltas"), col("tfs"), col("dls"))
-          .as(Seq("doc_id", "tf", "dl")))
-
-    val qtDf = broadcast(qterms.toDF())
-    val needAll = mode == And
-    val scored = postings.join(qtDf, "term")
-      .withColumn("contrib",
-        col("idf") * lit(Bm25.K1 + 1.0) * col("tf") /
-          (col("tf") + lit(Bm25.K1) *
-            (lit(1 - Bm25.B) + lit(Bm25.B) * col("dl") / lit(stats.avgdl))))
-      .groupBy("query_id", "doc_id")
-      .agg(sum("contrib").as("raw_score"),
-        count(lit(1)).as("nmatch"), first("n_terms").as("n_terms"))
-      .filter(if (needAll) col("nmatch") === col("n_terms") else lit(true))
-      .withColumn("score", round(col("raw_score"), 6))
-      .select("query_id", "doc_id", "score")
-
-    val topk = new TopKAgg(k)
-    scored.as[(Long, Long, Double)]
-      .groupByKey(_._1)
-      .mapValues(r => Scored(r._2, r._3))
-      .agg(topk.toColumn.name("topk"))
-      .flatMap { case (qid, hits) =>
-        hits.zipWithIndex.map { case (s, i) => (qid, i + 1, s.doc_id, s.score) }
-      }
-      .toDF("query_id", "rank", "doc_id", "score")
   }
 
   /** Count of conjunctive matches per query — the `(c:…)` match-count
@@ -458,32 +316,21 @@ object Searcher {
       .withColumn("n_matches", coalesce(col("n_matches"), lit(0L)))
   }
 
-  /** All conjunctive (AND) matching (query_id, doc_id) pairs. Runs the
-    * same interval pruning as the scoring path: only blocks overlapping
-    * every query term's covered doc ranges are decoded — the counting
-    * path gets the IMT-style pre-merge too, not just top-k. */
+  /** All conjunctive (AND) matching (query_id, doc_id) pairs. Only
+    * blocks overlapping every query term's covered doc ranges are
+    * decoded (pruneBlocks) — the IMT-style pre-merge. */
   def searchCandidates(spark: SparkSession, indexDir: String,
                        queries: Seq[Query], nBuckets: Int = 32): DataFrame = {
     import spark.implicits._
-    val handle = IndexHandle.open(spark, indexDir, nBuckets)
-    val termsPerQuery = queries.map(q => q.query_id -> Tokenizer.tokens(q.text).distinct.toSeq).toMap
-    val allTerms = termsPerQuery.values.flatten.toSeq.distinct
-    val emptyOut = Seq.empty[(Long, Long)].toDF("query_id", "doc_id")
-    if (allTerms.isEmpty) return emptyOut
-    // a conjunctive query with any absent term matches nothing: drop it
-    // before touching postings (the DEAD-fork analog)
-    val dict = handle.dfOf(allTerms)
-    val live = termsPerQuery.filter { case (_, ts) =>
-      ts.nonEmpty && ts.forall(dict.contains)
-    }
-    if (live.isEmpty) return emptyOut
-    val liveTerms = live.values.flatten.toSeq.distinct
-    val blocks = pruneBlocks(spark, handle, handle.blocksFor(liveTerms), live)
+    val p = plan(spark, indexDir, queries, 0, And, nBuckets, probeCache = false)
+    if (p.live.isEmpty) return Seq.empty[(Long, Long)].toDF("query_id", "doc_id")
+    val blocks = pruneBlocks(spark, p.handle,
+      p.handle.blocksFor(p.live.values.flatten.toSeq.distinct), p.live)
     val postings = blocks.select(col("term"),
         graft.functions.DecodePostings.rows(col("num_docs"),
           col("doc_deltas"), col("tfs"), col("dls"))
           .as(Seq("doc_id", "tf", "dl")))
-    val qt = live.toSeq.flatMap { case (qid, ts) =>
+    val qt = p.live.toSeq.flatMap { case (qid, ts) =>
       ts.map(t => (qid, t, ts.size))
     }.toDF("query_id", "term", "n_terms")
     postings.join(broadcast(qt), "term")
@@ -539,143 +386,4 @@ object Searcher {
       blocks("term") === ivDf("t") && blocks("doc_id_max") >= ivDf("lo") &&
         blocks("doc_id_base") <= ivDf("hi"), "left_semi")
   }
-
-  /** df cap on the seed term of the OR maxscore bootstrap: the seed's
-    * postings are scored once extra (phase 0), so only bootstrap when the
-    * max-upper-bound term is selective enough for that pass to be cheap —
-    * exactly the head+tail query mix the prune wins on. A query whose
-    * EVERY term is common skips the prune (nothing selective to anchor
-    * candidates anyway). */
-  val OrSeedDfCap = 200000L
-
-  /** Safety margin on the maxscore threshold: scores are rounded to 6dp
-    * before ranking, so the non-essential cutoff must clear the rounding
-    * radius or a pruned doc could round into a tie it deserved. */
-  val OrPruneMargin = 1e-5
-
-  /** Maxscore candidate pruning for the relational OR path (TAAT
-    * maxscore, Turtle & Flood — public knowledge; the reference applies
-    * its budget machinery to every query mode the same way,
-    * /root/reference/gin.c:723-730). Per query:
-    *
-    *  1. bootstrap θ_lb = the k-th best SINGLE-TERM score of the query's
-    *     max-upper-bound term (phase 0, distributed, seed df-capped) — a
-    *     sound lower bound on the true top-k threshold because every
-    *     doc's full score >= its seed-term contribution;
-    *  2. split terms by descending upper bound UB(t) = idf·(k1+1)·max
-    *     tfNorm (block metadata): the maximal suffix with Σ UB < θ_lb −
-    *     margin is NON-ESSENTIAL — a doc containing only those terms
-    *     cannot reach the top-k;
-    *  3. candidates therefore all lie in essential terms' doc-range
-    *     intervals: essential blocks are kept whole, non-essential blocks
-    *     that overlap NO essential interval are dropped before decode.
-    *
-    * Soundness of partial scores: any candidate (doc in an essential
-    * posting) lies inside the essential intervals, so EVERY block
-    * containing it survives — candidates are always fully scored. A
-    * non-candidate doc may survive in partially-scored form via blocks
-    * shared with candidates, but its partial <= full < θ_lb − margin, so
-    * it can neither displace nor tie a true top-k doc. Queries with no
-    * selective seed (df cap) or a too-low θ_lb keep all blocks. */
-  private[graft] def pruneBlocksOrMaxscore(spark: SparkSession,
-      handle: IndexHandle, blocks: DataFrame, live: Map[Long, Seq[String]],
-      dict: Map[String, Long], k: Int): DataFrame = {
-    import spark.implicits._
-    val stats = handle.stats
-    val terms = live.values.flatten.toSeq.distinct.filter(dict.contains)
-    val tfn = handle.maxTfNormOf(terms)
-    def ub(t: String): Double =
-      Bm25.idf(stats.n_docs, dict(t)) * (Bm25.K1 + 1.0) * tfn.getOrElse(t, 0.0)
-    // per-query seed = the max-UB term, when selective enough to score
-    // cheaply and deep enough to yield a k-th score
-    val seeds: Map[Long, String] = live.flatMap { case (qid, ts) =>
-      val present = ts.filter(t => dict.contains(t) && tfn.contains(t))
-      if (present.size < 2) None
-      else {
-        val s = present.maxBy(ub)
-        if (dict(s) <= OrSeedDfCap && dict(s) >= k) Some(qid -> s) else None
-      }
-    }
-    if (seeds.isEmpty) return blocks
-    val kth = singleTermKthScore(spark, handle, seeds.values.toSeq.distinct, k)
-    // per-term surviving ranges: None = full range (essential somewhere
-    // or belonging to an unpruned query), Some(ivs) = the union of its
-    // queries' essential intervals
-    val full = scala.collection.mutable.HashSet.empty[String]
-    val ranged = scala.collection.mutable.HashMap
-      .empty[String, scala.collection.mutable.ArrayBuffer[(Long, Long)]]
-    live.foreach { case (qid, ts) =>
-      val present = ts.filter(t => dict.contains(t) && tfn.contains(t)).distinct
-      val thetaLb = seeds.get(qid).flatMap(kth.get)
-      thetaLb match {
-        case Some(th) if present.size >= 2 =>
-          val byUbDesc = present.sortBy(t => -ub(t))
-          // maximal non-essential suffix: Σ UB < θ_lb − margin
-          var cum = 0.0
-          var cut = byUbDesc.length // first non-essential index
-          var i = byUbDesc.length - 1
-          var stop = false
-          while (i >= 1 && !stop) { // seed (index 0) is always essential
-            cum += ub(byUbDesc(i))
-            if (cum < th - OrPruneMargin) { cut = i; i -= 1 } else stop = true
-          }
-          val (ess, non) = (byUbDesc.take(cut), byUbDesc.drop(cut))
-          ess.foreach(full.add)
-          if (non.nonEmpty) {
-            val ivs = handle.intervalsFor(ess)
-            val union = Intervals.merge(ivs.values.flatten.toArray)
-            non.foreach { t =>
-              ranged.getOrElseUpdate(t,
-                scala.collection.mutable.ArrayBuffer.empty) ++= union
-            }
-          }
-        case _ => present.foreach(full.add)
-      }
-    }
-    val needRange = ranged.keySet.diff(full)
-    if (needRange.isEmpty) return blocks
-    val ivRows = needRange.toSeq.flatMap { t =>
-      Intervals.merge(ranged(t).toArray).map { case (lo, hi) => (t, lo, hi) }
-    } ++ full.toSeq.map(t => (t, 0L, Long.MaxValue))
-    val ivDf = broadcast(ivRows.toDF("t", "lo", "hi"))
-    blocks.join(ivDf,
-      blocks("term") === ivDf("t") && blocks("doc_id_max") >= ivDf("lo") &&
-        blocks("doc_id_base") <= ivDf("hi"), "left_semi")
-  }
-
-  /** Phase 0 of the OR maxscore prune: exact k-th best single-term score
-    * per seed term, computed distributedly over the seeds' (df-capped)
-    * postings and collected as one tiny row per term. */
-  private def singleTermKthScore(spark: SparkSession, handle: IndexHandle,
-      seedTerms: Seq[String], k: Int): Map[String, Double] = {
-    import spark.implicits._
-    val stats = handle.stats
-    val dfs = handle.dfOf(seedTerms)
-    val topk = new TopKAgg(k)
-    handle.blocksFor(seedTerms)
-      .select(col("term"),
-        graft.functions.DecodePostings.rows(col("num_docs"),
-          col("doc_deltas"), col("tfs"), col("dls"))
-          .as(Seq("doc_id", "tf", "dl")))
-      .as[(String, Long, Int, Int)]
-      .map { case (t, doc, tf, dl) =>
-        val idf = Bm25.idf(stats.n_docs, dfs.getOrElse(t, 1L))
-        (t, doc,
-          Bm25.round6(idf * (Bm25.K1 + 1.0) * Bm25.tfNorm(tf, dl, stats.avgdl)))
-      }
-      .groupByKey(_._1)
-      .mapValues(r => Scored(r._2, r._3))
-      .agg(topk.toColumn.name("topk"))
-      .collect()
-      .flatMap { case (t, hits) =>
-        if (hits.lengthCompare(k) < 0) None else Some(t -> hits.last.score)
-      }.toMap
-  }
-
-  /** Back-compat aliases for the interval algebra (moved to Intervals). */
-  def mergeIntervals(iv: Array[(Long, Long)]): Array[(Long, Long)] =
-    Intervals.merge(iv)
-  def intersectIntervals(a: Array[(Long, Long)],
-                         b: Array[(Long, Long)]): Array[(Long, Long)] =
-    Intervals.intersect(a, b)
 }

@@ -10,16 +10,16 @@ import graft.index.{Bm25, Codec, PostingBlock}
   * current top-k threshold.
   *
   * Exactness: ranking is by (score rounded to 6dp DESC, doc_id ASC) —
-  * identical to the relational path and the DuckDB oracle. Skip
-  * decisions compare upper bounds against (θ - 1e-6) so rounding can
-  * never discard a doc that would round into the top-k.
+  * identical to `Oracle.topK` and the DuckDB oracle. Skip decisions
+  * compare upper bounds against (θ - 1e-6) so rounding can never discard
+  * a doc that would round into the top-k.
   *
-  * This is the serving-path scorer: executors/the handle deliver the
-  * (term-pruned, compact) block lists; the per-query merge is a single
-  * tight loop — the same split Lucene-style engines use. Posting volumes
-  * beyond one group's memory are handled by doc-range striping
-  * ([minDoc, maxDoc] below); the relational Searcher path remains for
-  * set-oriented callers.
+  * This is the one top-k kernel: every Searcher top-k path and the head
+  * cache build run it. Executors/the handle deliver the (term-pruned,
+  * compact) block lists; the per-query merge is a single tight loop —
+  * the same split Lucene-style engines use. Posting volumes beyond one
+  * group's memory are handled by doc-range striping ([minDoc, maxDoc]
+  * below).
   */
 object Wand {
 
@@ -28,6 +28,7 @@ object Wand {
   /** One term's posting blocks, sorted by doc_id_base, plus its idf. */
   case class TermBlocks(term: String, idf: Double, blocks: Array[PostingBlock])
 
+  /** Query mode, also exposed as `Searcher.Mode`/`And`/`Or`. */
   sealed trait Mode
   case object And extends Mode
   case object Or extends Mode

@@ -13,8 +13,8 @@ import graft.util.Fs
   * gin.c query REPL): queries arrive as text files in a watched
   * directory, each micro-batch is answered with the SAME dispatcher as
   * the batch path (driver WAND for small batches, executor WAND for
-  * large, relational above the posting-volume cap), and results land as
-  * one parquet directory per batch.
+  * large batches or posting volumes), and results land as one parquet
+  * directory per batch.
   *
   * Idempotency: foreachBatch replays a batch with the same batchId after
   * a crash; the per-batch result directory is written with

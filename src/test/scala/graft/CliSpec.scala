@@ -51,7 +51,7 @@ class CliSpec extends SparkTestBase {
 
     Cli.run(spark, Array("cache", "--index", idx, "--min-df", "50",
       "--k", "5", "--buckets", "8"))
-    assert(graft.util.Fs.exists(spark, s"$idx/_COMMIT_head_cache"))
+    assert(graft.util.Fs.exists(spark, s"$idx/_COMMIT_topk_cache"))
 
     // full match decode: substring offsets and phrase token positions
     val dec = Cli.run(spark, Array("decode", "--index", idx,

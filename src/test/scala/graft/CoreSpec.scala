@@ -4,7 +4,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
 import graft.index.{Codec, Tokenizer}
-import graft.query.{MinKLongAgg, MinKPairAgg, Scored, TopKAgg, Searcher}
+import graft.query.{Intervals, MinKLongAgg, MinKPairAgg, Scored, TopKAgg}
 
 /** Deterministic property harness over scalacheck Gen (scalatestplus is
   * not in the offline cache; seeds fixed for reproducibility). */
@@ -94,7 +94,7 @@ class CoreSpec extends AnyFunSuite with PropHelpers {
 
   // --- interval algebra (fork compaction / IMT analogs) ---
   test("mergeIntervals coalesces overlapping and adjacent runs") {
-    val m = Searcher.mergeIntervals(Array((5L, 9L), (1L, 3L), (4L, 6L), (20L, 30L)))
+    val m = Intervals.merge(Array((5L, 9L), (1L, 3L), (4L, 6L), (20L, 30L)))
     assert(m.toSeq == Seq((1L, 9L), (20L, 30L)))
   }
 
@@ -103,9 +103,9 @@ class CoreSpec extends AnyFunSuite with PropHelpers {
       lo <- Gen.chooseNum(0L, 200L); len <- Gen.chooseNum(0L, 30L)
     } yield (lo, lo + len))
     forAll(genIv, genIv) { (a, b) =>
-      val ma = Searcher.mergeIntervals(a.toArray)
-      val mb = Searcher.mergeIntervals(b.toArray)
-      val got = Searcher.intersectIntervals(ma, mb)
+      val ma = Intervals.merge(a.toArray)
+      val mb = Intervals.merge(b.toArray)
+      val got = Intervals.intersect(ma, mb)
         .flatMap { case (l, h) => l to h }.toSet
       val want = ma.flatMap { case (l, h) => l to h }.toSet
         .intersect(mb.flatMap { case (l, h) => l to h }.toSet)

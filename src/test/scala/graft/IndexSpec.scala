@@ -58,162 +58,138 @@ class IndexSpec extends SparkTestBase {
     assert(got.exists(_._1 == 1L) && got.exists(_._1 == 6L))
   }
 
-  test("WAND path and relational path produce identical rankings") {
-    val qs = sampleQueries
-    def rows(df: org.apache.spark.sql.DataFrame) =
-      df.orderBy("query_id", "rank").collect()
-        .map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getDouble(3))).toSeq
-    val wand = rows(Searcher.searchTopKWand(spark, indexDir, qs, 10, Searcher.And, 8))
-    val rel = rows(Searcher.searchTopKRelational(spark, indexDir, qs, 10, Searcher.And, 8))
-    assert(wand == rel)
-    val wandOr = rows(Searcher.searchTopKWand(spark, indexDir, qs, 10, Searcher.Or, 8))
-    val relOr = rows(Searcher.searchTopKRelational(spark, indexDir, qs, 10, Searcher.Or, 8))
-    assert(wandOr == relOr)
-    assert(wandOr.nonEmpty)
+  private type Ranked = Seq[(Long, Int, Long, Double)]
+
+  private def rows(df: org.apache.spark.sql.DataFrame): Ranked =
+    df.orderBy("query_id", "rank").collect()
+      .map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getDouble(3))).toSeq
+
+  /** The brute-force reference ranking over an index's own corpus
+    * snapshot (same doc ids as the index). */
+  private def oracle(dir: String, qs: Seq[Query], k: Int,
+                     mode: Searcher.Mode): Ranked =
+    rows(Oracle.topK(spark, spark.read.parquet(s"$dir/corpus_ids"), qs, k,
+      conjunctive = mode == Searcher.And))
+
+  /** Same (query, rank, doc) rows as the reference, scores within 1e-9. */
+  private def assertRanks(got: Ranked, want: Ranked, clue: String): Unit = {
+    assert(got.map(r => (r._1, r._2, r._3)) == want.map(r => (r._1, r._2, r._3)),
+      clue)
+    got.zip(want).foreach { case (g, w) =>
+      assert(math.abs(g._4 - w._4) <= 1e-9, s"$clue: score $g vs $w")
+    }
   }
 
-  test("executor-side WAND batch serving is rank-identical to the driver loop") {
+  /** Localized corpus: a repo-local term's blocks cover only its repo's
+    * narrow doc range, while common global terms cover every range. */
+  private lazy val localDir = {
+    val d = tmpDir("localized")
+    Builder.build(spark, Synth.localizedCorpus(spark, 600), d,
+      Builder.Config(blockSize = 16, nBuckets = 8, nSegments = 1,
+        saltTarget = 400, verifySegments = false))
+    d
+  }
+
+  /** (smallest-df local term with df >= 2, its df, the two most common
+    * global terms) of the localized corpus. */
+  private lazy val localTerms: (String, Long, String, String) = {
     import spark.implicits._
-    def rows(df: org.apache.spark.sql.DataFrame) =
-      df.as[(Long, Int, Long, Double)].collect()
-        .sortBy(r => (r._1, r._2)).toSeq
-    for (mode <- Seq(Searcher.And, Searcher.Or)) {
-      val driver = rows(Searcher.searchTopKWand(spark, indexDir,
-        sampleQueries, 10, mode, nBuckets = 8))
-      val execs = rows(Searcher.searchTopKWandExecutors(spark, indexDir,
-        sampleQueries, 10, mode, nBuckets = 8))
-      assert(execs == driver, s"mode $mode")
+    val dict = Builder.dictionary(spark, localDir)
+      .select("term", "df").as[(String, Long)].collect().toMap
+    val (rare, rareDf) = dict.filter { case (t, df) =>
+      t.startsWith("loc_") && df >= 2
+    }.minBy { case (t, df) => (df, t) }
+    val global = dict.filterNot(_._1.startsWith("loc_")).toSeq
+      .sortBy { case (t, df) => (-df, t) }
+    (rare, rareDf, global(0)._1, global(1)._1)
+  }
+
+  test("top-k paths == Oracle.topK: {driver, executor, striped} x {AND, OR} x {sample, localized}") {
+    val (rare, _, common, common2) = localTerms
+    val fixtures = Seq(
+      "sample" -> (indexDir, sampleQueries),
+      "localized" -> (localDir,
+        Seq(Query(1, s"$rare $common"), Query(2, s"$rare $common $common2"),
+          Query(3, s"$common $common2"))))
+    def run(path: String, d: String, qs: Seq[Query], m: Searcher.Mode) =
+      path match {
+        case "driver" => Searcher.searchTopKWand(spark, d, qs, 10, m, 8)
+        case "executor" => Searcher.searchTopKWandExecutors(spark, d, qs, 10, m, 8)
+        // stripePostings far below every query's Σ df splits each query
+        // into many doc-range stripes whose exact top-ks must merge into
+        // the global one
+        case "striped" => Searcher.searchTopKWandExecutors(spark, d, qs, 10,
+          m, 8, stripePostings = 32L)
+      }
+    for ((fx, (d, qs)) <- fixtures; mode <- Seq(Searcher.And, Searcher.Or)) {
+      val want = oracle(d, qs, 10, mode)
+      assert(want.nonEmpty, s"$fx $mode")
+      for (path <- Seq("driver", "executor", "striped"))
+        assertRanks(rows(run(path, d, qs, mode)), want, s"$path $mode $fx")
     }
   }
 
   test("striped executor WAND (Σ df ≫ stripe budget) is rank-identical") {
-    import spark.implicits._
-    def rows(df: org.apache.spark.sql.DataFrame) =
-      df.as[(Long, Int, Long, Double)].collect()
-        .sortBy(r => (r._1, r._2)).toSeq
-    // stripePostings=64 on a 400-doc corpus forces every query into many
-    // doc-range stripes (the Σ df ≫ budget shape that used to fall back
-    // to the relational plan); per-stripe exact top-ks must merge into
-    // the exact global ranking for AND and OR alike
-    for (mode <- Seq(Searcher.And, Searcher.Or)) {
-      val driver = rows(Searcher.searchTopKWand(spark, indexDir,
-        sampleQueries, 10, mode, nBuckets = 8))
-      val striped = rows(Searcher.searchTopKWandExecutors(spark, indexDir,
-        sampleQueries, 10, mode, nBuckets = 8, stripePostings = 64L))
-      assert(striped == driver, s"mode $mode")
-      assert(striped.nonEmpty)
-    }
-    // dispatcher sends over-cap volumes to the executor path now: same
-    // rankings through the public entry (cap can't be crossed at test
-    // scale, so call the executor path as the dispatcher would)
-    val one = rows(Searcher.searchTopKWandExecutors(spark, indexDir,
-      Seq(Query(60, "id_0 id_1")), 5, Searcher.And, nBuckets = 8,
-      stripePostings = 1L)) // 1 posting/stripe -> MaxStripesPerQuery clamp
-    val oneDrv = rows(Searcher.searchTopKWand(spark, indexDir,
-      Seq(Query(60, "id_0 id_1")), 5, Searcher.And, nBuckets = 8))
-    assert(one == oneDrv)
+    // one posting per stripe budget: single-doc stripes, the extreme of
+    // the split that over-cap posting volumes take through the dispatcher
+    val qs = Seq(Query(60, "id_0 id_1"))
+    for (mode <- Seq(Searcher.And, Searcher.Or))
+      assertRanks(rows(Searcher.searchTopKWandExecutors(spark, indexDir, qs, 5,
+        mode, nBuckets = 8, stripePostings = 1L)), oracle(indexDir, qs, 5, mode),
+        s"mode $mode")
   }
 
   test("striped AND: stripes missing one term fabricate no matches") {
-    import spark.implicits._
-    // a repo-LOCAL term's blocks cover one narrow doc range while the
-    // common global term covers every stripe: conjunctive stripes where
-    // the local term has no block must emit NOTHING (running the AND
-    // loop over the present subset would fabricate common-only matches,
-    // and with k above the true conjunctive count they would surface)
-    val d = tmpDir("stripe-and-gap")
-    Builder.build(spark, Synth.localizedCorpus(spark, 600), d,
-      Builder.Config(blockSize = 16, nBuckets = 8, nSegments = 1,
-        saltTarget = 400, verifySegments = false))
-    val dictAll = Builder.dictionary(spark, d)
-      .select("term", "df").as[(String, Long)].collect().toMap
-    // smallest-df local term, and k ABOVE its df: the true conjunctive
-    // match count is <= df(rare), so any fabricated common-only match
-    // would have to surface in the top-k
-    val (rare, rareDf) = dictAll.filter { case (t, df) =>
-      t.startsWith("loc_") && df >= 2
-    }.minBy { case (t, df) => (df, t) }
-    val common = dictAll.filterNot(_._1.startsWith("loc_")).maxBy(_._2)._1
+    // conjunctive stripes where the local term has no block must emit
+    // NOTHING (running the AND loop over the present subset would
+    // fabricate common-only matches); k is ABOVE df(rare), so any
+    // fabricated match would have to surface in the top-k
+    val (rare, rareDf, common, _) = localTerms
     assert(rareDf < 20, s"fixture needs a sparse local term, got df=$rareDf")
     val qs = Seq(Query(1, s"$rare $common"))
-    def rows(df: org.apache.spark.sql.DataFrame) =
-      df.as[(Long, Int, Long, Double)].collect()
-        .sortBy(r => (r._1, r._2)).toSeq
-    val driver = rows(Searcher.searchTopKWand(spark, d, qs, 20,
-      Searcher.And, nBuckets = 8))
-    val striped = rows(Searcher.searchTopKWandExecutors(spark, d, qs, 20,
-      Searcher.And, nBuckets = 8, stripePostings = 32L))
-    assert(striped == driver)
+    assertRanks(rows(Searcher.searchTopKWandExecutors(spark, localDir, qs, 20,
+      Searcher.And, nBuckets = 8, stripePostings = 32L)),
+      oracle(localDir, qs, 20, Searcher.And), "striped AND")
   }
 
-  test("OR maxscore prune: fewer blocks decoded, rankings unchanged") {
-    import spark.implicits._
-    import graft.query.IndexHandle
-    // head+tail mix on a LOCALIZED corpus: a repo-local term's blocks
-    // span only its repo's doc range, so it anchors θ_lb high AND gives
-    // narrow candidate intervals — the common global terms' blocks
-    // outside those intervals must be dropped pre-decode
-    val d = tmpDir("or-maxscore")
-    Builder.build(spark, Synth.localizedCorpus(spark, 600), d,
-      Builder.Config(blockSize = 16, nBuckets = 8, nSegments = 1,
-        saltTarget = 400, verifySegments = false))
-    val handle = IndexHandle.open(spark, d, 8)
-    val dictAll = Builder.dictionary(spark, d)
-      .select("term", "df").as[(String, Long)].collect().toMap
-    val rare = dictAll.filter { case (t, df) =>
-      t.startsWith("loc_") && df >= 5 && df <= 60
-    }.keys.min
-    val common = dictAll.filterNot(_._1.startsWith("loc_")).maxBy(_._2)._1
-    val common2 = (dictAll - common).filterNot(_._1.startsWith("loc_"))
-      .maxBy(_._2)._1
-    val qs = Seq(Query(1, s"$rare $common"), Query(2, s"$rare $common $common2"))
-    val dict = handle.dfOf(qs.flatMap(q => Tokenizer.tokens(q.text)).distinct)
-    val live = qs.map(q =>
-      q.query_id -> Tokenizer.tokens(q.text).distinct.toSeq).toMap
-    val all = handle.blocksFor(live.values.flatten.toSeq.distinct)
-    val pruned = Searcher.pruneBlocksOrMaxscore(spark, handle, all, live,
-      dict, k = 5)
-    val (nAll, nPruned) = (all.count(), pruned.count())
-    assert(nPruned < nAll, s"no blocks pruned: $nPruned of $nAll")
-    // rankings across the paths stay identical under the prune
-    def rows(df: org.apache.spark.sql.DataFrame) =
-      df.orderBy("query_id", "rank").collect()
-        .map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getDouble(3))).toSeq
-    val rel = rows(Searcher.searchTopKRelational(spark, d, qs, 5,
-      Searcher.Or, 8))
-    val wand = rows(Searcher.searchTopKWand(spark, d, qs, 5,
-      Searcher.Or, 8))
-    assert(rel == wand && rel.nonEmpty)
+  /** Runs `qs` on the driver loop and on the executor path, checks both
+    * against the oracle, and returns the query ids the driver loop
+    * scored live (a cache-served query leaves no work counters). */
+  private def checkCached(d: String, qs: Seq[Query], k: Int,
+                          mode: Searcher.Mode): Set[Long] = {
+    val want = oracle(d, qs, k, mode)
+    Searcher.lastStats.clear()
+    assertRanks(rows(Searcher.searchTopKWand(spark, d, qs, k, mode, 8)), want,
+      s"driver $mode")
+    val scored = qs.map(_.query_id).filter(Searcher.lastStats.containsKey).toSet
+    assertRanks(rows(Searcher.searchTopKWandExecutors(spark, d, qs, k, mode, 8)),
+      want, s"executor $mode")
+    scored
   }
+
+  /** Ids of the queries in `qs` that `cache` cannot answer in `mode`. */
+  private def uncached(cache: Map[Seq[String], _], qs: Seq[Query],
+                       mode: Searcher.Mode): Set[Long] = qs.filterNot { q =>
+    val ts = Tokenizer.tokens(q.text).distinct.sorted.toSeq
+    (mode == Searcher.And || ts.size == 1) && cache.contains(ts)
+  }.map(_.query_id).toSet
 
   test("head cache: cached single-term results identical to live search") {
     import graft.query.{HeadCache, IndexHandle}
     // build cache over head terms of the shared index
-    graft.query.HeadCache.build(spark, indexDir, minDf = 100, k = 10)
-    val handle = IndexHandle.open(spark, indexDir, 8)
-    val (cacheMap, cacheK) = handle.headCache
+    HeadCache.build(spark, indexDir, minDf = 100, k = 10)
+    val (cacheMap, cacheK) = IndexHandle.open(spark, indexDir, 8).headCache
     assert(cacheMap.nonEmpty && cacheK == 10)
-    assert(cacheMap.contains("id_0")) // df ~ 300 of 400
-    val qs = Seq(Query(1, "id_0"), Query(2, "id_1"))
-    def rows(df: org.apache.spark.sql.DataFrame) =
-      df.orderBy("query_id", "rank").collect()
-        .map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getDouble(3))).toSeq
-    // cached WAND path vs relational (never cache-served) must agree
-    val cached = rows(Searcher.searchTopKWand(spark, indexDir, qs, 10, Searcher.And, 8))
-    val rel = rows(Searcher.searchTopKRelational(spark, indexDir, qs, 10, Searcher.And, 8))
-    assert(cached == rel)
-    // executor path probes the same cache: an all-cached batch (driver
-    // early return, no block join) and a mixed batch (union of cached +
-    // executor-computed rows) both match
-    val exAll = rows(Searcher.searchTopKWandExecutors(spark, indexDir, qs,
-      10, Searcher.And, 8))
-    assert(exAll == rel)
-    val mixed = qs :+ Query(3, "id_0 id_1 id_2 id_3") // 4 terms: never cached
-    val exMixed = rows(Searcher.searchTopKWandExecutors(spark, indexDir,
-      mixed, 10, Searcher.And, 8))
-    val relMixed = rows(Searcher.searchTopKRelational(spark, indexDir,
-      mixed, 10, Searcher.And, 8))
-    assert(exMixed == relMixed)
+    assert(cacheMap.contains(Seq("id_0"))) // df ~ 300 of 400
+    // single-term entries serve both modes; a 4-term query is never
+    // cached, so the batch mixes cached and computed rows
+    val qs = Seq(Query(1, "id_0"), Query(2, "id_1"),
+      Query(3, "id_0 id_1 id_2 id_3"))
+    for (mode <- Seq(Searcher.And, Searcher.Or)) {
+      val live = uncached(cacheMap, qs, mode)
+      assert(!live.contains(1L) && live.contains(3L))
+      assert(checkCached(indexDir, qs, 10, mode) == live, s"mode $mode")
+    }
   }
 
   test("head cache is built distributedly (no posting collect) even non-resident") {
@@ -230,64 +206,50 @@ class IndexSpec extends SparkTestBase {
       assert(!h.postingsResident)
       val (cacheMap, k) = h.headCache
       assert(cacheMap.nonEmpty && k == 5)
-      // cached answer == live relational answer
-      val t = cacheMap.keys.head
-      def rows(df: org.apache.spark.sql.DataFrame) =
-        df.orderBy("rank").collect()
-          .map(r => (r.getInt(1), r.getLong(2), r.getDouble(3))).toSeq
-      val cached = rows(Searcher.searchTopKWand(spark, d,
-        Seq(Query(1, t)), 5, Searcher.And, 8))
-      val rel = rows(Searcher.searchTopKRelational(spark, d,
-        Seq(Query(1, t)), 5, Searcher.And, 8))
-      assert(cached == rel)
+      val qs = cacheMap.keys.toSeq.sortBy(_.head).zipWithIndex
+        .map { case (ts, i) => Query(i.toLong, ts.mkString(" ")) }
+      assert(checkCached(d, qs, 5, Searcher.And).isEmpty)
       h.close()
     } finally spark.conf.unset("graft.postings.persistCap")
   }
 
   test("head pair cache (depth 2): cached 2-term AND identical to live search") {
     import graft.query.{HeadCache, IndexHandle}
-    HeadCache.buildPairs(spark, indexDir, maxPairTerms = 6, k = 10, nBuckets = 8)
-    val handle = IndexHandle.open(spark, indexDir, 8)
-    val (pairMap, k2) = handle.headCache2
-    assert(pairMap.nonEmpty && k2 == 10)
-    assert(pairMap.contains(("id_0", "id_1")))
+    HeadCache.build(spark, indexDir, minDf = Long.MaxValue, k = 10,
+      pairTerms = 6, nBuckets = 8)
+    val (cacheMap, k2) = IndexHandle.open(spark, indexDir, 8).headCache
+    assert(cacheMap.nonEmpty && k2 == 10)
+    assert(cacheMap.contains(Seq("id_0", "id_1")))
     val qs = Seq(Query(1, "id_0 id_1"), Query(2, "id_1 id_0"), // order-free
       Query(3, "id_2 id_0"))
-    def rows(df: org.apache.spark.sql.DataFrame) =
-      df.orderBy("query_id", "rank").collect()
-        .map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getDouble(3))).toSeq
-    val cached = rows(Searcher.searchTopKWand(spark, indexDir, qs, 10, Searcher.And, 8))
-    val rel = rows(Searcher.searchTopKRelational(spark, indexDir, qs, 10, Searcher.And, 8))
-    assert(cached == rel)
-    assert(cached.nonEmpty)
+    // pair entries are conjunctive rankings: OR is never served by them
+    for (mode <- Seq(Searcher.And, Searcher.Or))
+      assert(checkCached(indexDir, qs, 10, mode) ==
+        uncached(cacheMap, qs, mode), s"mode $mode")
+    assert(uncached(cacheMap, qs, Searcher.Or) == Set(1L, 2L, 3L))
   }
 
   test("head triple cache (depth 3): cached 3-term AND identical to live search") {
     import graft.query.{HeadCache, IndexHandle}
-    HeadCache.buildTriples(spark, indexDir, maxTripleTerms = 6, k = 10,
-      nBuckets = 8)
-    val handle = IndexHandle.open(spark, indexDir, 8)
-    val (tripleMap, k3) = handle.headCache3
-    assert(tripleMap.nonEmpty && k3 == 10)
-    assert(tripleMap.contains(("id_0", "id_1", "id_2")))
+    HeadCache.build(spark, indexDir, minDf = Long.MaxValue, k = 10,
+      tripleTerms = 6, nBuckets = 8)
+    val (cacheMap, k3) = IndexHandle.open(spark, indexDir, 8).headCache
+    assert(cacheMap.nonEmpty && k3 == 10)
+    assert(cacheMap.contains(Seq("id_0", "id_1", "id_2")))
     val qs = Seq(Query(1, "id_0 id_1 id_2"), Query(2, "id_2 id_0 id_1"),
       Query(3, "id_1 id_3 id_0"))
-    def rows(df: org.apache.spark.sql.DataFrame) =
-      df.orderBy("query_id", "rank").collect()
-        .map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getDouble(3))).toSeq
-    val cached = rows(Searcher.searchTopKWand(spark, indexDir, qs, 10, Searcher.And, 8))
-    val rel = rows(Searcher.searchTopKRelational(spark, indexDir, qs, 10, Searcher.And, 8))
-    assert(cached == rel)
-    assert(cached.nonEmpty)
+    assert(checkCached(indexDir, qs, 10, Searcher.And) ==
+      uncached(cacheMap, qs, Searcher.And))
   }
 
   test("staged pair cache at maxPairTerms=256 is identical to live search") {
     import spark.implicits._
     import graft.query.{HeadCache, IndexHandle}
-    // small closed vocabulary so top-256 covers it all: the staging path
-    // (many bounded pair batches, appended) gets exercised without a
-    // quadratic blowup in test time
-    val vocab = 40
+    // small closed vocabulary so top-256 covers it all; its 1225 pairs all
+    // co-occur, more than one build batch, so the staging path (several
+    // bounded kernel batches, appended) runs without a quadratic blowup
+    // in test time
+    val vocab = 50
     val docs = (0 until 120).map { i =>
       val toks = (0 until 30).map(j => s"w${(i * 7 + j * 11) % vocab}")
       graft.index.CodeDoc(f"r${i / 30}%02d", f"f$i%04d.c", "c0", "c",
@@ -296,34 +258,33 @@ class IndexSpec extends SparkTestBase {
     val d = tmpDir("pair-staged")
     Builder.build(spark, docs.toDF(), d, Builder.Config(blockSize = 16,
       nBuckets = 8, nSegments = 1, saltTarget = 100000))
-    HeadCache.buildPairs(spark, d, maxPairTerms = 256, k = 5, nBuckets = 8,
-      pairBatch = 100)
+    HeadCache.build(spark, d, minDf = Long.MaxValue, k = 5, pairTerms = 256,
+      nBuckets = 8)
     val h = IndexHandle.open(spark, d, 8)
-    val (pairMap, k2) = h.headCache2
-    assert(k2 == 5 && pairMap.size > 400) // most of the 780 pairs co-occur
-    pairMap.keys.take(5).foreach { case (a, b) =>
-      val rel = Searcher.searchTopKRelational(spark, d,
-          Seq(Query(1, s"$a $b")), 5, Searcher.And, 8)
-        .orderBy("rank").collect()
-        .map(r => (r.getLong(2), r.getDouble(3))).toSeq
-      assert(pairMap((a, b)).map(s => (s.doc_id, s.score)) == rel,
-        s"pair ($a,$b)")
+    val (pairMap, k2) = h.headCache
+    assert(k2 == 5 && pairMap.size > HeadCache.BuildBatch)
+    val keys = pairMap.keys.toSeq.sortBy(_.mkString(" ")).take(5)
+    val qs = keys.zipWithIndex.map { case (ts, i) => Query(i.toLong, ts.mkString(" ")) }
+    val want = oracle(d, qs, 5, Searcher.And)
+    keys.zipWithIndex.foreach { case (ts, i) =>
+      assertRanks(pairMap(ts).zipWithIndex.map { case (h, r) =>
+        (i.toLong, r + 1, h.doc_id, h.score)
+      }, want.filter(_._1 == i), s"pair $ts")
     }
     h.close()
   }
 
   test("cache/dictionary crash states heal or degrade gracefully") {
-    import spark.implicits._
     import graft.query.{HeadCache, IndexHandle}
     val d = tmpDir("crash-states")
     Builder.build(spark, Synth.corpus(spark, 60, seed = 19L), d,
       Builder.Config(blockSize = 16, nBuckets = 4, nSegments = 1,
         saltTarget = 1000))
     // cache marker WITHOUT data (crash between marker write and a failed
-    // rebuild): loaders must report an absent cache, not throw
-    graft.util.Fs.write(spark, s"$d/_COMMIT_head_cache2", """{"n":8,"k":5}""")
-    assert(HeadCache.loadPairs(spark, d) == (Map.empty, 0))
-    graft.util.Fs.delete(spark, s"$d/_COMMIT_head_cache2")
+    // rebuild): the loader must report an absent cache, not throw
+    graft.util.Fs.write(spark, s"$d/_COMMIT_topk_cache", """{"k":5}""")
+    assert(HeadCache.load(spark, d) == (Map.empty, 0))
+    graft.util.Fs.delete(spark, s"$d/_COMMIT_topk_cache")
     // searches still work with the dangling marker gone
     assert(Searcher.searchTopK(spark, d,
       Seq(Query(1, "id_0")), 5, Searcher.And, 4).count() > 0)
@@ -335,6 +296,27 @@ class IndexSpec extends SparkTestBase {
     IndexHandle.invalidate(spark, d)
     assert(Searcher.searchTopK(spark, d,
       Seq(Query(1, "id_0")), 5, Searcher.And, 4).count() > 0)
+  }
+
+  test("a head cache in the older per-depth layout is never read") {
+    import spark.implicits._
+    import graft.query.IndexHandle
+    val d = tmpDir("old-cache-layout")
+    Builder.build(spark, Synth.corpus(spark, 60, seed = 23L), d,
+      Builder.Config(blockSize = 16, nBuckets = 4, nSegments = 1,
+        saltTarget = 1000))
+    // a depth-1 table and marker as older builds wrote them, with a
+    // ranking no live search can produce
+    Seq(("id_0", 1, 999999L, 99.0), ("id_1", 1, 999998L, 98.0))
+      .toDF("term", "rank", "doc_id", "score")
+      .write.parquet(s"$d/head_cache")
+    graft.util.Fs.write(spark, s"$d/_COMMIT_head_cache",
+      """{"minDf":1,"k":10,"rows":2}""")
+    IndexHandle.invalidate(spark, d)
+    val qs = Seq(Query(1, "id_0"), Query(2, "id_1"), Query(3, "id_0 id_1"))
+    for (mode <- Seq(Searcher.And, Searcher.Or))
+      assertRanks(rows(Searcher.searchTopK(spark, d, qs, 10, mode, 4)),
+        oracle(d, qs, 10, mode), s"mode $mode")
   }
 
   test("posting block ranges are disjoint and sorted per term (WAND invariant)") {

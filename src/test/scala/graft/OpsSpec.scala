@@ -552,4 +552,29 @@ class OpsSpec extends SparkTestBase {
       3L -> "exact_dup", 4L -> "near_dup", 5L -> "lang"))
     assert(got.forall(r => r._2 == (r._3 == "keep")))
   }
+
+  test("null and empty text: typed token paths yield nothing, jobs complete") {
+    import spark.implicits._
+    val text = "alpha beta gamma delta"
+    val fixture = Seq[(Long, String)]((1L, null), (2L, ""), (3L, text),
+      (4L, null)).toDF("doc_id", "text")
+    val grams = Tokenizer.tokens(text).sliding(2).map(_.mkString(" ")).toSet
+    assert(Dedup.shingles(fixture, 2).as[(Long, String)].collect().toSet ==
+      grams.map(3L -> _))
+    assert(Dedup.kgramSpectrum(fixture, 2).as[(String, Long)].collect().toSet ==
+      grams.map(_ -> 1L))
+    assert(Dedup.kgramOrigins(fixture, 2).select("gram", "doc_id")
+      .as[(String, Long)].collect().toSet == grams.map(_ -> 3L))
+    assert(Dedup.minhashSignatures(fixture, 2, 8).collect().map(_._1).toSeq ==
+      Seq(3L))
+    // null text has no fingerprint; empty text folds to the seed value 0
+    val fp = TextOps.fingerprint(fixture).as[(Long, Option[Long])].collect().toMap
+    assert(fp(1L).isEmpty && fp(4L).isEmpty && fp(2L).contains(0L) &&
+      fp(3L).isDefined)
+    // one verdict per doc; null text is judged like empty text
+    val verdicts = graft.ops.Pipeline.cleanCorpus(fixture, minTokens = 1L)
+      .select("doc_id", "drop_reason").as[(Long, String)].collect().toMap
+    assert(verdicts.keySet == Set(1L, 2L, 3L, 4L))
+    assert(Seq(1L, 2L, 4L).map(verdicts) == Seq("quality", "quality", "quality"))
+  }
 }

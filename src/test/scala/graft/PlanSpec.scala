@@ -92,8 +92,8 @@ class PlanSpec extends SparkTestBase {
     val iv2 = h.intervalsFor(Seq("rare", "common"))
     assert(iv1.keySet == Set("rare", "common"))
     iv1.keys.foreach(t => assert(iv1(t) eq iv2(t)))
-    // ranking through the full relational path stays correct
-    val rows = Searcher.searchTopKRelational(spark, d,
+    // ranking through the top-k dispatcher stays correct
+    val rows = Searcher.searchTopK(spark, d,
       Seq(Searcher.Query(1, "rare common")), 20, Searcher.And, 4).collect()
     assert(rows.length == 10) // exactly the 10 docs containing both
     // the COUNTING path is pruned by the same broadcast interval semi-join
@@ -135,20 +135,6 @@ class PlanSpec extends SparkTestBase {
       s"gram filter not pushed:\n$plan")
     assert(plan.contains("PartitionFilters") && plan.contains("bucket"),
       s"bucket partition pruning missing:\n$plan")
-  }
-
-  test("relational scorer: codegen'd hash aggregation + broadcast joins") {
-    val df = Searcher.searchTopKRelational(spark, indexDir,
-      Seq(Searcher.Query(1, "id_0 id_3")), 5)
-    df.collect() // materialize so AQE finalizes the plan
-    val plan = df.queryExecution.executedPlan.toString
-    // scoring is partial+final hash aggregation (map-side combine)
-    assert(plan.contains("HashAggregate") && plan.contains("partial_sum"), plan)
-    // query terms + block-prune lists are broadcast, never shuffled
-    assert(plan.contains("BroadcastHashJoin"), plan)
-    assert(!plan.contains("SortMergeJoin"), plan)
-    // the block scan stage itself is whole-stage codegen'd ("*(n)")
-    assert(plan.contains("*("), plan)
   }
 
   test("snippets broadcast the capped match table against a pruned corpus scan") {

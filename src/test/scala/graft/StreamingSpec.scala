@@ -74,10 +74,10 @@ class StreamingSpec extends SparkTestBase {
     // ingest must invalidate the head caches: stale cached top-k would
     // hide newly ingested docs (r1 ADVICE high)
     graft.query.HeadCache.build(spark, dir, minDf = 1, k = 10)
-    assert(graft.util.Fs.exists(spark, s"$dir/_COMMIT_head_cache"))
+    assert(graft.util.Fs.exists(spark, s"$dir/_COMMIT_topk_cache"))
     IncrementalIndexer.ingestBatch(spark,
       Seq(Synth.doc(42L, 999L)).toDF(), dir, conf, 77L)
-    assert(!graft.util.Fs.exists(spark, s"$dir/_COMMIT_head_cache"))
+    assert(!graft.util.Fs.exists(spark, s"$dir/_COMMIT_topk_cache"))
     val (cacheMap, _) = graft.query.HeadCache.load(spark, dir)
     assert(cacheMap.isEmpty)
 
