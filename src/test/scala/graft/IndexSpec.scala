@@ -129,6 +129,29 @@ class IndexSpec extends SparkTestBase {
     }
   }
 
+  test("WAND path and relational path produce identical rankings") {
+    // searchTopKRelational keeps its public signature and answers
+    // through the executor kernel; it must rank exactly as the driver loop
+    for (mode <- Seq(Searcher.And, Searcher.Or)) {
+      val wand = rows(Searcher.searchTopKWand(spark, indexDir, sampleQueries,
+        10, mode, 8))
+      val rel = rows(Searcher.searchTopKRelational(spark, indexDir,
+        sampleQueries, 10, mode, 8))
+      assert(wand == rel, s"mode $mode")
+      assert(wand.nonEmpty, s"mode $mode")
+    }
+  }
+
+  test("executor-side WAND batch serving is rank-identical to the driver loop") {
+    for (mode <- Seq(Searcher.And, Searcher.Or)) {
+      val driver = rows(Searcher.searchTopKWand(spark, indexDir,
+        sampleQueries, 10, mode, nBuckets = 8))
+      val execs = rows(Searcher.searchTopKWandExecutors(spark, indexDir,
+        sampleQueries, 10, mode, nBuckets = 8))
+      assert(execs == driver, s"mode $mode")
+    }
+  }
+
   test("striped executor WAND (Σ df ≫ stripe budget) is rank-identical") {
     // one posting per stripe budget: single-doc stripes, the extreme of
     // the split that over-cap posting volumes take through the dispatcher
