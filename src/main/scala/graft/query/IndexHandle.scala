@@ -3,7 +3,7 @@ package graft.query
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
-import graft.index.{Builder, Stats}
+import graft.index.{Builder, PostingBlock, Stats}
 
 /** An opened index — the analog of `gin query`'s load-index-into-memory
   * step (/root/reference/gin.c:844-927 reads the whole .gini/.ginc into
@@ -15,10 +15,18 @@ import graft.index.{Builder, Stats}
   *    the depth-k cache analog (/root/reference/src/gin_gin.c:1021-1304):
   *    head entries resident, tail served from the index;
   *  - the posting-block table persisted in executor memory
-  *    (MEMORY_AND_DISK — blocks stay columnar + compressed, ~4 B/posting).
+  *    (MEMORY_AND_DISK — blocks stay columnar + compressed, ~4 B/posting)
+  *    for the executor paths (batch top-k, candidates, phrase);
+  *  - the same blocks on the driver, still compressed, as a map term ->
+  *    blocks sorted by doc_id_base (`termBlocks`), loaded by one collect
+  *    on the first driver top-k and only when the persisted postings fit
+  *    1/8 of the driver's max heap (DriverBlocksHeapFraction, checked
+  *    at open). Otherwise the driver path collects its terms' blocks
+  *    per call.
   *
   * Handles are cached per (session, dir) so repeated Searcher calls hit
-  * warm state; `close()` unpersists.
+  * warm state; ingest, compaction and head-cache builds drop the handle
+  * (and with it the driver block map); `close()` unpersists.
   */
 class IndexHandle private (
     val spark: SparkSession,
@@ -100,6 +108,49 @@ class IndexHandle private (
       p
     } else b
   }
+
+  /** Share of the driver's max heap the driver block map may take. */
+  private val DriverBlocksHeapFraction = 0.125
+
+  /** JVM heap bytes of the driver block map per on-disk postings byte.
+    * Measured with Spark's SizeEstimator on the map of a 3.5k-doc
+    * code-like index (3,000 built docs plus two streamed batches, one of
+    * them compacted; default Builder.Config): 2.59, i.e. 4.08 MB of map
+    * for 1.58 MB of postings in 11,666 blocks of 9,000 terms. Per-block
+    * object headers, term strings and three payload arrays make up the
+    * excess, so the factor is rounded up. */
+  private val DriverBytesPerPostingsByte = 3.0
+
+  /** Whether the driver top-k path reads `driverBlocks`: the postings
+    * are persisted and their estimated driver-map size is within the
+    * bound. */
+  val driverBlocksResident: Boolean = postingsResident &&
+    postingsBytes.toDouble * DriverBytesPerPostingsByte <=
+      DriverBlocksHeapFraction * Runtime.getRuntime.maxMemory
+
+  /** Every block, still compressed, grouped by term and sorted by
+    * doc_id_base: one collect on first use, so executor-only users
+    * (HeadCache.build, large batches, QueryStream) never pay for it. */
+  private lazy val driverBlocks: Map[String, Array[PostingBlock]] =
+    collectByTerm(blocks)
+
+  private def collectByTerm(df: DataFrame): Map[String, Array[PostingBlock]] = {
+    import spark.implicits._
+    df.select("term", "block_id", "doc_id_base", "doc_id_max", "num_docs",
+        "max_tf", "min_dl", "doc_deltas", "tfs", "dls")
+      .as[PostingBlock].collect()
+      .groupBy(_.term).map { case (t, bs) => t -> bs.sortBy(_.doc_id_base) }
+  }
+
+  /** Compressed blocks of `terms`, sorted by doc_id_base per term (absent
+    * term = absent key). Two tiers behind one call, like `dfOf`: a probe
+    * of the driver block map when it is resident, else a collect of the
+    * pruned `blocksFor(terms)` scan. */
+  def termBlocks(terms: Seq[String]): Map[String, Array[PostingBlock]] =
+    if (terms.isEmpty) Map.empty
+    else if (driverBlocksResident)
+      terms.flatMap(t => driverBlocks.get(t).map(t -> _)).toMap
+    else collectByTerm(blocksFor(terms))
 
   /** docmeta projected to the resolve columns, persisted. */
   private var docmetaLoaded = false

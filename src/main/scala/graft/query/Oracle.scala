@@ -31,6 +31,9 @@ object Oracle {
       .agg(avg(col("dl").cast("double"))).as[Double].head()
     val dfByTerm = docs.groupBy("term").agg(count(lit(1)).as("df"))
       .as[(String, Long)].collect().toMap
+    // the cache only serves the three stats jobs above: the returned
+    // plan recomputes docs when it runs, so no table outlives the call
+    docs.unpersist()
 
     val qt = queries.flatMap { q =>
       val ts = graft.index.Tokenizer.tokens(q.text).distinct.toSeq

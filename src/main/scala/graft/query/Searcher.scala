@@ -1,7 +1,8 @@
 package graft.query
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 import graft.index.{Bm25, PostingBlock, Tokenizer}
 
 /** Query engine — the Spark-native analog of `gin query find` (the
@@ -16,10 +17,13 @@ import graft.index.{Bm25, PostingBlock, Tokenizer}
   *     missing term kills a conjunctive query, the DEAD-fork analog
   *     (gin_gin.c:696-708); head-cache hits are answered by a map lookup;
   *  2. the remaining queries run `Wand.topK` over their still-compressed
-  *     posting blocks: on the driver for small batches (latency, no job
-  *     scheduling), on executors for large batches or posting volumes —
-  *     one group per (query, doc-range stripe), per-stripe top-ks merged
-  *     by the typed TopKAgg so only O(k) rows per stripe cross a shuffle.
+  *     posting blocks: on the driver for small batches, over the
+  *     handle's driver-resident block map (`IndexHandle.termBlocks`), so
+  *     a query on a resident index starts no Spark job and its answer is
+  *     one local relation; on executors for large batches or posting
+  *     volumes — one group per (query, doc-range stripe), per-stripe
+  *     top-ks merged by the typed TopKAgg so only O(k) rows per stripe
+  *     cross a shuffle.
   *
   * Scores are rounded to 6 decimals *before* ranking so that ranking is
   * reproducible across engines (oracle parity); tie-break doc_id ASC.
@@ -43,7 +47,7 @@ object Searcher {
   val Or = Wand.Or // disjunctive BM25
 
   /** Σ df above which searchTopK stops using the DRIVER-local WAND loop
-    * (whose collected block set must fit the driver heap) and evaluates
+    * (whose block set must fit the driver heap) and evaluates
     * on executors instead — a driver-memory bound only: the executor path
     * stripes big posting volumes into bounded groups. */
   val WandDfCap = 5000000L
@@ -116,13 +120,30 @@ object Searcher {
 
   private val OutCols = Seq("query_id", "rank", "doc_id", "score")
 
+  private val OutSchema = StructType(Seq(
+    StructField("query_id", LongType, nullable = false),
+    StructField("rank", IntegerType, nullable = false),
+    StructField("doc_id", LongType, nullable = false),
+    StructField("score", DoubleType, nullable = false)))
+
+  /** Driver-side ranked rows as one LocalRelation with the final schema:
+    * no encoder derivation and no rename projection per call, and
+    * collecting it starts no job. */
+  private def localResult(spark: SparkSession,
+      rows: Seq[(Long, Int, Long, Double)]): DataFrame = {
+    import scala.jdk.CollectionConverters._
+    spark.createDataFrame(
+      rows.map { case (q, r, d, s) => Row(q, r, d, s) }.asJava, OutSchema)
+  }
+
   /** Top-k search over a built index — dispatcher.
     * Small batch + small posting volume (Σ df <= WandDfCap, which bounds
-    * the driver-side block collect): the driver-local exact BMW loop —
-    * the latency path (no job scheduling). Anything bigger — large
-    * batches OR big posting volumes — runs the SAME exact BMW loop on
-    * executors, striped so per-group memory stays bounded regardless of
-    * Σ df. Both produce identical rankings ((score6 DESC, doc_id ASC)).
+    * the blocks one driver call reads): the driver-local exact BMW loop —
+    * the latency path (no job on a handle with driver-resident blocks).
+    * Anything bigger — large batches OR big posting volumes — runs the
+    * SAME exact BMW loop on executors, striped so per-group memory stays
+    * bounded regardless of Σ df. Both produce identical rankings
+    * ((score6 DESC, doc_id ASC)).
     * Returns (query_id, rank, doc_id, score) with rank 1..k. */
   def searchTopK(spark: SparkSession, indexDir: String, queries: Seq[Query],
                  k: Int, mode: Mode = And, nBuckets: Int = 32): DataFrame = {
@@ -133,26 +154,23 @@ object Searcher {
     else driverTopK(spark, p, k, mode)
   }
 
-  /** Driver-local exact BMW path (see Wand). Blocks for the query's
-    * terms are collected still-compressed (varint payloads); whole
-    * blocks are skipped by block-max metadata without decoding. */
+  /** Driver-local exact BMW path (see Wand) for every query, whatever the
+    * batch size. Blocks come still compressed (varint payloads) from
+    * `IndexHandle.termBlocks`: a map probe when the handle holds them on
+    * the driver, else one pruned collect per call; whole blocks are
+    * skipped by block-max metadata without decoding. */
   def searchTopKWand(spark: SparkSession, indexDir: String, queries: Seq[Query],
                      k: Int, mode: Mode = And, nBuckets: Int = 32): DataFrame =
     driverTopK(spark,
       plan(spark, indexDir, queries, k, mode, nBuckets, probeCache = true), k, mode)
 
+  /** The driver loop: `Wand.topK` per live query over `termBlocks`, the
+    * head-cache rows added, answered as one local relation. On a handle
+    * with driver-resident blocks this starts no Spark job. */
   private def driverTopK(spark: SparkSession, p: Plan, k: Int,
       mode: Mode): DataFrame = {
-    import spark.implicits._
     val stats = p.handle.stats
-    val terms = p.live.values.flatten.toSeq.distinct
-    val byTerm: Map[String, Array[PostingBlock]] =
-      if (terms.isEmpty) Map.empty
-      else p.handle.blocksFor(terms)
-        .select("term", "block_id", "doc_id_base", "doc_id_max", "num_docs",
-          "max_tf", "min_dl", "doc_deltas", "tfs", "dls")
-        .as[PostingBlock].collect()
-        .groupBy(_.term).map { case (t, bs) => t -> bs.sortBy(_.doc_id_base) }
+    val byTerm = p.handle.termBlocks(p.live.values.flatten.toSeq.distinct)
     // queries are independent: evaluate the batch on a driver-side pool
     // (the reference's -j thread parallelism for the serving loop,
     // /root/reference/benchmark/scripts/benchmark_parallelism_fast_hard.sh)
@@ -168,7 +186,7 @@ object Searcher {
       lastStats.put(qid, qstats)
       qid -> hits
     }.seq.flatMap { case (qid, hits) => ranked(qid, hits) }
-    rows.toDF(OutCols: _*)
+    localResult(spark, rows)
   }
 
   /** One block of one (query, stripe) group on the executor path. */
@@ -218,7 +236,7 @@ object Searcher {
   private def executorTopK(spark: SparkSession, p: Plan, k: Int, mode: Mode,
       stripePostings: Long): DataFrame = {
     import spark.implicits._
-    val cachedDf = p.cached.toDF(OutCols: _*)
+    val cachedDf = localResult(spark, p.cached)
     if (p.live.isEmpty) return cachedDf
     val stats = p.handle.stats
     // per-query stripe plan from the probed dictionary dfs: driver-side

@@ -342,6 +342,68 @@ class IndexSpec extends SparkTestBase {
         oracle(d, qs, 10, mode), s"mode $mode")
   }
 
+  test("driver top-k starts no Spark job on a resident index; non-resident ranks the same") {
+    import org.apache.spark.TestBridge
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import graft.query.IndexHandle
+    val (rare, _, common, common2) = localTerms
+    val qs = Seq(Query(1, rare), Query(2, s"$rare $common"),
+      Query(3, s"$rare $common $common2"))
+    // collected as is: a sort on top of the result would be a job itself
+    def collected(q: Query, mode: Searcher.Mode): Ranked =
+      Searcher.searchTopK(spark, localDir, Seq(q), 10, mode, 8).collect()
+        .map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getDouble(3)))
+        .sortBy(_._2).toSeq
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    IndexHandle.invalidate(spark, localDir)
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      for (mode <- Seq(Searcher.And, Searcher.Or)) {
+        val want = oracle(localDir, qs, 10, mode)
+        // the warm query opens the handle and loads its driver block map
+        collected(qs.head, mode)
+        assert(IndexHandle.open(spark, localDir, 8).driverBlocksResident)
+        for (q <- qs) {
+          TestBridge.drainListeners(spark.sparkContext)
+          jobs.set(0)
+          val got = collected(q, mode)
+          TestBridge.drainListeners(spark.sparkContext)
+          assert(jobs.get == 0, s"$mode query ${q.query_id}: ${jobs.get} jobs")
+          assertRanks(got, want.filter(_._1 == q.query_id),
+            s"resident $mode query ${q.query_id}")
+        }
+      }
+    } finally spark.sparkContext.removeSparkListener(listener)
+    // the other tier: blocks collected per call from the pruned scan
+    spark.conf.set("graft.postings.persistCap", "1")
+    try {
+      IndexHandle.invalidate(spark, localDir)
+      val h = IndexHandle.open(spark, localDir, 8)
+      assert(!h.postingsResident && !h.driverBlocksResident)
+      for (mode <- Seq(Searcher.And, Searcher.Or))
+        assertRanks(rows(Searcher.searchTopK(spark, localDir, qs, 10, mode, 8)),
+          oracle(localDir, qs, 10, mode), s"non-resident $mode")
+    } finally {
+      spark.conf.unset("graft.postings.persistCap")
+      IndexHandle.invalidate(spark, localDir)
+    }
+  }
+
+  test("Oracle.topK leaves no cached table behind") {
+    val corpusIds = spark.read.parquet(s"$localDir/corpus_ids")
+    val (rare, _, common, _) = localTerms
+    val qs = Seq(Query(1, s"$rare $common"), Query(2, common))
+    val before = spark.sparkContext.getPersistentRDDs.size
+    val first = rows(Oracle.topK(spark, corpusIds, qs, 10))
+    val second = rows(Oracle.topK(spark, corpusIds, qs, 10))
+    assert(first.nonEmpty && first == second)
+    assert(spark.sparkContext.getPersistentRDDs.size == before)
+  }
+
   test("posting block ranges are disjoint and sorted per term (WAND invariant)") {
     import spark.implicits._
     val byTerm = spark.read.parquet(s"$indexDir/postings")

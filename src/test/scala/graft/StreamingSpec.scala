@@ -94,6 +94,51 @@ class StreamingSpec extends SparkTestBase {
     assert(Builder.indexEqual(spark, dir, fullDir2))
   }
 
+  test("a warm driver block map never serves stale blocks across ingest and compaction") {
+    import spark.implicits._
+    import graft.query.{IndexHandle, Oracle}
+    import graft.streaming.Compactor
+    val dir = tmpDir("stream-warm-handle")
+    val conf = Builder.Config(blockSize = 16, nBuckets = 4, nSegments = 2,
+      saltTarget = 40)
+    Builder.build(spark, (0L until 80L).map(i => Synth.doc(33L, i)).toDF(),
+      dir, conf)
+    val fresh = "zq_fresh_term"
+    val qs = Seq(Searcher.Query(1, fresh), Searcher.Query(2, s"$fresh id_0"),
+      Searcher.Query(3, "id_0 id_1"))
+    def ranked(df: org.apache.spark.sql.DataFrame) = df.collect()
+      .map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getDouble(3)))
+      .sortBy(r => (r._1, r._2)).toSeq
+    def check(stage: String): Unit = {
+      val corpusIds = spark.read.parquet(s"$dir/corpus_ids")
+      val freshIds = corpusIds.filter(col("content").contains(fresh))
+        .select("doc_id").as[Long].collect().toSet
+      assert(freshIds.size == 1, stage)
+      for (mode <- Seq(Searcher.And, Searcher.Or)) {
+        val got = ranked(Searcher.searchTopK(spark, dir, qs, 10, mode))
+        val want = ranked(Oracle.topK(spark, corpusIds, qs, 10,
+          conjunctive = mode == Searcher.And))
+        assert(got.map(r => (r._1, r._2, r._3)) == want.map(r => (r._1, r._2, r._3)),
+          s"$stage $mode")
+        got.zip(want).foreach { case (g, w) =>
+          assert(math.abs(g._4 - w._4) <= 1e-9, s"$stage $mode: $g vs $w")
+        }
+        for (q <- Seq(1L, 2L))
+          assert(got.exists(r => r._1 == q && freshIds(r._3)), s"$stage $mode $q")
+      }
+    }
+    // load the driver block map while the fresh term is absent
+    assert(Searcher.searchTopK(spark, dir, qs, 10).collect()
+      .forall(_.getLong(0) == 3L))
+    assert(IndexHandle.open(spark, dir).driverBlocksResident)
+    IncrementalIndexer.ingestBatch(spark,
+      Seq(CodeDoc("r_fresh", "fresh.c", "c0", "c", s"$fresh id_0 $fresh")).toDF(),
+      dir, conf, 0L, autoCompact = false)
+    check("after ingest")
+    assert(Compactor.maybeCompact(spark, dir, conf, minStreamFraction = 0.0))
+    check("after compaction")
+  }
+
   test("windowed event aggregation: streaming (watermarked) == batch") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
