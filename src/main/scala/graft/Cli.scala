@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
 import graft.corpus.{Corpus, Queries}
 import graft.index.Builder
-import graft.query.{HeadCache, Phrase, Searcher, Substring}
+import graft.query.{Phrase, Searcher, Substring}
 
 /** spark-submit entry point — the `gin` CLI analog
   * (/root/reference/gin.c: index / query / decode / utils subcommands).
@@ -26,8 +26,6 @@ import graft.query.{HeadCache, Phrase, Searcher, Substring}
   * spark-submit --class graft.Cli app.jar decode \
   *   --index /idx --queries q.txt [--what substring|phrase] \
   *   [--max-matches 1000] [--out /results]   # every (doc, offset)
-  * spark-submit --class graft.Cli app.jar cache \
-  *   --index /idx --min-df 1000 --k 10 [--pair-terms 64] [--triple-terms 24]
   * spark-submit --class graft.Cli app.jar compact --index /idx
   * spark-submit --class graft.Cli app.jar deindex --index /idx --out /corpus
   * spark-submit --class graft.Cli app.jar spectrum \
@@ -76,7 +74,7 @@ object Cli {
   /** Dispatch; returns a result DataFrame for query-like subcommands. */
   def run(spark: SparkSession, args: Array[String]): Option[DataFrame] = {
     require(args.nonEmpty, "subcommand required: index|query|count|phrase|" +
-      "substring|decode|cache|compact|order|deindex|spectrum|clean|serve")
+      "substring|decode|compact|order|deindex|spectrum|clean|serve")
     val o = opts(args)
     def conf = Builder.Config(
       blockSize = o.getOrElse("block-size", "128").toInt,
@@ -136,11 +134,6 @@ object Cli {
             qs.map(q => q.query_id -> q.text), nBuckets, cap,
             allowShortScan = flag(args, "allow-short"))
         })
-      case "cache" =>
-        HeadCache.build(spark, index, o.getOrElse("min-df", "1000").toLong, k,
-          pairTerms = o.getOrElse("pair-terms", "0").toInt,
-          tripleTerms = o.getOrElse("triple-terms", "0").toInt, nBuckets)
-        None
       case "compact" =>
         graft.streaming.Compactor.compact(spark, index, conf)
         None

@@ -35,19 +35,20 @@ object Ann {
     * Bit-identical to the column form on equal-length inputs: floats
     * widen exactly to double, the products/squares are accumulated in
     * the same left-to-right order, and the final expression is the same
-    * dot / (sqrt · sqrt). (Unequal lengths never occur in the pipeline —
-    * the column form would null out such a pair.) */
-  private[ops] def rawCosine(a: Seq[Float], b: Seq[Float]): Double = {
-    val n = math.min(a.length, b.length)
-    var d = 0.0; var na = 0.0; var nb = 0.0
-    var i = 0
-    while (i < n) {
-      val x = a(i).toDouble; val y = b(i).toDouble
-      d += x * y; na += x * x; nb += y * y
-      i += 1
+    * dot / (sqrt · sqrt). None for a pair that has no cosine: a null
+    * embedding or unequal lengths. Callers skip such a pair. */
+  private[ops] def rawCosine(a: Seq[Float], b: Seq[Float]): Option[Double] =
+    if (a == null || b == null || a.length != b.length) None
+    else {
+      var d = 0.0; var na = 0.0; var nb = 0.0
+      var i = 0
+      while (i < a.length) {
+        val x = a(i).toDouble; val y = b(i).toDouble
+        d += x * y; na += x * x; nb += y * y
+        i += 1
+      }
+      Some(d / (math.sqrt(na) * math.sqrt(nb)))
     }
-    d / (math.sqrt(na) * math.sqrt(nb))
-  }
 
   /** Exact-cosine re-rank of candidate id pairs: embeddings joined back
     * by id, dot+norms in one typed JVM pass (rawCosine), rounding via
@@ -65,8 +66,8 @@ object Ann {
         bName)
       .select(col(aName), col(bName), col("ea"), col("eb"))
       .as[(Long, Long, Seq[Float], Seq[Float])]
-      .mapPartitions(_.map { case (a, b, ea, eb) =>
-        (a, b, rawCosine(ea, eb))
+      .mapPartitions(_.flatMap { case (a, b, ea, eb) =>
+        rawCosine(ea, eb).map((a, b, _))
       })
       .toDF(aName, bName, "raw")
       .select(col(aName), col(bName), round(col("raw"), 6).as("cos"))
@@ -87,8 +88,8 @@ object Ann {
       .filter(col("query_id") =!= col("neighbor_id"))
       .select(col("query_id"), col("neighbor_id"), col("q_emb"), col("c_emb"))
       .as[(Long, Long, Seq[Float], Seq[Float])]
-      .mapPartitions(_.map { case (qid, nid, ea, eb) =>
-        (qid, nid, rawCosine(ea, eb))
+      .mapPartitions(_.flatMap { case (qid, nid, ea, eb) =>
+        rawCosine(ea, eb).map((qid, nid, _))
       })
       .toDF("query_id", "neighbor_id", "raw")
       .select(col("query_id"), col("neighbor_id"),
@@ -140,7 +141,8 @@ object Ann {
 
   /** All (table, bucket) rows per vector, computed in one typed pass with
     * a broadcast plane matrix: exact integer arithmetic identical to the
-    * SQL oracle, constant-size codegen, one flat loop per row. */
+    * SQL oracle, constant-size codegen, one flat loop per row. A null
+    * embedding has no bucket. */
   def bucketRows(vecs: DataFrame, nPlanes: Int, nTables: Int,
                  dims: Int): DataFrame = {
     val spark = vecs.sparkSession
@@ -150,7 +152,7 @@ object Ann {
     val planesB = spark.sparkContext.broadcast(planes)
     vecs.select(col("vec_id").cast("long"), col("embedding"))
       .as[(Long, Seq[Float])]
-      .flatMap { case (id, emb) =>
+      .flatMap { case (id, emb) if emb != null =>
         val w = planesB.value
         val e = new Array[Long](dims)
         var d = 0
@@ -169,6 +171,7 @@ object Ann {
           }
           (id, t, bucket)
         }
+        case _ => Nil
       }
       .toDF("vec_id", "t", "bucket")
   }

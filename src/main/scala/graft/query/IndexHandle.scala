@@ -25,8 +25,8 @@ import graft.index.{Builder, PostingBlock, Stats}
   *    per call.
   *
   * Handles are cached per (session, dir) so repeated Searcher calls hit
-  * warm state; ingest, compaction and head-cache builds drop the handle
-  * (and with it the driver block map); `close()` unpersists.
+  * warm state; ingest and compaction drop the handle (and with it the
+  * driver block map); `close()` unpersists.
   */
 class IndexHandle private (
     val spark: SparkSession,
@@ -130,7 +130,7 @@ class IndexHandle private (
 
   /** Every block, still compressed, grouped by term and sorted by
     * doc_id_base: one collect on first use, so executor-only users
-    * (HeadCache.build, large batches, QueryStream) never pay for it. */
+    * (large batches, QueryStream) never pay for it. */
   private lazy val driverBlocks: Map[String, Array[PostingBlock]] =
     collectByTerm(blocks)
 
@@ -167,9 +167,6 @@ class IndexHandle private (
     if (postingsResident) blocks.unpersist()
     if (docmetaLoaded) docmeta.unpersist()
   }
-
-  /** Head result cache (empty unless HeadCache.build ran). */
-  lazy val headCache: HeadCache.Table = HeadCache.load(spark, dir)
 
   /** Per-term merged block [doc_id_base, doc_id_max] intervals (coarsened
     * to <= Searcher.MaxIvPerTerm by IntervalAgg), cached on the handle:

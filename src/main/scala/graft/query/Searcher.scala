@@ -15,7 +15,7 @@ import graft.index.{Bm25, PostingBlock, Tokenizer}
   *     build side (the bootstrap, gin_gin.c:682-721), probe the
   *     dictionary once for every term's df, and drop dead queries — a
   *     missing term kills a conjunctive query, the DEAD-fork analog
-  *     (gin_gin.c:696-708); head-cache hits are answered by a map lookup;
+  *     (gin_gin.c:696-708);
   *  2. the remaining queries run `Wand.topK` over their still-compressed
   *     posting blocks: on the driver for small batches, over the
   *     handle's driver-resident block map (`IndexHandle.termBlocks`), so
@@ -68,8 +68,8 @@ object Searcher {
     * (searchTopKWandExecutors) instead of the driver thread pool: big
     * batches are throughput work that should scale with the cluster
     * (and measure faster even on one host — BENCH wand_exec leg), while
-    * small batches stay on the driver for latency (no job scheduling,
-    * head-cache hits). */
+    * small batches stay on the driver for latency (no job scheduling on a
+    * handle with driver-resident blocks). */
   val ExecBatchThreshold = 256
 
   /** Per-query work counters — the reference's per-query stats
@@ -91,28 +91,22 @@ object Searcher {
         math.min(16, Runtime.getRuntime.availableProcessors())))
 
   /** One call's front end, built once and handed to the path that runs
-    * it: the dictionary probe of every query term, the head-cache answers
-    * as ranked rows, and the remaining live queries with their present
-    * (distinct, dictionary-known) terms. */
+    * it: the dictionary probe of every query term and the live queries
+    * with their present (distinct, dictionary-known) terms. */
   private final case class Plan(handle: IndexHandle, dict: Map[String, Long],
-      cached: Seq[(Long, Int, Long, Double)], live: Map[Long, Seq[String]])
+      live: Map[Long, Seq[String]])
 
   private def plan(spark: SparkSession, indexDir: String, queries: Seq[Query],
-      k: Int, mode: Mode, nBuckets: Int, probeCache: Boolean): Plan = {
+      mode: Mode, nBuckets: Int): Plan = {
     val handle = IndexHandle.open(spark, indexDir, nBuckets)
     val tokens =
       queries.map(q => q.query_id -> Tokenizer.tokens(q.text).distinct.toSeq)
     val dict = handle.dfOf(tokens.flatMap(_._2).distinct)
-    val probed = tokens.toMap.toSeq.flatMap { case (qid, ts) =>
+    Plan(handle, dict, tokens.toMap.flatMap { case (qid, ts) =>
       val present = ts.filter(dict.contains)
       if (present.isEmpty || (mode == And && present.size < ts.size)) None
-      else Some((qid, present,
-        if (probeCache) HeadCache.lookup(handle.headCache, present, k, mode)
-        else None))
-    }
-    Plan(handle, dict,
-      probed.flatMap { case (qid, _, hit) => hit.toSeq.flatMap(h => ranked(qid, h.take(k))) },
-      probed.collect { case (qid, ts, None) => qid -> ts }.toMap)
+      else Some(qid -> present)
+    })
   }
 
   private def ranked(qid: Long, hits: Seq[Scored]): Seq[(Long, Int, Long, Double)] =
@@ -147,7 +141,7 @@ object Searcher {
     * Returns (query_id, rank, doc_id, score) with rank 1..k. */
   def searchTopK(spark: SparkSession, indexDir: String, queries: Seq[Query],
                  k: Int, mode: Mode = And, nBuckets: Int = 32): DataFrame = {
-    val p = plan(spark, indexDir, queries, k, mode, nBuckets, probeCache = true)
+    val p = plan(spark, indexDir, queries, mode, nBuckets)
     lastStats.clear() // per-dispatched-batch counters only (see doc)
     if (queries.size >= ExecBatchThreshold || p.dict.values.sum > WandDfCap)
       executorTopK(spark, p, k, mode, ExecStripePostings)
@@ -161,12 +155,11 @@ object Searcher {
     * skipped by block-max metadata without decoding. */
   def searchTopKWand(spark: SparkSession, indexDir: String, queries: Seq[Query],
                      k: Int, mode: Mode = And, nBuckets: Int = 32): DataFrame =
-    driverTopK(spark,
-      plan(spark, indexDir, queries, k, mode, nBuckets, probeCache = true), k, mode)
+    driverTopK(spark, plan(spark, indexDir, queries, mode, nBuckets), k, mode)
 
-  /** The driver loop: `Wand.topK` per live query over `termBlocks`, the
-    * head-cache rows added, answered as one local relation. On a handle
-    * with driver-resident blocks this starts no Spark job. */
+  /** The driver loop: `Wand.topK` per live query over `termBlocks`,
+    * answered as one local relation. On a handle with driver-resident
+    * blocks this starts no Spark job. */
   private def driverTopK(spark: SparkSession, p: Plan, k: Int,
       mode: Mode): DataFrame = {
     val stats = p.handle.stats
@@ -177,7 +170,7 @@ object Searcher {
     import scala.collection.parallel.CollectionConverters._
     val par = p.live.toSeq.par
     par.tasksupport = wandPool
-    val rows = p.cached ++ par.map { case (qid, ts) =>
+    val rows = par.map { case (qid, ts) =>
       val tbs = ts.map { t =>
         Wand.TermBlocks(t, Bm25.idf(stats.n_docs, p.dict(t)),
           byTerm.getOrElse(t, Array.empty))
@@ -215,9 +208,8 @@ object Searcher {
       queries: Seq[Query], k: Int, mode: Mode = And,
       nBuckets: Int = 32,
       stripePostings: Long = ExecStripePostings): DataFrame =
-    executorTopK(spark,
-      plan(spark, indexDir, queries, k, mode, nBuckets, probeCache = true),
-      k, mode, stripePostings)
+    executorTopK(spark, plan(spark, indexDir, queries, mode, nBuckets), k,
+      mode, stripePostings)
 
   /** Set-oriented entry point kept for existing callers: top-k has one
     * kernel, so this is the executor BMW path. */
@@ -225,19 +217,10 @@ object Searcher {
                  k: Int, mode: Mode = And, nBuckets: Int = 32): DataFrame =
     searchTopKWandExecutors(spark, indexDir, queries, k, mode, nBuckets)
 
-  /** Conjunctive top-k on executors that never answers from the head
-    * cache — the kernel the cache itself is built with. */
-  private[query] def searchTopKUncached(spark: SparkSession, indexDir: String,
-      queries: Seq[Query], k: Int, nBuckets: Int): DataFrame =
-    executorTopK(spark,
-      plan(spark, indexDir, queries, k, And, nBuckets, probeCache = false),
-      k, And, ExecStripePostings)
-
   private def executorTopK(spark: SparkSession, p: Plan, k: Int, mode: Mode,
       stripePostings: Long): DataFrame = {
     import spark.implicits._
-    val cachedDf = localResult(spark, p.cached)
-    if (p.live.isEmpty) return cachedDf
+    if (p.live.isEmpty) return localResult(spark, Nil)
     val stats = p.handle.stats
     // per-query stripe plan from the probed dictionary dfs: driver-side
     // arithmetic only, no extra jobs
@@ -268,7 +251,6 @@ object Searcher {
           ranked(key._1, stripeTopK(it, k, avgdl, mode))
         }
         .toDF(OutCols: _*)
-        .unionByName(cachedDf)
     // a block [base, max] feeds every stripe it overlaps; ids past the
     // last stripe boundary (e.g. post-ingest docs beyond stats.n_docs)
     // clamp into the last stripe, so every doc lands in exactly one
@@ -286,7 +268,6 @@ object Searcher {
       .agg(new TopKAgg(k).toColumn.name("topk"))
       .flatMap { case (qid, hits) => ranked(qid, hits) }
       .toDF(OutCols: _*)
-      .unionByName(cachedDf)
   }
 
   /** The group body both executor shapes share: one (query, stripe)'s
@@ -340,7 +321,7 @@ object Searcher {
   def searchCandidates(spark: SparkSession, indexDir: String,
                        queries: Seq[Query], nBuckets: Int = 32): DataFrame = {
     import spark.implicits._
-    val p = plan(spark, indexDir, queries, 0, And, nBuckets, probeCache = false)
+    val p = plan(spark, indexDir, queries, And, nBuckets)
     if (p.live.isEmpty) return Seq.empty[(Long, Long)].toDF("query_id", "doc_id")
     val blocks = pruneBlocks(spark, p.handle,
       p.handle.blocksFor(p.live.values.flatten.toSeq.distinct), p.live)

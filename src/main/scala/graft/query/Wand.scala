@@ -14,9 +14,9 @@ import graft.index.{Bm25, Codec, PostingBlock}
   * compare upper bounds against (θ - 1e-6) so rounding can never discard
   * a doc that would round into the top-k.
   *
-  * This is the one top-k kernel: every Searcher top-k path and the head
-  * cache build run it. Executors/the handle deliver the (term-pruned,
-  * compact) block lists; the per-query merge is a single tight loop —
+  * This is the one top-k kernel: every Searcher top-k path runs it.
+  * Executors/the handle deliver the (term-pruned, compact) block
+  * lists; the per-query merge is a single tight loop —
   * the same split Lucene-style engines use. Posting volumes beyond one
   * group's memory are handled by doc-range striping ([minDoc, maxDoc]
   * below).

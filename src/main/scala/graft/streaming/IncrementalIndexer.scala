@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 import graft.index.{Builder, CorpusRow, Posting, Tokenizer}
-import graft.query.{HeadCache, IndexHandle}
+import graft.query.IndexHandle
 import graft.util.Fs
 
 /** Incremental index ingest via Structured Streaming.
@@ -205,8 +205,6 @@ object IncrementalIndexer {
 
     raw.unpersist()
     withIds.unpersist()
-    // stale cached top-k must not shadow the new docs (and df/avgdl moved)
-    HeadCache.invalidate(spark, indexDir)
     Fs.write(spark, marker, s"""{"docs":$nDocsBatch,"base":$base}""")
     Fs.delete(spark, baseMarker)
     IndexHandle.invalidate(spark, indexDir)

@@ -49,10 +49,6 @@ class CliSpec extends SparkTestBase {
       "--queries", qf.toString, "--resolve", "--out", "/r", "--positions"))
     assert(parsed.get("out").contains("/r") && parsed("index") == idx)
 
-    Cli.run(spark, Array("cache", "--index", idx, "--min-df", "50",
-      "--k", "5", "--buckets", "8"))
-    assert(graft.util.Fs.exists(spark, s"$idx/_COMMIT_topk_cache"))
-
     // full match decode: substring offsets and phrase token positions
     val dec = Cli.run(spark, Array("decode", "--index", idx,
       "--queries", qf.toString, "--buckets", "8",

@@ -175,142 +175,12 @@ class IndexSpec extends SparkTestBase {
       oracle(localDir, qs, 20, Searcher.And), "striped AND")
   }
 
-  /** Runs `qs` on the driver loop and on the executor path, checks both
-    * against the oracle, and returns the query ids the driver loop
-    * scored live (a cache-served query leaves no work counters). */
-  private def checkCached(d: String, qs: Seq[Query], k: Int,
-                          mode: Searcher.Mode): Set[Long] = {
-    val want = oracle(d, qs, k, mode)
-    Searcher.lastStats.clear()
-    assertRanks(rows(Searcher.searchTopKWand(spark, d, qs, k, mode, 8)), want,
-      s"driver $mode")
-    val scored = qs.map(_.query_id).filter(Searcher.lastStats.containsKey).toSet
-    assertRanks(rows(Searcher.searchTopKWandExecutors(spark, d, qs, k, mode, 8)),
-      want, s"executor $mode")
-    scored
-  }
-
-  /** Ids of the queries in `qs` that `cache` cannot answer in `mode`. */
-  private def uncached(cache: Map[Seq[String], _], qs: Seq[Query],
-                       mode: Searcher.Mode): Set[Long] = qs.filterNot { q =>
-    val ts = Tokenizer.tokens(q.text).distinct.sorted.toSeq
-    (mode == Searcher.And || ts.size == 1) && cache.contains(ts)
-  }.map(_.query_id).toSet
-
-  test("head cache: cached single-term results identical to live search") {
-    import graft.query.{HeadCache, IndexHandle}
-    // build cache over head terms of the shared index
-    HeadCache.build(spark, indexDir, minDf = 100, k = 10)
-    val (cacheMap, cacheK) = IndexHandle.open(spark, indexDir, 8).headCache
-    assert(cacheMap.nonEmpty && cacheK == 10)
-    assert(cacheMap.contains(Seq("id_0"))) // df ~ 300 of 400
-    // single-term entries serve both modes; a 4-term query is never
-    // cached, so the batch mixes cached and computed rows
-    val qs = Seq(Query(1, "id_0"), Query(2, "id_1"),
-      Query(3, "id_0 id_1 id_2 id_3"))
-    for (mode <- Seq(Searcher.And, Searcher.Or)) {
-      val live = uncached(cacheMap, qs, mode)
-      assert(!live.contains(1L) && live.contains(3L))
-      assert(checkCached(indexDir, qs, 10, mode) == live, s"mode $mode")
-    }
-  }
-
-  test("head cache is built distributedly (no posting collect) even non-resident") {
-    import graft.query.{HeadCache, IndexHandle}
-    // force the non-resident handle path: cache build must still work
-    // without pinning blocks in memory (and never collects posting lists)
-    spark.conf.set("graft.postings.persistCap", "1")
-    val d = tmpDir("graft-hc-nonres")
-    try {
-      Builder.build(spark, Synth.corpus(spark, 150, seed = 11L), d,
-        Builder.Config(blockSize = 16, nBuckets = 8, nSegments = 2, saltTarget = 40))
-      HeadCache.build(spark, d, minDf = 40, k = 5)
-      val h = IndexHandle.open(spark, d, 8)
-      assert(!h.postingsResident)
-      val (cacheMap, k) = h.headCache
-      assert(cacheMap.nonEmpty && k == 5)
-      val qs = cacheMap.keys.toSeq.sortBy(_.head).zipWithIndex
-        .map { case (ts, i) => Query(i.toLong, ts.mkString(" ")) }
-      assert(checkCached(d, qs, 5, Searcher.And).isEmpty)
-      h.close()
-    } finally spark.conf.unset("graft.postings.persistCap")
-  }
-
-  test("head pair cache (depth 2): cached 2-term AND identical to live search") {
-    import graft.query.{HeadCache, IndexHandle}
-    HeadCache.build(spark, indexDir, minDf = Long.MaxValue, k = 10,
-      pairTerms = 6, nBuckets = 8)
-    val (cacheMap, k2) = IndexHandle.open(spark, indexDir, 8).headCache
-    assert(cacheMap.nonEmpty && k2 == 10)
-    assert(cacheMap.contains(Seq("id_0", "id_1")))
-    val qs = Seq(Query(1, "id_0 id_1"), Query(2, "id_1 id_0"), // order-free
-      Query(3, "id_2 id_0"))
-    // pair entries are conjunctive rankings: OR is never served by them
-    for (mode <- Seq(Searcher.And, Searcher.Or))
-      assert(checkCached(indexDir, qs, 10, mode) ==
-        uncached(cacheMap, qs, mode), s"mode $mode")
-    assert(uncached(cacheMap, qs, Searcher.Or) == Set(1L, 2L, 3L))
-  }
-
-  test("head triple cache (depth 3): cached 3-term AND identical to live search") {
-    import graft.query.{HeadCache, IndexHandle}
-    HeadCache.build(spark, indexDir, minDf = Long.MaxValue, k = 10,
-      tripleTerms = 6, nBuckets = 8)
-    val (cacheMap, k3) = IndexHandle.open(spark, indexDir, 8).headCache
-    assert(cacheMap.nonEmpty && k3 == 10)
-    assert(cacheMap.contains(Seq("id_0", "id_1", "id_2")))
-    val qs = Seq(Query(1, "id_0 id_1 id_2"), Query(2, "id_2 id_0 id_1"),
-      Query(3, "id_1 id_3 id_0"))
-    assert(checkCached(indexDir, qs, 10, Searcher.And) ==
-      uncached(cacheMap, qs, Searcher.And))
-  }
-
-  test("staged pair cache at maxPairTerms=256 is identical to live search") {
-    import spark.implicits._
-    import graft.query.{HeadCache, IndexHandle}
-    // small closed vocabulary so top-256 covers it all; its 1225 pairs all
-    // co-occur, more than one build batch, so the staging path (several
-    // bounded kernel batches, appended) runs without a quadratic blowup
-    // in test time
-    val vocab = 50
-    val docs = (0 until 120).map { i =>
-      val toks = (0 until 30).map(j => s"w${(i * 7 + j * 11) % vocab}")
-      graft.index.CodeDoc(f"r${i / 30}%02d", f"f$i%04d.c", "c0", "c",
-        toks.mkString(" "))
-    }
-    val d = tmpDir("pair-staged")
-    Builder.build(spark, docs.toDF(), d, Builder.Config(blockSize = 16,
-      nBuckets = 8, nSegments = 1, saltTarget = 100000))
-    HeadCache.build(spark, d, minDf = Long.MaxValue, k = 5, pairTerms = 256,
-      nBuckets = 8)
-    val h = IndexHandle.open(spark, d, 8)
-    val (pairMap, k2) = h.headCache
-    assert(k2 == 5 && pairMap.size > HeadCache.BuildBatch)
-    val keys = pairMap.keys.toSeq.sortBy(_.mkString(" ")).take(5)
-    val qs = keys.zipWithIndex.map { case (ts, i) => Query(i.toLong, ts.mkString(" ")) }
-    val want = oracle(d, qs, 5, Searcher.And)
-    keys.zipWithIndex.foreach { case (ts, i) =>
-      assertRanks(pairMap(ts).zipWithIndex.map { case (h, r) =>
-        (i.toLong, r + 1, h.doc_id, h.score)
-      }, want.filter(_._1 == i), s"pair $ts")
-    }
-    h.close()
-  }
-
-  test("cache/dictionary crash states heal or degrade gracefully") {
-    import graft.query.{HeadCache, IndexHandle}
+  test("dictionary crash states heal") {
+    import graft.query.IndexHandle
     val d = tmpDir("crash-states")
     Builder.build(spark, Synth.corpus(spark, 60, seed = 19L), d,
       Builder.Config(blockSize = 16, nBuckets = 4, nSegments = 1,
         saltTarget = 1000))
-    // cache marker WITHOUT data (crash between marker write and a failed
-    // rebuild): the loader must report an absent cache, not throw
-    graft.util.Fs.write(spark, s"$d/_COMMIT_topk_cache", """{"k":5}""")
-    assert(HeadCache.load(spark, d) == (Map.empty, 0))
-    graft.util.Fs.delete(spark, s"$d/_COMMIT_topk_cache")
-    // searches still work with the dangling marker gone
-    assert(Searcher.searchTopK(spark, d,
-      Seq(Query(1, "id_0")), 5, Searcher.And, 4).count() > 0)
     // legacy (pre-delta) dictionary crash state: dictionary renamed to an
     // undo log and never restored — recovery must promote it
     graft.util.Fs.rename(spark, s"$d/dictionary", s"$d/dictionary_undo_b7")
@@ -321,7 +191,7 @@ class IndexSpec extends SparkTestBase {
       Seq(Query(1, "id_0")), 5, Searcher.And, 4).count() > 0)
   }
 
-  test("a head cache in the older per-depth layout is never read") {
+  test("a leftover head cache, topk_cache or older per-depth layout, is never read") {
     import spark.implicits._
     import graft.query.IndexHandle
     val d = tmpDir("old-cache-layout")
@@ -335,6 +205,14 @@ class IndexSpec extends SparkTestBase {
       .write.parquet(s"$d/head_cache")
     graft.util.Fs.write(spark, s"$d/_COMMIT_head_cache",
       """{"minDf":1,"k":10,"rows":2}""")
+    // the one-table layout (sorted term tuple keys) with its marker, as
+    // the last builds with a head cache wrote them
+    Seq((Seq("id_0"), 1, 999999L, 99.0), (Seq("id_1"), 1, 999998L, 98.0),
+        (Seq("id_0", "id_1"), 1, 999999L, 97.0))
+      .toDF("terms", "rank", "doc_id", "score")
+      .write.parquet(s"$d/topk_cache")
+    graft.util.Fs.write(spark, s"$d/_COMMIT_topk_cache",
+      """{"minDf":1,"pairTerms":2,"tripleTerms":0,"k":10,"rows":3}""")
     IndexHandle.invalidate(spark, d)
     val qs = Seq(Query(1, "id_0"), Query(2, "id_1"), Query(3, "id_0 id_1"))
     for (mode <- Seq(Searcher.And, Searcher.Or))

@@ -206,6 +206,37 @@ class OpsSpec extends SparkTestBase {
     }
   }
 
+  test("ANN: null and ragged embeddings pair with nothing, jobs complete") {
+    import spark.implicits._
+    val good: Seq[(Long, Seq[Float])] = (0L until 10L).map { i =>
+      (i, (0 until 8).map(d => math.sin(i * 0.3 + d).toFloat))
+    }
+    // id 10 has no embedding; id 11 is a 3-d prefix of vector 0
+    val emb = (good ++ Seq((10L, null), (11L, good.head._2.take(3))))
+      .toDF("vec_id", "embedding")
+    val goodDf = good.toDF("vec_id", "embedding")
+    val bad = Set(10L, 11L)
+    // one plane and four tables: the ragged vector shares a bucket with
+    // normal ones, so the pair scorer does see it
+    assert(Ann.lshCandidatePairs(emb, 1, 4, 8, 1000L).as[(Long, Long)]
+      .collect().exists { case (a, b) => bad(a) || bad(b) })
+    // every answer over all twelve vectors equals the answer over the
+    // ten normal ones, scores included: no pair involves a bad vector
+    val bf = (e: DataFrame) =>
+      Ann.bruteForceTopK(e, e, 3).as[(Long, Int, Long, Double)].collect().toSet
+    val lsh = (e: DataFrame) =>
+      Ann.lshTopK(e, e, 3, nPlanes = 1, nTables = 4, dims = 8)
+        .as[(Long, Int, Long, Double)].collect().toSet
+    val dups = (e: DataFrame) =>
+      Ann.cosineNearDupPairs(e, minCos = -1.0, nPlanes = 1, nTables = 4,
+        dims = 8).as[(Long, Long, Double)].collect().toSet
+    for ((name, run) <- Seq[(String, DataFrame => Set[_])](
+        "bruteForceTopK" -> bf, "lshTopK" -> lsh, "cosineNearDupPairs" -> dups)) {
+      val want = run(goodDf)
+      assert(want.nonEmpty && run(emb) == want, name)
+    }
+  }
+
   test("IVF top-k: probed-cell candidates, high recall on clustered data, no cartesian") {
     import spark.implicits._
     val emb = clusteredEmb(200, 16, 12)

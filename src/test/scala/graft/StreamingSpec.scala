@@ -71,15 +71,9 @@ class StreamingSpec extends SparkTestBase {
     assert(meta.select("content_sha256").distinct().count() ==
       all.map(_.content).distinct.size)
 
-    // ingest must invalidate the head caches: stale cached top-k would
-    // hide newly ingested docs (r1 ADVICE high)
-    graft.query.HeadCache.build(spark, dir, minDf = 1, k = 10)
-    assert(graft.util.Fs.exists(spark, s"$dir/_COMMIT_topk_cache"))
+    // one more batch (default auto-compaction) before the compaction below
     IncrementalIndexer.ingestBatch(spark,
       Seq(Synth.doc(42L, 999L)).toDF(), dir, conf, 77L)
-    assert(!graft.util.Fs.exists(spark, s"$dir/_COMMIT_topk_cache"))
-    val (cacheMap, _) = graft.query.HeadCache.load(spark, dir)
-    assert(cacheMap.isEmpty)
 
     // compaction folds stream segments back into canonical ones; the
     // compacted index is logically equal to a batch rebuild over the
