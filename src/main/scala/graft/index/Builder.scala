@@ -6,15 +6,24 @@ import scala.collection.mutable.ArrayBuffer
 
 /** Index build job — the Spark-native analog of `gin index`
   * (/root/reference/src/gin_gin.c:72-342): tokenize -> postings ->
-  * range-partitioned sorted segments -> block-encode -> commit.
+  * hash-partitioned sorted segments -> block-encode -> commit.
+  *
+  * Builder owns every index-write step: the batch build, streaming ingest
+  * (graft.streaming.IncrementalIndexer) and compaction
+  * (graft.streaming.Compactor) call the same row functions and the one
+  * block encoder, so stream segments and compacted ones cannot diverge.
   *
   * Layout written under `outDir`:
   * {{{
+  *   corpus_ids/  CorpusRow: id-stamped corpus snapshot (dl, sha256, content)
   *   docmeta/     doc_id, repo, path, commit, lang, dl, content_sha256
   *   stats/       n_docs, avgdl
-  *   dictionary/  term, df, cf
+  *   dictionary/bucket=B/     term, df, cf
+  *   dict_deltas/bucket=B/    term, df, cf   (streamed, folded by compaction)
   *   postings_raw/bucket=B/   term, doc_id, tf, dl      (staged, resumable)
-  *   postings/segment=G/      PostingBlock rows
+  *   postings/segment=G/      PostingBlock rows (segment=s<batch>: streamed)
+  *   positions/bucket=B/      term, doc_id, n_pos, pos_deltas  (optional)
+  *   trigrams/bucket=B/       gram, doc_id                     (optional)
   *   manifest/    stage, partition_id, rows, checksum, status
   * }}}
   *
@@ -26,9 +35,10 @@ import scala.collection.mutable.ArrayBuffer
   *    the vertex-permutation analog
   *    (/root/reference/src/gin_gin.c:103-112) that makes docID deltas
   *    small within a repo.
-  *  - the one wide shuffle is `repartitionByRange($"term", $"doc_id")`:
-  *    range partitioning on the *pair* splits a Zipf head term across
-  *    many partitions by doc range — built-in salting, no hot partition.
+  *  - the block-encode shuffle is a hash repartition on (term, salt)
+  *    (writeBlocks): a Zipf head term is salted into contiguous doc-id
+  *    ranges (encodeSegment), so it spreads over many partitions and no
+  *    partition runs hot.
   *  - postings_raw is hash-bucketed by term into `nBuckets` directories so
   *    the query path and the per-segment encode jobs get directory-level
   *    partition pruning, and so each segment group is an independently
@@ -85,8 +95,7 @@ object Builder {
     // AQE coalescing, which would otherwise pack the whole
     // (pre-explode-small) corpus into few tasks and serialize the
     // sha/tokenize pass downstream
-    val nPart = if (partitions > 0) partitions
-      else spark.conf.get("spark.sql.shuffle.partitions").toInt
+    val nPart = partitionCount(spark, partitions)
     val sorted = corpus
       .repartitionByRange(nPart, orderCols.map(col): _*)
       .sortWithinPartitions(orderCols.head, orderCols.tail: _*)
@@ -99,6 +108,55 @@ object Builder {
     }
     spark.createDataFrame(rdd, schema)
   }
+
+  /** Shuffle width of every write stage: the caller's
+    * Config.shufflePartitions when set (> 0), else the session value. */
+  def partitionCount(spark: SparkSession, requested: Int): Int =
+    if (requested > 0) requested
+    else spark.conf.get("spark.sql.shuffle.partitions").toInt
+
+  /** Id-stamped corpus snapshot rows from a frame with (doc_id, repo,
+    * path, commit, lang, content): the per-doc derived fields (dl,
+    * sha256) come out of the SAME pass, so the corpus is tokenized and
+    * hashed once. Null content is an empty document: dl 0, and a NULL
+    * sha, which is what Spark's `sha2(content, 256)` and DuckDB's
+    * `sha256(content)` give. Shared by the build (stage 0) and ingest. */
+  def snapshotRows(withIds: DataFrame): Dataset[CorpusRow] = {
+    val spark = withIds.sparkSession
+    import spark.implicits._
+    withIds.select("doc_id", "repo", "path", "commit", "lang", "content")
+      .as[(Long, String, String, String, String, String)]
+      .mapPartitions { it =>
+        val md = java.security.MessageDigest.getInstance("SHA-256")
+        it.map { case (id, repo, path, commitId, lang, content) =>
+          val sha = if (content == null) null else {
+            md.reset()
+            md.digest(content.getBytes("UTF-8")).map("%02x".format(_)).mkString
+          }
+          CorpusRow(id, repo, path, commitId, lang,
+            Tokenizer.docLen(content), sha, content) // docLen: allocation-free
+        }
+      }
+  }
+
+  /** docmeta/: the snapshot minus content (parquet never reads it). */
+  def docmetaOf(snapshot: DataFrame): DataFrame =
+    snapshot.select("doc_id", "repo", "path", "commit", "lang", "dl",
+      "content_sha256")
+
+  /** One-row (n_docs, avgdl) aggregate over a docmeta table. */
+  def statsOf(docmeta: DataFrame): DataFrame =
+    docmeta.agg(count(lit(1)).as("n_docs"),
+      avg(col("dl").cast("double")).as("avgdl"))
+
+  /** The layout an append or rewrite of an existing index must follow:
+    * the params in its own _META.json (a mismatched nBuckets would write
+    * rows into buckets readers never probe), with the caller's shuffle
+    * width. An index without _META.json falls back to the caller's. */
+  def indexLayout(spark: SparkSession, indexDir: String, caller: Config): Config =
+    loadConfig(spark, indexDir)
+      .map(_.copy(shufflePartitions = caller.shufflePartitions))
+      .getOrElse(caller)
 
   /** Plug in a user-measured document ordering — the `gin permutation`
     * program's role (/root/reference/gin.c:1569-1800,
@@ -194,8 +252,9 @@ object Builder {
       .flatMap { case (id, content) =>
         val seen = new java.util.HashSet[String](256)
         val out = ArrayBuffer.empty[(String, Long)]
+        val n = if (content == null) 0 else content.length
         var i = 0
-        while (i + 3 <= content.length) {
+        while (i + 3 <= n) {
           val g = content.substring(i, i + 3)
           if (seen.add(g)) out += ((g, id))
           i += 1
@@ -206,6 +265,50 @@ object Builder {
       .withColumn("bucket", bucketOf(col("gram"), nBuckets))
       .transform(clusterForBucketWrite(_, nBuckets, nPart))
   }
+
+  /** (term, doc_id, tf, dl, bucket) posting rows from a (doc_id, content)
+    * frame. A typed flatMap with the per-doc term-frequency map built
+    * locally, so the output is already (term, doc_id)-unique — the
+    * explode + groupBy shuffle of |tokens| rows disappears entirely
+    * (map-side combine taken to its limit: the doc itself is the combine
+    * group). Unclustered, unlike positionsOf: ingest reuses the rows for
+    * its segment and dictionary delta, so each write clusters its own.
+    * Shared by the build (postings_raw) and ingest. */
+  def postingsOf(docs: DataFrame, nBuckets: Int): DataFrame = {
+    val spark = docs.sparkSession
+    import spark.implicits._
+    docs.select("doc_id", "content")
+      .as[(Long, String)]
+      .flatMap { case (id, content) =>
+        // doc-local tf combine without HashMap nodes or Integer boxing
+        // (allocation rate limits multi-core scaling on JVM executors)
+        val dl = Tokenizer.docLen(content)
+        val out = new ArrayBuffer[Posting](192)
+        Tokenizer.foreachTermFreq(content) { (t, tf) =>
+          out += Posting(t, id, tf, dl)
+        }
+        out
+      }
+      .withColumn("bucket", bucketOf(col("term"), nBuckets))
+  }
+
+  /** (term, df, cf, bucket) dictionary rows from (term, tf) posting rows.
+    * Shared by the build (dictionary/) and ingest (dict_deltas/). */
+  def dictionaryOf(postings: DataFrame, nBuckets: Int): DataFrame =
+    postings.groupBy("term")
+      .agg(count(lit(1)).as("df"), sum("tf").as("cf"))
+      .withColumn("bucket", bucketOf(col("term"), nBuckets))
+
+  /** Write (term, df, cf, bucket) rows partitioned by bucket, clustered
+    * like every other bucket-partitioned write: keyed on (bucket,
+    * hash(term) subsplit) so the reduce width tracks nPart — hashing on
+    * bucket alone would funnel a 1e8-1e9-term vocabulary through
+    * <= nBuckets write tasks no matter how wide the cluster is. Shared by
+    * the build, ingest's delta segment and the Compactor's fold. */
+  def writeDictionary(dict: DataFrame, nBuckets: Int, nPart: Int,
+                      dir: String): Unit =
+    clusterForBucketWriteBy(dict, nBuckets, nPart, xxhash64(col("term")))
+      .write.mode(SaveMode.Overwrite).partitionBy("bucket").parquet(dir)
 
   // commit markers go through the Hadoop FS API (graft.util.Fs) so
   // resumable builds work on HDFS/S3A index dirs, not just local paths;
@@ -244,8 +347,7 @@ object Builder {
     val rawDir = s"$outDir/postings_raw"
     val postDir = s"$outDir/postings"
     val manifestDir = s"$outDir/manifest"
-    val nPart = if (conf.shufflePartitions > 0) conf.shufflePartitions
-      else spark.conf.get("spark.sql.shuffle.partitions").toInt
+    val nPart = partitionCount(spark, conf.shufflePartitions)
 
     // ---- stage 0: id-stamped corpus snapshot --------------------------
     // One pass assigns doc ids and freezes the ingest as parquet; every
@@ -257,22 +359,7 @@ object Builder {
       // no repartition here: withDocIds' range shuffle already leaves
       // nPart row-balanced partitions (the r2 per-repo window needed a
       // width-restoring shuffle; this saves it)
-      withDocIds(corpus, nPart, conf.orderCols)
-        .select("doc_id", "repo", "path", "commit", "lang", "content")
-        .as[(Long, String, String, String, String, String)]
-        .mapPartitions { it =>
-          // per-doc derived metadata in the SAME pass as the snapshot
-          // write: the corpus is tokenized (dl) and hashed (sha256) once,
-          // not re-scanned by a separate docmeta stage
-          val md = java.security.MessageDigest.getInstance("SHA-256")
-          it.map { case (id, repo, path, commitId, lang, content) =>
-            val dl = Tokenizer.docLen(content) // allocation-free count
-            md.reset()
-            val sha = md.digest(content.getBytes("UTF-8"))
-              .map("%02x".format(_)).mkString
-            CorpusRow(id, repo, path, commitId, lang, dl, sha, content)
-          }
-        }
+      snapshotRows(withDocIds(corpus, nPart, conf.orderCols))
         .write.mode(SaveMode.Overwrite).parquet(corpusIdsDir)
       commit(spark, outDir, "_COMMIT_corpus_ids")
     }
@@ -288,9 +375,7 @@ object Builder {
     // content column here); kept as its own compact table because query
     // handles pin it in executor memory for resolve joins
     if (!committed(spark, outDir, "_COMMIT_docmeta")) timed("docmeta") {
-      spark.read.parquet(corpusIdsDir)
-        .select("doc_id", "repo", "path", "commit", "lang", "dl",
-          "content_sha256")
+      docmetaOf(spark.read.parquet(corpusIdsDir))
         .write.mode(SaveMode.Overwrite).parquet(docmetaDir)
       commit(spark, outDir, "_COMMIT_docmeta")
     }
@@ -300,8 +385,7 @@ object Builder {
     // payload carries the values so the rest of the build needs no
     // read-back job
     if (!committed(spark, outDir, "_COMMIT_stats")) timed("stats") {
-      val st = spark.read.parquet(docmetaDir)
-        .agg(count(lit(1)).as("n_docs"), avg(col("dl").cast("double")).as("avgdl"))
+      val st = statsOf(spark.read.parquet(docmetaDir))
         .as[(Long, Double)].head()
       Seq(Stats(st._1, st._2)).toDS().coalesce(1)
         .write.mode(SaveMode.Overwrite).parquet(statsDir)
@@ -319,25 +403,10 @@ object Builder {
     }
 
     // ---- stage 3: postings_raw ----------------------------------------
-    // typed flatMap: per-doc term-frequency map built locally, so the
-    // output is already (term, doc_id)-unique — the explode + groupBy
-    // shuffle of |tokens| rows disappears entirely (map-side combine
-    // taken to its limit: the doc itself is the combine group). The only
-    // data movement left is the bucket-partitioned write.
+    // postingsOf needs no shuffle of its own; the only data movement is
+    // the bucket-partitioned write.
     if (!committed(spark, outDir, "_COMMIT_postings_raw")) timed("postings_raw") {
-      corpusIds("doc_id", "content")
-        .as[(Long, String)]
-        .flatMap { case (id, content) =>
-          // doc-local tf combine without HashMap nodes or Integer boxing
-          // (allocation rate limits multi-core scaling on JVM executors)
-          val dl = Tokenizer.docLen(content)
-          val out = new ArrayBuffer[Posting](192)
-          Tokenizer.foreachTermFreq(content) { (t, tf) =>
-            out += Posting(t, id, tf, dl)
-          }
-          out
-        }
-        .withColumn("bucket", bucketOf(col("term"), conf.nBuckets))
+      postingsOf(corpusIds("doc_id", "content"), conf.nBuckets)
         // cluster BEFORE the partitioned write (the unclustered dynamic
         // write external-sorts every task across all buckets, 7-14x
         // slower) — with a doc_id subsplit so reduce parallelism tracks
@@ -372,19 +441,9 @@ object Builder {
       }
 
     // ---- stage 4: dictionary -----------------------------------------
-    // clustered like every other bucket-partitioned write: keyed on
-    // (bucket, hash(term) subsplit) so the reduce width tracks nPart —
-    // hashing on bucket alone would funnel a 1e8-1e9-term vocabulary
-    // through <= nBuckets write tasks no matter how wide the cluster is
-    // (the same collapse r4 fixed for postings_raw/positions/trigrams)
     if (!committed(spark, outDir, "_COMMIT_dictionary")) timed("dictionary") {
-      spark.read.parquet(rawDir)
-        .groupBy("term")
-        .agg(count(lit(1)).as("df"), sum("tf").as("cf"))
-        .withColumn("bucket", bucketOf(col("term"), conf.nBuckets))
-        .transform(clusterForBucketWriteBy(_, conf.nBuckets, nPart,
-          xxhash64(col("term"))))
-        .write.mode(SaveMode.Overwrite).partitionBy("bucket").parquet(dictDir)
+      writeDictionary(dictionaryOf(spark.read.parquet(rawDir), conf.nBuckets),
+        conf.nBuckets, nPart, dictDir)
       commit(spark, outDir, "_COMMIT_dictionary")
     }
 
@@ -421,8 +480,9 @@ object Builder {
     commit(spark, outDir, "_COMMIT_index")
   }
 
-  /** One segment's salt + sort + block-encode pipeline, shared by the
-    * batch build (stage 5) and the stream Compactor.
+  /** One segment's salt computation, then the shared sort + block-encode
+    * step (writeBlocks); used by the batch build (stage 5) and the stream
+    * Compactor.
     *
     * Skew handling (north rule): Zipf head terms are SALTED — a term with
     * df > saltTarget is split into ceil(df/saltTarget) contiguous doc-id
@@ -434,7 +494,6 @@ object Builder {
   def encodeSegment(spark: SparkSession, dictDir: String, rawDir: String,
       segDir: String, g: Int, conf: Config, nDocs: Long, avgdl: Double,
       nPart: Int): Unit = {
-    import spark.implicits._
     val buckets = (0 until conf.nBuckets).filter(_ % conf.nSegments == g)
     val headTerms = spark.read.parquet(dictDir)
       .filter(col("bucket").isin(buckets: _*) && col("df") > conf.saltTarget)
@@ -447,11 +506,22 @@ object Builder {
       .withColumn("span", ceil(lit(nDocs.toDouble) / col("n_salts")).cast("long"))
       .withColumn("salt", (col("doc_id") / col("span")).cast("int"))
       .select(col("term"), col("doc_id"), col("tf"), col("dl"), col("salt"))
+    writeBlocks(raw, conf.blockSize, conf.nBuckets, nPart, segDir)
+  }
+
+  /** The one block encoder: hash-repartition (term, doc_id, tf, dl, salt)
+    * rows on (term, salt), sort, run-length encode into PostingBlocks, add
+    * the bucket column and write `dir`. Build segments and compaction pass
+    * encodeSegment's salt; a stream segment passes salt 0 (its doc ids sit
+    * above every existing block, so it needs no salting). */
+  def writeBlocks(postings: DataFrame, blockSize: Int, nBuckets: Int,
+                  nPart: Int, dir: String): Unit = {
+    val spark = postings.sparkSession
     // blocks must BREAK at salt boundaries: one partition can hold
     // non-adjacent salts of the same term, and a block glued across
     // the gap would overlap other salts' block ranges — violating the
     // disjoint-sorted invariant the WAND cursor skip relies on
-    val sorted = raw
+    val sorted = postings
       .repartition(nPart, xxhash64(col("term"), col("salt")))
       .sortWithinPartitions("term", "salt", "doc_id")
       .select("term", "doc_id", "tf", "dl", "salt")
@@ -462,17 +532,18 @@ object Builder {
     // BLOCK. (RDD surface is justified: genuinely imperative
     // per-partition run-length encoding.)
     val blocksRdd = sorted.queryExecution.toRdd
-      .mapPartitions(encodeBlockRows(_, conf.blockSize))
+      .mapPartitions(encodeBlockRows(_, blockSize))
     spark.createDataset(blocksRdd)(
         org.apache.spark.sql.Encoders.product[PostingBlock])
-      .withColumn("bucket", bucketOf(col("term"), conf.nBuckets))
-      .write.mode(SaveMode.Overwrite).parquet(segDir)
+      .withColumn("bucket", bucketOf(col("term"), nBuckets))
+      .write.mode(SaveMode.Overwrite).parquet(dir)
   }
 
   /** Run-length block encoder over sorted (term, doc_id, tf, dl, salt)
-    * InternalRows. Spark reuses the row object between iterator steps, so
-    * every field is copied to primitives immediately and the term key is
-    * cloned once per term change. */
+    * InternalRows: a block ends at a term or salt change or at blockSize.
+    * Spark reuses the row object between iterator steps, so every field
+    * is copied to primitives immediately and the term key is cloned once
+    * per term change. */
   private def encodeBlockRows(rows: Iterator[org.apache.spark.sql.catalyst.InternalRow],
       blockSize: Int): Iterator[PostingBlock] =
     new Iterator[PostingBlock] {
@@ -492,71 +563,38 @@ object Builder {
         }
         val key = head.getInt(4)
         var n = 0
-        var maxTf = 0
-        var minDl = Int.MaxValue
         while (in.hasNext && n < blockSize && {
             val r = in.head
             curTerm.equals(r.getUTF8String(0)) && r.getInt(4) == key
           }) {
           val r = in.next()
           ids(n) = r.getLong(1)
-          val tf = r.getInt(2); val dl = r.getInt(3)
-          tfs(n) = tf; dls(n) = dl
-          if (tf > maxTf) maxTf = tf
-          if (dl < minDl) minDl = dl
+          tfs(n) = r.getInt(2)
+          dls(n) = r.getInt(3)
           n += 1
         }
-        val b = PostingBlock(curTerm.toString, blockSeq, ids(0), ids(n - 1),
-          n, maxTf, minDl, Codec.encodeDeltas(ids, n),
-          Codec.encodeInts(tfs, n), Codec.encodeInts(dls, n))
+        val b = postingBlock(curTerm.toString, blockSeq, ids, tfs, dls, n)
         blockSeq += 1
         b
       }
     }
 
-  /** Encode a (term, doc_id)-sorted partition into posting blocks.
-    * Pure iterator -> iterator; one pass, bounded memory (blockSize). */
-  def encodeBlocks(it: Iterator[Posting], blockSize: Int): Iterator[PostingBlock] =
-    encodeBlocksKeyed(it.map(p => (p, 0)), blockSize)
-
-  /** Like encodeBlocks but additionally breaks blocks when `key` changes
-    * (the salt id): a block must never span a salt boundary or its
-    * [base, max] range would overlap other partitions' blocks. */
-  def encodeBlocksKeyed(it: Iterator[(Posting, Int)],
-                        blockSize: Int): Iterator[PostingBlock] =
-    new Iterator[PostingBlock] {
-      private val in = it.buffered
-      private var blockSeq = 0
-      private var lastTerm: String = null
-      // reused primitive buffers: no boxed Long/Int per posting
-      private val ids = new Array[Long](blockSize)
-      private val tfs = new Array[Int](blockSize)
-      private val dls = new Array[Int](blockSize)
-      def hasNext: Boolean = in.hasNext
-      def next(): PostingBlock = {
-        val (head, key) = in.head
-        val term = head.term
-        if (term != lastTerm) { blockSeq = 0; lastTerm = term }
-        var n = 0
-        var maxTf = 0
-        var minDl = Int.MaxValue
-        while (in.hasNext && n < blockSize && {
-            val h = in.head
-            ((h._1.term eq term) || h._1.term == term) && h._2 == key
-          }) {
-          val (p, _) = in.next()
-          ids(n) = p.doc_id; tfs(n) = p.tf; dls(n) = p.dl
-          if (p.tf > maxTf) maxTf = p.tf
-          if (p.dl < minDl) minDl = p.dl
-          n += 1
-        }
-        val b = PostingBlock(term, blockSeq, ids(0), ids(n - 1), n,
-          maxTf, minDl, Codec.encodeDeltas(ids, n),
-          Codec.encodeInts(tfs, n), Codec.encodeInts(dls, n))
-        blockSeq += 1
-        b
-      }
+  /** One posting block over the first `n` (doc_id, tf, dl) entries of
+    * the buffers (doc ids ascending), with its block-max metadata. */
+  def postingBlock(term: String, blockId: Int, ids: Array[Long],
+                   tfs: Array[Int], dls: Array[Int], n: Int): PostingBlock = {
+    var maxTf = 0
+    var minDl = Int.MaxValue
+    var i = 0
+    while (i < n) {
+      if (tfs(i) > maxTf) maxTf = tfs(i)
+      if (dls(i) < minDl) minDl = dls(i)
+      i += 1
     }
+    PostingBlock(term, blockId, ids(0), ids(n - 1), n, maxTf, minDl,
+      Codec.encodeDeltas(ids, n), Codec.encodeInts(tfs, n),
+      Codec.encodeInts(dls, n))
+  }
 
   /** Decode one block back into postings. */
   def decodeBlock(b: PostingBlock): Array[Posting] = {

@@ -69,7 +69,8 @@ object DocOrder {
     * rare (repo-local) vocabulary; measured on the localized corpus the
     * cap recovers ~2× more of the scrambled→clustered bytes/posting gap
     * than the unfiltered sort (4.051 vs 4.139, scrambled 4.219, layout
-    * 3.926 — OrderProbe). The hot set is provably broadcast-small:
+    * 3.926 — BASELINE.md, ordering-producer experiments). The hot set is
+    * provably broadcast-small:
     * |{t : df(t) > f·n}| ≤ Σ_doc |distinct(doc)| / (f·n) =
     * avgDistinctTokens / f (a few thousand rows at any corpus size).
     * Pass 1.0 to disable. The MinDfCap floor keeps small corpora from
@@ -119,8 +120,7 @@ object DocOrder {
   private def rankBy(spark: org.apache.spark.sql.SparkSession,
                      sigs: DataFrame, orderCols: Seq[Column],
                      partitions: Int): DataFrame = {
-    val nPart = if (partitions > 0) partitions
-      else spark.conf.get("spark.sql.shuffle.partitions").toInt
+    val nPart = Builder.partitionCount(spark, partitions)
     // NOTE on caching (r6): zipWithIndex runs an EAGER offset job at
     // call time and the caller consumes the frame again, so the sort
     // pipeline executes ~twice per call. Caching the sorted rows was

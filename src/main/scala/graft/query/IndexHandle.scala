@@ -33,17 +33,8 @@ class IndexHandle private (
     val dir: String,
     fallbackBuckets: Int) {
 
-  /** Layout params from the index's own _META.json (self-describing).
-    * Read through the Hadoop FS API so index dirs work on any supported
-    * filesystem (HDFS/S3A/local), not just java.io paths. */
-  val nBuckets: Int = {
-    val p = s"$dir/_META.json"
-    if (graft.util.Fs.exists(spark, p)) {
-      val s = graft.util.Fs.read(spark, p)
-      """"nBuckets":(\d+)""".r.findFirstMatchIn(s)
-        .map(_.group(1).toInt).getOrElse(fallbackBuckets)
-    } else fallbackBuckets
-  }
+  /** nBuckets from the index's own _META.json (self-describing). */
+  val nBuckets: Int = Builder.metaBuckets(spark, dir, fallbackBuckets)
 
   // heal an interrupted Compactor postings swap / dictionary fold — but
   // only when the on-disk state actually shows one (a missing table or a

@@ -19,21 +19,20 @@ object Oracle {
            queries: Seq[Searcher.Query], k: Int,
            conjunctive: Boolean = true): DataFrame = {
     import spark.implicits._
-    val docs = corpusWithIds
-      .withColumn("toks", Builder.tokensCol(col("content")))
+    // null content is an empty document, as in the index: dl 0, and it
+    // counts toward n_docs and avgdl like any doc without tokens
+    val lens = corpusWithIds
+      .withColumn("toks", Builder.tokensCol(coalesce(col("content"), lit(""))))
       .withColumn("dl", size(col("toks")))
+    val docs = lens
       .select(col("doc_id"), col("dl"), explode(col("toks")).as("term"))
       .groupBy("term", "doc_id")
       .agg(count(lit(1)).cast("int").as("tf"), first("dl").as("dl"))
-    docs.cache()
-    val nDocs = corpusWithIds.count()
-    val avgdl = docs.groupBy("doc_id").agg(first("dl").as("dl"))
-      .agg(avg(col("dl").cast("double"))).as[Double].head()
+    val (nDocs, avgdl) = lens
+      .agg(count(lit(1)), avg(col("dl").cast("double")))
+      .as[(Long, Double)].head()
     val dfByTerm = docs.groupBy("term").agg(count(lit(1)).as("df"))
       .as[(String, Long)].collect().toMap
-    // the cache only serves the three stats jobs above: the returned
-    // plan recomputes docs when it runs, so no table outlives the call
-    docs.unpersist()
 
     val qt = queries.flatMap { q =>
       val ts = graft.index.Tokenizer.tokens(q.text).distinct.toSeq

@@ -94,8 +94,10 @@ object Substring {
         .join(broadcast(indexed.toDF("query_id", "pat")), "query_id"))
     }
     val viaScan: Option[DataFrame] = if (short.isEmpty) None else {
-      // sub-trigram patterns: verify scan (explicitly opted into)
-      Some(corpus.crossJoin(broadcast(short.toDF("query_id", "pat"))))
+      // sub-trigram patterns: verify scan (explicitly opted into); a
+      // null-content doc holds no substring (and has no trigrams either)
+      Some(corpus.filter(col("content").isNotNull)
+        .crossJoin(broadcast(short.toDF("query_id", "pat"))))
     }
     (viaIndex, viaScan) match {
       case (Some(a), Some(b)) => a.unionByName(b)

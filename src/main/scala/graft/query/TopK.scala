@@ -7,14 +7,6 @@ import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 /** One scored candidate. */
 case class Scored(doc_id: Long, score: Double)
 
-/** Bounded top-k typed aggregator — the `max_matches` analog
-  * (/root/reference/gin.c:723-730): partial = per-partition bounded
-  * ordered buffer, merge = bounded merge, so only O(k) rows per group
-  * cross the shuffle (partial+final aggregation, never a global sort).
-  *
-  * Ordering: score DESC, doc_id ASC (deterministic tie-break; callers
-  * pass scores already rounded when oracle parity is required).
-  */
 /** One decoded substring match. */
 case class SubMatch(doc_id: Long, n_matches: Long, first_offset: Long)
 
@@ -87,6 +79,14 @@ class MinKLongAgg(k: Int) extends Aggregator[Long, List[Long], Seq[Long]] {
   def outputEncoder: Encoder[Seq[Long]] = ExpressionEncoder()
 }
 
+/** Bounded top-k typed aggregator — the `max_matches` analog
+  * (reference gin.c:723-730): partial = per-partition bounded
+  * ordered buffer, merge = bounded merge, so only O(k) rows per group
+  * cross the shuffle (partial+final aggregation, never a global sort).
+  *
+  * Ordering: score DESC, doc_id ASC (deterministic tie-break; callers
+  * pass scores already rounded when oracle parity is required).
+  */
 class TopKAgg(k: Int) extends Aggregator[Scored, List[Scored], Seq[Scored]] {
   private def better(a: Scored, b: Scored): Boolean =
     a.score > b.score || (a.score == b.score && a.doc_id < b.doc_id)

@@ -38,12 +38,8 @@ object Compactor {
     if (Fs.list(spark, indexDir).exists(_.getName.startsWith("_BASE_b")))
       return
     if (!Fs.exists(spark, s"$indexDir/dict_deltas")) return
-    Builder.dictionary(spark, indexDir)
-      .transform(Builder.clusterForBucketWriteBy(_, nBuckets, nPart,
-        org.apache.spark.sql.functions.xxhash64(
-          org.apache.spark.sql.functions.col("term"))))
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .partitionBy("bucket").parquet(s"$indexDir/dictionary_compact")
+    Builder.writeDictionary(Builder.dictionary(spark, indexDir), nBuckets,
+      nPart, s"$indexDir/dictionary_compact")
     // CHECKED renames: a silently failed promote followed by the delete
     // below would drop the streamed delta counts without the base ever
     // absorbing them (permanent df/cf corruption). Failing loudly leaves
@@ -97,13 +93,9 @@ object Compactor {
     // layout params come from the index itself (_META.json), NOT the
     // caller: rewriting segments with a mismatched nBuckets would recompute
     // bucket values readers no longer find (silently missing results)
-    val conf = Builder.loadConfig(spark, indexDir)
-      .map(_.copy(shufflePartitions = callerConf.shufflePartitions,
-        verifySegments = callerConf.verifySegments))
-      .getOrElse(callerConf)
+    val conf = Builder.indexLayout(spark, indexDir, callerConf)
     val stats = Builder.loadStats(spark, indexDir)
-    val nPart = if (conf.shufflePartitions > 0) conf.shufflePartitions
-      else spark.conf.get("spark.sql.shuffle.partitions").toInt
+    val nPart = Builder.partitionCount(spark, conf.shufflePartitions)
     // fold dictionary deltas FIRST: encodeSegment's head-term (salting)
     // probe below reads the base dictionary and must see full df values
     foldDictionary(spark, indexDir, conf.nBuckets, nPart)

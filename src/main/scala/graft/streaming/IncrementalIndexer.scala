@@ -3,7 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
-import graft.index.{Builder, CorpusRow, Posting, Tokenizer}
+import graft.index.Builder
 import graft.query.IndexHandle
 import graft.util.Fs
 
@@ -30,8 +30,12 @@ import graft.util.Fs
   * read (Builder.dictionary) and folded by the Compactor, never a
   * per-batch O(vocabulary) rewrite.
   *
-  * The head-term result caches are invalidated on every ingest: stale
-  * cached top-k must not shadow newly ingested documents.
+  * Every row a batch writes comes from the build's own stage functions
+  * (Builder.snapshotRows, postingsOf, dictionaryOf, writeBlocks, ...), so
+  * stream segments are encoded exactly like built ones. Only what is
+  * ingest's own lives here: the doc-id base marker, staging and promote,
+  * the commit marker and auto-compaction. Every ingest drops the cached
+  * query handle, so no reader keeps serving the pre-batch blocks.
   */
 object IncrementalIndexer {
 
@@ -54,7 +58,6 @@ object IncrementalIndexer {
   def ingestBatch(spark: SparkSession, batch: DataFrame, indexDir: String,
                   conf: Builder.Config, batchId: Long,
                   autoCompact: Boolean = true): Unit = {
-    import spark.implicits._
     val marker = s"$indexDir/_COMMIT_stream_batch_$batchId"
     if (Fs.exists(spark, marker)) {
       // the batch committed but a crash between the marker write and the
@@ -78,14 +81,9 @@ object IncrementalIndexer {
       return
     }
 
-    // appends must follow the INDEX's layout (_META.json), not the
-    // caller's defaults: a mismatched nBuckets would write rows into
-    // buckets readers never probe
-    val c = Builder.loadConfig(spark, indexDir)
-      .map(_.copy(shufflePartitions = conf.shufflePartitions))
-      .getOrElse(conf)
-    val nPart = if (c.shufflePartitions > 0) c.shufflePartitions
-      else spark.conf.get("spark.sql.shuffle.partitions").toInt
+    // appends follow the INDEX's layout (_META.json), not the caller's
+    val c = Builder.indexLayout(spark, indexDir, conf)
+    val nPart = Builder.partitionCount(spark, c.shufflePartitions)
     // the doc-id base is pinned in a per-batch marker BEFORE any append:
     // a retry after a partial failure must reuse the original base (stats
     // may already reflect this batch's docmeta append), or ids would
@@ -99,90 +97,51 @@ object IncrementalIndexer {
         b
       }
     val staging = s"$indexDir/_staging_b$batchId"
-    val prefix = s"b${batchId}_"
+    // staged append -> promote under batch-prefixed filenames (idempotent)
+    def promote(table: String): Unit =
+      Fs.promoteStaged(spark, s"$staging/$table", s"$indexDir/$table",
+        s"b${batchId}_")
 
-    // ids continue above every existing doc id; dl/sha derived in the
-    // same pass (the snapshot schema, graft.index.CorpusRow)
-    val withIds = Builder.withDocIds(batch, nPart)
-      .withColumn("doc_id", col("doc_id") + base)
-      .select("doc_id", "repo", "path", "commit", "lang", "content")
-      .as[(Long, String, String, String, String, String)]
-      .mapPartitions { it =>
-        val md = java.security.MessageDigest.getInstance("SHA-256")
-        it.map { case (id, repo, path, commitId, lang, content) =>
-          val dl = Tokenizer.docLen(content)
-          md.reset()
-          val sha = md.digest(content.getBytes("UTF-8"))
-            .map("%02x".format(_)).mkString
-          CorpusRow(id, repo, path, commitId, lang, dl, sha, content)
-        }
-      }
+    // ids continue above every existing doc id; the build's snapshot rows
+    val withIds = Builder.snapshotRows(Builder.withDocIds(batch, nPart)
+        .withColumn("doc_id", col("doc_id") + base))
       .toDF()
       .cache()
 
-    // staged append -> promote under batch-prefixed filenames (idempotent)
     withIds.write.mode(SaveMode.Overwrite).parquet(s"$staging/corpus_ids")
-    Fs.promoteStaged(spark, s"$staging/corpus_ids",
-      s"$indexDir/corpus_ids", prefix)
-
-    withIds
-      .select("doc_id", "repo", "path", "commit", "lang", "dl",
-        "content_sha256")
+    promote("corpus_ids")
+    Builder.docmetaOf(withIds)
       .write.mode(SaveMode.Overwrite).parquet(s"$staging/docmeta")
-    Fs.promoteStaged(spark, s"$staging/docmeta", s"$indexDir/docmeta", prefix)
+    promote("docmeta")
 
     val nDocsBatch = withIds.count()
 
     // stats refresh (reads docmeta, writes stats: derived, idempotent)
-    spark.read.parquet(s"$indexDir/docmeta")
-      .agg(count(lit(1)).as("n_docs"), avg(col("dl").cast("double")).as("avgdl"))
+    Builder.statsOf(spark.read.parquet(s"$indexDir/docmeta"))
       .coalesce(1).write.mode(SaveMode.Overwrite).parquet(s"$indexDir/stats")
 
     // delta postings -> staged raw append + one new block segment
-    val raw = withIds.select(col("doc_id"), col("content"))
-      .as[(Long, String)]
-      .flatMap { case (id, content) =>
-        val dl = Tokenizer.docLen(content)
-        val out = new scala.collection.mutable.ArrayBuffer[Posting](192)
-        Tokenizer.foreachTermFreq(content) { (t, tf) =>
-          out += Posting(t, id, tf, dl)
-        }
-        out
-      }
-      .withColumn("bucket", Builder.bucketOf(col("term"), c.nBuckets))
-      .cache()
+    val raw = Builder.postingsOf(withIds, c.nBuckets).cache()
     Builder.clusterForBucketWrite(raw, c.nBuckets, nPart)
       .write.mode(SaveMode.Overwrite).partitionBy("bucket")
       .parquet(s"$staging/postings_raw")
-    Fs.promoteStaged(spark, s"$staging/postings_raw",
-      s"$indexDir/postings_raw", prefix)
+    promote("postings_raw")
 
-    raw.repartition(nPart, xxhash64(col("term")))
-      .sortWithinPartitions("term", "doc_id")
-      .select("term", "doc_id", "tf", "dl")
-      .as[Posting]
-      .mapPartitions(Builder.encodeBlocks(_, c.blockSize))
-      .withColumn("bucket", Builder.bucketOf(col("term"), c.nBuckets))
-      .write.mode(SaveMode.Overwrite)
-      .parquet(s"$indexDir/postings/segment=s$batchId")
+    // unsalted: the batch's ids sit above every existing block
+    Builder.writeBlocks(raw.withColumn("salt", lit(0)), c.blockSize,
+      c.nBuckets, nPart, s"$indexDir/postings/segment=s$batchId")
 
     // positions/trigrams appends: an index bootstrapped WITH these tables
     // must keep serving exact phrase/substring results over streamed docs
     // — the commit markers promise readers a complete view, so every
     // ingest appends to them too (same staged batch-prefixed promote)
-    if (Fs.exists(spark, s"$indexDir/_COMMIT_positions")) {
-      Builder.positionsOf(withIds, c.nBuckets, nPart)
+    for ((table, rowsOf) <- Seq("positions" -> Builder.positionsOf _,
+                                "trigrams" -> Builder.trigramsOf _)
+         if Fs.exists(spark, s"$indexDir/_COMMIT_$table")) {
+      rowsOf(withIds, c.nBuckets, nPart)
         .write.mode(SaveMode.Overwrite).partitionBy("bucket")
-        .parquet(s"$staging/positions")
-      Fs.promoteStaged(spark, s"$staging/positions",
-        s"$indexDir/positions", prefix)
-    }
-    if (Fs.exists(spark, s"$indexDir/_COMMIT_trigrams")) {
-      Builder.trigramsOf(withIds, c.nBuckets, nPart)
-        .write.mode(SaveMode.Overwrite).partitionBy("bucket")
-        .parquet(s"$staging/trigrams")
-      Fs.promoteStaged(spark, s"$staging/trigrams",
-        s"$indexDir/trigrams", prefix)
+        .parquet(s"$staging/$table")
+      promote(table)
     }
 
     // dictionary delta SEGMENT: an append-only (term, df, cf) parquet
@@ -191,17 +150,9 @@ object IncrementalIndexer {
     // r2 full-dictionary rewrite was O(vocabulary) per micro-batch, a
     // guaranteed ingest bottleneck at a 1e8-term vocabulary. The staged
     // batch-prefixed promote makes retries idempotent with no undo log.
-    raw.groupBy("term")
-      .agg(count(lit(1)).as("df"), sum("tf").as("cf"))
-      .withColumn("bucket", Builder.bucketOf(col("term"), c.nBuckets))
-      // term-hash subsplit: delta write width tracks nPart, not nBuckets
-      // (same re-key as the batch dictionary stage)
-      .transform(Builder.clusterForBucketWriteBy(_, c.nBuckets, nPart,
-        xxhash64(col("term"))))
-      .write.mode(SaveMode.Overwrite).partitionBy("bucket")
-      .parquet(s"$staging/dict_deltas")
-    Fs.promoteStaged(spark, s"$staging/dict_deltas",
-      s"$indexDir/dict_deltas", prefix)
+    Builder.writeDictionary(Builder.dictionaryOf(raw, c.nBuckets),
+      c.nBuckets, nPart, s"$staging/dict_deltas")
+    promote("dict_deltas")
 
     raw.unpersist()
     withIds.unpersist()

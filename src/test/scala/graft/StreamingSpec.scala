@@ -36,6 +36,20 @@ class StreamingSpec extends SparkTestBase {
     val fullDir = tmpDir("full-idx")
     Builder.build(spark, all.toDF(), fullDir, conf)
 
+    // the uncompacted layout (base + segment=s* dirs) decodes to the
+    // rebuild's postings, and its block ranges keep the WAND invariant
+    assert(Builder.indexEqual(spark, dir, fullDir))
+    spark.read.parquet(s"$dir/postings")
+      .select($"term", $"doc_id_base", $"doc_id_max")
+      .as[(String, Long, Long)].collect().groupBy(_._1)
+      .foreach { case (t, bs) =>
+        bs.sortBy(_._2).sliding(2).foreach {
+          case Array((_, _, max1), (_, base2, _)) =>
+            assert(max1 < base2, s"term $t has overlapping blocks")
+          case _ =>
+        }
+      }
+
     // id-independent invariants (streamed dict = base + delta segments)
     assert(Builder.loadStats(spark, dir) == Builder.loadStats(spark, fullDir))
     val dictA = Builder.dictionary(spark, dir).select("term", "df", "cf")
@@ -86,6 +100,61 @@ class StreamingSpec extends SparkTestBase {
     val fullDir2 = tmpDir("full-idx2")
     Builder.build(spark, (all :+ Synth.doc(42L, 999L)).toDF(), fullDir2, conf)
     assert(Builder.indexEqual(spark, dir, fullDir2))
+  }
+
+  test("null and empty content are empty docs through build, ingest and every query") {
+    import spark.implicits._
+    import graft.query.{Oracle, Phrase, Substring}
+    val dir = tmpDir("null-content")
+    val conf = Builder.Config(blockSize = 16, nBuckets = 4, nSegments = 2,
+      saltTarget = 40, storePositions = true, storeTrigrams = true)
+    val built = (0L until 40L).map(i => Synth.doc(21L, i)) ++ Seq(
+      CodeDoc("r_null", "a.c", "c0", "c", null),
+      CodeDoc("r_empty", "b.c", "c0", "c", ""))
+    val streamed = Seq(CodeDoc("r_null2", "c.c", "c0", "c", null),
+      Synth.doc(21L, 40L))
+    Builder.build(spark, built.toDF(), dir, conf)
+    IncrementalIndexer.ingestBatch(spark, streamed.toDF(), dir, conf, 0L,
+      autoCompact = false)
+
+    assert(Builder.loadStats(spark, dir).n_docs == built.size + streamed.size)
+    val meta = spark.read.parquet(s"$dir/docmeta")
+    val src = (built ++ streamed).toDF()
+      .select($"repo", $"path", sha2($"content", 256).as("want"))
+    val joined = meta.join(src, Seq("repo", "path"))
+    assert(joined.count() == built.size + streamed.size)
+    assert(joined.filter(!($"content_sha256" <=> $"want")).count() == 0)
+    val blank = meta.filter($"repo".isin("r_null", "r_empty", "r_null2"))
+      .select("doc_id", "dl").as[(Long, Int)].collect()
+    assert(blank.length == 3 && blank.forall(_._2 == 0))
+    val blankIds = blank.map(_._1).toSet
+
+    val text = Synth.doc(21L, 3L).content
+    val t = graft.index.Tokenizer.tokens(text)
+    val qs = Seq(Searcher.Query(1, t(0)), Searcher.Query(2, s"${t(1)} ${t(2)}"))
+    val corpusIds = spark.read.parquet(s"$dir/corpus_ids")
+    def ranked(df: org.apache.spark.sql.DataFrame) =
+      df.orderBy("query_id", "rank").collect()
+        .map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getDouble(3))).toSeq
+    for (mode <- Seq(Searcher.And, Searcher.Or)) {
+      val got = ranked(Searcher.searchTopK(spark, dir, qs, 10, mode))
+      val want = ranked(Oracle.topK(spark, corpusIds, qs, 10,
+        conjunctive = mode == Searcher.And))
+      assert(want.nonEmpty, s"$mode")
+      assert(got.map(r => (r._1, r._2, r._3)) == want.map(r => (r._1, r._2, r._3)),
+        s"$mode")
+      got.zip(want).foreach { case (g, w) =>
+        assert(math.abs(g._4 - w._4) <= 1e-9, s"$mode: $g vs $w")
+      }
+    }
+    val phrase = Phrase.searchTopK(spark, dir,
+      Seq(Searcher.Query(1, s"${t(0)} ${t(1)}")), 10)
+      .select("doc_id").as[Long].collect()
+    assert(phrase.nonEmpty && !phrase.exists(blankIds))
+    val sub = Substring.find(spark, dir, Seq(1L -> text.take(3),
+      2L -> text.take(2)), nBuckets = conf.nBuckets, allowShortScan = true)
+      .select("query_id", "doc_id").as[(Long, Long)].collect()
+    assert(sub.map(_._1).toSet == Set(1L, 2L) && !sub.exists(r => blankIds(r._2)))
   }
 
   test("a warm driver block map never serves stale blocks across ingest and compaction") {

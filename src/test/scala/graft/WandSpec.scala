@@ -2,7 +2,7 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalacheck.Gen
-import graft.index.{Bm25, Builder, Posting}
+import graft.index.{Bm25, Builder}
 import graft.query.Wand
 
 /** Block-max WAND vs brute force on random posting data (pure Scala). */
@@ -10,10 +10,10 @@ class WandSpec extends AnyFunSuite with PropHelpers {
 
   private def mkBlocks(term: String, postings: Seq[(Long, Int, Int)],
                        avgdl: Double, blockSize: Int) = {
-    val sorted = postings.sortBy(_._1).map { case (d, tf, dl) =>
-      Posting(term, d, tf, dl)
-    }
-    Builder.encodeBlocks(sorted.iterator, blockSize).toArray
+    postings.sortBy(_._1).grouped(blockSize).zipWithIndex.map { case (g, i) =>
+      Builder.postingBlock(term, i, g.map(_._1).toArray, g.map(_._2).toArray,
+        g.map(_._3).toArray, g.size)
+    }.toArray
   }
 
   private case class Corpus(terms: Map[String, Seq[(Long, Int, Int)]],
