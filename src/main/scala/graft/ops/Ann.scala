@@ -187,47 +187,33 @@ object Ann {
     math.min(48, math.max(4, needed))
   }
 
-  /** Drop every (table, bucket) whose occupancy exceeds `maxBucket`: a
-    * degenerate bucket (mass-duplicate embeddings, or n ≫ 2^planes)
-    * would otherwise emit |bucket|² candidate rows from one key. Exact
-    * duplicates are `Dedup.exactGroups`'s job upstream; dropping their
-    * mega-bucket here bounds the self-join at maxBucket² per key — the
-    * same guard `Dedup.minhashCandidates` applies to its band buckets. */
-  private[ops] def capBuckets(b: DataFrame, maxBucket: Long): DataFrame = {
-    // DROP the over-cap buckets with a broadcast anti join instead of
-    // KEEPING through an equi-join on the ok set: the over set is
-    // bounded by n_rows / maxBucket (broadcast-safe at any corpus
-    // size), while the ok set grows with the corpus — so the bucket
-    // rows are never shuffled for the join (guide §2.4, §3.1; the
-    // groupBy still partial-aggregates map-side).
-    val over = b.groupBy("t", "bucket")
-      .agg(count(lit(1)).as("n_in_bucket"))
-      .filter(col("n_in_bucket") > maxBucket)
-      .select("t", "bucket")
-    b.join(broadcast(over), Seq("t", "bucket"), "left_anti")
-  }
-
   /** Multi-table LSH approximate top-k: candidates = union over L hash
-    * tables of same-bucket pairs (one shuffle on (table, bucket)), then
-    * exact cosine re-rank. Band-OR across tables recovers the recall a
-    * single table forfeits; candidate volume stays ~L·n/2^planes per
-    * query instead of n. Corpus-side buckets larger than `maxBucket` are
-    * dropped (see capBuckets); `nPlanes = 0` derives planes from corpus
-    * size (autoPlanes). */
+    * tables of same-bucket pairs, then exact cosine re-rank. Band-OR
+    * across tables recovers the recall a single table forfeits;
+    * candidate volume stays ~L·n/2^planes per query instead of n.
+    * `nPlanes = 0` derives planes from corpus size (autoPlanes).
+    *
+    * ONE cogroup of query and corpus bucket rows on (table, bucket): a
+    * corpus bucket holding more than `maxBucket` rows (mass-duplicate
+    * embeddings, or n ≫ 2^planes) is dropped inside its group by
+    * `cappedIds` — the same guard as `bucketPairs` — and every other
+    * group emits (query, member ≠ query). Candidates carry only ids
+    * through the distinct (16 bytes/row); embeddings rejoin afterwards. */
   def lshTopK(queries: DataFrame, corpus: DataFrame, k: Int,
               nPlanes: Int = 8, nTables: Int = 6, dims: Int = 64,
               maxBucket: Long = 1000L): DataFrame = {
+    val spark = queries.sparkSession
+    import spark.implicits._
     val planes = if (nPlanes > 0) nPlanes else autoPlanes(corpus.count())
-    // candidate pairs carry ONLY ids through the join + distinct (16
-    // bytes/row); embeddings are joined back afterwards — never shuffled
-    // through the candidate dedup
-    val qb = bucketRows(queries, planes, nTables, dims)
-      .withColumnRenamed("vec_id", "query_id")
-    val cb = capBuckets(bucketRows(corpus, planes, nTables, dims), maxBucket)
-      .withColumnRenamed("vec_id", "neighbor_id")
-    val cand = qb.join(cb, Seq("t", "bucket"))
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .select("query_id", "neighbor_id")
+    def buckets(vecs: DataFrame) = bucketRows(vecs, planes, nTables, dims)
+      .as[(Long, Int, Long)].groupByKey(r => (r._2, r._3))
+    val cand = buckets(queries).cogroup(buckets(corpus)) { (_, qs, cs) =>
+        if (!qs.hasNext) Iterator.empty
+        else cappedIds(cs.map(_._1), maxBucket).iterator.flatMap { ns =>
+          qs.flatMap(q => ns.iterator.filter(_ != q._1).map(n => (q._1, n)))
+        }
+      }
+      .toDF("query_id", "neighbor_id")
       .distinct()
     rankTopK(scorePairs(cand, queries, corpus, "query_id", "neighbor_id",
       broadcastLeft = true), k)
@@ -414,14 +400,10 @@ object Ann {
     * size.
     *
     * ONE shuffle fuses the occupancy cap and the pair generation: bucket
-    * rows group by (t, bucket), each group buffers at most maxBucket+1
-    * member ids — a bucket past the cap is dropped exactly as the
-    * previous groupBy-count + join filter dropped it, WITHOUT
-    * materializing the mega-bucket (task memory stays O(maxBucket)) —
-    * and surviving groups emit their ordered id pairs directly. This
-    * replaces the former cap shuffle + two-sided self-join shuffle of
-    * the bucket rows (guide §2.4). Candidates stay ids-only (16
-    * bytes/row); embeddings rejoin afterwards. */
+    * rows group by (t, bucket), a bucket past the cap is dropped inside
+    * its group without being materialized (bucketPairs), and surviving
+    * groups emit their ordered id pairs directly. Candidates stay
+    * ids-only (16 bytes/row); embeddings rejoin afterwards. */
   def lshCandidatePairs(corpus: DataFrame, nPlanes: Int, nTables: Int,
                         dims: Int, maxBucket: Long): DataFrame = {
     val spark = corpus.sparkSession
@@ -435,26 +417,36 @@ object Ann {
       .distinct()
   }
 
-  /** Ordered (a < b) id pairs of one bucket's members, empty when the
-    * bucket exceeds `maxBucket` (buffering stops at maxBucket+1 ids, so
-    * a degenerate mega-bucket never occupies task memory). */
-  private[ops] def bucketPairs(members: Iterator[Long],
-                               maxBucket: Long): Iterator[(Long, Long)] = {
-    val buf = scala.collection.mutable.ArrayBuffer.empty[Long]
-    var over = false
-    while (members.hasNext && !over) {
-      buf += members.next()
-      if (buf.length.toLong > maxBucket) over = true
-    }
-    if (over || buf.length < 2) Iterator.empty
+  /** One group's member ids, sorted, or None when the group holds more
+    * than `cap` members. Buffering stops at cap+1 ids, so a degenerate
+    * mega-group (a mass-duplicate bucket, a boilerplate shingle) never
+    * occupies task memory. This is the one hot-key rule of every capped
+    * candidate generator: `bucketPairs`, `lshTopK` and
+    * `Dedup.jaccardPairs`. */
+  private[ops] def cappedIds(members: Iterator[Long],
+                             cap: Long): Option[Array[Long]] = {
+    val buf = scala.collection.mutable.ArrayBuilder.make[Long]
+    var n = 0L
+    while (members.hasNext && n <= cap) { buf += members.next(); n += 1 }
+    if (n > cap) None
     else {
-      val ids = buf.toArray
+      val ids = buf.result()
       java.util.Arrays.sort(ids)
-      Iterator.range(0, ids.length - 1).flatMap { i =>
-        Iterator.range(i + 1, ids.length).map(j => (ids(i), ids(j)))
-      }
+      Some(ids)
     }
   }
+
+  /** Ordered (a < b) id pairs of sorted distinct ids. */
+  private[ops] def orderedPairs(ids: Array[Long]): Iterator[(Long, Long)] =
+    Iterator.range(0, ids.length - 1).flatMap { i =>
+      Iterator.range(i + 1, ids.length).map(j => (ids(i), ids(j)))
+    }
+
+  /** Ordered (a < b) id pairs of one bucket's members, empty when the
+    * bucket exceeds `maxBucket` (see cappedIds). */
+  private[ops] def bucketPairs(members: Iterator[Long],
+                               maxBucket: Long): Iterator[(Long, Long)] =
+    cappedIds(members, maxBucket).iterator.flatMap(orderedPairs)
 
   /** Embedding-cosine near-duplicate pairs above a threshold (doc_a <
     * doc_b): multi-table LSH candidate generation (NO cartesian product —

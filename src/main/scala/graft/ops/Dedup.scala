@@ -10,12 +10,13 @@ import graft.util.CrossHash
 /** Deduplication operators for training-data pipelines.
   *
   * Scale notes: exact dedup is one hash-shuffle on a 64-char key (not the
-  * content); near-dup is an inverted shingle join — the posting-list
-  * pattern again — with a shingle-df cap so one boilerplate shingle
-  * cannot make the self-join quadratic; MinHash/LSH trades the quadratic
-  * term for banding, with signatures combined map-side by an Aggregator
-  * and a bucket-size cap so a giant duplicate cluster cannot blow up one
-  * bucket.
+  * content); near-dup groups the shingle rows once by shingle — the
+  * posting-list pattern again — with a shingle-df cap so one boilerplate
+  * shingle cannot make its group's pair fan-out quadratic; MinHash/LSH
+  * trades the quadratic term for banding, with signatures combined
+  * map-side by an Aggregator and a bucket-size cap so a giant duplicate
+  * cluster cannot blow up one bucket. Both caps drop a hot key inside
+  * its one group (Ann.cappedIds).
   *
   * All hashing is CrossHash.h60 (md5-derived) so every operator here is
   * exactly reproducible by the DuckDB oracle.
@@ -34,8 +35,8 @@ object Dedup {
     * core-count tunable: the cutover is identical on a cluster. */
   val DriverCcMaxEdges = 1000000L
 
-  /** Lineage truncation shared by jaccardPairs and connectedComponents:
-    * RELIABLE checkpoint when the session has a checkpoint dir (survives
+  /** Lineage truncation for connectedComponents' star loop: RELIABLE
+    * checkpoint when the session has a checkpoint dir (survives
     * executor loss — required on a real cluster where a deep recompute
     * cascade would be fatal), localCheckpoint otherwise (single-host
     * dev/test). Eager in both forms: the input's upstream caches can be
@@ -44,9 +45,9 @@ object Dedup {
     * The reliable form checkpoints THROUGH a transient cache: Spark's
     * df.checkpoint() runs one job to count and a second to write the
     * checkpoint files, recomputing the plan unless its data is already
-    * cached — for the expensive frames passed here (the shingle
-    * self-join) that recompute would double the dominant cost. The cache
-    * is dropped as soon as the checkpoint files exist.
+    * cached — for the expensive frames passed here (a star round's
+    * joins) that recompute would double the round's cost. The cache is
+    * dropped as soon as the checkpoint files exist.
     *
     * Checkpoint-file lifecycle: Spark never deletes reliable checkpoint
     * dirs on its own (spark.cleaner.referenceTracking.cleanCheckpoints
@@ -174,78 +175,48 @@ object Dedup {
   /** Exact n-gram Jaccard near-dup pairs via an inverted shingle index —
     * no all-pairs product: only docs sharing at least one shingle meet.
     *
-    * `maxShingleDf` caps the document frequency of join-key shingles: a
-    * shingle appearing in more than that many docs (license headers,
-    * generated boilerplate) is dropped from the UNIVERSE (both the join
-    * and the per-doc sizes), so the self-join's worst fan-out is
-    * maxShingleDf² per hot shingle instead of df². Jaccard is then exact
-    * over the capped universe — the standard discriminative-shingle
-    * semantics, and mirrorable in SQL.
+    * `maxShingleDf` caps the document frequency of shingles: a shingle
+    * appearing in more than that many docs (license headers, generated
+    * boilerplate) is dropped from the UNIVERSE (both the overlaps and the
+    * per-doc sizes), so the worst pair fan-out is maxShingleDf² per
+    * shingle instead of df². Jaccard is then exact over the capped
+    * universe — the standard discriminative-shingle semantics, and
+    * mirrorable in SQL.
+    *
+    * Shape: ONE groupByKey(shingle). A group past the cap emits nothing
+    * (Ann.cappedIds); any other group emits (id, id) per member and every
+    * ordered pair (a < b). One count per (doc_a, doc_b) then yields both
+    * the per-doc sizes (the diagonal rows) and the pair overlaps (the
+    * rest). The result is a lazy plan: nothing is persisted or
+    * checkpointed, so the caller's action pays for it once.
     *
     * The threshold compares the UNROUNDED ratio (the output rounds to 6dp
-    * for display only), matching the oracle exactly.
+    * for display only), matching the oracle exactly. Doc ids are assumed
+    * unique.
     *
     * Returns (doc_a, doc_b, jaccard) with doc_a < doc_b, jaccard >= minJ. */
   def jaccardPairs(docs: DataFrame, k: Int, minJ: Double,
-                   maxShingleDf: Long = 10000L,
-                   shingleStorage: org.apache.spark.storage.StorageLevel =
-                     org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-                   : DataFrame = {
-    // sh0 feeds two consumers (the hot-set aggregation and the anti-join
-    // probe); without a cache each one re-runs the tokenize + shingle
-    // walk — a full corpus scan apiece at scale
-    val sh0 = shingles(docs, k).persist(shingleStorage)
-    // df cap as a broadcast ANTI join against the tiny HOT set (df >
-    // cap, bounded by n_rows / maxShingleDf) instead of an equi-join on
-    // the huge ok set — the shingle universe is never shuffled for the
-    // cap (guide §2.4/§3.1; the same shape DocOrder.signatures uses)
-    val hot = sh0.groupBy("shingle").agg(count(lit(1)).as("sh_df"))
-      .filter(col("sh_df") > maxShingleDf)
-      .select("shingle")
-    // the capped shingle set is read 3x (sizes + both join sides); at
-    // corpus scale pass DISK_ONLY so the full shingle universe never
-    // competes for executor memory with the self-join's shuffle
-    val sh = sh0.join(broadcast(hot), Seq("shingle"), "left_anti")
-      .select("doc_id", "shingle")
-      .persist(shingleStorage)
-    val sizes = sh.groupBy("doc_id").agg(count(lit(1)).as("n_sh"))
-    // pair generation as ONE shuffle of the capped shingle set (group by
-    // shingle, emit ordered pairs inside the group) instead of the
-    // self-join's two-sided shuffle — same (doc_a < doc_b) rows, and the
-    // per-group fan-out is bounded by the df cap exactly as the join's
-    // was (maxShingleDf² worst case per hot shingle). Guide §2.4: two
-    // operations keyed the same way share one exchange.
-    import sh.sparkSession.implicits._
-    val common = sh.as[(Long, String)]
+                   maxShingleDf: Long = 10000L): DataFrame = {
+    val spark = docs.sparkSession
+    import spark.implicits._
+    val counts = shingles(docs, k).as[(Long, String)]
       .groupByKey(_._2)
       .flatMapGroups { (_, it) =>
-        val ids = it.map(_._1).toArray
-        java.util.Arrays.sort(ids)
-        val n = ids.length
-        if (n < 2) Iterator.empty
-        else Iterator.range(0, n - 1).flatMap { i =>
-          Iterator.range(i + 1, n).map(j => (ids(i), ids(j)))
-        }
+        Ann.cappedIds(it.map(_._1), maxShingleDf).iterator.flatMap(ids =>
+          ids.iterator.map(id => (id, id)) ++ Ann.orderedPairs(ids))
       }
       .toDF("doc_a", "doc_b")
       .groupBy("doc_a", "doc_b")
-      .agg(count(lit(1)).as("n_common"))
-    val pairs = common
-      .join(sizes.withColumnRenamed("doc_id", "doc_a")
-        .withColumnRenamed("n_sh", "n_a"), "doc_a")
-      .join(sizes.withColumnRenamed("doc_id", "doc_b")
-        .withColumnRenamed("n_sh", "n_b"), "doc_b")
-      .withColumn("raw_j", col("n_common").cast("double") /
-        (col("n_a") + col("n_b") - col("n_common")))
+      .agg(count(lit(1)).as("n"))
+    def sizes(side: String) = counts.filter(col("doc_a") === col("doc_b"))
+      .select(col("doc_a").as(side), col("n").as(s"n_$side"))
+    counts.filter(col("doc_a") < col("doc_b"))
+      .join(sizes("doc_a"), "doc_a")
+      .join(sizes("doc_b"), "doc_b")
+      .withColumn("raw_j", col("n").cast("double") /
+        (col("n_doc_a") + col("n_doc_b") - col("n")))
       .filter(col("raw_j") >= minJ)
       .select(col("doc_a"), col("doc_b"), round(col("raw_j"), 6).as("jaccard"))
-    // materialize the (small, threshold-filtered) pair set NOW so the
-    // shingle universe can be released immediately — otherwise every
-    // call leaks one persisted shingle table for the session lifetime
-    val out = truncate(docs.sparkSession, pairs)
-    sh.unpersist()
-    sh0.unpersist()
-    out
   }
 
   // ---- MinHash + LSH --------------------------------------------------
@@ -386,12 +357,16 @@ object Dedup {
     def trunc(df: DataFrame): DataFrame = truncate(spark, df)
     val selfLabels = docs.select(col("doc_id"),
       col("doc_id").cast("long").as("cluster_rep"))
-    // canonical undirected edge set (lo < hi), self-pairs dropped
+    // canonical undirected edge set (lo < hi), self-pairs dropped;
+    // persisted because the star loop's first truncate re-reads it after
+    // the probe, and a lazy pair source (a whole shingle pipeline) must
+    // not run twice
     val edgesPlan = pairs
       .select(least(col("doc_a"), col("doc_b")).cast("long").as("src"),
         greatest(col("doc_a"), col("doc_b")).cast("long").as("dst"))
       .filter(col("src") =!= col("dst"))
       .distinct()
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
 
     // ---- small-graph fast path: bounded driver union-find ------------
     // ONE job probes the edge set with limit(bound+1): at or below the
@@ -400,11 +375,12 @@ object Dedup {
     // replacing the whole iterative loop (and its per-round shuffle +
     // checkpoint + signature jobs) with a single collect + broadcast
     // label join. Past the bound the collected prefix is discarded and
-    // the log-round star contraction below runs unchanged, so the
-    // 100 TB shape is intact. The capped pair detectors upstream keep
-    // most real graphs in this regime.
+    // the log-round star contraction below runs over the persisted
+    // edges, so the 100 TB shape is intact. The capped pair detectors
+    // upstream keep most real graphs in this regime.
     val lim = math.min(maxDriverEdges + 1, Int.MaxValue.toLong).toInt
     val es = edgesPlan.limit(lim).as[(Long, Long)].collect()
+    if (es.isEmpty || es.length.toLong <= maxDriverEdges) edgesPlan.unpersist()
     if (es.isEmpty) return selfLabels
     if (es.length.toLong <= maxDriverEdges) {
       val parent = scala.collection.mutable.LongMap.empty[Long]
@@ -435,6 +411,7 @@ object Dedup {
     }
 
     var edges = trunc(edgesPlan)
+    edgesPlan.unpersist() // truncate is eager: the edges now live in `edges`
 
     /** Large-star: for every node u, connect each STRICTLY LARGER
       * neighbor to min(Γ(u) ∪ {u}). Keeps connectivity, never creates a

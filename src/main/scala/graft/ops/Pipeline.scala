@@ -21,9 +21,10 @@ import graft.index.Builder
   *
   * Scale shape: quality + language are a single codegen'd scan;
   * exact-dedup is one hash shuffle on sha256(text); near-dup reuses the
-  * df-capped inverted shingle join + min-label connected components
-  * (never all-pairs). The final assembly is three co-keyed joins on
-  * doc_id that AQE plans as broadcast when the signal tables are small.
+  * df-capped one-group-per-shingle Jaccard pairs + connected components
+  * (driver union-find, or star contraction past its bound; never
+  * all-pairs). The final assembly is three co-keyed joins on doc_id that
+  * AQE plans as broadcast when the signal tables are small.
   */
 object Pipeline {
 

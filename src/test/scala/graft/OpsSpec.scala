@@ -317,6 +317,39 @@ class OpsSpec extends SparkTestBase {
     assert(pairs.map(p => (p._1, p._2)).contains((900L, 901L)), pairs.toSeq)
   }
 
+  test("lshTopK: an over-cap corpus bucket gives no candidates") {
+    import spark.implicits._
+    val (dims, nPlanes, nTables, cap, k) = (16, 8, 6, 10L, 5)
+    // 30 identical vectors share every bucket, so each of their buckets
+    // holds more than `cap` corpus rows
+    val dup = (0 until dims).map(d => math.sin(d * 0.9).toFloat)
+    val emb = clusteredEmb(120, dims, 8)
+      .unionByName((1000L until 1030L).map(i => (i, dup)).toDF("vec_id", "embedding"))
+    val queries = emb.filter(col("vec_id") < 20 || col("vec_id") === 1000L)
+    // expected: per query, the co-members of its (t, bucket)s that hold at
+    // most `cap` corpus rows, self excluded, ranked by (cos desc, id asc)
+    def rowsOf(df: DataFrame) = Ann.bucketRows(df, nPlanes, nTables, dims)
+      .as[(Long, Int, Long)].collect()
+    val members = rowsOf(emb).groupBy(r => (r._2, r._3))
+      .map { case (key, rs) => key -> rs.map(_._1) }
+    assert(members.values.exists(_.length > cap))
+    val cos = Ann.bruteForceTopK(queries, emb, 1000)
+      .as[(Long, Int, Long, Double)].collect()
+      .map(r => (r._1, r._3) -> r._4).toMap
+    val want = rowsOf(queries).groupBy(_._1).toSeq.flatMap { case (q, qrs) =>
+      qrs.map(r => members((r._2, r._3))).filter(_.length <= cap)
+        .flatten.distinct.filter(_ != q)
+        .map(n => (n, cos((q, n))))
+        .sortBy { case (n, c) => (-c, n) }.take(k)
+        .zipWithIndex.map { case ((n, c), i) => (q, i + 1, n, c) }
+    }.toSet
+    val got = Ann.lshTopK(queries, emb, k, nPlanes = nPlanes,
+        nTables = nTables, dims = dims, maxBucket = cap)
+      .as[(Long, Int, Long, Double)].collect().toSet
+    assert(want.nonEmpty && got == want)
+    assert(!got.exists(_._1 == 1000L)) // the duplicated vector finds nothing
+  }
+
   test("autoCentroids ~ sqrt(n), clamped; auto IVF bounds candidate volume") {
     import spark.implicits._
     assert(Ann.autoCentroids(0) == 16)
@@ -417,6 +450,29 @@ class OpsSpec extends SparkTestBase {
     val sh = Dedup.shingles(poisoned, 3)
     val hot = sh.groupBy("shingle").count().filter(col("count") > 10).count()
     assert(hot > 0) // the poison actually created hot shingles
+    // exact all-pairs oracle over the CAPPED universe: a shingle in more
+    // than `cap` docs is dropped from both the intersections and the sizes
+    val docSh = poisoned.as[(Long, String)].collect().map { case (id, t) =>
+      id -> Tokenizer.tokens(t).sliding(3).filter(_.length == 3)
+        .map(_.mkString(" ")).toSet
+    }
+    val shDf = docSh.toSeq.flatMap(_._2).groupBy(identity)
+      .map { case (g, xs) => g -> xs.size }
+    for (cap <- Seq(3L, 10L, 10000L)) {
+      val capped = docSh.map { case (id, gs) => id -> gs.filter(shDf(_) <= cap) }
+      val want = (for {
+        (a, sa) <- capped; (b, sb) <- capped if a < b
+        inter = (sa & sb).size if inter > 0
+        j = inter.toDouble / (sa.size + sb.size - inter)
+        if j >= 0.3
+      } yield (a, b) -> BigDecimal(j).setScale(6,
+        BigDecimal.RoundingMode.HALF_UP).toDouble).toMap
+      val got = Dedup.jaccardPairs(poisoned, k = 3, minJ = 0.3,
+          maxShingleDf = cap)
+        .as[(Long, Long, Double)].collect()
+        .map(p => (p._1, p._2) -> p._3).toMap
+      assert(want.nonEmpty && got == want, s"maxShingleDf $cap")
+    }
   }
 
   test("multimodal: stub features deterministic, chunk sampling shaped") {
@@ -447,11 +503,18 @@ class OpsSpec extends SparkTestBase {
       .map(i => (i, i + 1)).toDF("doc_a", "doc_b")
     // maxDriverEdges = 0 forces the distributed star loop — the shape
     // this test pins (the default would take the driver fast path here)
-    val ok = graft.ops.Dedup.connectedComponents(nodes, chain,
+    // the chain's rows count their own evaluations: the star path must
+    // compute its edges once, not once for the driver-bound probe and
+    // again for the star loop's first truncate
+    val evals = spark.sparkContext.longAccumulator("chain edge evaluations")
+    val countedChain = spark.range(0L, (n - 1).toLong).as[Long]
+      .map { i => evals.add(1L); (i, i + 1) }.toDF("doc_a", "doc_b")
+    val ok = graft.ops.Dedup.connectedComponents(nodes, countedChain,
         maxDriverEdges = 0L)
       .as[(Long, Long)].collect()
     assert(ok.length == n)
     assert(ok.forall(_._2 == 0L)) // one component, rep = min id
+    assert(evals.value == n - 1, s"${evals.value} edge evaluations")
     // the driver fast path (default threshold) must agree exactly
     val fast = graft.ops.Dedup.connectedComponents(nodes, chain)
       .as[(Long, Long)].collect()
