@@ -181,6 +181,16 @@ object Builder {
   def bucketOf(term: org.apache.spark.sql.Column, nBuckets: Int): org.apache.spark.sql.Column =
     pmod(xxhash64(term), lit(nBuckets.toLong)).cast("int")
 
+  /** The read side of `bucketOf`: the filter selecting `keys` from a
+    * table written with `bucket = bucketOf(col(keyCol), nBuckets)`.
+    * Bucket directory pruning plus key predicate pushdown, so a scan
+    * reads only the row groups that can hold these keys. */
+  def bucketProbe(keyCol: String, keys: Seq[String],
+      nBuckets: Int): org.apache.spark.sql.Column =
+    col("bucket").isin(
+      keys.map(graft.util.Hashing.bucketOf(_, nBuckets)).distinct: _*) &&
+      col(keyCol).isin(keys: _*)
+
   /** Cluster staged (…, doc_id, bucket) rows for a partitionBy("bucket")
     * write with reduce-side parallelism that tracks `nPart` instead of
     * collapsing to nBuckets: hashing on `bucket` alone lands the whole

@@ -48,24 +48,6 @@ object Tokenizer {
     content.toLowerCase.split(Sep).filter(_.nonEmpty)
   }
 
-  /** content -> (term, position) pairs, position = token ordinal. */
-  def tokensWithPos(content: String): Array[(String, Int)] = {
-    val ts = tokens(content)
-    val out = new Array[(String, Int)](ts.length)
-    var i = 0
-    while (i < ts.length) { out(i) = (ts(i), i); i += 1 }
-    out
-  }
-
-  /** term -> tf for one document. */
-  def termFreqs(content: String): Map[String, Int] = {
-    val m = scala.collection.mutable.HashMap.empty[String, Int]
-    val ts = tokens(content)
-    var i = 0
-    while (i < ts.length) { m.update(ts(i), m.getOrElse(ts(i), 0) + 1); i += 1 }
-    m.toMap
-  }
-
   /** Document length = number of tokens (BM25 dl), counted WITHOUT
     * materializing token strings — the dl pass runs over every byte of
     * the corpus, and allocation rate (not arithmetic) is what limits

@@ -97,18 +97,17 @@ object Ann {
     rankTopK(scored, k)
   }
 
+  /** (query_id, neighbor_id, cos) rows ranked per query by the top-k
+    * path's rule: cos DESC, neighbor_id ASC, k kept. */
   private def rankTopK(scored: DataFrame, k: Int): DataFrame = {
     val spark = scored.sparkSession
     import spark.implicits._
-    import graft.query.{Scored, TopKAgg}
-    val topk = new TopKAgg(k)
-    scored.as[(Long, Long, Double)]
-      .groupByKey(_._1)
-      .mapValues(r => Scored(r._2, r._3))
-      .agg(topk.toColumn.name("topk"))
-      .flatMap { case (qid, hits) =>
-        hits.zipWithIndex.map { case (s, i) => (qid, i + 1, s.doc_id, s.score) }
-      }
+    import graft.query.{BoundedK, Scored, Searcher}
+    val hits = scored.select(col("query_id"),
+        struct(col("neighbor_id").as("doc_id"), col("cos").as("score")))
+      .as[(Long, Scored)]
+    BoundedK.perKey(hits, k, Scored.BestFirst)
+      .flatMap { case (qid, best) => Searcher.ranked(qid, best) }
       .toDF("query_id", "rank", "neighbor_id", "cos")
   }
 
@@ -121,23 +120,6 @@ object Ann {
     * a double is deterministic and identical across engines. */
   def quantized(emb: Column): Column =
     transform(emb, v => floor(v.cast("double") * 1000000.0).cast("long"))
-
-  /** LSH bucket id for one table: `nPlanes` sign bits of exact integer
-    * projections of the quantized embedding onto h60-derived planes.
-    * (Column form — fine for a handful of planes; the multi-table hot
-    * path uses the typed `bucketRows` below, because tables×planes
-    * aggregate-lambda expressions exceed the whole-stage-codegen method
-    * budget and silently fall back to interpreted eval.) */
-  def lshBucket(emb: Column, nPlanes: Int, table: Int, dims: Int): Column = {
-    val e6 = quantized(emb)
-    val bits = (0 until nPlanes).map { p =>
-      val w = Array.tabulate(dims)(d => planeWeight(table, p, d))
-      val proj = aggregate(zip_with(e6, lit(w), (a, b) => a * b),
-        lit(0L), (acc, v) => acc + v)
-      when(proj >= 0, lit(1L << p)).otherwise(lit(0L))
-    }
-    bits.reduce(_ + _)
-  }
 
   /** All (table, bucket) rows per vector, computed in one typed pass with
     * a broadcast plane matrix: exact integer arithmetic identical to the

@@ -57,23 +57,22 @@ class IndexHandle private (
   val stats: Stats = Builder.loadStats(spark, dir)
 
   /** Vocabulary cap for driver-resident dictionary (~tens of MB at 1e6). */
-  private val DictCap = 2000000L
+  private val DictCap = 2000000
 
   /** Streamed delta segments present? Fixed per handle life: ingest
     * invalidates the handle, so a fresh open re-checks. */
   private val hasDictDeltas: Boolean =
     graft.util.Fs.exists(spark, s"$dir/dict_deltas")
 
-  private val dictCount: Long = Builder.dictionary(spark, dir).count()
-
   /** Full dictionary map (merged base + deltas) if it fits, else None ->
-    * pruned probes. */
-  val dictInMemory: Option[Map[String, Long]] =
-    if (dictCount <= DictCap) {
-      import spark.implicits._
-      Some(Builder.dictionary(spark, dir)
-        .select("term", "df").as[(String, Long)].collect().toMap)
-    } else None
+    * pruned probes. One bounded read: at most DictCap + 1 rows reach the
+    * driver, and one past the cap means the vocabulary does not fit. */
+  val dictInMemory: Option[Map[String, Long]] = {
+    import spark.implicits._
+    val rows = Builder.dictionary(spark, dir).select("term", "df")
+      .limit(DictCap + 1).as[(String, Long)].collect()
+    if (rows.length <= DictCap) Some(rows.toMap) else None
+  }
 
   /** Cap on postings bytes pinned in executor memory (configurable via
     * `graft.postings.persistCap`). Above it the handle serves blocks
@@ -219,9 +218,7 @@ class IndexHandle private (
       if (missing.nonEmpty) {
         def probe(path: String): Seq[(String, Long)] =
           spark.read.parquet(path)
-            .filter(col("bucket").isin(
-              missing.map(t => graft.util.Hashing.bucketOf(t, nBuckets)).distinct: _*)
-              && col("term").isin(missing: _*))
+            .filter(Builder.bucketProbe("term", missing, nBuckets))
             .select("term", "df").as[(String, Long)].collect().toSeq
         val rows = probe(s"$dir/dictionary") ++
           (if (hasDictDeltas) probe(s"$dir/dict_deltas") else Nil)
@@ -244,10 +241,7 @@ class IndexHandle private (
   def blocksFor(terms: Seq[String]): DataFrame =
     if (terms.isEmpty) blocks.filter(lit(false))
     else if (postingsResident) blocks.filter(col("term").isin(terms: _*))
-    else blocks.filter(
-      col("bucket").isin(
-        terms.map(t => graft.util.Hashing.bucketOf(t, nBuckets)).distinct: _*)
-        && col("term").isin(terms: _*))
+    else blocks.filter(Builder.bucketProbe("term", terms, nBuckets))
 
   def close(): Unit = {
     release()

@@ -83,17 +83,4 @@ object Intervals {
     out += ((merged(start)._1, merged.last._2))
     out.toArray
   }
-
-  /** Binary-search overlap test over a merged interval list. */
-  def overlapsAny(merged: Array[(Long, Long)], lo: Long, hi: Long): Boolean = {
-    var l = 0; var r = merged.length - 1
-    while (l <= r) {
-      val m = (l + r) >>> 1
-      val (mlo, mhi) = merged(m)
-      if (mhi < lo) l = m + 1
-      else if (mlo > hi) r = m - 1
-      else return true
-    }
-    false
-  }
 }

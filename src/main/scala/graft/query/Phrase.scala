@@ -28,6 +28,34 @@ object Phrase {
     * doc_ids. */
   val DefaultMaxCandidates = 100000L
 
+  /** One phrase call's front end, shared by `searchTopK` and
+    * `findOccurrences`: the top-k planner's And plan (a phrase is live
+    * when every one of its distinct terms is in the dictionary), each live
+    * phrase's ordered token sequence (repeats kept: adjacency needs
+    * them), its conjunctive candidates under the budget, and the
+    * positions of the live terms. */
+  private final case class Prepared(plan: Searcher.Plan,
+      seqs: Map[Long, Seq[String]], candidates: DataFrame,
+      positions: DataFrame)
+
+  /** None when no phrase is live. */
+  private def prepare(spark: SparkSession, indexDir: String,
+      phrases: Seq[Searcher.Query], maxCandidates: Long): Option[Prepared] = {
+    require(graft.util.Fs.exists(spark, s"$indexDir/_COMMIT_positions"),
+      s"index at $indexDir was built without storePositions=true")
+    val p = Searcher.plan(spark, indexDir, phrases, Searcher.And, 32)
+    if (p.live.isEmpty) return None
+    val seqs = phrases.filter(q => p.live.contains(q.query_id))
+      .map(q => q.query_id -> Tokenizer.tokens(q.text).toSeq).toMap
+    val terms = p.live.values.flatten.toSeq.distinct
+    val positions = spark.read.parquet(s"$indexDir/positions")
+      .filter(Builder.bucketProbe("term", terms, p.handle.nBuckets))
+      .select("term", "doc_id", "n_pos", "pos_deltas")
+    Some(Prepared(p, seqs,
+      capIfNeeded(spark, Searcher.candidates(spark, p), maxCandidates, p),
+      positions))
+  }
+
   /** Top-k docs containing each phrase exactly.
     * Requires the index to be built with storePositions=true.
     * Returns (query_id, rank, doc_id, score).
@@ -42,65 +70,29 @@ object Phrase {
                  phrases: Seq[Searcher.Query], k: Int,
                  maxCandidates: Long = DefaultMaxCandidates): DataFrame = {
     import spark.implicits._
-    require(graft.util.Fs.exists(spark, s"$indexDir/_COMMIT_positions"),
-      s"index at $indexDir was built without storePositions=true")
-    val handle = IndexHandle.open(spark, indexDir)
-    val stats = handle.stats
-
-    // ordered term lists (duplicates meaningful for adjacency)
-    val seqPerQuery: Map[Long, Seq[String]] =
-      phrases.map(q => q.query_id -> Tokenizer.tokens(q.text).toSeq).toMap
-    val distinctPerQuery = seqPerQuery.map { case (q, ts) => q -> ts.distinct }
-    val allTerms = distinctPerQuery.values.flatten.toSeq.distinct
-    val dict = handle.dfOf(allTerms)
-    val live = seqPerQuery.filter { case (_, ts) =>
-      ts.nonEmpty && ts.forall(dict.contains)
-    }
-    val emptyOut = Seq.empty[(Long, Int, Long, Double)]
+    val prepared = prepare(spark, indexDir, phrases, maxCandidates)
+    if (prepared.isEmpty) return Seq.empty[(Long, Int, Long, Double)]
       .toDF("query_id", "rank", "doc_id", "score")
-    if (live.isEmpty) return emptyOut
-
-    // conjunctive candidates from the core index (already block-pruned),
-    // budget applied per query through a bounded aggregator — never a
-    // global sort or an unbounded per-query row set. The cap stage is an
-    // extra full shuffle of the candidate set, so it is SKIPPED when it
-    // provably cannot bind: conjunctive candidates per query never
-    // exceed the rarest term's df, and the dictionary probe already
-    // holds the dfs (r5 verdict: the always-on cap was the structural
-    // suspect in the phrase-path slowdown).
-    val candidates = capIfNeeded(spark,
-      Searcher.searchCandidates(spark, indexDir,
-        phrases.filter(q => live.contains(q.query_id))),
-      maxCandidates, live, dict)
-
-    // positions for the candidate docs' terms
-    val liveTerms = live.keys.flatMap(distinctPerQuery).toSeq.distinct
-    val positions = spark.read.parquet(s"$indexDir/positions")
-      .filter(col("bucket").isin(
-        liveTerms.map(t => graft.util.Hashing.bucketOf(t, handle.nBuckets))
-          .distinct: _*)
-        && col("term").isin(liveTerms: _*))
-      .select("term", "doc_id", "n_pos", "pos_deltas")
+    val Prepared(p, seqs, candidates, positions) = prepared.get
+    val stats = p.handle.stats
 
     // verification only needs EXISTENCE per (query, doc): firstOnly stops
     // at the first matching start instead of enumerating (and shuffling)
     // every occurrence of a hot phrase through a distinct()
-    val verified = occurrenceRows(spark, live, candidates, positions,
+    val verified = occurrenceRows(spark, seqs, candidates, positions,
         firstOnly = true)
       .select("query_id", "doc_id")
 
     // BM25 score the verified docs over the phrase's distinct terms
-    val qt = live.keys.toSeq.flatMap { qid =>
-      distinctPerQuery(qid).map(t =>
-        (qid, t, Bm25.idf(stats.n_docs, dict(t))))
+    val qt = p.live.toSeq.flatMap { case (qid, ts) =>
+      ts.map(t => (qid, t, Bm25.idf(stats.n_docs, p.dict(t))))
     }.toDF("query_id", "term", "idf")
     // scoring decodes ONLY blocks overlapping the conjunctive interval
     // intersection of each phrase's terms (the same IMT-style pre-merge
     // the top-k path runs) — not every block of every phrase term; the
     // left_semi below then narrows rows to the verified docs
-    val prunedBlocks = Searcher.pruneBlocks(spark, handle,
-      handle.blocksFor(liveTerms),
-      live.keys.map(qid => qid -> distinctPerQuery(qid)).toMap)
+    val prunedBlocks = Searcher.pruneBlocks(spark, p.handle,
+      p.handle.blocksFor(p.live.values.flatten.toSeq.distinct), p.live)
     val postings = prunedBlocks.select(col("term"),
         graft.functions.DecodePostings.rows(col("num_docs"),
           col("doc_deltas"), col("tfs"), col("dls"))
@@ -113,53 +105,31 @@ object Phrase {
             (lit(1 - Bm25.B) + lit(Bm25.B) * col("dl") / lit(stats.avgdl))))
       .groupBy("query_id", "doc_id")
       .agg(sum("contrib").as("raw"))
-      .withColumn("score", round(col("raw"), 6))
-      .select("query_id", "doc_id", "score")
+      .select(col("query_id"),
+        struct(col("doc_id"), round(col("raw"), 6).as("score")))
 
-    val topk = new TopKAgg(k)
-    scored.as[(Long, Long, Double)]
-      .groupByKey(_._1)
-      .mapValues(r => Scored(r._2, r._3))
-      .agg(topk.toColumn.name("topk"))
-      .flatMap { case (qid, hits) =>
-        hits.zipWithIndex.map { case (s, i) => (qid, i + 1, s.doc_id, s.score) }
-      }
+    BoundedK.perKey(scored.as[(Long, Scored)], k, Scored.BestFirst)
+      .flatMap { case (qid, hits) => Searcher.ranked(qid, hits) }
       .toDF("query_id", "rank", "doc_id", "score")
   }
 
-  /** capCandidates, skipped when provably non-binding: per query the
-    * conjunctive candidate set is a subset of EVERY term's postings, so
-    * |candidates| <= min df of the phrase's terms; when that bound is
-    * within the budget for every live phrase, the cap stage (a full
-    * extra shuffle of the candidate set) is the identity and is elided.
-    * `dict` maps each live term to its df (the dictionary probe already
-    * paid for it). */
-  private def capIfNeeded(spark: SparkSession, all: DataFrame,
-                          maxCandidates: Long, live: Map[Long, Seq[String]],
-                          dict: Map[String, Long]): DataFrame = {
-    val canBind = live.values.exists { ts =>
-      ts.filter(dict.contains).map(dict).foldLeft(Long.MaxValue)(math.min) >
-        maxCandidates
-    }
-    if (canBind) capCandidates(spark, all, maxCandidates) else all
-  }
-
   /** Per-query candidate budget, applied BEFORE the positions join
-    * through a bounded typed aggregator — never a global sort or an
-    * unbounded per-query row set; keeps the `cap` smallest doc_ids. */
-  private def capCandidates(spark: SparkSession, all: DataFrame,
-                            maxCandidates: Long): DataFrame = {
+    * through the bounded best-k aggregator (the `maxCandidates` smallest
+    * doc_ids) — never a global sort or an unbounded per-query row set.
+    * Skipped when provably non-binding: per query the conjunctive
+    * candidate set is a subset of EVERY term's postings, so |candidates|
+    * <= min df of the phrase's terms; when that bound is within the
+    * budget for every live phrase, the cap stage (a full extra shuffle of
+    * the candidate set) is the identity and is elided. The plan's
+    * dictionary probe already holds the dfs. */
+  private def capIfNeeded(spark: SparkSession, all: DataFrame,
+                          maxCandidates: Long, p: Searcher.Plan): DataFrame = {
     import spark.implicits._
-    if (maxCandidates >= Int.MaxValue) all
-    else {
-      val cap = new MinKLongAgg(maxCandidates.toInt)
-      all.as[(Long, Long)]
-        .groupByKey(_._1)
-        .mapValues(_._2)
-        .agg(cap.toColumn.name("docs"))
-        .flatMap { case (qid, docs) => docs.map(d => (qid, d)) }
-        .toDF("query_id", "doc_id")
-    }
+    val canBind = p.live.values.exists(ts => ts.map(p.dict).min > maxCandidates)
+    if (!canBind) all
+    else BoundedK.perKey(all.as[(Long, Long)], maxCandidates, Ordering.Long)
+      .flatMap { case (qid, docs) => docs.map(d => (qid, d)) }
+      .toDF("query_id", "doc_id")
   }
 
   /** Every phrase occurrence as (query_id, doc_id, pos) — pos is the
@@ -167,53 +137,25 @@ object Phrase {
     * of the reference's per-match `(v:…,o:…)` decode
     * (/root/reference/src/gin_gin.c:817-885). `maxMatches` keeps the
     * smallest (doc_id, pos) pairs per query (deterministic --max-matches
-    * analog) through a bounded aggregator; `maxCandidates` caps the
-    * CANDIDATE docs before the positions join (finite by default, like
-    * searchTopK — r4 capped only the output rows here, so a hot phrase
-    * still dragged an unbounded verification join). */
+    * analog) through the bounded best-k aggregator; `maxCandidates` caps
+    * the CANDIDATE docs before the positions join (finite by default,
+    * like searchTopK — r4 capped only the output rows here, so a hot
+    * phrase still dragged an unbounded verification join). */
   def findOccurrences(spark: SparkSession, indexDir: String,
                       phrases: Seq[Searcher.Query],
                       maxMatches: Long = Long.MaxValue,
                       maxCandidates: Long = DefaultMaxCandidates): DataFrame = {
     import spark.implicits._
-    require(graft.util.Fs.exists(spark, s"$indexDir/_COMMIT_positions"),
-      s"index at $indexDir was built without storePositions=true")
-    val handle = IndexHandle.open(spark, indexDir)
-    val seqPerQuery: Map[Long, Seq[String]] =
-      phrases.map(q => q.query_id -> Tokenizer.tokens(q.text).toSeq).toMap
-    val distinctPerQuery = seqPerQuery.map { case (q, ts) => q -> ts.distinct }
-    val allTerms = distinctPerQuery.values.flatten.toSeq.distinct
-    val dict = handle.dfOf(allTerms)
-    val live = seqPerQuery.filter { case (_, ts) =>
-      ts.nonEmpty && ts.forall(dict.contains)
-    }
-    val emptyOut = Seq.empty[(Long, Long, Long)]
+    val prepared = prepare(spark, indexDir, phrases, maxCandidates)
+    if (prepared.isEmpty)
+      return Seq.empty[(Long, Long, Long)].toDF("query_id", "doc_id", "pos")
+    val Prepared(_, seqs, candidates, positions) = prepared.get
+    val occ = occurrenceRows(spark, seqs, candidates, positions)
+      .as[(Long, Long, Long)]
+      .map { case (qid, did, pos) => (qid, (did, pos)) }
+    BoundedK.perKey(occ, maxMatches, Ordering[(Long, Long)])
+      .flatMap { case (qid, hits) => hits.map { case (did, pos) => (qid, did, pos) } }
       .toDF("query_id", "doc_id", "pos")
-    if (live.isEmpty) return emptyOut
-    val candidates = capIfNeeded(spark,
-      Searcher.searchCandidates(spark, indexDir,
-        phrases.filter(q => live.contains(q.query_id))),
-      maxCandidates, live, dict)
-    val liveTerms = live.keys.flatMap(distinctPerQuery).toSeq.distinct
-    val positions = spark.read.parquet(s"$indexDir/positions")
-      .filter(col("bucket").isin(
-        liveTerms.map(t => graft.util.Hashing.bucketOf(t, handle.nBuckets))
-          .distinct: _*)
-        && col("term").isin(liveTerms: _*))
-      .select("term", "doc_id", "n_pos", "pos_deltas")
-    val occ = occurrenceRows(spark, live, candidates, positions)
-    if (maxMatches >= Int.MaxValue) occ
-    else {
-      val agg = new MinKPairAgg(maxMatches.toInt)
-      occ.as[(Long, Long, Long)]
-        .groupByKey(_._1)
-        .mapValues(r => (r._2, r._3))
-        .agg(agg.toColumn.name("hits"))
-        .flatMap { case (qid, hits) =>
-          hits.map { case (did, p) => (qid, did, p) }
-        }
-        .toDF("query_id", "doc_id", "pos")
-    }
   }
 
   /** Adjacency evaluation shared by verification (searchTopK, which only

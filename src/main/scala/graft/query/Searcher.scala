@@ -22,8 +22,8 @@ import graft.index.{Bm25, PostingBlock, Tokenizer}
   *     a query on a resident index starts no Spark job and its answer is
   *     one local relation; on executors for large batches or posting
   *     volumes — one group per (query, doc-range stripe), per-stripe
-  *     top-ks merged by the typed TopKAgg so only O(k) rows per stripe
-  *     cross a shuffle.
+  *     top-ks merged by the bounded best-k aggregator (BoundedK) so only
+  *     O(k) rows per stripe cross a shuffle.
   *
   * Scores are rounded to 6 decimals *before* ranking so that ranking is
   * reproducible across engines (oracle parity); tie-break doc_id ASC.
@@ -92,11 +92,12 @@ object Searcher {
 
   /** One call's front end, built once and handed to the path that runs
     * it: the dictionary probe of every query term and the live queries
-    * with their present (distinct, dictionary-known) terms. */
-  private final case class Plan(handle: IndexHandle, dict: Map[String, Long],
-      live: Map[Long, Seq[String]])
+    * with their present (distinct, dictionary-known) terms. Phrase plans
+    * through it too, in And mode. */
+  private[query] final case class Plan(handle: IndexHandle,
+      dict: Map[String, Long], live: Map[Long, Seq[String]])
 
-  private def plan(spark: SparkSession, indexDir: String, queries: Seq[Query],
+  private[query] def plan(spark: SparkSession, indexDir: String, queries: Seq[Query],
       mode: Mode, nBuckets: Int): Plan = {
     val handle = IndexHandle.open(spark, indexDir, nBuckets)
     val tokens =
@@ -109,7 +110,8 @@ object Searcher {
     })
   }
 
-  private def ranked(qid: Long, hits: Seq[Scored]): Seq[(Long, Int, Long, Double)] =
+  /** One query's best-first hits as (query_id, rank 1.., doc_id, score). */
+  private[graft] def ranked(qid: Long, hits: Seq[Scored]): Seq[(Long, Int, Long, Double)] =
     hits.zipWithIndex.map { case (s, i) => (qid, i + 1, s.doc_id, s.score) }
 
   private val OutCols = Seq("query_id", "rank", "doc_id", "score")
@@ -192,8 +194,8 @@ object Searcher {
     * on `term` (one shuffle, block payloads fan out only to the queries
     * that need them — bounded by batch size), then ONE flatMapGroups per
     * (query, doc-range stripe) runs the IDENTICAL `Wand.topK` loop on an
-    * executor (stripeTopK); per-stripe exact top-ks merge through the
-    * typed TopKAgg into the global exact top-k. Rankings are
+    * executor (stripeTopK); per-stripe exact top-ks merge through
+    * BoundedK into the global exact top-k. Rankings are
     * bit-identical to `searchTopKWand`.
     *
     * Memory: a query whose Σ df exceeds `stripePostings` is split into
@@ -262,10 +264,7 @@ object Searcher {
       }
     // merge per-stripe exact top-ks (<= k rows per stripe cross this
     // shuffle) into the global exact top-k per query
-    perStripe
-      .groupByKey(_._1)
-      .mapValues(_._2)
-      .agg(new TopKAgg(k).toColumn.name("topk"))
+    BoundedK.perKey(perStripe, k, Scored.BestFirst)
       .flatMap { case (qid, hits) => ranked(qid, hits) }
       .toDF(OutCols: _*)
   }
@@ -319,9 +318,13 @@ object Searcher {
     * blocks overlapping every query term's covered doc ranges are
     * decoded (pruneBlocks) — the IMT-style pre-merge. */
   def searchCandidates(spark: SparkSession, indexDir: String,
-                       queries: Seq[Query], nBuckets: Int = 32): DataFrame = {
+                       queries: Seq[Query], nBuckets: Int = 32): DataFrame =
+    candidates(spark, plan(spark, indexDir, queries, And, nBuckets))
+
+  /** searchCandidates over an existing And plan, so a caller that already
+    * planned (Phrase) probes the dictionary once. */
+  private[query] def candidates(spark: SparkSession, p: Plan): DataFrame = {
     import spark.implicits._
-    val p = plan(spark, indexDir, queries, And, nBuckets)
     if (p.live.isEmpty) return Seq.empty[(Long, Long)].toDF("query_id", "doc_id")
     val blocks = pruneBlocks(spark, p.handle,
       p.handle.blocksFor(p.live.values.flatten.toSeq.distinct), p.live)

@@ -80,9 +80,7 @@ object Substring {
       }
       val grams = qg.map(_._2).distinct
       val tri = spark.read.parquet(s"$indexDir/trigrams")
-        .filter(col("bucket").isin(
-          grams.map(g => graft.util.Hashing.bucketOf(g, buckets)).distinct: _*)
-          && col("gram").isin(grams: _*))
+        .filter(graft.index.Builder.bucketProbe("gram", grams, buckets))
         .select("gram", "doc_id")
       val cand = tri.join(broadcast(qg.toDF("query_id", "gram", "n_grams")), "gram")
         .groupBy("query_id", "doc_id")
@@ -157,7 +155,8 @@ object Substring {
     // (imperative string scanning per partition — the mapPartitions rung
     // is the right one here, there is no codegen'd overlapping-count
     // builtin and a sequence()+filter() expression materializes an
-    // O(|content|) array per row)
+    // O(|content|) array per row); rows are (query_id, (doc_id,
+    // n_matches, first_offset))
     val matched = candidates
       .select("query_id", "doc_id", "content", "pat")
       .as[(Long, Long, String, String)]
@@ -168,27 +167,19 @@ object Substring {
           var n = 0L
           var i = first
           while (i >= 0) { n += 1; i = content.indexOf(pat, i + 1) }
-          Some((qid, did, n,
-            toCodePointOffsets(content, Array(first))(0)))
+          Some((qid, (did, n, toCodePointOffsets(content, Array(first))(0))))
         }
       })
+    // the cap keeps the smallest doc_ids per query through the bounded
+    // best-k aggregator (partial + final, O(maxMatches) rows per query
+    // cross the shuffle) — a window would funnel EVERY match of a common
+    // pattern through one task
+    BoundedK.perKey(matched, maxMatches,
+        Ordering.by[(Long, Long, Long), Long](_._1))
+      .flatMap { case (qid, hits) =>
+        hits.map { case (did, n, first) => (qid, did, n, first) }
+      }
       .toDF("query_id", "doc_id", "n_matches", "first_offset")
-    if (maxMatches >= Int.MaxValue) matched
-    else {
-      // bounded per-query smallest-doc_id selection via a typed
-      // aggregator (partial + final, O(maxMatches) rows per query cross
-      // the shuffle) — a window would funnel EVERY match of a common
-      // pattern through one task
-      val agg = new MinKByDocAgg(maxMatches.toInt)
-      matched.as[(Long, Long, Long, Long)]
-        .groupByKey(_._1)
-        .mapValues(r => SubMatch(r._2, r._3, r._4))
-        .agg(agg.toColumn.name("hits"))
-        .flatMap { case (qid, hits) =>
-          hits.map(h => (qid, h.doc_id, h.n_matches, h.first_offset))
-        }
-        .toDF("query_id", "doc_id", "n_matches", "first_offset")
-    }
   }
 
   /** Full match decode — every (doc, offset) occurrence per query, the
@@ -209,21 +200,11 @@ object Substring {
       .select("query_id", "doc_id", "content", "pat")
       .as[(Long, Long, String, String)]
       .mapPartitions(_.flatMap { case (qid, did, content, pat) =>
-        occurrenceOffsets(content, pat).iterator.map(o => (qid, did, o))
+        occurrenceOffsets(content, pat).iterator.map(o => (qid, (did, o)))
       })
+    BoundedK.perKey(occ, maxMatches, Ordering[(Long, Long)])
+      .flatMap { case (qid, hits) => hits.map { case (did, off) => (qid, did, off) } }
       .toDF("query_id", "doc_id", "offset")
-    if (maxMatches >= Int.MaxValue) occ
-    else {
-      val agg = new MinKPairAgg(maxMatches.toInt)
-      occ.as[(Long, Long, Long)]
-        .groupByKey(_._1)
-        .mapValues(r => (r._2, r._3))
-        .agg(agg.toColumn.name("hits"))
-        .flatMap { case (qid, hits) =>
-          hits.map { case (did, off) => (qid, did, off) }
-        }
-        .toDF("query_id", "doc_id", "offset")
-    }
   }
 
   /** Snippet extraction: every decoded match with `ctx` characters of

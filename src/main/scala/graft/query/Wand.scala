@@ -62,10 +62,6 @@ object Wand {
       else idf * (Bm25.K1 + 1.0) *
         Bm25.tfNorm(blocks(bi).max_tf, blocks(bi).min_dl, avgdl)
 
-    /** Smallest doc in the NEXT block (for BMW shallow advance). */
-    def nextBlockDoc: Long =
-      if (bi + 1 >= blocks.length) Long.MaxValue else blocks(bi + 1).doc_id_base
-
     /** Metadata-only block positioning: move past blocks whose max <
       * target WITHOUT decoding. Returns false when exhausted. */
     def seekBlock(target: Long): Boolean = {
@@ -155,7 +151,6 @@ object Wand {
            maxDoc: Long = Long.MaxValue): (Seq[Scored], QueryStats) = {
     if (terms.isEmpty || k <= 0) return (Nil, QueryStats(0, 0, 0))
     val cursors = terms.map(t => new Cursor(t.idf, t.blocks, avgdl)).toArray
-    val heap = new TopKAgg(k)
     var buf: List[Scored] = Nil
     var scored = 0L
     def theta: Double =
@@ -230,7 +225,8 @@ object Wand {
                       s += cursors(j).scoreCurrent(); j += 1
                     }
                     scored += 1
-                    buf = heap.reduce(buf, Scored(doc, round6(s)))
+                    buf = BoundedK.insert(buf, Scored(doc, round6(s)), k)(
+                      Scored.BestFirst)
                     target = doc + 1
                   } else target = doc
                 }
@@ -286,7 +282,8 @@ object Wand {
                   m += 1
                 }
                 scored += 1
-                buf = heap.reduce(buf, Scored(pivotDoc, round6(s)))
+                buf = BoundedK.insert(buf, Scored(pivotDoc, round6(s)), k)(
+                  Scored.BestFirst)
               }
               var m = 0
               while (m < cs.length) {

@@ -4,7 +4,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
 import graft.index.{Codec, Tokenizer}
-import graft.query.{Intervals, MinKLongAgg, MinKPairAgg, Scored, TopKAgg}
+import graft.query.{BoundedK, Intervals, Scored}
 
 /** Deterministic property harness over scalacheck Gen (scalatestplus is
   * not in the offline cache; seeds fixed for reproducibility). */
@@ -113,8 +113,22 @@ class CoreSpec extends AnyFunSuite with PropHelpers {
     }
   }
 
-  // --- top-k aggregator == sort.take(k) under any partitioning ---
-  test("TopKAgg equals global sortBy.take(k) and is merge-associative") {
+  // --- the bounded best-k aggregator == sort.take(k) under any
+  // partitioning, for every ordering a call site uses ---
+
+  /** `agg` over `xs` equals `want` in one reduce and after an arbitrary
+    * split into partial buffers merged back (partial+final). */
+  private def checkBestK[T](agg: BoundedK[T], xs: List[T], nSplits: Int,
+      want: Seq[T]): Unit = {
+    assert(agg.finish(xs.foldLeft(agg.zero)(agg.reduce)) == want)
+    val splits = if (xs.isEmpty) Seq(xs)
+      else xs.grouped(math.max(1, xs.size / (nSplits + 1))).toSeq
+    val merged = splits.map(_.foldLeft(agg.zero)(agg.reduce))
+      .foldLeft(agg.zero)(agg.merge)
+    assert(agg.finish(merged) == want)
+  }
+
+  test("BoundedK by score equals global sortBy.take(k) and is merge-associative") {
     val gen = for {
       xs <- Gen.listOf(for {
         id <- Gen.chooseNum(0L, 50L); s <- Gen.chooseNum(0, 1000)
@@ -123,34 +137,43 @@ class CoreSpec extends AnyFunSuite with PropHelpers {
       cut <- Gen.chooseNum(0, 5)
     } yield (xs, k, cut)
     forAll(gen) { case (xs, k, nSplits) =>
-      val agg = new TopKAgg(k)
-      val want = xs.sortBy(s => (-s.score, s.doc_id)).take(k)
-      // single reduce
-      val direct = agg.finish(xs.foldLeft(agg.zero)(agg.reduce))
-      assert(direct == want)
-      // arbitrary splits then merge (partial+final)
-      val splits = if (xs.isEmpty) Seq(xs) else xs.grouped(math.max(1, xs.size / (nSplits + 1))).toSeq
-      val merged = splits.map(_.foldLeft(agg.zero)(agg.reduce))
-        .foldLeft(agg.zero)(agg.merge)
-      assert(agg.finish(merged) == want)
+      checkBestK(new BoundedK(k, Scored.BestFirst), xs, nSplits,
+        xs.sortBy(s => (-s.score, s.doc_id)).take(k))
     }
   }
 
+  test("BoundedK by score: 0.0, -0.0 and equal scores tie, doc_id decides") {
+    // the top-k rule compares with > and ==, so -0.0 ties 0.0 (a
+    // Double.compare ordering would rank every 0.0 above every -0.0)
+    val xs = List(Scored(3L, 0.0), Scored(1L, -0.0), Scored(6L, 0.5),
+      Scored(2L, 0.0), Scored(5L, 0.5), Scored(4L, -0.0))
+    val want = Seq(5L, 6L, 1L, 2L, 3L, 4L)
+    (0 to want.size).foreach { k =>
+      xs.permutations.take(60).foreach { perm =>
+        (0 to 3).foreach { nSplits =>
+          val agg = new BoundedK(k, Scored.BestFirst)
+          val got = agg.finish(perm.foldLeft(agg.zero)(agg.reduce))
+          assert(got.map(_.doc_id) == want.take(k), s"perm=$perm")
+          val splits = perm.grouped(math.max(1, perm.size / (nSplits + 1)))
+          val merged = splits.map(_.foldLeft(agg.zero)(agg.reduce))
+            .foldLeft(agg.zero)(agg.merge)
+          assert(agg.finish(merged).map(_.doc_id) == want.take(k))
+        }
+      }
+    }
+  }
+
+  private val genLong = for {
+    xs <- Gen.listOf(Gen.chooseNum(0L, 100L))
+    k <- Gen.chooseNum(1, 8)
+    cut <- Gen.chooseNum(0, 5)
+  } yield (xs, k, cut)
+
+  // the min-k roles once held by MinKLongAgg and MinKPairAgg are BoundedK
+  // with Ordering.Long and Ordering[(Long, Long)]
   test("MinKLongAgg / MinKPairAgg equal sorted.take(k) under any partitioning") {
-    val genLong = for {
-      xs <- Gen.listOf(Gen.chooseNum(0L, 100L))
-      k <- Gen.chooseNum(1, 8)
-      cut <- Gen.chooseNum(0, 5)
-    } yield (xs, k, cut)
     forAll(genLong) { case (xs, k, nSplits) =>
-      val agg = new MinKLongAgg(k)
-      val want = xs.sorted.take(k)
-      assert(agg.finish(xs.foldLeft(agg.zero)(agg.reduce)) == want)
-      val splits = if (xs.isEmpty) Seq(xs)
-        else xs.grouped(math.max(1, xs.size / (nSplits + 1))).toSeq
-      val merged = splits.map(_.foldLeft(agg.zero)(agg.reduce))
-        .foldLeft(agg.zero)(agg.merge)
-      assert(agg.finish(merged) == want)
+      checkBestK(new BoundedK(k, Ordering.Long), xs, nSplits, xs.sorted.take(k))
     }
     val genPair = for {
       xs <- Gen.listOf(for {
@@ -160,14 +183,18 @@ class CoreSpec extends AnyFunSuite with PropHelpers {
       cut <- Gen.chooseNum(0, 5)
     } yield (xs, k, cut)
     forAll(genPair) { case (xs, k, nSplits) =>
-      val agg = new MinKPairAgg(k)
-      val want = xs.sorted.take(k)
-      assert(agg.finish(xs.foldLeft(agg.zero)(agg.reduce)) == want)
-      val splits = if (xs.isEmpty) Seq(xs)
-        else xs.grouped(math.max(1, xs.size / (nSplits + 1))).toSeq
-      val merged = splits.map(_.foldLeft(agg.zero)(agg.reduce))
-        .foldLeft(agg.zero)(agg.merge)
-      assert(agg.finish(merged) == want)
+      checkBestK(new BoundedK(k, Ordering[(Long, Long)]), xs, nSplits,
+        xs.sorted.take(k))
+    }
+  }
+
+  test("BoundedK by doc_id equals sortBy(doc_id).take(k) under any partitioning") {
+    forAll(genLong) { case (xs, k, nSplits) =>
+      // Substring.find's (doc_id, n_matches, first_offset) rows, ordered
+      // by doc_id alone (a doc has one row per query)
+      val rows = xs.map(d => (d, d % 7, d * 3))
+      checkBestK(new BoundedK(k, Ordering.by[(Long, Long, Long), Long](_._1)),
+        rows, nSplits, rows.sortBy(_._1).take(k))
     }
   }
 
@@ -192,16 +219,16 @@ class CoreSpec extends AnyFunSuite with PropHelpers {
     }
   }
 
-  test("bounded aggregators: k = 0 keeps nothing instead of crashing") {
+  test("BoundedK: k = 0 keeps nothing instead of crashing") {
     // an empty buffer is already "full" at k = 0; the guard must not
     // evaluate buf.last on it (CLI --max-matches 0 reaches this)
-    val p = new MinKPairAgg(0)
+    val p = new BoundedK(0, Ordering[(Long, Long)])
     assert(p.merge(p.reduce(p.zero, (1L, 2L)), p.reduce(p.zero, (3L, 4L))) == Nil)
-    val l = new MinKLongAgg(0)
+    val l = new BoundedK(0, Ordering.Long)
     assert(l.merge(l.reduce(l.zero, 5L), l.reduce(l.zero, 7L)) == Nil)
-    val d = new graft.query.MinKByDocAgg(0)
-    assert(d.reduce(d.zero, graft.query.SubMatch(1L, 1L, 0L)) == Nil)
-    val t = new TopKAgg(0)
+    val d = new BoundedK(0, Ordering.by[(Long, Long, Long), Long](_._1))
+    assert(d.reduce(d.zero, (1L, 1L, 0L)) == Nil)
+    val t = new BoundedK(0, Scored.BestFirst)
     assert(t.reduce(t.zero, Scored(1L, 1.0)) == Nil)
   }
 }

@@ -1,7 +1,7 @@
 package graft
 
 import graft.corpus.Synth
-import graft.index.{Builder, Tokenizer}
+import graft.index.{Builder, CodeDoc, Tokenizer}
 import graft.query.{Phrase, Searcher}
 
 /** Phrase (adjacency) search vs a plain-Scala sliding-window oracle. */
@@ -152,5 +152,56 @@ class PhraseSpec extends SparkTestBase {
     capped.foreach { case (doc, score) =>
       assert(full(doc) == score, s"score drift on doc $doc")
     }
+  }
+
+  test("hand-built index: repeated-term, token-free and missing-term phrases") {
+    import spark.implicits._
+    val texts = Seq("foo foo bar", "foo bar foo", "bar foo foo foo",
+      "baz qux foo", "foo baz foo foo bar", "qux bar")
+    val small = texts.zipWithIndex.map { case (t, i) =>
+      CodeDoc("r", f"p$i%02d.txt", "c0", "txt", t)
+    }.toDF()
+    val dir = tmpDir("phrase-small")
+    Builder.build(spark, small, dir, Builder.Config(blockSize = 2,
+      nBuckets = 4, nSegments = 1, storePositions = true))
+    val docs = Builder.withDocIds(small)
+      .select($"doc_id", $"content").as[(Long, String)].collect()
+    val phrases = Seq(
+      Searcher.Query(1, "foo foo"),         // repeated term
+      Searcher.Query(2, "!!! ??"),          // no tokens
+      Searcher.Query(3, "foo zz_missing"),  // a term not in the index
+      Searcher.Query(4, "Foo FOO foo"),
+      Searcher.Query(5, "bar foo"))
+    // sliding-window oracle: every (query, doc, start) occurrence
+    val want = (for {
+      q <- phrases
+      pts = Tokenizer.tokens(q.text).toSeq
+      if pts.nonEmpty
+      (docId, c) <- docs
+      ts = Tokenizer.tokens(c).toSeq
+      p <- 0 to (ts.length - pts.length)
+      if ts.slice(p, p + pts.length) == pts
+    } yield (q.query_id, docId, p.toLong)).toSet
+    assert(want.map(_._1) == Set(1L, 4L, 5L), "fixture")
+
+    val occ = Phrase.findOccurrences(spark, dir, phrases)
+      .as[(Long, Long, Long)].collect()
+    assert(occ.length == occ.toSet.size)
+    assert(occ.toSet == want)
+
+    val top = Phrase.searchTopK(spark, dir, phrases, 10).collect()
+      .map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getDouble(3)))
+    phrases.foreach { q =>
+      val got = top.filter(_._1 == q.query_id).sortBy(_._2)
+      assert(got.map(_._3).toSet == want.filter(_._1 == q.query_id).map(_._2),
+        s"query ${q.query_id}")
+      assert(got.map(_._2).toSeq == (1 to got.length))
+      assert(got.map(r => (-r._4, r._3)).toSeq ==
+        got.map(r => (-r._4, r._3)).sorted.toSeq)
+    }
+    // k caps the ranked rows, best first
+    val top1 = Phrase.searchTopK(spark, dir, phrases, 1).collect()
+      .map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getDouble(3)))
+    assert(top1.toSet == top.filter(_._2 == 1).toSet)
   }
 }
