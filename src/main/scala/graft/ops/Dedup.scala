@@ -79,7 +79,7 @@ object Dedup {
                       df: DataFrame): Unit =
     df.queryExecution.analyzed match {
       case lr: org.apache.spark.sql.execution.LogicalRDD =>
-        lr.rdd.unpersist(false)
+        org.apache.spark.sql.GraftBridge.unpersistRDD(lr.rdd)
         lr.rdd.getCheckpointFile.foreach(f => graft.util.Fs.delete(spark, f))
       case _ => ()
     }

@@ -158,47 +158,13 @@ class IndexHandle private (
     if (docmetaLoaded) docmeta.unpersist()
   }
 
-  /** Per-term merged block [doc_id_base, doc_id_max] intervals (coarsened
-    * to <= Searcher.MaxIvPerTerm by IntervalAgg), cached on the handle:
-    * block metadata is index-static until ingest invalidates the handle,
-    * so the AND block prune of searchCandidates/countMatches
-    * (Searcher.pruneBlocks) pays its distributed interval aggregation
-    * ONCE per term instead of once per query batch. Terms with no blocks
-    * cache an empty array so they are never recomputed either. */
-  private val intervalCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Array[(Long, Long)]]()
-
-  /** Cache entries are <= MaxIvPerTerm * 16 B each; at the cap the cache
-    * is simply cleared (recompute is cheap and correct) so an adversarial
-    * stream of distinct terms cannot grow driver memory unboundedly. */
+  /** At the cap the dfCache below is simply cleared (a re-probe is cheap
+    * and correct), so an adversarial stream of distinct terms cannot grow
+    * driver memory unboundedly. */
   private val MaxCachedTerms = 65536
 
-  /** Merged intervals for `terms`; absent/empty terms are omitted. */
-  def intervalsFor(terms: Seq[String]): Map[String, Array[(Long, Long)]] = {
-    import spark.implicits._
-    if (intervalCache.size > MaxCachedTerms) intervalCache.clear()
-    val missing = terms.distinct.filterNot(intervalCache.containsKey)
-    if (missing.nonEmpty) {
-      val ivAgg = new IntervalAgg(Searcher.MaxIvPerTerm)
-      blocksFor(missing)
-        .select(col("term"), col("doc_id_base"), col("doc_id_max"))
-        .as[(String, Long, Long)]
-        .groupByKey(_._1)
-        .mapValues(r => (r._2, r._3))
-        .agg(ivAgg.toColumn.name("iv"))
-        .collect()
-        .foreach { case (t, iv) => intervalCache.put(t, iv.toArray) }
-      missing.filterNot(intervalCache.containsKey)
-        .foreach(t => intervalCache.put(t, Array.empty))
-    }
-    terms.flatMap { t =>
-      val iv = intervalCache.get(t)
-      if (iv == null || iv.isEmpty) None else Some(t -> iv)
-    }.toMap
-  }
-
-  /** Probe results for the non-resident dictionary path, cached like the
-    * interval cache (absent terms store -1 so they never re-probe; the
+  /** Probe results for the non-resident dictionary path, cached on the
+    * handle (absent terms store -1 so they never re-probe; the
     * handle is dropped on ingest, so staleness cannot outlive the index
     * state it was read from). */
   private val dfCache =

@@ -28,19 +28,16 @@ import graft.index.{Bm25, PostingBlock, Tokenizer}
   * Scores are rounded to 6 decimals *before* ranking so that ranking is
   * reproducible across engines (oracle parity); tie-break doc_id ASC.
   *
-  * Unranked AND matching (`searchCandidates`/`countMatches`) prunes
-  * posting blocks by interval intersection on block metadata (the
-  * IMT-style pre-merge, gin_interval_merge_tree.c:178-209) and decodes
-  * only the surviving blocks, distributedly.
+  * Unranked AND matching (`searchCandidates` and Phrase's candidates) is
+  * the same plan and the same dispatch with a different kernel call:
+  * `Wand.matches`, the AND loop of `Wand.topK` that keeps every match in
+  * doc-id order (`countMatches` counts them from the executor groups). A
+  * term's blocks that hold none of the other terms' docs are skipped by
+  * the cursor's block metadata, so no separate block prune runs first.
   */
 object Searcher {
 
   case class Query(query_id: Long, text: String)
-
-  /** Max merged intervals the driver sees PER TERM from the distributed
-    * interval aggregation (coarsened beyond this — still sound, see
-    * IntervalAgg). Bounds driver memory regardless of index size. */
-  val MaxIvPerTerm = 512
 
   type Mode = Wand.Mode
   val And = Wand.And // posting-list intersection (north rule)
@@ -74,14 +71,15 @@ object Searcher {
 
   /** Per-query work counters — the reference's per-query stats
     * (gin.c:1118-1151), keyed by query_id, written by the driver loop.
-    * The searchTopK dispatcher CLEARS the map at every call, so it holds
-    * counters for the LAST dispatched batch only: populated after a
-    * driver-loop batch, empty after an executor-path batch (its counters
-    * would live in executor JVMs). The clear also keeps a long-lived
-    * serve session (thousands of dispatched micro-batches, disjoint query
-    * ids) from growing the map without bound. Direct searchTopKWand calls
-    * do NOT clear — instrumentation that accumulates across sub-batches
-    * (Bench's grouped legs) relies on that. */
+    * The dispatcher (searchTopK, searchCandidates, Phrase) CLEARS the map
+    * at every call, so it holds counters for the LAST dispatched batch
+    * only: populated after a driver-loop batch, empty after an
+    * executor-path batch (its counters would live in executor JVMs). The
+    * clear also keeps a long-lived serve session (thousands of dispatched
+    * micro-batches, disjoint query ids) from growing the map without
+    * bound. Direct searchTopKWand calls do NOT clear — instrumentation
+    * that accumulates across sub-batches (Bench's grouped legs) relies on
+    * that. */
   val lastStats = new java.util.concurrent.ConcurrentHashMap[Long, Wand.QueryStats]()
 
   /** Shared pool for the driver-side WAND serving loop. */
@@ -110,7 +108,23 @@ object Searcher {
     })
   }
 
-  /** One query's best-first hits as (query_id, rank 1.., doc_id, score). */
+  /** One query's kernel call: `run` maps (term blocks, avgdl, minDoc,
+    * maxDoc) to hits and stats; a striped answer keeps the `limit` first
+    * of its stripes' hits by `order`. */
+  private final case class Kernel(mode: Mode, limit: Long,
+      order: Ordering[Scored],
+      run: (Seq[Wand.TermBlocks], Double, Long, Long) => (Seq[Scored], Wand.QueryStats))
+
+  private def topKKernel(k: Int, mode: Mode): Kernel =
+    Kernel(mode, k, Scored.BestFirst,
+      (tbs, avgdl, lo, hi) => Wand.topK(tbs, k, avgdl, mode, lo, hi))
+
+  private def matchKernel(limit: Long): Kernel =
+    Kernel(And, limit, Scored.ByDoc,
+      (tbs, avgdl, lo, hi) => Wand.matches(tbs, limit, avgdl, lo, hi))
+
+  /** One query's hits in kernel order as (query_id, rank 1.., doc_id,
+    * score). */
   private[graft] def ranked(qid: Long, hits: Seq[Scored]): Seq[(Long, Int, Long, Double)] =
     hits.zipWithIndex.map { case (s, i) => (qid, i + 1, s.doc_id, s.score) }
 
@@ -142,12 +156,16 @@ object Searcher {
     * ((score6 DESC, doc_id ASC)).
     * Returns (query_id, rank, doc_id, score) with rank 1..k. */
   def searchTopK(spark: SparkSession, indexDir: String, queries: Seq[Query],
-                 k: Int, mode: Mode = And, nBuckets: Int = 32): DataFrame = {
-    val p = plan(spark, indexDir, queries, mode, nBuckets)
+                 k: Int, mode: Mode = And, nBuckets: Int = 32): DataFrame =
+    dispatch(spark, plan(spark, indexDir, queries, mode, nBuckets),
+      queries.size, topKKernel(k, mode))
+
+  private def dispatch(spark: SparkSession, p: Plan, nQueries: Int,
+      kern: Kernel): DataFrame = {
     lastStats.clear() // per-dispatched-batch counters only (see doc)
-    if (queries.size >= ExecBatchThreshold || p.dict.values.sum > WandDfCap)
-      executorTopK(spark, p, k, mode, ExecStripePostings)
-    else driverTopK(spark, p, k, mode)
+    if (nQueries >= ExecBatchThreshold || p.dict.values.sum > WandDfCap)
+      executorTopK(spark, p, kern, ExecStripePostings)
+    else driverTopK(spark, p, kern)
   }
 
   /** Driver-local exact BMW path (see Wand) for every query, whatever the
@@ -157,13 +175,14 @@ object Searcher {
     * skipped by block-max metadata without decoding. */
   def searchTopKWand(spark: SparkSession, indexDir: String, queries: Seq[Query],
                      k: Int, mode: Mode = And, nBuckets: Int = 32): DataFrame =
-    driverTopK(spark, plan(spark, indexDir, queries, mode, nBuckets), k, mode)
+    driverTopK(spark, plan(spark, indexDir, queries, mode, nBuckets),
+      topKKernel(k, mode))
 
-  /** The driver loop: `Wand.topK` per live query over `termBlocks`,
+  /** The driver loop: the kernel per live query over `termBlocks`,
     * answered as one local relation. On a handle with driver-resident
     * blocks this starts no Spark job. */
-  private def driverTopK(spark: SparkSession, p: Plan, k: Int,
-      mode: Mode): DataFrame = {
+  private def driverTopK(spark: SparkSession, p: Plan,
+      kern: Kernel): DataFrame = {
     val stats = p.handle.stats
     val byTerm = p.handle.termBlocks(p.live.values.flatten.toSeq.distinct)
     // queries are independent: evaluate the batch on a driver-side pool
@@ -177,7 +196,7 @@ object Searcher {
         Wand.TermBlocks(t, Bm25.idf(stats.n_docs, p.dict(t)),
           byTerm.getOrElse(t, Array.empty))
       }
-      val (hits, qstats) = Wand.topK(tbs, k, stats.avgdl, mode)
+      val (hits, qstats) = kern.run(tbs, stats.avgdl, 0L, Long.MaxValue)
       lastStats.put(qid, qstats)
       qid -> hits
     }.seq.flatMap { case (qid, hits) => ranked(qid, hits) }
@@ -194,7 +213,7 @@ object Searcher {
     * on `term` (one shuffle, block payloads fan out only to the queries
     * that need them — bounded by batch size), then ONE flatMapGroups per
     * (query, doc-range stripe) runs the IDENTICAL `Wand.topK` loop on an
-    * executor (stripeTopK); per-stripe exact top-ks merge through
+    * executor (stripeHits); per-stripe exact top-ks merge through
     * BoundedK into the global exact top-k. Rankings are
     * bit-identical to `searchTopKWand`.
     *
@@ -210,8 +229,8 @@ object Searcher {
       queries: Seq[Query], k: Int, mode: Mode = And,
       nBuckets: Int = 32,
       stripePostings: Long = ExecStripePostings): DataFrame =
-    executorTopK(spark, plan(spark, indexDir, queries, mode, nBuckets), k,
-      mode, stripePostings)
+    executorTopK(spark, plan(spark, indexDir, queries, mode, nBuckets),
+      topKKernel(k, mode), stripePostings)
 
   /** Set-oriented entry point kept for existing callers: top-k has one
     * kernel, so this is the executor BMW path. */
@@ -219,7 +238,7 @@ object Searcher {
                  k: Int, mode: Mode = And, nBuckets: Int = 32): DataFrame =
     searchTopKWandExecutors(spark, indexDir, queries, k, mode, nBuckets)
 
-  private def executorTopK(spark: SparkSession, p: Plan, k: Int, mode: Mode,
+  private def executorTopK(spark: SparkSession, p: Plan, kern: Kernel,
       stripePostings: Long): DataFrame = {
     import spark.implicits._
     if (p.live.isEmpty) return localResult(spark, Nil)
@@ -250,7 +269,7 @@ object Searcher {
     if (qt.forall(_._4 == 1L))
       return groups(lit(0L))
         .flatMapGroups { (key: (Long, Long), it: Iterator[StripeBlock]) =>
-          ranked(key._1, stripeTopK(it, k, avgdl, mode))
+          ranked(key._1, stripeHits(it, kern, avgdl))
         }
         .toDF(OutCols: _*)
     // a block [base, max] feeds every stripe it overlaps; ids past the
@@ -260,22 +279,22 @@ object Searcher {
         expr("least(doc_id_base div stripe_w, n_stripes - 1)"),
         expr("least(doc_id_max div stripe_w, n_stripes - 1)"))))
       .flatMapGroups { (key: (Long, Long), it: Iterator[StripeBlock]) =>
-        stripeTopK(it, k, avgdl, mode).map(s => (key._1, s))
+        stripeHits(it, kern, avgdl).map(s => (key._1, s))
       }
-    // merge per-stripe exact top-ks (<= k rows per stripe cross this
-    // shuffle) into the global exact top-k per query
-    BoundedK.perKey(perStripe, k, Scored.BestFirst)
+    // merge per-stripe hits (<= limit rows per stripe cross this
+    // shuffle) into the global answer per query
+    BoundedK.perKey(perStripe, kern.limit, kern.order)
       .flatMap { case (qid, hits) => ranked(qid, hits) }
       .toDF(OutCols: _*)
   }
 
   /** The group body both executor shapes share: one (query, stripe)'s
-    * blocks regrouped per term, then `Wand.topK` over the stripe's doc
+    * blocks regrouped per term, then the kernel over the stripe's doc
     * range. Every doc is scored in exactly one stripe with every term's
-    * covering block present, so per-stripe exact top-ks merge into the
-    * exact global top-k (Wand.topK's [minDoc, maxDoc] contract). */
-  private def stripeTopK(rows: Iterator[StripeBlock], k: Int, avgdl: Double,
-      mode: Mode): Seq[Scored] = {
+    * covering block present, so per-stripe answers merge into the global
+    * one (the kernel's [minDoc, maxDoc] contract). */
+  private def stripeHits(rows: Iterator[StripeBlock], kern: Kernel,
+      avgdl: Double): Seq[Scored] = {
     val byTerm = scala.collection.mutable.LinkedHashMap
       .empty[String, (Double, scala.collection.mutable.ArrayBuffer[PostingBlock])]
     var last: StripeBlock = null
@@ -288,7 +307,7 @@ object Searcher {
     // a conjunctive stripe missing ANY query term has no match in its
     // doc range (the absent term has no posting there) — running the
     // AND loop over the present subset would fabricate matches
-    if (mode == And && byTerm.size < last.n_terms) Nil
+    if (kern.mode == And && byTerm.size < last.n_terms) Nil
     else {
       val tbs = byTerm.iterator.map { case (t, (idf, bs)) =>
         Wand.TermBlocks(t, idf, bs.sortBy(_.doc_id_base).toArray)
@@ -296,17 +315,18 @@ object Searcher {
       val minDoc = last.stripe * last.stripe_w
       val maxDoc = if (last.stripe >= last.n_stripes - 1) Long.MaxValue
         else minDoc + last.stripe_w - 1
-      Wand.topK(tbs, k, avgdl, mode, minDoc, maxDoc)._1
+      kern.run(tbs, avgdl, minDoc, maxDoc)._1
     }
   }
 
   /** Count of conjunctive matches per query — the `(c:…)` match-count
-    * analog (/root/reference/gin.c:1018-1023). */
+    * analog (the reference's gin.c:1018-1023). The matches come from the
+    * executor groups: a lazy plan, which a `count()` of the result skips. */
   def countMatches(spark: SparkSession, indexDir: String, queries: Seq[Query],
                    nBuckets: Int = 32): DataFrame = {
     import spark.implicits._
-    // reuse the scoring pipeline with a huge k is wasteful; count directly
-    val all = searchCandidates(spark, indexDir, queries, nBuckets)
+    val all = searchCandidatesExecutors(spark, indexDir, queries, nBuckets,
+      ExecStripePostings)
     val out = all.groupBy("query_id").agg(count(lit(1)).as("n_matches"))
     // queries with zero matches still emit a row (explicit DEAD-fork rows)
     val ids = queries.map(_.query_id).toDF("query_id")
@@ -314,33 +334,30 @@ object Searcher {
       .withColumn("n_matches", coalesce(col("n_matches"), lit(0L)))
   }
 
-  /** All conjunctive (AND) matching (query_id, doc_id) pairs. Only
-    * blocks overlapping every query term's covered doc ranges are
-    * decoded (pruneBlocks) — the IMT-style pre-merge. */
+  /** All conjunctive (AND) matching (query_id, doc_id) pairs:
+    * `Wand.matches` through the searchTopK dispatch rule, so a small
+    * batch on a resident index starts no job and fills `lastStats`. */
   def searchCandidates(spark: SparkSession, indexDir: String,
                        queries: Seq[Query], nBuckets: Int = 32): DataFrame =
-    candidates(spark, plan(spark, indexDir, queries, And, nBuckets))
+    matches(spark, plan(spark, indexDir, queries, And, nBuckets),
+      queries.size, Long.MaxValue).select("query_id", "doc_id")
 
-  /** searchCandidates over an existing And plan, so a caller that already
-    * planned (Phrase) probes the dictionary once. */
-  private[query] def candidates(spark: SparkSession, p: Plan): DataFrame = {
-    import spark.implicits._
-    if (p.live.isEmpty) return Seq.empty[(Long, Long)].toDF("query_id", "doc_id")
-    val blocks = pruneBlocks(spark, p.handle,
-      p.handle.blocksFor(p.live.values.flatten.toSeq.distinct), p.live)
-    val postings = blocks.select(col("term"),
-        graft.functions.DecodePostings.rows(col("num_docs"),
-          col("doc_deltas"), col("tfs"), col("dls"))
-          .as(Seq("doc_id", "tf", "dl")))
-    val qt = p.live.toSeq.flatMap { case (qid, ts) =>
-      ts.map(t => (qid, t, ts.size))
-    }.toDF("query_id", "term", "n_terms")
-    postings.join(broadcast(qt), "term")
-      .groupBy("query_id", "doc_id")
-      .agg(count(lit(1)).as("nmatch"), first("n_terms").as("n_terms"))
-      .filter(col("nmatch") === col("n_terms"))
-      .select("query_id", "doc_id")
-  }
+  /** searchCandidates on the executor path with a given stripe budget:
+    * countMatches' path, and the striped shape's entry, as
+    * searchTopKWandExecutors is for top-k. */
+  private[graft] def searchCandidatesExecutors(spark: SparkSession,
+      indexDir: String, queries: Seq[Query], nBuckets: Int,
+      stripePostings: Long): DataFrame =
+    executorTopK(spark, plan(spark, indexDir, queries, And, nBuckets),
+      matchKernel(Long.MaxValue), stripePostings).select("query_id", "doc_id")
+
+  /** The AND matches of a planned call as (query_id, rank, doc_id,
+    * score), rank in doc-id order: per query the `limit` smallest
+    * matching doc ids, each with its BM25 score. Phrase takes its
+    * candidates from here, so its planner probes the dictionary once. */
+  private[query] def matches(spark: SparkSession, p: Plan, nQueries: Int,
+      limit: Long): DataFrame =
+    dispatch(spark, p, nQueries, matchKernel(limit))
 
   /** Resolve top-k doc ids to (repo, path, commit) — the SA-range ->
     * (vid, offset) decode analog (/root/reference/src/gin_gin.c:817-863),
@@ -349,43 +366,5 @@ object Searcher {
     val meta = IndexHandle.open(spark, indexDir).docmeta
     topk.join(meta, Seq("doc_id"), "left")
       .select("query_id", "rank", "doc_id", "score", "repo", "path", "commit")
-  }
-
-  /** Interval-intersection pruning on block metadata (AND only), with NO
-    * driver-size cliff: per-term block [base,max] intervals are merged
-    * DISTRIBUTEDLY by IntervalAgg (each term reports <= MaxIvPerTerm
-    * coarsened intervals — metadata rows never collect to the driver) and
-    * CACHED on the IndexHandle (index-static until ingest invalidates),
-    * the tiny per-query interval intersection runs on the driver, and the
-    * surviving intervals semi-join the block table via a broadcast range
-    * join. The shape scales with |query terms| · MaxIvPerTerm, not with
-    * index size — and repeat queries pay no interval jobs at all. */
-  private[graft] def pruneBlocks(spark: SparkSession, handle: IndexHandle,
-      blocks: DataFrame, live: Map[Long, Seq[String]]): DataFrame = {
-    import spark.implicits._
-    val perTerm: Map[String, Array[(Long, Long)]] =
-      handle.intervalsFor(live.values.flatten.toSeq.distinct)
-    val survByTerm =
-      scala.collection.mutable.HashMap.empty[String,
-        scala.collection.mutable.ArrayBuffer[(Long, Long)]]
-    live.foreach { case (_, ts) =>
-      val present = ts.filter(perTerm.contains)
-      if (present.nonEmpty && present.size == ts.size) {
-        var acc = perTerm(present.head)
-        present.tail.foreach { t => acc = Intervals.intersect(acc, perTerm(t)) }
-        if (acc.nonEmpty) present.foreach { t =>
-          survByTerm.getOrElseUpdate(t,
-            scala.collection.mutable.ArrayBuffer.empty) ++= acc
-        }
-      }
-    }
-    if (survByTerm.isEmpty) return blocks.filter(lit(false))
-    val ivRows = survByTerm.toSeq.flatMap { case (t, iv) =>
-      Intervals.merge(iv.toArray).map { case (lo, hi) => (t, lo, hi) }
-    }
-    val ivDf = broadcast(ivRows.toDF("t", "lo", "hi"))
-    blocks.join(ivDf,
-      blocks("term") === ivDf("t") && blocks("doc_id_max") >= ivDf("lo") &&
-        blocks("doc_id_base") <= ivDf("hi"), "left_semi")
   }
 }

@@ -19,6 +19,9 @@ object Scored {
     def compare(a: Scored, b: Scored): Int =
       if (lt(a, b)) -1 else if (lt(b, a)) 1 else 0
   }
+
+  /** Doc order: doc_id ASC, the order `Wand.matches` emits. */
+  val ByDoc: Ordering[Scored] = Ordering.by(_.doc_id)
 }
 
 /** Bounded best-k typed aggregator — the one `--max-matches` rule

@@ -14,9 +14,13 @@ import graft.index.{Bm25, Codec, PostingBlock}
   * compare upper bounds against (θ - 1e-6) so rounding can never discard
   * a doc that would round into the top-k.
   *
-  * This is the one top-k kernel: every Searcher top-k path runs it.
-  * Executors/the handle deliver the (term-pruned, compact) block
-  * lists; the per-query merge is a single tight loop —
+  * This is the one search kernel: every Searcher top-k path runs it, and
+  * unranked AND matching (`matches`: match lists, counts, phrase
+  * candidates) runs the same AND loop with a different sink. The AND
+  * cursor's metadata skip is the doc-level form of a data-induced
+  * predicate: a term's blocks that hold none of the other terms' docs
+  * are never decoded. Executors/the handle deliver the (term-pruned,
+  * compact) block lists; the per-query merge is a single tight loop —
   * the same split Lucene-style engines use. Posting volumes beyond one
   * group's memory are handled by doc-range striping ([minDoc, maxDoc]
   * below).
@@ -90,12 +94,7 @@ object Wand {
     /** Advance to the first doc >= target. Skips whole blocks by their
       * [base, max] metadata without decoding. Returns currentDoc. */
     def advanceTo(target: Long): Long = {
-      if (exhausted) return Long.MaxValue
-      // skip blocks whose max < target (no decode)
-      while (bi < blocks.length && blocks(bi).doc_id_max < target) {
-        bi += 1; di = 0; ids = null
-      }
-      if (exhausted) return Long.MaxValue
+      if (!seekBlock(target)) return Long.MaxValue // no decode
       decodeIfNeeded()
       if (ids(di) >= target) return ids(di)
       // binary search inside the decoded block
@@ -137,7 +136,32 @@ object Wand {
   case class QueryStats(blocksTotal: Int, blocksDecoded: Int,
                         docsScored: Long)
 
-  private def round6(x: Double): Double = Bm25.round6(x)
+  /** Where a loop sends each scored doc. `theta` is the score a doc must
+    * reach to enter, −∞ while the sink takes every doc; `add` returns
+    * false once the sink wants no more docs. */
+  private abstract class Sink {
+    var theta: Double = Double.NegativeInfinity
+    def add(s: Scored): Boolean
+  }
+
+  /** topK's sink: the best k, best first, in the BoundedK.insert heap;
+    * θ is the k-th score once k docs are held. */
+  private final class Best(k: Int) extends Sink {
+    var buf: List[Scored] = Nil
+    def add(s: Scored): Boolean = {
+      buf = BoundedK.insert(buf, s, k)(Scored.BestFirst)
+      if (buf.lengthCompare(k) >= 0) theta = buf.last.score
+      true
+    }
+  }
+
+  /** matches' sink: every doc in doc-id order, an append each, until
+    * `limit` are held; θ stays −∞, so no block is skipped by score. */
+  private final class Matches(limit: Long) extends Sink {
+    val out = Vector.newBuilder[Scored]
+    private var n = 0L
+    def add(s: Scored): Boolean = { out += s; n += 1; n < limit }
+  }
 
   /** Exact top-k over docs in [minDoc, maxDoc]. Returns ((doc_id,
     * score6) ranked, stats). The doc range is the striped-executor
@@ -150,175 +174,200 @@ object Wand {
            mode: Mode = And, minDoc: Long = 0L,
            maxDoc: Long = Long.MaxValue): (Seq[Scored], QueryStats) = {
     if (terms.isEmpty || k <= 0) return (Nil, QueryStats(0, 0, 0))
-    val cursors = terms.map(t => new Cursor(t.idf, t.blocks, avgdl)).toArray
-    var buf: List[Scored] = Nil
-    var scored = 0L
-    def theta: Double =
-      if (buf.lengthCompare(k) < 0) Double.NegativeInfinity else buf.last.score
+    val best = new Best(k)
+    val stats = run(terms, avgdl, mode, best, minDoc, maxDoc)
+    (best.buf, stats)
+  }
 
-    if (mode == And) {
-      // conjunctive block-max AND: blocks are positioned by METADATA
-      // first; a block combination whose Σ blockUB cannot beat θ is
-      // skipped without decoding any of its blocks. Decoding happens only
-      // for combos that survive, and doc-level alignment only inside
-      // those (the full-evaluation analog of the reference's fork
-      // advance, now with whole-block strides).
-      val totalUB = cursors.map(_.termUB).sum
-      var target = minDoc
-      var done = false
-      while (!done) {
-        if (target > maxDoc) done = true
-        // 1. metadata-only block seek
-        var i = 0
-        while (i < cursors.length && !done) {
-          if (!cursors(i).seekBlock(target)) done = true
-          i += 1
-        }
-        if (!done) {
-          val full = buf.lengthCompare(k) >= 0
-          if (full && totalUB < theta - Eps) done = true
-          else {
-            // 2. raise target to the latest lower bound (metadata)
-            var lb = target
-            i = 0
-            while (i < cursors.length) {
-              val b = cursors(i).lowerBound
-              if (b > lb) lb = b
-              i += 1
-            }
-            if (lb > target) target = lb
-            else {
-              // 3. combo skip: Σ blockUB of the CURRENT blocks bounds any
-              //    doc up to the earliest block end
-              var ubSum = 0.0
-              var minMax = Long.MaxValue
-              i = 0
-              while (i < cursors.length) {
-                ubSum += cursors(i).blockUB
-                val m = cursors(i).blockMax
-                if (m < minMax) minMax = m
-                i += 1
-              }
-              if (full && ubSum < theta - Eps) target = minMax + 1
-              else {
-                // 4. decode-align one candidate at target
-                var doc = target
-                i = 0
-                while (i < cursors.length && !done) {
-                  val d = cursors(i).advanceTo(doc)
-                  if (d == Long.MaxValue) done = true
-                  else if (d > doc) doc = d
-                  i += 1
-                }
-                if (!done && doc > maxDoc) done = true
-                if (!done) {
-                  var aligned = true
-                  i = 0
-                  while (i < cursors.length) {
-                    if (cursors(i).currentDoc != doc) aligned = false
-                    i += 1
-                  }
-                  if (aligned) {
-                    var s = 0.0
-                    var j = 0
-                    while (j < cursors.length) {
-                      s += cursors(j).scoreCurrent(); j += 1
-                    }
-                    scored += 1
-                    buf = BoundedK.insert(buf, Scored(doc, round6(s)), k)(
-                      Scored.BestFirst)
-                    target = doc + 1
-                  } else target = doc
-                }
-              }
-            }
-          }
-        }
+  /** The conjunctive matches in [minDoc, maxDoc], in doc-id order, each
+    * with its BM25 score (rounded as in topK): the same AND loop as topK
+    * with θ = −∞, stopped after `limit` matches. So the first `limit`
+    * are the `limit` smallest doc ids, and per-stripe matches
+    * concatenate into the full range's. */
+  def matches(terms: Seq[TermBlocks], limit: Long, avgdl: Double,
+              minDoc: Long = 0L,
+              maxDoc: Long = Long.MaxValue): (Seq[Scored], QueryStats) = {
+    if (terms.isEmpty || limit <= 0) return (Nil, QueryStats(0, 0, 0))
+    val sink = new Matches(limit)
+    val stats = run(terms, avgdl, And, sink, minDoc, maxDoc)
+    (sink.out.result(), stats)
+  }
+
+  private def run(terms: Seq[TermBlocks], avgdl: Double, mode: Mode,
+      sink: Sink, minDoc: Long, maxDoc: Long): QueryStats = {
+    val cursors = terms.map(t => new Cursor(t.idf, t.blocks, avgdl)).toArray
+    val scored =
+      if (mode == And) conjunctive(cursors, sink, minDoc, maxDoc)
+      else disjunctive(cursors, sink, minDoc, maxDoc)
+    QueryStats(terms.map(_.blocks.length).sum,
+      cursors.map(_.blocksDecoded).sum, scored)
+  }
+
+  /** Conjunctive block-max AND: blocks are positioned by METADATA first;
+    * a block combination whose Σ blockUB cannot reach θ is skipped
+    * without decoding any of its blocks. Decoding happens only for combos
+    * that survive, and doc-level alignment only inside those (the
+    * full-evaluation analog of the reference's fork advance, now with
+    * whole-block strides). Returns the number of docs scored. */
+  private def conjunctive(cursors: Array[Cursor], sink: Sink, minDoc: Long,
+      maxDoc: Long): Long = {
+    val totalUB = cursors.map(_.termUB).sum
+    var scored = 0L
+    var target = minDoc
+    var done = false
+    while (!done) {
+      if (target > maxDoc) done = true
+      // 1. metadata-only block seek
+      var i = 0
+      while (i < cursors.length && !done) {
+        if (!cursors(i).seekBlock(target)) done = true
+        i += 1
       }
-    } else {
-      // disjunctive WAND with block-max refinement
-      val cs = cursors.clone()
-      if (minDoc > 0L) {
-        var i = 0
-        while (i < cs.length) { cs(i).advanceTo(minDoc); i += 1 }
-      }
-      var continue = true
-      while (continue) {
-        // sort by current doc (n is tiny: query terms)
-        scala.util.Sorting.stableSort(cs,
-          (a: Cursor, b: Cursor) => a.currentDoc < b.currentDoc)
-        if (cs(0).currentDoc == Long.MaxValue || cs(0).currentDoc > maxDoc)
-          continue = false
+      if (!done) {
+        val th = sink.theta - Eps
+        if (totalUB < th) done = true
         else {
-          // find pivot: first prefix whose Σ termUB >= θ
-          val th = theta - Eps
-          var acc = 0.0
-          var p = -1
-          var i = 0
-          while (i < cs.length && p < 0) {
-            acc += cs(i).termUB
-            if (acc >= th || buf.lengthCompare(k) < 0) p = i
+          // 2. raise target to the latest lower bound (metadata)
+          var lb = target
+          i = 0
+          while (i < cursors.length) {
+            val b = cursors(i).lowerBound
+            if (b > lb) lb = b
             i += 1
           }
-          if (p < 0) continue = false
+          if (lb > target) target = lb
           else {
-            val pivotDoc = cs(p).currentDoc
-            if (pivotDoc == Long.MaxValue) continue = false
-            else if (cs(0).currentDoc == pivotDoc) {
-              // block-max refinement: Σ blockUB over EVERY cursor sitting
-              // on pivotDoc (cursors beyond the pivot index can share the
-              // doc and contribute score — p only bounds the UB prefix)
-              var ubb = 0.0
-              var j = 0
-              while (j < cs.length) {
-                if (cs(j).currentDoc == pivotDoc) ubb += cs(j).blockUB
-                j += 1
+            // 3. combo skip: Σ blockUB of the CURRENT blocks bounds any
+            //    doc up to the earliest block end
+            var ubSum = 0.0
+            var minMax = Long.MaxValue
+            i = 0
+            while (i < cursors.length) {
+              ubSum += cursors(i).blockUB
+              val m = cursors(i).blockMax
+              if (m < minMax) minMax = m
+              i += 1
+            }
+            if (ubSum < th) target = minMax + 1
+            else {
+              // 4. decode-align one candidate at target
+              var doc = target
+              i = 0
+              while (i < cursors.length && !done) {
+                val d = cursors(i).advanceTo(doc)
+                if (d == Long.MaxValue) done = true
+                else if (d > doc) doc = d
+                i += 1
               }
-              if (ubb >= th || buf.lengthCompare(k) < 0) {
-                var s = 0.0
-                var m = 0
-                while (m < cs.length) {
-                  if (cs(m).currentDoc == pivotDoc) s += cs(m).scoreCurrent()
-                  m += 1
+              if (!done && doc > maxDoc) done = true
+              if (!done) {
+                var aligned = true
+                i = 0
+                while (i < cursors.length) {
+                  if (cursors(i).currentDoc != doc) aligned = false
+                  i += 1
                 }
-                scored += 1
-                buf = BoundedK.insert(buf, Scored(pivotDoc, round6(s)), k)(
-                  Scored.BestFirst)
+                if (aligned) {
+                  var s = 0.0
+                  var j = 0
+                  while (j < cursors.length) {
+                    s += cursors(j).scoreCurrent(); j += 1
+                  }
+                  scored += 1
+                  if (!sink.add(Scored(doc, Bm25.round6(s)))) done = true
+                  target = doc + 1
+                } else target = doc
               }
-              var m = 0
-              while (m < cs.length) {
-                if (cs(m).currentDoc == pivotDoc) cs(m).next()
-                m += 1
-              }
-            } else {
-              // BMW shallow move (Ding & Suel NextShallow): if the pivot
-              // prefix's CURRENT blocks cannot beat θ, jump past the
-              // earliest of (their block ends, next cursor's doc - 1)
-              // without decoding — docs in that range can only draw
-              // contributions from the prefix blocks just bounded
-              var ubb = 0.0
-              var minMax = Long.MaxValue
-              var j = 0
-              while (j <= p) {
-                ubb += cs(j).blockUB
-                val m = cs(j).blockMax
-                if (m < minMax) minMax = m
-                j += 1
-              }
-              if (p + 1 < cs.length && cs(p + 1).currentDoc - 1 < minMax)
-                minMax = cs(p + 1).currentDoc - 1
-              if (buf.lengthCompare(k) >= 0 && ubb < th &&
-                  minMax + 1 > pivotDoc)
-                cs(0).advanceTo(minMax + 1)
-              else
-                cs(0).advanceTo(pivotDoc)
             }
           }
         }
       }
     }
-    val stats = QueryStats(terms.map(_.blocks.length).sum,
-      cursors.map(_.blocksDecoded).sum, scored)
-    (buf, stats)
+    scored
+  }
+
+  /** Disjunctive WAND with block-max refinement. Returns the number of
+    * docs scored. */
+  private def disjunctive(cursors: Array[Cursor], sink: Sink, minDoc: Long,
+      maxDoc: Long): Long = {
+    var scored = 0L
+    val cs = cursors.clone()
+    if (minDoc > 0L) {
+      var i = 0
+      while (i < cs.length) { cs(i).advanceTo(minDoc); i += 1 }
+    }
+    var continue = true
+    while (continue) {
+      // sort by current doc (n is tiny: query terms)
+      scala.util.Sorting.stableSort(cs,
+        (a: Cursor, b: Cursor) => a.currentDoc < b.currentDoc)
+      if (cs(0).currentDoc == Long.MaxValue || cs(0).currentDoc > maxDoc)
+        continue = false
+      else {
+        // find pivot: first prefix whose Σ termUB reaches θ
+        val th = sink.theta - Eps
+        var acc = 0.0
+        var p = -1
+        var i = 0
+        while (i < cs.length && p < 0) {
+          acc += cs(i).termUB
+          if (acc >= th) p = i
+          i += 1
+        }
+        if (p < 0) continue = false
+        else {
+          val pivotDoc = cs(p).currentDoc
+          if (pivotDoc == Long.MaxValue) continue = false
+          else if (cs(0).currentDoc == pivotDoc) {
+            // block-max refinement: Σ blockUB over EVERY cursor sitting
+            // on pivotDoc (cursors beyond the pivot index can share the
+            // doc and contribute score — p only bounds the UB prefix)
+            var ubb = 0.0
+            var j = 0
+            while (j < cs.length) {
+              if (cs(j).currentDoc == pivotDoc) ubb += cs(j).blockUB
+              j += 1
+            }
+            if (ubb >= th) {
+              var s = 0.0
+              var m = 0
+              while (m < cs.length) {
+                if (cs(m).currentDoc == pivotDoc) s += cs(m).scoreCurrent()
+                m += 1
+              }
+              scored += 1
+              sink.add(Scored(pivotDoc, Bm25.round6(s)))
+            }
+            var m = 0
+            while (m < cs.length) {
+              if (cs(m).currentDoc == pivotDoc) cs(m).next()
+              m += 1
+            }
+          } else {
+            // BMW shallow move (Ding & Suel NextShallow): if the pivot
+            // prefix's CURRENT blocks cannot reach θ, jump past the
+            // earliest of (their block ends, next cursor's doc - 1)
+            // without decoding — docs in that range can only draw
+            // contributions from the prefix blocks just bounded
+            var ubb = 0.0
+            var minMax = Long.MaxValue
+            var j = 0
+            while (j <= p) {
+              ubb += cs(j).blockUB
+              val m = cs(j).blockMax
+              if (m < minMax) minMax = m
+              j += 1
+            }
+            if (p + 1 < cs.length && cs(p + 1).currentDoc - 1 < minMax)
+              minMax = cs(p + 1).currentDoc - 1
+            if (ubb < th && minMax + 1 > pivotDoc)
+              cs(0).advanceTo(minMax + 1)
+            else
+              cs(0).advanceTo(pivotDoc)
+          }
+        }
+      }
+    }
+    scored
   }
 }

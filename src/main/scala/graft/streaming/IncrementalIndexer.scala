@@ -59,12 +59,14 @@ object IncrementalIndexer {
                   conf: Builder.Config, batchId: Long,
                   autoCompact: Boolean = true): Unit = {
     val marker = s"$indexDir/_COMMIT_stream_batch_$batchId"
+    val staging = s"$indexDir/_staging_b$batchId"
     if (Fs.exists(spark, marker)) {
       // the batch committed but a crash between the marker write and the
-      // base-marker cleanup left _BASE_b<id> behind: clear it here, or
-      // Compactor.foldDictionary (which refuses to run while an
+      // cleanup left _BASE_b<id> (or the staging dir) behind: clear it
+      // here, or Compactor.foldDictionary (which refuses to run while an
       // unfinished-batch marker exists) would be blocked forever
       Fs.delete(spark, s"$indexDir/_BASE_b$batchId")
+      Fs.delete(spark, staging)
       return
     }
     Builder.recoverDictionary(spark, indexDir) // heal an interrupted fold
@@ -96,7 +98,6 @@ object IncrementalIndexer {
         Fs.write(spark, baseMarker, b.toString)
         b
       }
-    val staging = s"$indexDir/_staging_b$batchId"
     // staged append -> promote under batch-prefixed filenames (idempotent)
     def promote(table: String): Unit =
       Fs.promoteStaged(spark, s"$staging/$table", s"$indexDir/$table",
@@ -158,6 +159,7 @@ object IncrementalIndexer {
     withIds.unpersist()
     Fs.write(spark, marker, s"""{"docs":$nDocsBatch,"base":$base}""")
     Fs.delete(spark, baseMarker)
+    Fs.delete(spark, staging) // every staged table was promoted out of it
     IndexHandle.invalidate(spark, indexDir)
     // size-tiered auto-compaction AFTER the commit marker: the batch is
     // durable either way, and compact() itself is crash-safe (swap +

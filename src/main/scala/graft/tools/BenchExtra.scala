@@ -7,15 +7,17 @@ import graft.Gate
   * Bench.scala is frozen, so per-query isolation work lives here.
   *
   * Times a SUBSET of the gate queries with the same methodology as the
-  * frozen Bench (same session shape, `.count()` action, min-of-reps) and
-  * optionally dumps `.explain("formatted")` for each query to a plans
-  * directory, so plan claims in OPTIMIZATION_r06.md are reproducible.
+  * frozen Bench (same session shape, `.count()` action, min-of-reps),
+  * counts the Spark jobs of each query's last rep (noise cannot move
+  * them), and optionally dumps `.explain("formatted")` for each query to
+  * a plans directory, so plan claims in OPTIMIZATION_r06.md are
+  * reproducible.
   *
   * Usage:
   *   sbt "runMain graft.tools.BenchExtra [reps] [q1,q2,... | all]"
   * Env:
   *   SPARK_GRAFT_SF_DIR  data dir (default /root/testdata/sf0.1)
-  *   SPARK_GRAFT_CPUS    cores (default 32)
+  *   SPARK_GRAFT_CPUS    cores (default: the host's available processors)
   *   GRAFT_PLANS_DIR     if set, write <query><GRAFT_PLANS_SUFFIX>.txt
   *   GRAFT_PLANS_SUFFIX  suffix for plan files (default "_plan")
   */
@@ -37,7 +39,8 @@ object BenchExtra {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val cpus = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
+      .getOrElse(Runtime.getRuntime.availableProcessors())
     val reps = if (args.length > 0) args(0).toInt else 3
     val names: Seq[String] =
       if (args.length < 2 || args(1) == "all") Gate.queries.keys.toSeq.sorted
@@ -55,11 +58,18 @@ object BenchExtra {
       .config("spark.sql.session.timeZone", "UTC")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    val jobCount = new java.util.concurrent.atomic.AtomicInteger()
+    spark.sparkContext.addSparkListener(
+      new org.apache.spark.scheduler.SparkListener {
+        override def onJobStart(
+            e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+          jobCount.incrementAndGet()
+      })
     try {
       // pre-seed the shared gate index (idempotent build) + JIT warm-up
       Gate.indexDir(spark, sfDir)
       val runs = scala.collection.mutable.LinkedHashMap
-        .empty[String, Seq[Double]]
+        .empty[String, (Seq[Double], Int)] // (rep times, last rep's jobs)
       names.foreach { name =>
         val fn = Gate.queries(name)
         spark.sparkContext.setJobDescription(s"bench-extra: $name")
@@ -71,15 +81,22 @@ object BenchExtra {
             java.nio.file.Paths.get(d, s"$name$plansSuffix.txt"),
             plan.getBytes("UTF-8"))
         }
-        val ts = (1 to reps).map { _ => time { fn(spark, sfDir).count() }._2 }
-        runs(name) = ts
-        println(f"EXTRA $name min=${ts.min}%.3f runs=${
+        val ts = (1 to reps).map { _ =>
+          org.apache.spark.sql.GraftBridge.drainListeners(spark.sparkContext)
+          jobCount.set(0)
+          val t = time { fn(spark, sfDir).count() }._2
+          org.apache.spark.sql.GraftBridge.drainListeners(spark.sparkContext)
+          t
+        }
+        runs(name) = (ts, jobCount.get)
+        println(f"EXTRA $name min=${ts.min}%.3f jobs=${jobCount.get} runs=${
           ts.map(t => f"$t%.2f").mkString("[", ",", "]")}")
       }
-      val total = runs.values.map(_.min).sum
-      println(runs.map { case (n, ts) => s""""$n":${f"${ts.min}%.3f"}""" }
-        .mkString(s"""EXTRA_JSON {"total_min":${f"$total%.3f"},"queries":{""",
-          ",", "}}"))
+      val total = runs.values.map(_._1.min).sum
+      def obj(f: ((Seq[Double], Int)) => String): String =
+        runs.map { case (n, r) => s""""$n":${f(r)}""" }.mkString("{", ",", "}")
+      println(s"""EXTRA_JSON {"total_min":${f"$total%.3f"},"queries":${
+        obj(r => f"${r._1.min}%.3f")},"jobs":${obj(_._2.toString)}}""")
     } finally {
       spark.stop()
     }

@@ -4,7 +4,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
 import graft.index.{Codec, Tokenizer}
-import graft.query.{BoundedK, Intervals, Scored}
+import graft.query.{BoundedK, Scored}
 
 /** Deterministic property harness over scalacheck Gen (scalatestplus is
   * not in the offline cache; seeds fixed for reproducibility). */
@@ -15,19 +15,10 @@ trait PropHelpers {
       gen.apply(params, Seed(42L + i)).foreach(f)
     }
   }
-  def forAll[A, B](ga: Gen[A], gb: Gen[B])(f: (A, B) => Unit): Unit = {
-    val params = Gen.Parameters.default
-    (0 until 100).foreach { i =>
-      for {
-        a <- ga.apply(params, Seed(42L + i))
-        b <- gb.apply(params, Seed(1042L + i))
-      } f(a, b)
-    }
-  }
 }
 
 /** Pure-Scala unit properties (no Spark): codec round-trip, tokenizer
-  * invariants, interval algebra, top-k aggregator semantics. */
+  * invariants, top-k aggregator semantics. */
 class CoreSpec extends AnyFunSuite with PropHelpers {
 
   // --- codec: encode . decode == identity (FIXTURES.md §6) ---
@@ -90,27 +81,6 @@ class CoreSpec extends AnyFunSuite with PropHelpers {
       Seq("def", "foo_bar", "x1", "return", "x1", "2"))
     assert(Tokenizer.tokens("").isEmpty)
     assert(Tokenizer.tokens("...").isEmpty)
-  }
-
-  // --- interval algebra (fork compaction / IMT analogs) ---
-  test("mergeIntervals coalesces overlapping and adjacent runs") {
-    val m = Intervals.merge(Array((5L, 9L), (1L, 3L), (4L, 6L), (20L, 30L)))
-    assert(m.toSeq == Seq((1L, 9L), (20L, 30L)))
-  }
-
-  test("intersectIntervals agrees with brute force on random sets") {
-    val genIv = Gen.listOfN(8, for {
-      lo <- Gen.chooseNum(0L, 200L); len <- Gen.chooseNum(0L, 30L)
-    } yield (lo, lo + len))
-    forAll(genIv, genIv) { (a, b) =>
-      val ma = Intervals.merge(a.toArray)
-      val mb = Intervals.merge(b.toArray)
-      val got = Intervals.intersect(ma, mb)
-        .flatMap { case (l, h) => l to h }.toSet
-      val want = ma.flatMap { case (l, h) => l to h }.toSet
-        .intersect(mb.flatMap { case (l, h) => l to h }.toSet)
-      assert(got == want)
-    }
   }
 
   // --- the bounded best-k aggregator == sort.take(k) under any

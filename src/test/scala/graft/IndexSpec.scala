@@ -221,7 +221,7 @@ class IndexSpec extends SparkTestBase {
   }
 
   test("driver top-k starts no Spark job on a resident index; non-resident ranks the same") {
-    import org.apache.spark.TestBridge
+    import org.apache.spark.sql.GraftBridge
     import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
     import graft.query.IndexHandle
     val (rare, _, common, common2) = localTerms
@@ -246,10 +246,10 @@ class IndexSpec extends SparkTestBase {
         collected(qs.head, mode)
         assert(IndexHandle.open(spark, localDir, 8).driverBlocksResident)
         for (q <- qs) {
-          TestBridge.drainListeners(spark.sparkContext)
+          GraftBridge.drainListeners(spark.sparkContext)
           jobs.set(0)
           val got = collected(q, mode)
-          TestBridge.drainListeners(spark.sparkContext)
+          GraftBridge.drainListeners(spark.sparkContext)
           assert(jobs.get == 0, s"$mode query ${q.query_id}: ${jobs.get} jobs")
           assertRanks(got, want.filter(_._1 == q.query_id),
             s"resident $mode query ${q.query_id}")
@@ -336,18 +336,52 @@ class IndexSpec extends SparkTestBase {
   }
 
   test("match counting: engine == oracle, zero-match queries emit rows") {
-    val qs = sampleQueries
-    val counts = Searcher.countMatches(spark, indexDir, qs, nBuckets = 8)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(counts.size == qs.size)
-    assert(counts(4L) == 0L) // unknown term
-    assert(counts(1L) > 0L)
-    // oracle: docs containing every distinct term
-    val withIds = Builder.withDocIds(corpus).cache()
-    val q2terms = Tokenizer.tokens(qs(1).text).distinct
-    val oracleCount = withIds.filter(q2terms.map(t =>
-      array_contains(Builder.tokensCol(col("content")), t)).reduce(_ && _)).count()
-    assert(counts(2L) == oracleCount)
+    import spark.implicits._
+    // oracle: per query, the docs whose tokens hold every distinct term
+    val docTokens = Builder.withDocIds(corpus).select($"doc_id", $"content")
+      .as[(Long, String)].collect()
+      .map { case (d, c) => d -> Tokenizer.tokens(c).toSet }
+    def want(q: Query): Set[Long] = {
+      val ts = Tokenizer.tokens(q.text).distinct
+      docTokens.collect { case (d, toks) if ts.forall(toks.contains) => d }.toSet
+    }
+    def pairs(df: org.apache.spark.sql.DataFrame): Map[Long, Set[Long]] =
+      df.as[(Long, Long)].collect().groupBy(_._1)
+        .map { case (q, rs) => q -> rs.map(_._2).toSet }
+    // the dispatch rule sends a small batch's candidates to the driver and
+    // a batch of ExecBatchThreshold queries to executors (counts always
+    // run there); the striped shape has its own stripe-budget entry
+    // (stripePostings far below every Σ df)
+    val copies = (Searcher.ExecBatchThreshold + sampleQueries.size - 1) /
+      sampleQueries.size
+    val big = (0 until copies).flatMap(i =>
+      sampleQueries.map(q => q.copy(query_id = i * 100L + q.query_id)))
+    for ((path, qs) <- Seq("driver" -> sampleQueries, "executor" -> big,
+                           "striped" -> sampleQueries)) {
+      val cands = path match {
+        case "striped" =>
+          Searcher.searchCandidatesExecutors(spark, indexDir, qs, 8, 32L)
+        case _ => Searcher.searchCandidates(spark, indexDir, qs, nBuckets = 8)
+      }
+      val got = pairs(cands)
+      qs.foreach { q =>
+        assert(got.getOrElse(q.query_id, Set.empty) == want(q),
+          s"$path query ${q.query_id}")
+      }
+      // the driver kernel reports its work counters; executors do not
+      if (path == "driver") assert(Searcher.lastStats.size == 6, path)
+      if (path == "executor") assert(Searcher.lastStats.isEmpty, path)
+      if (path != "striped") {
+        val counts = Searcher.countMatches(spark, indexDir, qs, nBuckets = 8)
+          .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+        assert(counts.size == qs.size, path)
+        qs.foreach { q =>
+          assert(counts(q.query_id) == want(q).size.toLong,
+            s"$path count ${q.query_id}")
+        }
+        assert(counts(4L) == 0L && counts(1L) > 0L, path) // unknown term; hits
+      }
+    }
   }
 
   test("docID assignment parallelizes inside one giant repo (monorepo)") {

@@ -509,9 +509,15 @@ class OpsSpec extends SparkTestBase {
     val evals = spark.sparkContext.longAccumulator("chain edge evaluations")
     val countedChain = spark.range(0L, (n - 1).toLong).as[Long]
       .map { i => evals.add(1L); (i, i + 1) }.toDF("doc_a", "doc_b")
+    val persistedBefore = spark.sparkContext.getPersistentRDDs.size
     val ok = graft.ops.Dedup.connectedComponents(nodes, countedChain,
         maxDriverEdges = 0L)
       .as[(Long, Long)].collect()
+    // every superseded star round's checkpoint blocks are freed: only the
+    // returned frame's stay persisted
+    val persistedAfter = spark.sparkContext.getPersistentRDDs.size
+    assert(persistedAfter - persistedBefore <= 1,
+      s"$persistedBefore -> $persistedAfter persisted RDDs")
     assert(ok.length == n)
     assert(ok.forall(_._2 == 0L)) // one component, rep = min id
     assert(evals.value == n - 1, s"${evals.value} edge evaluations")

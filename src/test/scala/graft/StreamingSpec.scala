@@ -31,6 +31,8 @@ class StreamingSpec extends SparkTestBase {
       ms.addData(b2); q.processAllAvailable()
       ms.addData(b3); q.processAllAvailable()
     } finally q.stop()
+    // committed batches leave no staging directory behind
+    assert(new java.io.File(dir).list().filter(_.startsWith("_staging_b")).isEmpty)
 
     // full batch rebuild over the union
     val fullDir = tmpDir("full-idx")
@@ -376,6 +378,8 @@ class StreamingSpec extends SparkTestBase {
     // postings_raw did not double-append
     assert(spark.read.parquet(s"$dir/postings_raw").count() ==
       spark.read.parquet(s"$fullDir/postings_raw").count())
+    // and the committed retries left no staging directory behind
+    assert(new java.io.File(dir).list().filter(_.startsWith("_staging_b")).isEmpty)
   }
 
   test("dictionary ingest is O(batch): base files untouched, deltas folded by compact") {

@@ -39,6 +39,29 @@ class WandSpec extends AnyFunSuite with PropHelpers {
       })
   } yield Corpus(terms.toMap, avgdl)
 
+  private def termBlocks(c: Corpus, nDocs: Long,
+                         blockSize: Int): Seq[Wand.TermBlocks] =
+    c.terms.map { case (t, ps) =>
+      Wand.TermBlocks(t, Bm25.idf(nDocs, ps.size.toLong),
+        mkBlocks(t, ps, c.avgdl, blockSize))
+    }.toSeq
+
+  /** Brute-force AND over the decoded blocks: every doc in [lo, hi] that
+    * holds all terms, in doc order, with its rounded BM25 score. */
+  private def bruteMatches(tbs: Seq[Wand.TermBlocks], avgdl: Double,
+                           lo: Long, hi: Long): Seq[(Long, Double)] = {
+    val perTerm = tbs.map { tb =>
+      tb.idf -> tb.blocks.flatMap(Builder.decodeBlock).map(p => p.doc_id -> p).toMap
+    }
+    perTerm.map(_._2.keySet).reduce(_ intersect _).toSeq.sorted
+      .filter(d => d >= lo && d <= hi)
+      .map { d =>
+        d -> Bm25.round6(perTerm.map { case (idf, ps) =>
+          idf * (Bm25.K1 + 1.0) * Bm25.tfNorm(ps(d).tf, ps(d).dl, avgdl)
+        }.sum)
+      }
+  }
+
   private def brute(c: Corpus, nDocs: Long, k: Int,
                     conj: Boolean): Seq[(Long, Double)] = {
     val dfs = c.terms.map { case (t, ps) => t -> ps.size.toLong }
@@ -64,10 +87,7 @@ class WandSpec extends AnyFunSuite with PropHelpers {
     forAll(genCorpus, 150) { c =>
       val nDocs = 200L
       for (blockSize <- Seq(4, 16, 64); k <- Seq(1, 5, 20)) {
-        val tbs = c.terms.map { case (t, ps) =>
-          Wand.TermBlocks(t, Bm25.idf(nDocs, ps.size.toLong),
-            mkBlocks(t, ps, c.avgdl, blockSize))
-        }.toSeq
+        val tbs = termBlocks(c, nDocs, blockSize)
         val (and, _) = Wand.topK(tbs, k, c.avgdl, Wand.And)
         assert(and.map(s => (s.doc_id, s.score)) == brute(c, nDocs, k, conj = true),
           s"AND blockSize=$blockSize k=$k")
@@ -94,6 +114,66 @@ class WandSpec extends AnyFunSuite with PropHelpers {
     assert(stats.docsScored <= 3)
   }
 
+  test("matches == brute-force AND in doc order, for every limit and doc range") {
+    val genCase = for {
+      c <- genCorpus
+      lo <- Gen.chooseNum(0L, 210L)
+      w <- Gen.chooseNum(0L, 210L)
+    } yield (c, lo, lo + w)
+    forAll(genCase, 150) { case (c, lo, hi) =>
+      for (blockSize <- Seq(4, 16, 64)) {
+        val tbs = termBlocks(c, 200L, blockSize)
+        for ((minDoc, maxDoc) <- Seq((0L, Long.MaxValue), (lo, hi))) {
+          val want = bruteMatches(tbs, c.avgdl, minDoc, maxDoc)
+          val n = want.size.toLong
+          for (limit <- Seq(0L, 1L, 3L, n - 1, n, n + 1, Long.MaxValue)) {
+            val (got, stats) = Wand.matches(tbs, limit, c.avgdl, minDoc, maxDoc)
+            val clue = s"blockSize=$blockSize range=[$minDoc, $maxDoc] limit=$limit"
+            assert(got.map(s => (s.doc_id, s.score)) ==
+              want.take(math.max(0L, math.min(limit, n)).toInt), clue)
+            assert(stats.docsScored == got.size, clue)
+          }
+        }
+        // the striped-executor contract: per-stripe matches, concatenated
+        // in stripe order, are the full range's matches
+        val full = Wand.matches(tbs, Long.MaxValue, c.avgdl)._1
+        for (width <- Seq(7L, 50L, 200L)) {
+          val striped = (0L until 200L by width).flatMap { s =>
+            Wand.matches(tbs, Long.MaxValue, c.avgdl, s,
+              if (s + width >= 200L) Long.MaxValue else s + width - 1)._1
+          }
+          assert(striped == full, s"blockSize=$blockSize width=$width")
+        }
+      }
+    }
+  }
+
+  test("matches: a rare term's one whole-range block decodes only the common blocks holding its docs") {
+    // the rare term's single block spans the whole doc space, so it
+    // overlaps every common block: pruning by block [base, max]
+    // intervals keeps them all, while the AND cursor decodes only the
+    // common blocks that hold one of the rare docs
+    val avgdl = 50.0
+    val rareDocs = Seq(0L, 6000L, 11999L)
+    val rare = mkBlocks("rare", rareDocs.map(d => (d, 3, 40)), avgdl, 64)
+    val common = mkBlocks("common",
+      (0 until 12000).map(i => (i.toLong, 1, 50)), avgdl, 64)
+    assert(rare.length == 1)
+    assert(common.forall(b =>
+      b.doc_id_max >= rare.head.doc_id_base && b.doc_id_base <= rare.head.doc_id_max))
+    val holding = common.count(b =>
+      rareDocs.exists(d => d >= b.doc_id_base && d <= b.doc_id_max))
+    assert(holding == 3)
+    val tbs = Seq(
+      Wand.TermBlocks("rare", Bm25.idf(20000, 3), rare),
+      Wand.TermBlocks("common", Bm25.idf(20000, 12000), common))
+    val (hits, stats) = Wand.matches(tbs, Long.MaxValue, avgdl)
+    assert(hits.map(_.doc_id) == rareDocs)
+    assert(stats.blocksTotal == 1 + common.length)
+    assert(stats.blocksDecoded == 1 + holding,
+      s"decoded ${stats.blocksDecoded} of ${stats.blocksTotal}")
+  }
+
   test("per-stripe topK merge == full-range topK (striped-executor contract)") {
     // Wand.topK's [minDoc, maxDoc] contract: partition the doc space into
     // arbitrary contiguous stripes, run exact topK per stripe over the
@@ -103,10 +183,7 @@ class WandSpec extends AnyFunSuite with PropHelpers {
       val nDocs = 200L
       for (blockSize <- Seq(4, 16); k <- Seq(3, 10);
            width <- Seq(7L, 50L, 200L)) {
-        val tbs = c.terms.map { case (t, ps) =>
-          Wand.TermBlocks(t, Bm25.idf(nDocs, ps.size.toLong),
-            mkBlocks(t, ps, c.avgdl, blockSize))
-        }.toSeq
+        val tbs = termBlocks(c, nDocs, blockSize)
         for (mode <- Seq(Wand.And, Wand.Or)) {
           val full = Wand.topK(tbs, k, c.avgdl, mode)._1
             .map(s => (s.doc_id, s.score))
@@ -127,5 +204,7 @@ class WandSpec extends AnyFunSuite with PropHelpers {
     val tb = Wand.TermBlocks("t", 1.0,
       mkBlocks("t", Seq((1L, 1, 10)), 50.0, 8))
     assert(Wand.topK(Seq(tb), 0, 50.0, Wand.Or)._1.isEmpty)
+    assert(Wand.matches(Nil, 10L, 50.0)._1.isEmpty)
+    assert(Wand.matches(Seq(tb), 0L, 50.0)._1.isEmpty)
   }
 }
