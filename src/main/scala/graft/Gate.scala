@@ -302,9 +302,11 @@ object Gate {
     Builder.dictionary(s, indexDir(s, dir))
       .select(col("term"), col("df").cast("long"), col("cf").cast("long"))
 
-  def qStats(s: SparkSession, dir: String): DataFrame =
-    s.read.parquet(s"${indexDir(s, dir)}/stats")
+  def qStats(s: SparkSession, dir: String): DataFrame = {
+    import s.implicits._
+    Seq(Builder.loadStats(s, indexDir(s, dir))).toDF()
       .select(col("n_docs").cast("long"), round(col("avgdl"), 6).as("avgdl"))
+  }
 
   def qPostings(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._

@@ -17,14 +17,14 @@ import scala.collection.mutable.ArrayBuffer
   * {{{
   *   corpus_ids/  CorpusRow: id-stamped corpus snapshot (dl, sha256, content)
   *   docmeta/     doc_id, repo, path, commit, lang, dl, content_sha256
-  *   stats/       n_docs, avgdl
+  *   _COMMIT_stats            {"n_docs":N,"avgdl":A}  (the stats record)
   *   dictionary/bucket=B/     term, df, cf
   *   dict_deltas/bucket=B/    term, df, cf   (streamed, folded by compaction)
   *   postings_raw/bucket=B/   term, doc_id, tf, dl      (staged, resumable)
   *   postings/segment=G/      PostingBlock rows (segment=s<batch>: streamed)
   *   positions/bucket=B/      term, doc_id, n_pos, pos_deltas  (optional)
   *   trigrams/bucket=B/       gram, doc_id                     (optional)
-  *   manifest/    stage, partition_id, rows, checksum, status
+  *   _COMMIT_segment_G        {"rows":R,"checksum":C}  (verifySegments)
   * }}}
   *
   * Scale design notes (for a 1000-executor / 100 TB deployment):
@@ -85,9 +85,13 @@ object Builder {
     * function of the data order (sampling only moves partition
     * boundaries, never the order), so resumed builds stay byte-identical
     * — the deterministic-permutation analog
-    * (/root/reference/src/gin_gin.c:103-112). */
+    * (the reference's src/gin_gin.c:103-112). `keep` names the columns
+    * to carry past the sort (all when empty): nothing prunes through the
+    * RDD conversion, so a caller sorting on wide keys it does not return
+    * drops them here. */
   def withDocIds(corpus: DataFrame, partitions: Int = 0,
-                 orderCols: Seq[String] = Seq("repo", "path", "commit")): DataFrame = {
+                 orderCols: Seq[String] = Seq("repo", "path", "commit"),
+                 keep: Seq[String] = Nil): DataFrame = {
     val spark = corpus.sparkSession
     import org.apache.spark.sql.types.{LongType, StructField, StructType}
     // explicit partition count (caller's Config.shufflePartitions when
@@ -96,9 +100,10 @@ object Builder {
     // (pre-explode-small) corpus into few tasks and serialize the
     // sha/tokenize pass downstream
     val nPart = partitionCount(spark, partitions)
-    val sorted = corpus
+    val ordered = corpus
       .repartitionByRange(nPart, orderCols.map(col): _*)
       .sortWithinPartitions(orderCols.head, orderCols.tail: _*)
+    val sorted = if (keep.isEmpty) ordered else ordered.select(keep.map(col): _*)
     val schema = StructType(sorted.schema.fields :+
       StructField("doc_id", LongType, nullable = false))
     // zipWithIndex = one cheap count job over the sorted shuffle output
@@ -144,10 +149,32 @@ object Builder {
     snapshot.select("doc_id", "repo", "path", "commit", "lang", "dl",
       "content_sha256")
 
-  /** One-row (n_docs, avgdl) aggregate over a docmeta table. */
-  def statsOf(docmeta: DataFrame): DataFrame =
-    docmeta.agg(count(lit(1)).as("n_docs"),
-      avg(col("dl").cast("double")).as("avgdl"))
+  /** (doc count, exact dl sum) of a frame with a dl column, in one
+    * aggregate: what the stats record is computed from. */
+  def docTotals(docs: DataFrame): (Long, Long) = {
+    val r = docs.agg(count(lit(1)),
+      coalesce(sum(col("dl").cast("long")), lit(0L))).head()
+    (r.getLong(0), r.getLong(1))
+  }
+
+  /** The stats record: the `_COMMIT_stats` marker, whose payload
+    * `{"n_docs":N,"avgdl":A}` is the index's one copy of its collection
+    * stats, as the reference keeps its counts in the header of its one
+    * index blob (the reference's src/gin_gin.c:1824-1907). */
+  private def statsRecord(indexDir: String): String = s"$indexDir/_COMMIT_stats"
+
+  private val StatsPayload = """\{"n_docs":(\d+),"avgdl":([-0-9.eE]+)\}""".r
+
+  /** Write the record for `nDocs` docs holding `dlSum` tokens, replacing
+    * it whole (Fs.replace). avgdl = dlSum / nDocs is bit-identical to
+    * Spark's avg(cast(dl as double)) over the same rows, and ingest's
+    * `math.round(avgdl * nDocs)` gives dlSum back while it is below 2^51. */
+  def writeStats(spark: SparkSession, indexDir: String, nDocs: Long,
+                 dlSum: Long): Unit = {
+    require(dlSum < (1L << 51), s"dl sum $dlSum of $indexDir reaches 2^51")
+    graft.util.Fs.replace(spark, statsRecord(indexDir),
+      s"""{"n_docs":$nDocs,"avgdl":${dlSum.toDouble / nDocs}}""")
+  }
 
   /** The layout an append or rewrite of an existing index must follow:
     * the params in its own _META.json (a mismatched nBuckets would write
@@ -352,11 +379,9 @@ object Builder {
 
     val corpusIdsDir = s"$outDir/corpus_ids"
     val docmetaDir = s"$outDir/docmeta"
-    val statsDir = s"$outDir/stats"
     val dictDir = s"$outDir/dictionary"
     val rawDir = s"$outDir/postings_raw"
     val postDir = s"$outDir/postings"
-    val manifestDir = s"$outDir/manifest"
     val nPart = partitionCount(spark, conf.shufflePartitions)
 
     // ---- stage 0: id-stamped corpus snapshot --------------------------
@@ -391,26 +416,16 @@ object Builder {
     }
 
     // ---- stage 2: stats ----------------------------------------------
-    // computed once (head), persisted as a 1-row table; the marker
-    // payload carries the values so the rest of the build needs no
-    // read-back job
+    // one aggregate over docmeta, kept only in the stats record: the rest
+    // of the build and every reader parse it with no Spark job. An empty
+    // corpus stops here, before its marker, with a named error.
     if (!committed(spark, outDir, "_COMMIT_stats")) timed("stats") {
-      val st = statsOf(spark.read.parquet(docmetaDir))
-        .as[(Long, Double)].head()
-      Seq(Stats(st._1, st._2)).toDS().coalesce(1)
-        .write.mode(SaveMode.Overwrite).parquet(statsDir)
-      commit(spark, outDir, "_COMMIT_stats",
-        s"""{"n_docs":${st._1},"avgdl":${st._2}}""")
+      val (n, dlSum) = docTotals(spark.read.parquet(docmetaDir))
+      if (n == 0)
+        throw new IllegalArgumentException("empty corpus: nothing to index")
+      writeStats(spark, outDir, n, dlSum)
     }
-    val Stats(nDocs, avgdl) = {
-      val payload = graft.util.Fs.read(spark, s"$outDir/_COMMIT_stats")
-      val n = """"n_docs":(\d+)""".r.findFirstMatchIn(payload).map(_.group(1).toLong)
-      val a = """"avgdl":([-0-9.eE]+)""".r.findFirstMatchIn(payload).map(_.group(1).toDouble)
-      (n, a) match {
-        case (Some(nd), Some(ad)) => Stats(nd, ad)
-        case _ => loadStats(spark, outDir) // marker from an older layout
-      }
-    }
+    val nDocs = loadStats(spark, outDir).n_docs
 
     // ---- stage 3: postings_raw ----------------------------------------
     // postingsOf needs no shuffle of its own; the only data movement is
@@ -460,13 +475,11 @@ object Builder {
     // ---- stage 5: block-encoded postings, one committable segment per
     //      bucket group (per-partition lineage + resume); see
     //      encodeSegment for the salting/skew design ---------------------
-    val manifestRows = ArrayBuffer.empty[ManifestRow]
     for (g <- 0 until conf.nSegments) {
       val segDir = s"$postDir/segment=$g"
       val marker = s"_COMMIT_segment_$g"
       if (!committed(spark, outDir, marker)) timed(s"segment_$g") {
-        encodeSegment(spark, dictDir, rawDir, segDir, g, conf, nDocs, avgdl,
-          nPart)
+        encodeSegment(spark, dictDir, rawDir, segDir, g, conf, nDocs, nPart)
         if (conf.verifySegments) {
           val seg = spark.read.parquet(segDir)
           val chk = seg.agg(coalesce(bit_xor(xxhash64(col("term"),
@@ -475,18 +488,7 @@ object Builder {
           commit(spark, outDir, marker, s"""{"rows":$rows,"checksum":$chk}""")
         } else commit(spark, outDir, marker, "{}")
       }
-      val payload = graft.util.Fs.read(spark, s"$outDir/$marker")
-      val rows = """"rows":(\d+)""".r.findFirstMatchIn(payload).map(_.group(1).toLong).getOrElse(0L)
-      val chk = """"checksum":(-?\d+)""".r.findFirstMatchIn(payload).map(_.group(1).toLong).getOrElse(0L)
-      manifestRows += ManifestRow("postings", g, rows, chk, "committed")
     }
-
-    // ---- stage 6: manifest table -------------------------------------
-    // when segment verification is off the rows carry no counts; the
-    // commit markers themselves are the lineage record, so skip the job
-    if (conf.verifySegments)
-      manifestRows.toSeq.toDS().coalesce(1)
-        .write.mode(SaveMode.Overwrite).parquet(manifestDir)
     commit(spark, outDir, "_COMMIT_index")
   }
 
@@ -502,8 +504,7 @@ object Builder {
     * byte-identical index — the deterministic-permutation analog
     * (/root/reference/src/gin_gin.c:103-112). */
   def encodeSegment(spark: SparkSession, dictDir: String, rawDir: String,
-      segDir: String, g: Int, conf: Config, nDocs: Long, avgdl: Double,
-      nPart: Int): Unit = {
+      segDir: String, g: Int, conf: Config, nDocs: Long, nPart: Int): Unit = {
     val buckets = (0 until conf.nBuckets).filter(_ % conf.nSegments == g)
     val headTerms = spark.read.parquet(dictDir)
       .filter(col("bucket").isin(buckets: _*) && col("df") > conf.saltTarget)
@@ -614,9 +615,29 @@ object Builder {
     Array.tabulate(b.num_docs)(i => Posting(b.term, ids(i), tfs(i), dls(i)))
   }
 
+  /** The stats record (writeStats), parsed with no Spark job. A missing
+    * record throws, and so does one that does not parse: it is never
+    * read as zeros.
+    *
+    * An index from before the record kept its stats in a one-row
+    * `stats/` table, which ingest refreshed while the record went stale.
+    * Where that table exists it holds the truth: it is moved into the
+    * record once (record first, then the table goes, so a crash between
+    * repeats the move), a heal like the dictionary and postings ones. */
   def loadStats(spark: SparkSession, indexDir: String): Stats = {
-    import spark.implicits._
-    spark.read.parquet(s"$indexDir/stats").as[Stats].head()
+    val table = s"$indexDir/stats"
+    if (graft.util.Fs.exists(spark, table)) {
+      import spark.implicits._
+      val old = spark.read.parquet(table).as[Stats].head()
+      writeStats(spark, indexDir, old.n_docs, math.round(old.avgdl * old.n_docs))
+      graft.util.Fs.delete(spark, table)
+    }
+    val rec = graft.util.Fs.readReplaced(spark, statsRecord(indexDir))
+    rec.trim match {
+      case StatsPayload(n, a) => Stats(n.toLong, a.toDouble)
+      case _ => throw new IllegalStateException(
+        s"stats record of $indexDir does not parse: $rec")
+    }
   }
 
   /** Layout params recorded in the index's own _META.json. Readers and

@@ -57,10 +57,10 @@ object DocOrder {
     * content, ...): returns (repo, path, commit, ord) where `ord` ranks
     * docs by MinHash-signature order. Shape at scale: one explode +
     * partial-aggregated groupBy (map-side min, one shuffle keyed by doc
-    * identity — no skew possible), one range sort of n signature rows,
-    * ids by the same per-partition count + prefix-sum Builder.withDocIds
-    * uses (no single-partition stage). Deterministic: signatures are pure
-    * functions of content, ties break on (repo, path, commit).
+    * identity — no skew possible), then Builder.withDocIds over the n
+    * signature rows: one range sort and a per-partition count +
+    * prefix-sum (no single-partition stage). Deterministic: signatures
+    * are pure functions of content, ties break on (repo, path, commit).
     *
     * `maxDfFraction`: terms appearing in more than max(MinDfCap,
     * ceil(f·n)) docs are EXCLUDED from the signature. Zipf-head terms
@@ -85,9 +85,21 @@ object DocOrder {
                          maxDfFraction: Double = DefaultMaxDfFraction): DataFrame = {
     val sigs = signatures(corpus, nHashes, maxDfFraction)
     val orderCols =
-      (0 until nHashes).map(i => col(s"s$i")) ++
-        Seq(col("repo"), col("path"), col("commit"))
-    rankBy(corpus.sparkSession, sigs, orderCols, partitions)
+      (0 until nHashes).map(i => s"s$i") ++ Seq("repo", "path", "commit")
+    // NOTE on caching (r6): zipWithIndex runs an EAGER offset job at
+    // call time and the caller consumes the frame again, so the sort
+    // pipeline executes ~twice per call. Caching the sorted rows was
+    // tried two ways this round and BOTH measured slower than the
+    // recompute at bench scale (eager localCheckpoint: extra
+    // materialization job; RDD persist: block-unroll cost exceeds the
+    // 2nd pipeline pass) — and a DataFrame-level persist is ruled out
+    // outright: the SQL CacheManager is keyed by canonicalized plan, so
+    // it would silently serve LATER invocations on the same input
+    // (cross-invocation result reuse). At corpus scale the double scan
+    // is the documented cost; a caller that needs it cached can persist
+    // the RETURNED rank table (n small rows) under its own lifecycle.
+    Builder.withDocIds(sigs, partitions, orderCols, Seq("repo", "path", "commit"))
+      .withColumnRenamed("doc_id", "ord")
   }
 
   /** Per-doc df-capped MinHash signature frame
@@ -113,36 +125,5 @@ object DocOrder {
       .withColumn("x31", pmod(CrossHash.h60(col("term")), lit(CrossHash.P31)))
       .groupBy("repo", "path", "commit")
       .agg(signatureAggs(nHashes).head, signatureAggs(nHashes).tail: _*)
-  }
-
-  /** Rank `sigs` rows by `orderCols` into a dense 0-based `ord` with a
-    * range sort + zipWithIndex — no single-partition stage. */
-  private def rankBy(spark: org.apache.spark.sql.SparkSession,
-                     sigs: DataFrame, orderCols: Seq[Column],
-                     partitions: Int): DataFrame = {
-    val nPart = Builder.partitionCount(spark, partitions)
-    // NOTE on caching (r6): zipWithIndex runs an EAGER offset job at
-    // call time and the caller consumes the frame again, so the sort
-    // pipeline executes ~twice per call. Caching the sorted rows was
-    // tried two ways this round and BOTH measured slower than the
-    // recompute at bench scale (eager localCheckpoint: extra
-    // materialization job; RDD persist: block-unroll cost exceeds the
-    // 2nd pipeline pass) — and a DataFrame-level persist is ruled out
-    // outright: the SQL CacheManager is keyed by canonicalized plan, so
-    // it would silently serve LATER invocations on the same input
-    // (cross-invocation result reuse). At corpus scale the double scan
-    // is the documented cost; a caller that needs it cached can persist
-    // the RETURNED rank table (n small rows) under its own lifecycle.
-    val sorted = sigs
-      .repartitionByRange(nPart, orderCols: _*)
-      .sortWithinPartitions(orderCols: _*)
-      .select("repo", "path", "commit")
-    import org.apache.spark.sql.types.{LongType, StructField, StructType}
-    val schema = StructType(sorted.schema.fields :+
-      StructField("ord", LongType, nullable = false))
-    val rdd = sorted.rdd.zipWithIndex().map { case (r, i) =>
-      org.apache.spark.sql.Row.fromSeq(r.toSeq :+ i)
-    }
-    spark.createDataFrame(rdd, schema)
   }
 }

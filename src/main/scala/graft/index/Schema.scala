@@ -5,7 +5,8 @@ package graft.index
   * The Spark-side replacement for the reference's single serialized index
   * blob (/root/reference/src/gin_gin.c:1824-1907): instead of one bitstream
   * holding FMI + rank-translation + IMT, the index is a set of Parquet
-  * tables with per-partition lineage (`manifest`).
+  * tables with per-stage `_COMMIT_*` markers; the stats marker holds the
+  * collection stats (Builder.loadStats).
   */
 
 /** Corpus row — exact input_hint shape. */
@@ -15,17 +16,6 @@ case class CodeDoc(
     commit: String,
     lang: String,
     content: String)
-
-/** Document metadata — the docID <-> (repo,path,commit) rank translation,
-  * analog of bwt_to_vid (/root/reference/src/gin_gin.c:219-249). */
-case class DocMeta(
-    doc_id: Long,
-    repo: String,
-    path: String,
-    commit: String,
-    lang: String,
-    dl: Int,
-    content_sha256: String)
 
 /** Id-stamped corpus snapshot row: the ingest freeze plus the per-doc
   * derived fields (dl, sha256) computed in the SAME pass, so the corpus
@@ -64,20 +54,8 @@ case class PostingBlock(
     tfs: Array[Byte],
     dls: Array[Byte])
 
-/** Per-term collection stats — the C-array analog
-  * (/root/reference/src/gin_fmi.c:223-229). */
-case class DictEntry(term: String, df: Long, cf: Long)
-
 /** Global collection stats. */
 case class Stats(n_docs: Long, avgdl: Double)
-
-/** Per-partition build lineage for resumable builds. */
-case class ManifestRow(
-    stage: String,
-    partition_id: Int,
-    rows: Long,
-    checksum: Long,
-    status: String)
 
 object Bm25 {
   val K1 = 1.2

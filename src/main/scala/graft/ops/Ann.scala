@@ -6,8 +6,8 @@ import graft.util.CrossHash
 
 /** Similarity search over an embedding column (Array[Float]).
   *
-  * Baseline: brute-force cosine top-k as a broadcast-join + column
-  * expressions (`aggregate`/`zip_with`, fully codegen'd — no UDF).
+  * Baseline: brute-force cosine top-k as a broadcast join, each pair
+  * scored in one typed JVM loop (rawCosine).
   * Scale path: multi-table random-hyperplane LSH — candidates are the
   * UNION over L independent hash tables (band-OR boosts recall), exact
   * cosine re-ranks them. Bucketing is integer-exact: embeddings are
@@ -17,26 +17,14 @@ import graft.util.CrossHash
   */
 object Ann {
 
-  /** Σ a_i*b_i via zip_with + aggregate, in double precision. */
-  def dot(a: Column, b: Column): Column =
-    aggregate(zip_with(a, b, (x, y) => x.cast("double") * y.cast("double")),
-      lit(0.0), (acc, v) => acc + v)
-
-  def norm(a: Column): Column =
-    sqrt(aggregate(transform(a, x => x.cast("double") * x.cast("double")),
-      lit(0.0), (acc, v) => acc + v))
-
-  def cosine(a: Column, b: Column): Column = dot(a, b) / (norm(a) * norm(b))
-
-  /** cos(a, b) in one typed JVM loop — the hot-path form of `cosine`.
-    * Spark's higher-order array expressions (zip_with / aggregate /
-    * transform) are CodegenFallback: every element is boxed and the
-    * lambda interpreted, which dominated the pair-scoring stages.
-    * Bit-identical to the column form on equal-length inputs: floats
-    * widen exactly to double, the products/squares are accumulated in
-    * the same left-to-right order, and the final expression is the same
-    * dot / (sqrt · sqrt). None for a pair that has no cosine: a null
-    * embedding or unequal lengths. Callers skip such a pair. */
+  /** cos(a, b) in one typed JVM loop. Spark's higher-order array
+    * expressions (zip_with / aggregate / transform) are CodegenFallback:
+    * every element is boxed and the lambda interpreted, which dominated
+    * the pair-scoring stages when cosine was a column expression. Floats
+    * widen exactly to double, the products/squares are accumulated left
+    * to right, and the result is dot / (sqrt · sqrt). None for a pair
+    * that has no cosine: a null embedding or unequal lengths. Callers
+    * skip such a pair. */
   private[ops] def rawCosine(a: Seq[Float], b: Seq[Float]): Option[Double] =
     if (a == null || b == null || a.length != b.length) None
     else {

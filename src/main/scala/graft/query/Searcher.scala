@@ -321,17 +321,19 @@ object Searcher {
 
   /** Count of conjunctive matches per query — the `(c:…)` match-count
     * analog (the reference's gin.c:1018-1023). The matches come from the
-    * executor groups: a lazy plan, which a `count()` of the result skips. */
+    * executor groups. One aggregate over the query ids (with a null
+    * doc_id, so a zero-match query still emits its row: explicit
+    * DEAD-fork rows) and the matches, so even a `count()` of the result
+    * runs the matching. */
   def countMatches(spark: SparkSession, indexDir: String, queries: Seq[Query],
                    nBuckets: Int = 32): DataFrame = {
     import spark.implicits._
     val all = searchCandidatesExecutors(spark, indexDir, queries, nBuckets,
       ExecStripePostings)
-    val out = all.groupBy("query_id").agg(count(lit(1)).as("n_matches"))
-    // queries with zero matches still emit a row (explicit DEAD-fork rows)
-    val ids = queries.map(_.query_id).toDF("query_id")
-    ids.join(out, Seq("query_id"), "left")
-      .withColumn("n_matches", coalesce(col("n_matches"), lit(0L)))
+    queries.map(_.query_id).toDF("query_id")
+      .withColumn("doc_id", lit(null).cast("long"))
+      .unionByName(all)
+      .groupBy("query_id").agg(count(col("doc_id")).as("n_matches"))
   }
 
   /** All conjunctive (AND) matching (query_id, doc_id) pairs:

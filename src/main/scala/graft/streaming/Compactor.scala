@@ -94,7 +94,7 @@ object Compactor {
     // caller: rewriting segments with a mismatched nBuckets would recompute
     // bucket values readers no longer find (silently missing results)
     val conf = Builder.indexLayout(spark, indexDir, callerConf)
-    val stats = Builder.loadStats(spark, indexDir)
+    val nDocs = Builder.loadStats(spark, indexDir).n_docs
     val nPart = Builder.partitionCount(spark, conf.shufflePartitions)
     // fold dictionary deltas FIRST: encodeSegment's head-term (salting)
     // probe below reads the base dictionary and must see full df values
@@ -104,8 +104,8 @@ object Compactor {
 
     for (g <- 0 until conf.nSegments)
       Builder.encodeSegment(spark, s"$indexDir/dictionary",
-        s"$indexDir/postings_raw", s"$tmpDir/segment=$g", g, conf,
-        stats.n_docs, stats.avgdl, nPart)
+        s"$indexDir/postings_raw", s"$tmpDir/segment=$g", g, conf, nDocs,
+        nPart)
 
     // crash-safe swap: postings_compact is complete here, so every
     // intermediate state is recoverable by Builder.recoverPostings

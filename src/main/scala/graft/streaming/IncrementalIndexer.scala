@@ -13,8 +13,9 @@ import graft.util.Fs
   * this is the continuous-ingest extension its segment architecture
   * makes natural: each micro-batch of new documents becomes ONE new
   * committed index segment (Lucene-style soft commit), appended to
-  * docmeta / corpus_ids / postings_raw, with dictionary and stats
-  * refreshed. Doc ids continue from the current count, so new segments'
+  * docmeta / corpus_ids / postings_raw, with a dictionary delta and the
+  * stats record updated from the batch's own totals. Doc ids continue
+  * from the record's doc count, so new segments'
   * doc ranges sit strictly above all existing blocks and the per-term
   * disjoint-sorted block invariant (WAND skips) is preserved by
   * construction. Block-max metadata is (max_tf, min_dl), which
@@ -25,10 +26,12 @@ import graft.util.Fs
   * positions, trigrams, dict_deltas) is staged then promoted with
   * batch-prefixed filenames (Fs.promoteStaged deletes this batch's files
   * before moving), and every step is re-runnable — a foreachBatch retry
-  * after ANY partial failure converges to the same state. Per-batch cost
-  * is O(batch): the dictionary is an append-only delta segment merged on
-  * read (Builder.dictionary) and folded by the Compactor, never a
-  * per-batch O(vocabulary) rewrite.
+  * after ANY partial failure converges to the same state; the stats
+  * record moves exactly once per batch. Per-batch cost is O(batch): the
+  * dictionary is an append-only delta segment merged on read
+  * (Builder.dictionary) and folded by the Compactor, never a per-batch
+  * O(vocabulary) rewrite, and the stats record follows from its old
+  * value plus the batch's count and dl sum, with no read of docmeta/.
   *
   * Every row a batch writes comes from the build's own stage functions
   * (Builder.snapshotRows, postingsOf, dictionaryOf, writeBlocks, ...), so
@@ -87,16 +90,16 @@ object IncrementalIndexer {
     val c = Builder.indexLayout(spark, indexDir, conf)
     val nPart = Builder.partitionCount(spark, c.shufflePartitions)
     // the doc-id base is pinned in a per-batch marker BEFORE any append:
-    // a retry after a partial failure must reuse the original base (stats
-    // may already reflect this batch's docmeta append), or ids would
-    // shift between attempts and the promoted files would disagree
+    // a retry after a partial failure must reuse the original base (the
+    // stats record may already hold this batch), or ids would shift
+    // between attempts and the promoted files would disagree
+    val stats = Builder.loadStats(spark, indexDir)
     val baseMarker = s"$indexDir/_BASE_b$batchId"
     val base =
       if (Fs.exists(spark, baseMarker)) Fs.read(spark, baseMarker).trim.toLong
       else {
-        val b = Builder.loadStats(spark, indexDir).n_docs
-        Fs.write(spark, baseMarker, b.toString)
-        b
+        Fs.write(spark, baseMarker, stats.n_docs.toString)
+        stats.n_docs
       }
     // staged append -> promote under batch-prefixed filenames (idempotent)
     def promote(table: String): Unit =
@@ -115,11 +118,7 @@ object IncrementalIndexer {
       .write.mode(SaveMode.Overwrite).parquet(s"$staging/docmeta")
     promote("docmeta")
 
-    val nDocsBatch = withIds.count()
-
-    // stats refresh (reads docmeta, writes stats: derived, idempotent)
-    Builder.statsOf(spark.read.parquet(s"$indexDir/docmeta"))
-      .coalesce(1).write.mode(SaveMode.Overwrite).parquet(s"$indexDir/stats")
+    val (nDocsBatch, dlBatch) = Builder.docTotals(withIds)
 
     // delta postings -> staged raw append + one new block segment
     val raw = Builder.postingsOf(withIds, c.nBuckets).cache()
@@ -157,6 +156,15 @@ object IncrementalIndexer {
 
     raw.unpersist()
     withIds.unpersist()
+    // the stats record moves by this batch exactly once: at the pinned
+    // base it takes the batch; at base + N a crashed attempt already
+    // rewrote it. The exact dl sum is round(avgdl · n) (Builder.writeStats).
+    if (stats.n_docs == base)
+      Builder.writeStats(spark, indexDir, base + nDocsBatch,
+        math.round(stats.avgdl * stats.n_docs) + dlBatch)
+    else require(stats.n_docs == base + nDocsBatch,
+      s"stats record of $indexDir holds ${stats.n_docs} docs; batch " +
+        s"$batchId expects $base or ${base + nDocsBatch}")
     Fs.write(spark, marker, s"""{"docs":$nDocsBatch,"base":$base}""")
     Fs.delete(spark, baseMarker)
     Fs.delete(spark, staging) // every staged table was promoted out of it

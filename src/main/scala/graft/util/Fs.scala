@@ -1,6 +1,6 @@
 package graft.util
 
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.{FileContext, FileSystem, Options, Path}
 import org.apache.spark.sql.SparkSession
 
 /** Marker/metadata IO routed through the Hadoop FileSystem API resolved
@@ -23,11 +23,6 @@ object Fs {
     fs.exists(path)
   }
 
-  def mkdirs(spark: SparkSession, p: String): Unit = {
-    val (fs, path) = resolve(spark, p)
-    fs.mkdirs(path)
-  }
-
   /** Atomic-enough marker write: create-overwrite of a small file. */
   def write(spark: SparkSession, p: String, content: String): Unit = {
     val (fs, path) = resolve(spark, p)
@@ -37,6 +32,27 @@ object Fs {
     try out.write(content.getBytes("UTF-8"))
     finally out.close()
   }
+
+  /** Replace a small file so that readReplaced sees the old or the new
+    * content, never a truncated one: write the sibling `p.tmp`, then
+    * rename it over `p` (FileContext OVERWRITE: atomic on HDFS, delete +
+    * rename on the local filesystem). A crash between that delete and
+    * rename leaves the new content only in the sibling: readReplaced
+    * reads it there, and the next replace moves it back first. */
+  def replace(spark: SparkSession, p: String, content: String): Unit = {
+    val tmp = s"$p.tmp"
+    if (!exists(spark, p) && exists(spark, tmp)) renameChecked(spark, tmp, p)
+    write(spark, tmp, content)
+    val (fs, path) = resolve(spark, p)
+    FileContext.getFileContext(fs.getUri, spark.sessionState.newHadoopConf())
+      .rename(fs.makeQualified(new Path(tmp)), fs.makeQualified(path),
+        Options.Rename.OVERWRITE)
+  }
+
+  /** Read a file written by replace: `p`, or its sibling where a crash
+    * left the new content only there. */
+  def readReplaced(spark: SparkSession, p: String): String =
+    read(spark, if (!exists(spark, p) && exists(spark, s"$p.tmp")) s"$p.tmp" else p)
 
   def read(spark: SparkSession, p: String): String = {
     val (fs, path) = resolve(spark, p)

@@ -435,6 +435,52 @@ class IndexSpec extends SparkTestBase {
     assert(Files.exists(Paths.get(d, "_COMMIT_segment_1")))
   }
 
+  test("stats record: loadStats starts no Spark job; no stats/ or manifest/ table") {
+    import org.apache.spark.sql.GraftBridge
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val d = indexDir
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    GraftBridge.drainListeners(spark.sparkContext)
+    spark.sparkContext.addSparkListener(listener)
+    val st = try {
+      val s = Builder.loadStats(spark, d)
+      GraftBridge.drainListeners(spark.sparkContext)
+      s
+    } finally spark.sparkContext.removeSparkListener(listener)
+    assert(jobs.get == 0, s"${jobs.get} jobs")
+    assert(!graft.util.Fs.exists(spark, s"$d/stats"))
+    assert(!graft.util.Fs.exists(spark, s"$d/manifest"))
+    // bit for bit what Spark's avg over docmeta gives
+    val want = spark.read.parquet(s"$d/docmeta")
+      .agg(count(lit(1)), avg(col("dl").cast("double"))).head()
+    assert(st == graft.index.Stats(want.getLong(0), want.getDouble(1)))
+  }
+
+  test("stats record: the older payload parses; a missing or garbled one throws") {
+    val d = tmpDir("stats-record")
+    val rec = s"$d/_COMMIT_stats"
+    graft.util.Fs.write(spark, rec, """{"n_docs":5000,"avgdl":54.1408}""")
+    assert(Builder.loadStats(spark, d) == graft.index.Stats(5000L, 54.1408))
+    graft.util.Fs.write(spark, rec, "")
+    intercept[IllegalStateException](Builder.loadStats(spark, d))
+    graft.util.Fs.delete(spark, rec)
+    intercept[java.io.FileNotFoundException](Builder.loadStats(spark, d))
+  }
+
+  test("an empty corpus fails with a named error before the stats marker") {
+    val d = tmpDir("empty-corpus")
+    val e = intercept[IllegalArgumentException] {
+      Builder.build(spark, Synth.corpus(spark, 10, seed = 5L).limit(0), d,
+        Builder.Config(blockSize = 16, nBuckets = 4, nSegments = 1))
+    }
+    assert(e.getMessage == "empty corpus: nothing to index")
+    assert(!graft.util.Fs.exists(spark, s"$d/_COMMIT_stats"))
+  }
+
   test("docID ordering is pluggable (S4): a permutation reverses ids, index stays sound") {
     import spark.implicits._
     val small = Synth.corpus(spark, 60, seed = 11L)

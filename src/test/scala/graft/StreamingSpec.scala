@@ -352,20 +352,25 @@ class StreamingSpec extends SparkTestBase {
     val b0 = (0L until 50L).map(i => Synth.doc(9L, i))
     val b1 = (50L until 90L).map(i => Synth.doc(9L, i))
     IncrementalIndexer.ingestBatch(spark, b0.toDF(), dir, conf, 0L, autoCompact = false) // bootstrap
+    val record0 = graft.util.Fs.read(spark, s"$dir/_COMMIT_stats")
     IncrementalIndexer.ingestBatch(spark, b1.toDF(), dir, conf, 1L, autoCompact = false)
-    // rewind to a REACHABLE crash state: raw/docmeta appends + stats done,
-    // the dict delta promote NOT done, no commit marker (= crash between
-    // the postings segment write and the dict_deltas promote)
+    // rewind to a REACHABLE crash state: raw/docmeta appends done, the
+    // dict delta promote NOT done, so neither the stats record rewrite
+    // nor the commit marker (= crash between the postings segment write
+    // and the dict_deltas promote)
     graft.util.Fs.delete(spark, s"$dir/_COMMIT_stream_batch_1")
     graft.util.Fs.deletePrefixed(spark, s"$dir/dict_deltas", "b1_")
+    graft.util.Fs.write(spark, s"$dir/_COMMIT_stats", record0)
     graft.util.Fs.write(spark, s"$dir/_BASE_b1", "50") // pinned on attempt 1
     // retry the whole batch — staged batch-prefixed promotes + the pinned
     // id base must make this converge, not double-append or shift ids
     IncrementalIndexer.ingestBatch(spark, b1.toDF(), dir, conf, 1L, autoCompact = false)
-    // and a SECOND full retry (everything already promoted) is a no-op
-    // that still converges
+    // crash state "record rewritten, commit marker absent": everything
+    // promoted and the record already holds the batch. A SECOND full
+    // retry is a no-op that still converges, with no double count.
     graft.util.Fs.delete(spark, s"$dir/_COMMIT_stream_batch_1")
     graft.util.Fs.write(spark, s"$dir/_BASE_b1", "50")
+    assert(Builder.loadStats(spark, dir).n_docs == 90)
     IncrementalIndexer.ingestBatch(spark, b1.toDF(), dir, conf, 1L, autoCompact = false)
     val fullDir = tmpDir("stream-retry-full")
     Builder.build(spark, (b0 ++ b1).toDF(), fullDir, conf)
@@ -380,6 +385,72 @@ class StreamingSpec extends SparkTestBase {
       spark.read.parquet(s"$fullDir/postings_raw").count())
     // and the committed retries left no staging directory behind
     assert(new java.io.File(dir).list().filter(_.startsWith("_staging_b")).isEmpty)
+    // a record at neither the pinned base nor base + N is refused
+    graft.util.Fs.delete(spark, s"$dir/_COMMIT_stream_batch_1")
+    graft.util.Fs.write(spark, s"$dir/_BASE_b1", "50")
+    Builder.writeStats(spark, dir, 70L, 7000L)
+    intercept[IllegalArgumentException] {
+      IncrementalIndexer.ingestBatch(spark, b1.toDF(), dir, conf, 1L,
+        autoCompact = false)
+    }
+    assert(!graft.util.Fs.exists(spark, s"$dir/_COMMIT_stream_batch_1"))
+  }
+
+  test("an index streamed before the stats record: its stats/ table moves into the record") {
+    import spark.implicits._
+    val dir = tmpDir("stream-old-stats")
+    val conf = Builder.Config(blockSize = 16, nBuckets = 4, nSegments = 1,
+      saltTarget = 40)
+    val docs = (0L until 120L).map(i => Synth.doc(13L, i))
+    val (b0, rest) = docs.splitAt(50)
+    val (b1, b2) = rest.splitAt(40)
+    val rec = s"$dir/_COMMIT_stats"
+    IncrementalIndexer.ingestBatch(spark, b0.toDF(), dir, conf, 0L, autoCompact = false)
+    val built = graft.util.Fs.read(spark, rec)
+    IncrementalIndexer.ingestBatch(spark, b1.toDF(), dir, conf, 1L, autoCompact = false)
+    val current = Builder.loadStats(spark, dir)
+    // the older layout: ingest refreshed a one-row stats/ table and left
+    // the record at its build-time value
+    def plantOldLayout(): Unit = {
+      Seq(current).toDS().coalesce(1).write.parquet(s"$dir/stats")
+      graft.util.Fs.write(spark, rec, built)
+    }
+    plantOldLayout()
+    assert(Builder.loadStats(spark, dir) == current)
+    assert(!graft.util.Fs.exists(spark, s"$dir/stats"))
+    assert(graft.util.Fs.read(spark, rec) != built)
+    // ingest meeting the older layout first continues the ids above all
+    // 90 existing docs, and the streamed index equals a rebuild
+    plantOldLayout()
+    IncrementalIndexer.ingestBatch(spark, b2.toDF(), dir, conf, 2L, autoCompact = false)
+    assert(!graft.util.Fs.exists(spark, s"$dir/stats"))
+    assert(spark.read.parquet(s"$dir/docmeta").select("doc_id").distinct().count() == 120)
+    val fullDir = tmpDir("stream-old-stats-full")
+    Builder.build(spark, docs.toDF(), fullDir, conf)
+    assert(Builder.loadStats(spark, dir) == Builder.loadStats(spark, fullDir))
+    assert(Builder.indexEqual(spark, dir, fullDir))
+  }
+
+  test("a stats record replace cut between its delete and rename is read and healed") {
+    import spark.implicits._
+    val dir = tmpDir("stream-replace")
+    val conf = Builder.Config(blockSize = 16, nBuckets = 4, nSegments = 1,
+      saltTarget = 40)
+    val b0 = (0L until 50L).map(i => Synth.doc(17L, i))
+    val b1 = (50L until 90L).map(i => Synth.doc(17L, i))
+    val rec = s"$dir/_COMMIT_stats"
+    IncrementalIndexer.ingestBatch(spark, b0.toDF(), dir, conf, 0L, autoCompact = false)
+    val before = Builder.loadStats(spark, dir)
+    // the crash state: the old record deleted, the new one only in the
+    // sibling Fs.replace renames over it
+    graft.util.Fs.renameChecked(spark, rec, s"$rec.tmp")
+    assert(Builder.loadStats(spark, dir) == before)
+    IncrementalIndexer.ingestBatch(spark, b1.toDF(), dir, conf, 1L, autoCompact = false)
+    assert(graft.util.Fs.exists(spark, rec))
+    assert(!graft.util.Fs.exists(spark, s"$rec.tmp"))
+    val fullDir = tmpDir("stream-replace-full")
+    Builder.build(spark, (b0 ++ b1).toDF(), fullDir, conf)
+    assert(Builder.loadStats(spark, dir) == Builder.loadStats(spark, fullDir))
   }
 
   test("dictionary ingest is O(batch): base files untouched, deltas folded by compact") {
