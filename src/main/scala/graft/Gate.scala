@@ -113,7 +113,7 @@ object Gate {
     }.mkString(",\n          ")
 
   /** Precedence CASE generated from the SAME LangMarkers order as
-    * TextOps.langPredCol: lang i wins when it has votes and no later
+    * TextOps.langPred: lang i wins when it has votes and no later
     * entry outvotes it. Adding a language updates both engines. */
   private lazy val LangCaseSql: String = {
     val langs = graft.ops.TextOps.LangMarkers.map(_._1)

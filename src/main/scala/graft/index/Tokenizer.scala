@@ -12,16 +12,18 @@ package graft.index
   * [a-z0-9_], drop empties. Positions are 0-based token ordinals.
   */
 object Tokenizer {
-  private val Sep = "[^a-z0-9_]+"
+  private val Sep = java.util.regex.Pattern.compile("[^a-z0-9_]+")
 
-  /** content -> tokens in order (may contain duplicates).
+  /** content -> tokens in order (may contain duplicates), exactly as the
+    * column form `Builder.tokensCol` (and the DuckDB oracle) splits it.
     *
-    * Implemented as a single-pass character scanner, NOT a regex split:
-    * `java.util.regex` on this pattern was the dominant CPU cost of the
-    * whole index build (jstack-profiled at ~70% of executor time).
-    * Equivalent to `lower(content).split("[^a-z0-9_]+")` minus empties
-    * for ASCII input (property-tested against the regex form); the
-    * DuckDB oracle uses the regex form on the same ASCII corpora. */
+    * All-ASCII content goes through a single-pass character scanner, NOT
+    * a regex split: `java.util.regex` on this pattern was the dominant
+    * CPU cost of the whole index build (jstack-profiled at ~70% of
+    * executor time). At the first char >= 128 it restarts on
+    * `tokensRegex`, because full Unicode lowercasing is not per-char:
+    * U+0130 lowercases to "i" + U+0307, so a per-char scanner would read
+    * "İstanbul" as one token where the column form reads two. */
   def tokens(content: String): Array[String] = {
     if (content == null || content.isEmpty) return Array.empty
     val n = content.length
@@ -30,11 +32,9 @@ object Tokenizer {
     var i = 0
     while (i < n) {
       val c0 = content.charAt(i)
-      // ASCII fast path; non-ASCII goes through Character.toLowerCase
-      val c = if (c0 >= 'A' && c0 <= 'Z') (c0 + 32).toChar
-              else if (c0 < 128) c0
-              else Character.toLowerCase(c0)
-      if ((c >= 'a' && c <= 'z') || (c >= '0' && c <= '9') || c == '_') sb.append(c)
+      if (c0 >= 128) return tokensRegex(content)
+      val c = lowerAscii(c0)
+      if (isTokenChar(c)) sb.append(c)
       else if (sb.length > 0) { out += sb.toString; sb.setLength(0) }
       i += 1
     }
@@ -42,18 +42,26 @@ object Tokenizer {
     out.toArray
   }
 
-  /** The regex-split reference form (slow; kept for property testing). */
+  /** The regex-split form: Spark's `lower` (full Unicode case mapping,
+    * root locale) then a split on the separator pattern, empties dropped.
+    * `tokens` runs it for non-ASCII content. */
   def tokensRegex(content: String): Array[String] = {
     if (content == null || content.isEmpty) return Array.empty
-    content.toLowerCase.split(Sep).filter(_.nonEmpty)
+    Sep.split(content.toLowerCase(java.util.Locale.ROOT)).filter(_.nonEmpty)
   }
 
+  @inline private def lowerAscii(c: Char): Char =
+    if (c >= 'A' && c <= 'Z') (c + 32).toChar else c
+
+  @inline private def isTokenChar(c: Char): Boolean =
+    (c >= 'a' && c <= 'z') || (c >= '0' && c <= '9') || c == '_'
+
   /** Document length = number of tokens (BM25 dl), counted WITHOUT
-    * materializing token strings — the dl pass runs over every byte of
-    * the corpus, and allocation rate (not arithmetic) is what limits
-    * multi-core scaling of JVM executors (measured on this host: an
+    * materializing token strings for ASCII content — the dl pass runs
+    * over every byte of the corpus, and allocation rate (not arithmetic)
+    * is what limits multi-core scaling of JVM executors (measured: an
     * allocation-heavy loop scales 2.8x over 4 cores, an allocation-free
-    * one 3.8x). Must agree exactly with tokens(content).length. */
+    * one 3.8x). Equals tokens(content).length. */
   def docLen(content: String): Int = {
     if (content == null || content.isEmpty) return 0
     val n = content.length
@@ -62,10 +70,8 @@ object Tokenizer {
     var i = 0
     while (i < n) {
       val c0 = content.charAt(i)
-      val c = if (c0 >= 'A' && c0 <= 'Z') (c0 + 32).toChar
-              else if (c0 < 128) c0
-              else Character.toLowerCase(c0)
-      if ((c >= 'a' && c <= 'z') || (c >= '0' && c <= '9') || c == '_') {
+      if (c0 >= 128) return tokensRegex(content).length
+      if (isTokenChar(lowerAscii(c0))) {
         if (!inTok) { count += 1; inTok = true }
       } else inTok = false
       i += 1

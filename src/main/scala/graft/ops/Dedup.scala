@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
-import graft.index.Builder
+import graft.index.{Builder, Tokenizer}
 import graft.util.CrossHash
 
 /** Deduplication operators for training-data pipelines.
@@ -107,15 +107,15 @@ object Dedup {
       exactGroups(docs).select(col("min_doc_id").as("doc_id")),
       Seq("doc_id"), "left_semi")
 
-  /** All overlapping space-joined k-grams of `toks`, in order. One
-    * StringBuilder pass per gram — the typed replacement for the earlier
-    * zip_with-chain column form: Spark's higher-order array expressions
-    * (zip_with / transform / aggregate) are CodegenFallback, so every
-    * token was boxed and every lambda interpreted on the spectrum and
-    * shingle hot paths. Output strings are identical. A null token list
-    * (null text) yields no k-grams, as the column form did. */
-  private def kgramIter(toks: Seq[String], k: Int): Iterator[String] = {
-    val n = if (toks == null) 0 else toks.length - k + 1
+  /** All overlapping space-joined k-grams of `text`'s tokens, in order.
+    * The operators below call it inside their typed lambdas, so each text
+    * is tokenized once by the scanner (Tokenizer.tokens) and a gram is
+    * one StringBuilder pass; Spark's higher-order array expressions would
+    * box every token and interpret every lambda (CodegenFallback). A null
+    * text yields no k-grams. */
+  private def kgramIter(text: String, k: Int): Iterator[String] = {
+    val toks = Tokenizer.tokens(text)
+    val n = toks.length - k + 1
     if (n <= 0) Iterator.empty
     else Iterator.tabulate(n) { i =>
       val sb = new java.lang.StringBuilder
@@ -129,17 +129,15 @@ object Dedup {
     }
   }
 
-  /** Word k-gram shingle set per doc (distinct, space-joined): tokens
-    * come from the same codegen'd tokenizer column, the k-gram walk and
-    * per-doc dedup run in one typed pass (see kgramIter). */
+  /** Word k-gram shingle set per doc (distinct, space-joined): the
+    * k-gram walk and per-doc dedup run in one typed pass (kgramIter). */
   def shingles(docs: DataFrame, k: Int): DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
-    docs.select(col("doc_id").cast("long"), Builder.tokensCol(col("text")))
-      .as[(Long, Seq[String])]
-      .flatMap { case (id, toks) =>
+    docs.select(col("doc_id").cast("long"), col("text")).as[(Long, String)]
+      .flatMap { case (id, text) =>
         val seen = new java.util.HashSet[String]()
-        kgramIter(toks, k).flatMap(s =>
+        kgramIter(text, k).flatMap(s =>
           if (seen.add(s)) Iterator.single((id, s)) else Iterator.empty)
       }
       .toDF("doc_id", "shingle")
@@ -151,8 +149,7 @@ object Dedup {
   def kgramSpectrum(docs: DataFrame, k: Int): DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
-    docs.select(Builder.tokensCol(col("text")))
-      .as[Seq[String]]
+    docs.select(col("text")).as[String]
       .flatMap(kgramIter(_, k))
       .toDF("gram")
       .groupBy("gram").agg(count(lit(1)).cast("long").as("n"))
@@ -165,9 +162,8 @@ object Dedup {
   def kgramOrigins(docs: DataFrame, k: Int): DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
-    docs.select(col("doc_id").cast("long"), Builder.tokensCol(col("text")))
-      .as[(Long, Seq[String])]
-      .flatMap { case (id, toks) => kgramIter(toks, k).map(g => (id, g)) }
+    docs.select(col("doc_id").cast("long"), col("text")).as[(Long, String)]
+      .flatMap { case (id, text) => kgramIter(text, k).map(g => (id, g)) }
       .toDF("doc_id", "gram")
       .groupBy("gram", "doc_id").agg(count(lit(1)).cast("long").as("n"))
   }
@@ -264,11 +260,10 @@ object Dedup {
   def minhashSignatures(docs: DataFrame, k: Int, nHashes: Int): Dataset[(Long, Seq[Long])] = {
     val spark = docs.sparkSession
     import spark.implicits._
-    docs.select(col("doc_id").cast("long"), Builder.tokensCol(col("text")))
-      .as[(Long, Seq[String])]
-      .flatMap { case (id, toks) =>
+    docs.select(col("doc_id").cast("long"), col("text")).as[(Long, String)]
+      .flatMap { case (id, text) =>
         val seen = new java.util.HashSet[String]()
-        kgramIter(toks, k).flatMap(s =>
+        kgramIter(text, k).flatMap(s =>
           if (seen.add(s)) Iterator.single((id, CrossHash.h60(s) % CrossHash.P31))
           else Iterator.empty)
       }

@@ -1,8 +1,9 @@
 package graft.ops
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Encoders, Row}
 import org.apache.spark.sql.functions._
-import graft.index.Builder
+import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
+import graft.index.Tokenizer
 
 /** Composite corpus-cleaning pipeline — the end-to-end operator an LLM
   * training-data pipeline actually consumes: one verdict row per document
@@ -19,7 +20,8 @@ import graft.index.Builder
   * embarrassingly re-runnable on corpus deltas, and exactly expressible
   * as one SQL statement for the oracle.
   *
-  * Scale shape: quality + language are a single codegen'd scan;
+  * Scale shape: quality + language are one typed pass that tokenizes
+  * each doc once (Tokenizer.tokens);
   * exact-dedup is one hash shuffle on sha256(text); near-dup reuses the
   * df-capped one-group-per-shingle Jaccard pairs + connected components
   * (driver union-find, or star contraction past its bound; never
@@ -44,13 +46,16 @@ object Pipeline {
     // null text is empty text: no tokens (a quality drop), no shingles,
     // and a content hash, so the exact-dup join keeps the row
     val corpus = docs.withColumn("text", coalesce(col("text"), lit("")))
-    // quality + language in ONE corpus scan (pure column expressions;
-    // lang_pred is the SAME expression TextOps.langId selects)
-    val toks = Builder.tokensCol(col("text"))
-    val sig = corpus.select(
-      col("doc_id"),
-      size(toks).cast("long").as("n_tokens"),
-      TextOps.langPredCol(toks).as("lang_pred"))
+    // quality + language in ONE typed pass: each text is tokenized once,
+    // lang_pred is the rule TextOps.langId applies, and doc_id passes
+    // through with its input type
+    val sig = corpus.select(col("doc_id"), col("text"))
+      .map { r =>
+        val toks = Tokenizer.tokens(r.getString(1))
+        Row(r.get(0), toks.length.toLong, TextOps.langPred(toks))
+      }(Encoders.row(StructType(Seq(corpus.schema("doc_id"),
+        StructField("n_tokens", LongType, nullable = false),
+        StructField("lang_pred", StringType, nullable = false)))))
 
     // exact-duplicate representative: min doc_id per content hash
     val sha = corpus.select(col("doc_id"), sha2(col("text"), 256).as("h"))

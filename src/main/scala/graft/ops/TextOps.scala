@@ -1,12 +1,20 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import graft.index.Builder
+import graft.index.{Builder, Tokenizer}
 
-/** Text-analysis operators for a large-scale training-data pipeline —
-  * all pure column expressions (whole-stage codegen, no UDFs), so they
-  * push down and scale linearly with the corpus.
+/** Text-analysis operators for a large-scale training-data pipeline. Each
+  * is one narrow pass over the corpus (no shuffle), so they scale
+  * linearly with it.
+  *
+  * Two forms coexist. `tokenCounts` and `quality` are column
+  * expressions over regex splits; their `filter` lambdas are
+  * higher-order functions, which Spark interprets (CodegenFallback).
+  * `langId` (a Scala UDF) and `fingerprint` (a typed pass) tokenize
+  * each text once with `Tokenizer.tokens`, because a column form re-runs
+  * the regex split for every reference to the tokens column: Spark does
+  * not share a higher-order result through subexpression elimination.
   *
   * Input contract: a DataFrame with (doc_id LONG, text STRING).
   */
@@ -47,30 +55,37 @@ object TextOps {
     "de" -> Seq("der", "die", "und", "das"),
     "es" -> Seq("el", "los", "que", "y"))
 
-  /** lang_pred as a pure column expression over a tokens column (shared
-    * by langId and Pipeline.cleanCorpus, which folds it into its one
-    * combined corpus scan). Tie-break: earlier LangMarkers entry wins. */
-  def langPredCol(toks: Column): Column = {
-    def votes(markers: Seq[String]): Column =
-      size(filter(toks, t => t.isin(markers.map(lit): _*)))
-    val v = LangMarkers.map { case (lang, ms) => lang -> votes(ms) }
-    // lang i wins when it has votes and no LATER entry outvotes it —
-    // generated from LangMarkers (as is the oracle CASE in Gate), so
-    // adding a language cannot desync the two engines
-    val cases = v.zipWithIndex.map { case ((lang, vi), i) =>
-      v.drop(i + 1).map(_._2).foldLeft(vi > lit(0))(_ && vi >= _) -> lang
-    }
-    cases.tail.foldLeft(when(cases.head._1, cases.head._2)) {
-      case (acc, (cond, lang)) => acc.when(cond, lang)
-    }.otherwise("unknown")
+  /** marker token -> indices into LangMarkers of the lists holding it */
+  private val MarkerLangs: Map[String, Seq[Int]] =
+    LangMarkers.zipWithIndex
+      .flatMap { case ((_, ms), i) => ms.distinct.map(_ -> i) }
+      .groupMap(_._1)(_._2)
+
+  /** lang_pred of one token list: each LangMarkers entry gets one vote
+    * per token in its list, and entry i wins when it has votes and no
+    * LATER entry outvotes it (so earlier entries win ties); no votes
+    * gives "unknown". The oracle CASE (Gate.LangCaseSql) is generated
+    * from the same LangMarkers order, so adding a language cannot desync
+    * the two engines. */
+  def langPred(tokens: Array[String]): String = {
+    val votes = new Array[Int](LangMarkers.length)
+    tokens.foreach(t => MarkerLangs.get(t).foreach(_.foreach(votes(_) += 1)))
+    votes.indices
+      .find(i => votes(i) > 0 && (i + 1 until votes.length).forall(votes(i) >= votes(_)))
+      .fold("unknown")(LangMarkers(_)._1)
   }
 
   /** Language-ID heuristic: stopword/marker-token votes with a
-    * deterministic tie-break. (A real model is out of scope; the operator
-    * shape — cheap per-doc scoring over markers — is what scales.) */
-  def langId(docs: DataFrame): DataFrame =
-    docs.select(col("doc_id"),
-      langPredCol(Builder.tokensCol(col("text"))).as("lang_pred"))
+    * deterministic tie-break (langPred). A real model is out of scope;
+    * the operator shape — cheap per-doc scoring over markers — is what
+    * scales. */
+  def langId(docs: DataFrame): DataFrame = {
+    // a Scala UDF rather than a typed map: an action that reads no
+    // lang_pred (a count) prunes it, as it pruned the column form
+    val lang = udf((text: String) => langPred(Tokenizer.tokens(text)))
+      .asNonNullable()
+    docs.select(col("doc_id"), lang(col("text")).as("lang_pred"))
+  }
 
   /** Rolling polynomial fingerprint over tokens (doc-level dedup key that
     * ignores whitespace/punctuation differences): base-31 polynomial of
@@ -87,13 +102,14 @@ object TextOps {
     // h60 through an md5-hex -> conv string round trip; the JVM h60
     // agrees bit-for-bit (CoreSpec parity) and every intermediate stays
     // exact: acc < M and h < M so acc*31 + h < 2^35 — no overflow, and
-    // all values are non-negative so % == pmod. Null text (a null token
-    // list) gives a NULL fingerprint, as the column fold did.
-    docs.select(col("doc_id").cast("long"), Builder.tokensCol(col("text")))
-      .as[(Long, Seq[String])]
-      .mapPartitions(_.map { case (id, toks) =>
-        if (toks == null) (id, None)
+    // all values are non-negative so % == pmod. Null text gives a NULL
+    // fingerprint, as the column fold over a null token list did.
+    docs.select(col("doc_id").cast("long"), col("text"))
+      .as[(Long, String)]
+      .mapPartitions(_.map { case (id, text) =>
+        if (text == null) (id, None)
         else {
+          val toks = Tokenizer.tokens(text)
           var acc = 0L
           var i = 0
           while (i < toks.length) {

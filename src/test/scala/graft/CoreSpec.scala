@@ -54,8 +54,17 @@ class CoreSpec extends AnyFunSuite with PropHelpers {
     }
   }
 
+  /** Text mixing ASCII with the chars whose full lowercasing is not a
+    * per-char ASCII map: U+0130 (-> "i" + U+0307), U+212A Kelvin (-> k),
+    * Σ (final-sigma context), é, CJK and surrogate pairs. */
+  private val mixedText: Gen[String] = Gen.listOf(Gen.frequency(
+    6 -> Gen.asciiPrintableChar.map(_.toString),
+    1 -> Gen.oneOf("\u0130", "\u212A", "\u03A3", "\u00E9", "\u00C9",
+      "\u6F22\u5B57", "\uD83D\uDE00", "\uD801\uDC00", " ", "_"))
+  ).map(_.mkString)
+
   test("docLen and foreachTermFreq agree with tokens() exactly") {
-    val gen = Gen.asciiStr
+    val gen = Gen.oneOf(Gen.asciiStr, mixedText)
     forAll(gen, 200) { s =>
       val ts = Tokenizer.tokens(s)
       assert(Tokenizer.docLen(s) == ts.length)
@@ -74,6 +83,25 @@ class CoreSpec extends AnyFunSuite with PropHelpers {
     Seq("", "  ", "_", "a_b", "A1_B2 c", "x\ty\nz", "Ab..cD", "0", "__")
       .foreach(s => assert(
         Tokenizer.tokens(s).toSeq == Tokenizer.tokensRegex(s).toSeq, s))
+  }
+
+  test("exact tokenizer == Unicode lowercase + split on non-[a-z0-9_], on any text") {
+    // reference: full root-locale lowercasing, then a per-char split that
+    // shares no code with the scanner or the regex form
+    def reference(s: String): Seq[String] =
+      s.toLowerCase(java.util.Locale.ROOT).map(c =>
+        if ((c >= 'a' && c <= 'z') || (c >= '0' && c <= '9') || c == '_') c
+        else ' ').split(' ').filter(_.nonEmpty).toSeq
+    forAll(mixedText, 300) { s =>
+      assert(Tokenizer.tokens(s).toSeq == reference(s), s)
+      assert(Tokenizer.tokens(s).toSeq == Tokenizer.tokensRegex(s).toSeq, s)
+      assert(Tokenizer.docLen(s) == reference(s).length, s)
+    }
+    // U+0130 lowercases to "i" + U+0307: two tokens, as the column form
+    assert(Tokenizer.tokens("\u0130stanbul").toSeq == Seq("i", "stanbul"))
+    assert(Tokenizer.docLen("\u0130stanbul") == 2)
+    assert(Tokenizer.tokens("\u212Aelvin caf\u00E9 \u03A3\u03A3 \u6F22x\uD83D\uDE00y")
+      .toSeq == Seq("kelvin", "caf", "x", "y"))
   }
 
   test("tokenizer matches the documented split semantics") {

@@ -677,4 +677,148 @@ class OpsSpec extends SparkTestBase {
     assert(verdicts.keySet == Set(1L, 2L, 3L, 4L))
     assert(Seq(1L, 2L, 4L).map(verdicts) == Seq("quality", "quality", "quality"))
   }
+
+  // ---- typed tokenize-once operators == their column forms ------------
+
+  /** The column form of lang_pred the typed TextOps.langPred replaced:
+    * per-language vote counts over a tokens column, then a CASE chain in
+    * which lang i wins when it has votes and no later entry outvotes it. */
+  private def langPredColumn(toks: org.apache.spark.sql.Column) = {
+    val v = TextOps.LangMarkers.map { case (lang, ms) =>
+      lang -> size(filter(toks, t => t.isin(ms.map(lit): _*)))
+    }
+    val cases = v.zipWithIndex.map { case ((lang, vi), i) =>
+      v.drop(i + 1).map(_._2).foldLeft(vi > lit(0))(_ && vi >= _) -> lang
+    }
+    cases.tail.foldLeft(when(cases.head._1, cases.head._2)) {
+      case (acc, (cond, lang)) => acc.when(cond, lang)
+    }.otherwise("unknown")
+  }
+
+  /** Edge-case texts: null, empty, whitespace- and punctuation-only,
+    * mixed case, non-ASCII, every pairwise LangMarkers vote tie, a later
+    * entry outvoting an earlier one, and exact/near duplicates. */
+  private lazy val edgeDocs: Seq[(Long, String)] = {
+    val langs = TextOps.LangMarkers
+    val ties = for {
+      i <- langs.indices; j <- langs.indices if i < j
+    } yield s"${langs(i)._2.head} ${langs(j)._2.last} filler words here"
+    val outvoted = for {
+      i <- langs.indices; j <- langs.indices if i < j
+    } yield s"${langs(i)._2.head} ${langs(j)._2.head} ${langs(j)._2.last}"
+    val texts = Seq(null, "", "   \t\n ", "...!?-- ;;", "The AND Of IS x",
+      "THE Le la DER y", "\u0130stanbul \u212Aelvin the caf\u00E9",
+      "\u03A3\u03A3 \u6F22\u5B57 le \uD83D\uDE00 la", "a_b c_d e_f g_h",
+      langs.map(_._2.head).mkString(" "), "le la the der der") ++
+      ties ++ outvoted
+    val base = texts.zipWithIndex.map { case (t, i) => (i.toLong, t) }
+    val enLong = "the and of is " + (0 until 24).map(i => s"w$i").mkString(" ")
+    val frLong = "le la et les \u0130 " + (0 until 24).map(i => s"m$i").mkString(" ")
+    base ++ Seq(100L -> enLong, 101L -> enLong, 102L -> (enLong + " tail"),
+      103L -> frLong)
+  }
+
+  private def tokensOf(df: org.apache.spark.sql.DataFrame): Map[Long, Seq[String]] = {
+    import spark.implicits._
+    df.select(col("doc_id"), graft.index.Builder.tokensCol(col("text")))
+      .as[(Long, Option[Seq[String]])].collect()
+      .map { case (id, ts) => id -> ts.getOrElse(Nil) }.toMap
+  }
+
+  private def gramsOf(ts: Seq[String], k: Int): Seq[String] =
+    if (ts.length < k) Nil else ts.sliding(k).map(_.mkString(" ")).toSeq
+
+  test("typed tokenize-once operators == their column forms on edge-case text") {
+    import spark.implicits._
+    val d = edgeDocs.toDF("doc_id", "text")
+    val toks = tokensOf(d)
+    // the exact tokenizer agrees with Spark's lower + split, non-ASCII too
+    edgeDocs.foreach { case (id, t) =>
+      assert(Tokenizer.tokens(t).toSeq == toks(id), s"doc $id: $t")
+    }
+
+    val langWant = d.select(col("doc_id"),
+        langPredColumn(graft.index.Builder.tokensCol(col("text"))))
+      .as[(Long, String)].collect().toMap
+    assert(TextOps.langId(d).as[(Long, String)].collect().toMap == langWant)
+    assert(langWant(0L) == "unknown" && langWant(1L) == "unknown")
+    assert(langWant.values.toSet == Set("en", "fr", "de", "es", "unknown"))
+
+    for (k <- Seq(1, 2, 3)) {
+      val grams = toks.map { case (id, ts) => id -> gramsOf(ts, k) }
+      assert(Dedup.shingles(d, k).as[(Long, String)].collect().toSet ==
+        grams.toSeq.flatMap { case (id, gs) => gs.distinct.map(id -> _) }.toSet,
+        s"shingles k=$k")
+      assert(Dedup.kgramSpectrum(d, k).as[(String, Long)].collect().toMap ==
+        grams.values.flatten.groupBy(identity).map { case (g, xs) =>
+          g -> xs.size.toLong }, s"spectrum k=$k")
+      assert(Dedup.kgramOrigins(d, k).as[(String, Long, Long)].collect().toSet ==
+        grams.toSeq.flatMap { case (id, gs) =>
+          gs.groupBy(identity).map { case (g, xs) => (g, id, xs.size.toLong) }
+        }.toSet, s"origins k=$k")
+      val nHashes = 8
+      val sigWant = grams.filter(_._2.nonEmpty).map { case (id, gs) =>
+        id -> (0 until nHashes).map { i =>
+          val (a, b) = graft.util.CrossHash.minhashCoeff(i)
+          gs.distinct.map(g => (a * (graft.util.CrossHash.h60(g) %
+            graft.util.CrossHash.P31) + b) % graft.util.CrossHash.P31).min
+        }
+      }
+      assert(Dedup.minhashSignatures(d, k, nHashes).collect()
+        .map { case (id, sig) => id -> sig.toIndexedSeq }.toMap == sigWant,
+        s"minhash k=$k")
+    }
+
+    val M = 1000000007L
+    val fpWant = edgeDocs.map { case (id, t) =>
+      id -> Option(t).map(_ => toks(id).foldLeft(0L)((acc, tok) =>
+        (acc * 31L + graft.util.CrossHash.h60(tok) % M) % M))
+    }.toMap
+    val fp = TextOps.fingerprint(d).as[(Long, Option[Long])].collect().toMap
+    assert(fp == fpWant)
+    assert(fp(0L).isEmpty && fp(1L).contains(0L)) // null -> NULL, "" -> 0
+  }
+
+  test("cleanCorpus == its column form on edge-case text; doc_id unchanged") {
+    import spark.implicits._
+    // the column-form signal pass cleanCorpus ran before the typed one;
+    // exact and near-dup representatives come from the same operators
+    def columnForm(docs: org.apache.spark.sql.DataFrame) = {
+      val corpus = docs.withColumn("text", coalesce(col("text"), lit("")))
+      val toks = graft.index.Builder.tokensCol(col("text"))
+      val sig = corpus.select(col("doc_id"),
+        size(toks).cast("long").as("n_tokens"),
+        langPredColumn(toks).as("lang_pred"))
+      val sha = corpus.select(col("doc_id"), sha2(col("text"), 256).as("h"))
+      val exactRep = sha
+        .join(sha.groupBy("h").agg(min("doc_id").as("exact_rep")), "h")
+        .select(col("doc_id"), col("exact_rep"))
+      val cc = Dedup.connectedComponents(corpus.select(col("doc_id")),
+        Dedup.jaccardPairs(corpus, k = 3, minJ = 0.5))
+      val reason =
+        when(col("n_tokens") < 20L || col("n_tokens") > 100000L, "quality")
+        .when(!col("lang_pred").isin("en"), "lang")
+        .when(col("doc_id") =!= col("exact_rep"), "exact_dup")
+        .when(col("doc_id") =!= col("cluster_rep"), "near_dup")
+        .otherwise("keep")
+      sig.join(exactRep, "doc_id").join(cc, "doc_id")
+        .select(col("doc_id"), col("n_tokens"), col("lang_pred"),
+          (reason === "keep").as("keep"), reason.as("drop_reason"))
+    }
+    val long = edgeDocs.toDF("doc_id", "text")
+    val int = long.withColumn("doc_id", col("doc_id").cast("int"))
+    for (d <- Seq(long, int)) {
+      val got = graft.ops.Pipeline.cleanCorpus(d)
+      assert(got.schema("doc_id").dataType == d.schema("doc_id").dataType)
+      def rows(df: org.apache.spark.sql.DataFrame) =
+        df.select(col("doc_id").cast("long"), col("n_tokens"), col("lang_pred"),
+          col("keep"), col("drop_reason"))
+          .as[(Long, Long, String, Boolean, String)].collect().sortBy(_._1).toSeq
+      val want = rows(columnForm(d))
+      assert(rows(got) == want)
+      assert(want.map(_._1) == edgeDocs.map(_._1).sorted)
+      assert(want.map(_._5).toSet ==
+        Set("quality", "lang", "exact_dup", "near_dup", "keep"))
+    }
+  }
 }
