@@ -12,69 +12,83 @@ package graft.index
   * [a-z0-9_], drop empties. Positions are 0-based token ordinals.
   */
 object Tokenizer {
-  private val Sep = java.util.regex.Pattern.compile("[^a-z0-9_]+")
+  private val Sep = "[^a-z0-9_]+"
 
-  /** content -> tokens in order (may contain duplicates), exactly as the
-    * column form `Builder.tokensCol` (and the DuckDB oracle) splits it.
+  /** content -> tokens in order (may contain duplicates), exactly as
+    * `lower(content)` (full Unicode case mapping, root locale) split on
+    * `[^a-z0-9_]+` with empties dropped — the column form
+    * `Builder.tokensCol` and the DuckDB oracle.
     *
-    * All-ASCII content goes through a single-pass character scanner, NOT
-    * a regex split: `java.util.regex` on this pattern was the dominant
-    * CPU cost of the whole index build (jstack-profiled at ~70% of
-    * executor time). At the first char >= 128 it restarts on
-    * `tokensRegex`, because full Unicode lowercasing is not per-char:
-    * U+0130 lowercases to "i" + U+0307, so a per-char scanner would read
-    * "İstanbul" as one token where the column form reads two. */
+    * A single-pass character scanner, NOT a regex split: `java.util.regex`
+    * on this pattern was the dominant CPU cost of the whole index build
+    * (jstack-profiled at ~70% of executor time). All-ASCII content is
+    * lowercased per char. At the first char >= 128 the scan restarts on
+    * `content.toLowerCase(Locale.ROOT)`, where every char >= 128 is a
+    * separator, because full lowercasing is not per-char: U+0130 becomes
+    * "i" + U+0307, so "İstanbul" is the two tokens i, stanbul. */
   def tokens(content: String): Array[String] = {
     if (content == null || content.isEmpty) return Array.empty
-    val n = content.length
+    var s = content
+    var lowered = false
     val out = scala.collection.mutable.ArrayBuffer.empty[String]
     val sb = new java.lang.StringBuilder(16)
     var i = 0
-    while (i < n) {
-      val c0 = content.charAt(i)
-      if (c0 >= 128) return tokensRegex(content)
-      val c = lowerAscii(c0)
-      if (isTokenChar(c)) sb.append(c)
-      else if (sb.length > 0) { out += sb.toString; sb.setLength(0) }
-      i += 1
+    while (i < s.length) {
+      val c0 = s.charAt(i)
+      if (c0 >= 128 && !lowered) {
+        s = content.toLowerCase(java.util.Locale.ROOT); lowered = true
+        out.clear(); sb.setLength(0); i = 0
+      } else {
+        val c = lowerAscii(c0)
+        if (isTokenChar(c)) sb.append(c)
+        else if (sb.length > 0) { out += sb.toString; sb.setLength(0) }
+        i += 1
+      }
     }
     if (sb.length > 0) out += sb.toString
     out.toArray
   }
 
-  /** The regex-split form: Spark's `lower` (full Unicode case mapping,
-    * root locale) then a split on the separator pattern, empties dropped.
-    * `tokens` runs it for non-ASCII content. */
+  /** The regex-split form of `tokens` (root-locale lowercase, then a
+    * split on the separator pattern): the reference the scanner is
+    * property-tested against; no build or query path runs it. */
   def tokensRegex(content: String): Array[String] = {
     if (content == null || content.isEmpty) return Array.empty
-    Sep.split(content.toLowerCase(java.util.Locale.ROOT)).filter(_.nonEmpty)
+    content.toLowerCase(java.util.Locale.ROOT).split(Sep).filter(_.nonEmpty)
   }
 
   @inline private def lowerAscii(c: Char): Char =
     if (c >= 'A' && c <= 'Z') (c + 32).toChar else c
 
+  /** [a-z0-9_]; every char >= 128 is a separator */
   @inline private def isTokenChar(c: Char): Boolean =
     (c >= 'a' && c <= 'z') || (c >= '0' && c <= '9') || c == '_'
 
   /** Document length = number of tokens (BM25 dl), counted WITHOUT
-    * materializing token strings for ASCII content — the dl pass runs
-    * over every byte of the corpus, and allocation rate (not arithmetic)
-    * is what limits multi-core scaling of JVM executors (measured: an
-    * allocation-heavy loop scales 2.8x over 4 cores, an allocation-free
-    * one 3.8x). Equals tokens(content).length. */
+    * materializing token strings — the dl pass runs over every byte of
+    * the corpus, and allocation rate (not arithmetic) is what limits
+    * multi-core scaling of JVM executors (measured: an allocation-heavy
+    * loop scales 2.8x over 4 cores, an allocation-free one 3.8x). The
+    * same scan as `tokens`, restart included; equals
+    * tokens(content).length. */
   def docLen(content: String): Int = {
     if (content == null || content.isEmpty) return 0
-    val n = content.length
+    var s = content
+    var lowered = false
     var count = 0
     var inTok = false
     var i = 0
-    while (i < n) {
-      val c0 = content.charAt(i)
-      if (c0 >= 128) return tokensRegex(content).length
-      if (isTokenChar(lowerAscii(c0))) {
-        if (!inTok) { count += 1; inTok = true }
-      } else inTok = false
-      i += 1
+    while (i < s.length) {
+      val c0 = s.charAt(i)
+      if (c0 >= 128 && !lowered) {
+        s = content.toLowerCase(java.util.Locale.ROOT); lowered = true
+        count = 0; inTok = false; i = 0
+      } else {
+        if (isTokenChar(lowerAscii(c0))) {
+          if (!inTok) { count += 1; inTok = true }
+        } else inTok = false
+        i += 1
+      }
     }
     count
   }

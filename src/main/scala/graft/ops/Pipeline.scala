@@ -1,9 +1,7 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, Encoders, Row}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
-import graft.index.Tokenizer
 
 /** Composite corpus-cleaning pipeline — the end-to-end operator an LLM
   * training-data pipeline actually consumes: one verdict row per document
@@ -20,8 +18,8 @@ import graft.index.Tokenizer
   * embarrassingly re-runnable on corpus deltas, and exactly expressible
   * as one SQL statement for the oracle.
   *
-  * Scale shape: quality + language are one typed pass that tokenizes
-  * each doc once (Tokenizer.tokens);
+  * Scale shape: quality + language are one pass that tokenizes each doc
+  * once (TextOps.tokenSignals);
   * exact-dedup is one hash shuffle on sha256(text); near-dup reuses the
   * df-capped one-group-per-shingle Jaccard pairs + connected components
   * (driver union-find, or star contraction past its bound; never
@@ -46,16 +44,13 @@ object Pipeline {
     // null text is empty text: no tokens (a quality drop), no shingles,
     // and a content hash, so the exact-dup join keeps the row
     val corpus = docs.withColumn("text", coalesce(col("text"), lit("")))
-    // quality + language in ONE typed pass: each text is tokenized once,
-    // lang_pred is the rule TextOps.langId applies, and doc_id passes
-    // through with its input type
-    val sig = corpus.select(col("doc_id"), col("text"))
-      .map { r =>
-        val toks = Tokenizer.tokens(r.getString(1))
-        Row(r.get(0), toks.length.toLong, TextOps.langPred(toks))
-      }(Encoders.row(StructType(Seq(corpus.schema("doc_id"),
-        StructField("n_tokens", LongType, nullable = false),
-        StructField("lang_pred", StringType, nullable = false)))))
+    // quality + language in ONE pass: each text is tokenized once, and
+    // lang_pred is the rule TextOps.langId applies (the optimizer keeps a
+    // UDF read twice in its own projection, so it runs once per row)
+    val sig = corpus
+      .select(col("doc_id"), TextOps.tokenSignals(col("text")).as("s"))
+      .select(col("doc_id"), col("s._1").as("n_tokens"),
+        col("s._2").as("lang_pred"))
 
     // exact-duplicate representative: min doc_id per content hash
     val sha = corpus.select(col("doc_id"), sha2(col("text"), 256).as("h"))

@@ -75,17 +75,21 @@ object TextOps {
       .fold("unknown")(LangMarkers(_)._1)
   }
 
+  /** (n_tokens, lang_pred) of one text, tokenized once: the per-doc
+    * signals of langId and Pipeline.cleanCorpus. A Scala UDF, so the
+    * caller's other columns pass through with their types, and an action
+    * that reads neither field (a count) prunes it. */
+  private[ops] val tokenSignals = udf { (text: String) =>
+    val toks = Tokenizer.tokens(text)
+    (toks.length.toLong, langPred(toks))
+  }.asNonNullable()
+
   /** Language-ID heuristic: stopword/marker-token votes with a
     * deterministic tie-break (langPred). A real model is out of scope;
     * the operator shape — cheap per-doc scoring over markers — is what
     * scales. */
-  def langId(docs: DataFrame): DataFrame = {
-    // a Scala UDF rather than a typed map: an action that reads no
-    // lang_pred (a count) prunes it, as it pruned the column form
-    val lang = udf((text: String) => langPred(Tokenizer.tokens(text)))
-      .asNonNullable()
-    docs.select(col("doc_id"), lang(col("text")).as("lang_pred"))
-  }
+  def langId(docs: DataFrame): DataFrame =
+    docs.select(col("doc_id"), tokenSignals(col("text"))("_2").as("lang_pred"))
 
   /** Rolling polynomial fingerprint over tokens (doc-level dedup key that
     * ignores whitespace/punctuation differences): base-31 polynomial of

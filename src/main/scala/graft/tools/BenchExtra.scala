@@ -13,11 +13,6 @@ import graft.Gate
   * a plans directory, so plan claims in OPTIMIZATION_r06.md are
   * reproducible.
   *
-  * GRAFT_BENCH_ACTION=noop times a full evaluation instead. `.count()`
-  * lets the optimizer prune a pure column projection, so under it a
-  * column-form leaf such as q_langid times little more than a parquet
-  * row count, while a typed leaf pays for its whole pass.
-  *
   * Usage:
   *   sbt "runMain graft.tools.BenchExtra [reps] [q1,q2,... | all]"
   * Env:
@@ -25,8 +20,6 @@ import graft.Gate
   *   SPARK_GRAFT_CPUS    cores (default: the host's available processors)
   *   GRAFT_PLANS_DIR     if set, write <query><GRAFT_PLANS_SUFFIX>.txt
   *   GRAFT_PLANS_SUFFIX  suffix for plan files (default "_plan")
-  *   GRAFT_BENCH_ACTION  "count" (default, as Bench) or "noop": write
-  *                       every row and column to Spark's noop sink
   */
 object BenchExtra {
 
@@ -54,13 +47,6 @@ object BenchExtra {
       else args(1).split(',').toSeq
     val plansDir = sys.env.get("GRAFT_PLANS_DIR")
     val plansSuffix = sys.env.getOrElse("GRAFT_PLANS_SUFFIX", "_plan")
-    val action: org.apache.spark.sql.DataFrame => Unit =
-      sys.env.getOrElse("GRAFT_BENCH_ACTION", "count") match {
-        case "count" => _.count()
-        case "noop" => _.write.format("noop").mode("overwrite").save()
-        case a => throw new IllegalArgumentException(
-          s"GRAFT_BENCH_ACTION must be count or noop, got $a")
-      }
 
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
@@ -98,7 +84,7 @@ object BenchExtra {
         val ts = (1 to reps).map { _ =>
           org.apache.spark.sql.GraftBridge.drainListeners(spark.sparkContext)
           jobCount.set(0)
-          val t = time { action(fn(spark, sfDir)) }._2
+          val t = time { fn(spark, sfDir).count() }._2
           org.apache.spark.sql.GraftBridge.drainListeners(spark.sparkContext)
           t
         }

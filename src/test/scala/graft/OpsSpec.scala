@@ -680,7 +680,7 @@ class OpsSpec extends SparkTestBase {
 
   // ---- typed tokenize-once operators == their column forms ------------
 
-  /** The column form of lang_pred the typed TextOps.langPred replaced:
+  /** The column form of lang_pred that TextOps.langPred replaced:
     * per-language vote counts over a tokens column, then a CASE chain in
     * which lang i wins when it has votes and no later entry outvotes it. */
   private def langPredColumn(toks: org.apache.spark.sql.Column) = {
@@ -781,7 +781,7 @@ class OpsSpec extends SparkTestBase {
 
   test("cleanCorpus == its column form on edge-case text; doc_id unchanged") {
     import spark.implicits._
-    // the column-form signal pass cleanCorpus ran before the typed one;
+    // the column-form signal pass cleanCorpus ran before the tokenize-once one;
     // exact and near-dup representatives come from the same operators
     def columnForm(docs: org.apache.spark.sql.DataFrame) = {
       val corpus = docs.withColumn("text", coalesce(col("text"), lit("")))
