@@ -2,9 +2,9 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.expressions.Aggregator
+import org.apache.spark.sql.expressions.{Aggregator, Window}
 import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
-import graft.index.{Builder, Tokenizer}
+import graft.index.Tokenizer
 import graft.util.CrossHash
 
 /** Deduplication operators for training-data pipelines.
@@ -23,16 +23,18 @@ import graft.util.CrossHash
   */
 object Dedup {
 
-  /** Edge-count ceiling for connectedComponents' driver union-find fast
-    * path: at or below this the whole CANONICAL edge set (deduped,
-    * 16 bytes/edge — never the docs) is collected once and closed with
-    * union-find, replacing O(log n) shuffle rounds whose fixed per-round
-    * cost (2 shuffle phases + eager checkpoint + signature job) dominates
-    * small and medium pair graphs; above it the log-round star
-    * contraction runs unchanged. 1M edges ≈ tens of MB on the driver —
-    * the same bounded-collect discipline as the other audited driver
-    * sites (WandDfCap, DictCap, nCentroids). Data-size threshold, not a
-    * core-count tunable: the cutover is identical on a cluster. */
+  /** Edge-row ceiling for connectedComponents' driver union-find fast
+    * path: at or below this many CANONICAL edge rows (lo < hi, NOT
+    * deduplicated, so a detector that repeats a pair spends the bound
+    * faster; 16 bytes/row — never the docs) they are collected once
+    * and closed with union-find, replacing O(log n) shuffle rounds whose
+    * fixed per-round cost (2 shuffle phases + eager checkpoint +
+    * signature job) dominates small and medium pair graphs; above it the
+    * log-round star contraction runs unchanged. 1M edges ≈ tens of MB on
+    * the driver — the same bounded-collect discipline as the other
+    * audited driver sites (WandDfCap, DictCap, nCentroids). Data-size
+    * threshold, not a core-count tunable: the cutover is identical on a
+    * cluster. */
   val DriverCcMaxEdges = 1000000L
 
   /** Lineage truncation for connectedComponents' star loop: RELIABLE
@@ -183,8 +185,12 @@ object Dedup {
     * (Ann.cappedIds); any other group emits (id, id) per member and every
     * ordered pair (a < b). One count per (doc_a, doc_b) then yields both
     * the per-doc sizes (the diagonal rows) and the pair overlaps (the
-    * rest). The result is a lazy plan: nothing is persisted or
-    * checkpointed, so the caller's action pays for it once.
+    * rest). The sizes reach each pair row through two windows over the
+    * counts themselves, the diagonal's max per doc_a and then per doc_b
+    * (the diagonal row (x, x) sits in both of x's partitions), so no
+    * size table is built and no self-join runs. The result is a lazy
+    * plan: nothing is persisted or checkpointed, so the caller's action
+    * pays for it once.
     *
     * The threshold compares the UNROUNDED ratio (the output rounds to 6dp
     * for display only), matching the oracle exactly. Doc ids are assumed
@@ -197,18 +203,20 @@ object Dedup {
     import spark.implicits._
     val counts = shingles(docs, k).as[(Long, String)]
       .groupByKey(_._2)
+      .mapValues(_._1) // the shuffle carries each shingle once, as the key
       .flatMapGroups { (_, it) =>
-        Ann.cappedIds(it.map(_._1), maxShingleDf).iterator.flatMap(ids =>
+        Ann.cappedIds(it, maxShingleDf).iterator.flatMap(ids =>
           ids.iterator.map(id => (id, id)) ++ Ann.orderedPairs(ids))
       }
       .toDF("doc_a", "doc_b")
       .groupBy("doc_a", "doc_b")
       .agg(count(lit(1)).as("n"))
-    def sizes(side: String) = counts.filter(col("doc_a") === col("doc_b"))
-      .select(col("doc_a").as(side), col("n").as(s"n_$side"))
-    counts.filter(col("doc_a") < col("doc_b"))
-      .join(sizes("doc_a"), "doc_a")
-      .join(sizes("doc_b"), "doc_b")
+    def size(side: String) =
+      max(when(col("doc_a") === col("doc_b"), col("n"))).over(Window.partitionBy(side))
+    counts
+      .withColumn("n_doc_a", size("doc_a"))
+      .withColumn("n_doc_b", size("doc_b"))
+      .filter(col("doc_a") < col("doc_b"))
       .withColumn("raw_j", col("n").cast("double") /
         (col("n_doc_a") + col("n_doc_b") - col("n")))
       .filter(col("raw_j") >= minJ)
@@ -314,9 +322,9 @@ object Dedup {
     * pairwise detectors (jaccardPairs / minhashCandidates /
     * cosineNearDupPairs); docs not in any pair are their own rep.
     *
-    * Algorithm: when the canonical edge count fits `maxDriverEdges`
+    * Algorithm: when the canonical edge rows fit `maxDriverEdges`
     * (default DriverCcMaxEdges), a bounded collect + driver union-find +
-    * broadcast label join — one pass, no iteration (the capped pair
+    * broadcast label lookup — one pass, no iteration (the capped pair
     * detectors upstream keep most real graphs in this regime, and the
     * star loop's fixed per-round cost dominated them). Beyond the bound:
     * alternating large-star / small-star contraction (the
@@ -343,41 +351,45 @@ object Dedup {
     * endpoint sums — overflow-safe for hash-derived full-range ids under
     * ANSI mode) instead of a per-round except() join.
     *
-    * Returns (doc_id, cluster_rep). */
+    * Returns every column of `docs`, in order, plus cluster_rep (LONG):
+    * the labels are joined onto the caller's own rows, so a caller that
+    * carries other per-doc signals needs no join on doc_id of its own. */
   def connectedComponents(docs: DataFrame, pairs: DataFrame,
                           maxIter: Int = 25,
                           maxDriverEdges: Long = DriverCcMaxEdges): DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
     def trunc(df: DataFrame): DataFrame = truncate(spark, df)
-    val selfLabels = docs.select(col("doc_id"),
-      col("doc_id").cast("long").as("cluster_rep"))
-    // canonical undirected edge set (lo < hi), self-pairs dropped;
-    // persisted because the star loop's first truncate re-reads it after
-    // the probe, and a lazy pair source (a whole shingle pipeline) must
-    // not run twice
-    val edgesPlan = pairs
+    /** `docs`' own columns, in order, plus `rep` as cluster_rep. */
+    def withRep(d: DataFrame, rep: Column): DataFrame =
+      d.select(docs.columns.map(docs(_)).toSeq :+ rep.as("cluster_rep"): _*)
+    val selfRep = docs("doc_id").cast("long")
+    // canonical undirected edge rows (lo < hi), self-pairs dropped, NOT
+    // deduplicated: union-find does not care about a repeated edge. A lazy
+    // local checkpoint: the probe's job caches the rows it computes (and
+    // the checkpoint computes any partition the probe's limit skipped), so
+    // the star path's first truncate re-reads them and a lazy pair source
+    // (a whole shingle pipeline) runs exactly once.
+    val raw = pairs
       .select(least(col("doc_a"), col("doc_b")).cast("long").as("src"),
         greatest(col("doc_a"), col("doc_b")).cast("long").as("dst"))
       .filter(col("src") =!= col("dst"))
-      .distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .localCheckpoint(eager = false)
 
     // ---- small-graph fast path: bounded driver union-find ------------
-    // ONE job probes the edge set with limit(bound+1): at or below the
-    // bound we already hold every canonical edge (limit returns all rows
-    // when none are cut) and close the components with union-find —
+    // ONE job probes the edge rows with limit(bound+1): at or below the
+    // bound we already hold every edge row (limit returns all rows when
+    // none are cut) and close the components with union-find —
     // replacing the whole iterative loop (and its per-round shuffle +
     // checkpoint + signature jobs) with a single collect + broadcast
-    // label join. Past the bound the collected prefix is discarded and
-    // the log-round star contraction below runs over the persisted
-    // edges, so the 100 TB shape is intact. The capped pair detectors
+    // label lookup. Past the bound the collected prefix is discarded and
+    // the log-round star contraction below runs over the checkpointed
+    // rows, so the 100 TB shape is intact. The capped pair detectors
     // upstream keep most real graphs in this regime.
     val lim = math.min(maxDriverEdges + 1, Int.MaxValue.toLong).toInt
-    val es = edgesPlan.limit(lim).as[(Long, Long)].collect()
-    if (es.isEmpty || es.length.toLong <= maxDriverEdges) edgesPlan.unpersist()
-    if (es.isEmpty) return selfLabels
+    val es = raw.limit(lim).as[(Long, Long)].collect()
     if (es.length.toLong <= maxDriverEdges) {
+      release(spark, raw)
       val parent = scala.collection.mutable.LongMap.empty[Long]
       def find(x0: Long): Long = {
         var x = x0
@@ -394,19 +406,19 @@ object Dedup {
         // so find() directly yields the cluster representative
         if (ra != rb) { if (ra < rb) parent(rb) = ra else parent(ra) = rb }
       }
-      val labelRows = es.iterator
-        .flatMap { case (a, b) => Iterator(a, b) }
-        .toSet[Long].iterator
-        .map(n => (n, find(n))).toSeq
-      val labelDf = broadcast(labelRows.toDF("doc_id", "rep"))
-      return docs.select(col("doc_id"))
-        .join(labelDf, Seq("doc_id"), "left")
-        .select(col("doc_id"),
-          coalesce(col("rep"), col("doc_id").cast("long")).as("cluster_rep"))
+      if (es.isEmpty) return withRep(docs, selfRep)
+      // the labels reach the rows as a broadcast variable read by a UDF:
+      // a map-side lookup, as a broadcast join would be, minus the job
+      // that collects a local relation into a broadcast hash table
+      val labels = spark.sparkContext.broadcast(
+        scala.collection.mutable.LongMap.from(es.iterator
+          .flatMap { case (a, b) => Iterator(a, b) }.map(n => n -> find(n))))
+      val repOf = udf((id: Long) => labels.value.getOrElse(id, id))
+      return withRep(docs, repOf(selfRep))
     }
 
-    var edges = trunc(edgesPlan)
-    edgesPlan.unpersist() // truncate is eager: the edges now live in `edges`
+    var edges = trunc(raw.distinct())
+    release(spark, raw) // truncate is eager: the edges now live in `edges`
 
     /** Large-star: for every node u, connect each STRICTLY LARGER
       * neighbor to min(Γ(u) ∪ {u}). Keeps connectivity, never creates a
@@ -480,33 +492,33 @@ object Dedup {
           "(log-round star contraction; raise maxIter)")
     }
     // fixpoint edges are exactly (component-min, member) stars: one row
-    // per non-representative node
-    val labels = trunc(docs.select(col("doc_id"))
-      .join(edges.select(col("dst").as("doc_id"), col("src").as("rep")),
-        Seq("doc_id"), "left")
-      .select(col("doc_id"),
-        coalesce(col("rep"), col("doc_id").cast("long")).as("cluster_rep")))
-    release(spark, edges)
-    labels
+    // per non-representative node. The returned frame reads them, so
+    // they stay persisted (the one checkpoint this call leaves behind).
+    val stars = edges.select(col("dst").as("doc_id"), col("src").as("cc_rep"))
+    withRep(docs.join(stars, Seq("doc_id"), "left"),
+      coalesce(col("cc_rep"), selfRep))
   }
 
-  /** SimHash (60-bit, h60 token hashes) over all token occurrences.
-    * Pure column expressions: per bit, the sign of Σ_tokens (±1).
-    * (A typed one-pass rewrite was tried this round and measured 2x
-    * SLOWER at sf0.1 — the Dataset boundary's per-token string decode
-    * outweighs the interpreted aggregate walks, which Catalyst
-    * CSE-shares across the 60 bits — so the column form stays.) */
-  def simhash(docs: DataFrame): DataFrame = {
-    val toks = Builder.tokensCol(col("text"))
-    // per-token 60-bit hash, computed once per token occurrence
-    val hs = transform(toks, t => CrossHash.h60(t))
-    // counts(i) = Σ over tokens of (bit i set ? +1 : -1); sig bit = count > 0
-    val sigBits = (0 until 60).map { i =>
-      val c = aggregate(hs, lit(0L),
-        (acc, h) => acc + when(shiftright(h, i).bitwiseAND(lit(1L)) === 1L,
-          lit(1L)).otherwise(lit(-1L)))
-      when(c > 0, lit(1L << i)).otherwise(lit(0L))
+  /** simhash of one text; see `simhash` */
+  private val simhashOf = udf { (text: String) =>
+    val c = new Array[Int](60)
+    if (text != null) Tokenizer.tokens(text).foreach { t =>
+      val h = CrossHash.h60(t)
+      var i = 0
+      while (i < 60) { c(i) += (if (((h >>> i) & 1L) == 1L) 1 else -1); i += 1 }
     }
-    docs.select(col("doc_id"), sigBits.reduce(_ + _).as("simhash"))
+    var sig = 0L
+    var i = 0
+    while (i < 60) { if (c(i) > 0) sig |= 1L << i; i += 1 }
+    sig
   }
+
+  /** SimHash (60-bit, h60 token hashes) over all token occurrences: bit
+    * i is set when more tokens have bit i of their hash set than clear.
+    * One typed pass per doc: the scanner's tokens, one JVM h60 per token
+    * (bit-identical to the column form, OpsSpec parity test), 60
+    * counters. A Scala UDF over the text, so doc_id passes through with
+    * its type. Null or empty text has no tokens and hashes to 0. */
+  def simhash(docs: DataFrame): DataFrame =
+    docs.select(col("doc_id"), simhashOf(col("text")).as("simhash"))
 }

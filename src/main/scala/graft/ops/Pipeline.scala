@@ -18,13 +18,17 @@ import org.apache.spark.sql.functions._
   * embarrassingly re-runnable on corpus deltas, and exactly expressible
   * as one SQL statement for the oracle.
   *
-  * Scale shape: quality + language are one pass that tokenizes each doc
-  * once (TextOps.tokenSignals);
-  * exact-dedup is one hash shuffle on sha256(text); near-dup reuses the
-  * df-capped one-group-per-shingle Jaccard pairs + connected components
-  * (driver union-find, or star contraction past its bound; never
-  * all-pairs). The final assembly is three co-keyed joins on doc_id that
-  * AQE plans as broadcast when the signal tables are small.
+  * Scale shape: ONE ROW PER DOC carries every signal, and no two per-doc
+  * tables join on doc_id. The signal projection tokenizes each doc once
+  * (TextOps.tokenSignals: quality + language) and hashes its text
+  * (sha256). The exact-dup rep (min doc_id per hash) comes from a
+  * partially aggregated groupBy(hash) and joins back on the hash, a
+  * 64-char key, never the content, and with no per-group task (no Window
+  * over the hash, which would funnel a mega-duplicate group through one
+  * task). Near-dup reuses the df-capped one-group-per-shingle Jaccard
+  * pairs; connectedComponents labels those same signal rows (driver
+  * union-find broadcast onto them, or star contraction past its bound;
+  * never all-pairs).
   */
 object Pipeline {
 
@@ -42,26 +46,29 @@ object Pipeline {
                   minJaccard: Double = 0.5,
                   maxShingleDf: Long = 10000L): DataFrame = {
     // null text is empty text: no tokens (a quality drop), no shingles,
-    // and a content hash, so the exact-dup join keeps the row
-    val corpus = docs.withColumn("text", coalesce(col("text"), lit("")))
-    // quality + language in ONE pass: each text is tokenized once, and
-    // lang_pred is the rule TextOps.langId applies (the optimizer keeps a
-    // UDF read twice in its own projection, so it runs once per row)
+    // and a content hash. A row with a null doc_id gets no verdict: it
+    // can be no doc's rep and is in no cluster.
+    val corpus = docs.filter(col("doc_id").isNotNull)
+      .withColumn("text", coalesce(col("text"), lit("")))
+    // quality + language + content hash in ONE pass: each text is
+    // tokenized once, and lang_pred is the rule TextOps.langId applies
+    // (the optimizer keeps a UDF read twice in its own projection, so it
+    // runs once per row)
     val sig = corpus
-      .select(col("doc_id"), TextOps.tokenSignals(col("text")).as("s"))
+      .select(col("doc_id"), TextOps.tokenSignals(col("text")).as("s"),
+        sha2(col("text"), 256).as("h"))
       .select(col("doc_id"), col("s._1").as("n_tokens"),
-        col("s._2").as("lang_pred"))
+        col("s._2").as("lang_pred"), col("h"))
 
     // exact-duplicate representative: min doc_id per content hash
-    val sha = corpus.select(col("doc_id"), sha2(col("text"), 256).as("h"))
-    val exactRep = sha
-      .join(sha.groupBy("h").agg(min("doc_id").as("exact_rep")), "h")
-      .select(col("doc_id"), col("exact_rep"))
+    val withExactRep =
+      sig.join(sig.groupBy("h").agg(min("doc_id").as("exact_rep")), "h")
 
-    // near-dup cluster representative (min doc_id in the component)
+    // near-dup cluster representative (min doc_id in the component),
+    // labeled onto the signal rows
     val pairs = Dedup.jaccardPairs(corpus, k = shingleK, minJ = minJaccard,
       maxShingleDf = maxShingleDf)
-    val cc = Dedup.connectedComponents(corpus.select(col("doc_id")), pairs)
+    val rows = Dedup.connectedComponents(withExactRep, pairs)
 
     val reason =
       when(col("n_tokens") < minTokens || col("n_tokens") > maxTokens,
@@ -71,9 +78,7 @@ object Pipeline {
       .when(col("doc_id") =!= col("cluster_rep"), "near_dup")
       .otherwise("keep")
 
-    sig.join(exactRep, "doc_id")
-      .join(cc, "doc_id")
-      .select(col("doc_id"), col("n_tokens"), col("lang_pred"),
-        (reason === "keep").as("keep"), reason.as("drop_reason"))
+    rows.select(col("doc_id"), col("n_tokens"), col("lang_pred"),
+      (reason === "keep").as("keep"), reason.as("drop_reason"))
   }
 }

@@ -627,7 +627,8 @@ class OpsSpec extends SparkTestBase {
     assert(run(1000L) == base) // id shift must not change results
   }
 
-  test("cleanCorpus: precedence quality > lang > exact_dup > near_dup > keep") {
+  /** One doc per drop reason (doc 5 is a second lang drop). */
+  private def precedenceFixture: DataFrame = {
     import spark.implicits._
     // 25-token English base: en markers dominate, unique shingles
     val enBase = ("the and of is " +
@@ -635,7 +636,7 @@ class OpsSpec extends SparkTestBase {
     val frDoc = "le la et les " +
       (0 until 21).map(i => s"mot$i").mkString(" ")
     val unkDoc = (0 until 25).map(i => s"xx$i").mkString(" ")
-    val fixture = Seq(
+    Seq(
       0L -> "the of tiny doc",        // 4 tokens -> quality
       1L -> enBase,                   // keeper (rep of its dup cluster)
       2L -> frDoc,                    // french -> lang
@@ -643,6 +644,11 @@ class OpsSpec extends SparkTestBase {
       4L -> (enBase + " extra"),      // near dup of 1 -> near_dup
       5L -> unkDoc                    // unknown lang -> lang
     ).toDF("doc_id", "text")
+  }
+
+  test("cleanCorpus: precedence quality > lang > exact_dup > near_dup > keep") {
+    import spark.implicits._
+    val fixture = precedenceFixture
     val got = graft.ops.Pipeline.cleanCorpus(fixture,
         keepLangs = Seq("en"), minTokens = 20L, maxTokens = 100000L)
       .select("doc_id", "keep", "drop_reason")
@@ -820,5 +826,98 @@ class OpsSpec extends SparkTestBase {
       assert(want.map(_._5).toSet ==
         Set("quality", "lang", "exact_dup", "near_dup", "keep"))
     }
+  }
+
+  test("cleanCorpus: exact reps over a 10k-copy group, no Window; null doc_id gets no verdict") {
+    import spark.implicits._
+    // one 10k-copy boilerplate group plus distinct docs (two of them exact
+    // copies) and a row with no doc_id. The boilerplate shingles are over
+    // the df cap, so the copies meet only through their content hash.
+    val boiler = "the and of is " + (0 until 21).map(i => s"b$i").mkString(" ")
+    def distinct(i: Int) = "the and of is " + (0 until 21).map(j => s"d${i}_$j").mkString(" ")
+    val rows = (0L until 10000L).map(i => (Option(i), boiler)) ++ Seq(
+      (Some(20000L), distinct(0)), (Some(20001L), distinct(1)),
+      (Some(20002L), distinct(0)), (None, distinct(2)))
+    val d = rows.toDF("doc_id", "text")
+    val out = graft.ops.Pipeline.cleanCorpus(d, maxShingleDf = 100L)
+    val got = out.select("doc_id", "drop_reason").as[(Long, String)].collect().toMap
+    assert(got.size == 10003)
+    assert(got(0L) == "keep" && (1L until 10000L).forall(got(_) == "exact_dup"))
+    assert(Seq(20000L, 20001L, 20002L).map(got) == Seq("keep", "keep", "exact_dup"))
+    // no Window at all in the executed plan, so none over the content
+    // hash: a mega-duplicate group is never funneled through one task
+    val plan = out.queryExecution.executedPlan.toString
+    assert(!plan.contains("Window"), plan)
+  }
+
+  test("connectedComponents: every path returns docs' own columns plus cluster_rep") {
+    import spark.implicits._
+    // doc_id is not the first column, and an INT: both must pass through
+    val docs = (0 until 12).map(i => (s"t$i", i, i * 0.5)).toDF("tag", "doc_id", "w")
+    val pairs = Seq((1L, 2L), (2L, 3L), (7L, 9L), (3L, 1L)).toDF("doc_a", "doc_b")
+    val want = Map(1 -> 1L, 2 -> 1L, 3 -> 1L, 7 -> 7L, 9 -> 7L)
+    def check(out: org.apache.spark.sql.DataFrame, edges: Boolean, path: String) = {
+      assert(out.schema.fields.toSeq.init == docs.schema.fields.toSeq, path)
+      assert(out.schema.last.name == "cluster_rep" &&
+        out.schema.last.dataType == org.apache.spark.sql.types.LongType, path)
+      val got = out.as[(String, Int, Double, Long)].collect().sortBy(_._2).toSeq
+      assert(got == (0 until 12).map(i => (s"t$i", i, i * 0.5,
+        if (edges) want.getOrElse(i, i.toLong) else i.toLong)), path)
+    }
+    val entries = org.apache.spark.sql.GraftBridge.cachedEntries(spark)
+    val persisted = spark.sparkContext.getPersistentRDDs.size
+    check(Dedup.connectedComponents(docs, pairs), edges = true, "fast path")
+    // the fast path caches nothing: no Dataset cache entry, no RDD left
+    assert(org.apache.spark.sql.GraftBridge.cachedEntries(spark) == entries)
+    assert(spark.sparkContext.getPersistentRDDs.size == persisted)
+    check(Dedup.connectedComponents(docs, pairs, maxDriverEdges = 0L),
+      edges = true, "star path")
+    check(Dedup.connectedComponents(docs, pairs.limit(0)), edges = false,
+      "no-edge path")
+    check(Dedup.connectedComponents(docs, pairs.limit(0), maxDriverEdges = 0L),
+      edges = false, "no-edge path, star bound")
+  }
+
+  test("cleanCorpus: one warm action starts at most 8 Spark jobs") {
+    import org.apache.spark.sql.GraftBridge
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val fixture = precedenceFixture
+    def run() = graft.ops.Pipeline.cleanCorpus(fixture).collect()
+    run() // warm-up
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    GraftBridge.drainListeners(spark.sparkContext)
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      run()
+      GraftBridge.drainListeners(spark.sparkContext)
+    } finally spark.sparkContext.removeSparkListener(listener)
+    assert(jobs.get <= 8, s"${jobs.get} jobs")
+  }
+
+  test("simhash: the typed one pass == its column form on edge-case text") {
+    import spark.implicits._
+    // the column form simhash ran before: per bit, an aggregate walk of
+    // +-1 over the h60 of every token
+    def simhashColumn(docs: org.apache.spark.sql.DataFrame) = {
+      val hs = transform(graft.index.Builder.tokensCol(col("text")),
+        t => graft.util.CrossHash.h60(t))
+      val sigBits = (0 until 60).map { i =>
+        val c = aggregate(hs, lit(0L),
+          (acc, h) => acc + when(shiftright(h, i).bitwiseAND(lit(1L)) === 1L,
+            lit(1L)).otherwise(lit(-1L)))
+        when(c > 0, lit(1L << i)).otherwise(lit(0L))
+      }
+      docs.select(col("doc_id"), sigBits.reduce(_ + _).as("simhash"))
+    }
+    val d = edgeDocs.toDF("doc_id", "text")
+    val want = simhashColumn(d).as[(Long, Long)].collect().toMap
+    val got = Dedup.simhash(d).as[(Long, Long)].collect().toMap
+    assert(got == want)
+    assert(got(0L) == 0L && got(1L) == 0L) // null and empty text
+    assert(got(100L) == got(101L) && got(100L) != got(103L))
   }
 }
