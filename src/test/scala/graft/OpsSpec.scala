@@ -854,7 +854,9 @@ class OpsSpec extends SparkTestBase {
     import spark.implicits._
     // doc_id is not the first column, and an INT: both must pass through
     val docs = (0 until 12).map(i => (s"t$i", i, i * 0.5)).toDF("tag", "doc_id", "w")
-    val pairs = Seq((1L, 2L), (2L, 3L), (7L, 9L), (3L, 1L)).toDF("doc_a", "doc_b")
+    // (2, 1) repeats (1, 2) once canonical: the fast path keeps both rows
+    val pairs = Seq((1L, 2L), (2L, 3L), (7L, 9L), (3L, 1L), (2L, 1L))
+      .toDF("doc_a", "doc_b")
     val want = Map(1 -> 1L, 2 -> 1L, 3 -> 1L, 7 -> 7L, 9 -> 7L)
     def check(out: org.apache.spark.sql.DataFrame, edges: Boolean, path: String) = {
       assert(out.schema.fields.toSeq.init == docs.schema.fields.toSeq, path)
